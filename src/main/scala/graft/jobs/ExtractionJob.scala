@@ -23,6 +23,11 @@ final case class StepResult(
   * S3 write re-raises and kills the whole run
   * (`extract-data-dota.py:83,206-209`) — sink failures are also
   * per-step: they mark the step failed and move on.
+  *
+  * Each successful step is one Spark write job (plus the schema
+  * inference job of an inferred-schema entity) that leaves one Parquet
+  * file per entity and load date; [[StepResult.rows]] is the count
+  * observed on that write, with no re-read of the payload or the lake.
   */
 final class ExtractionJob(
     spark: SparkSession,
@@ -39,11 +44,14 @@ final class ExtractionJob(
             case Some(f) => f(spark, body)
             case None    => spec.normalize(RestSource.readJson(spark, body, spec.schema))
           }
-          sink.write(df, spec.name, loadDate)
-          StepResult(spec.name, Some(df.count()), None)
+          // the payload is already one in-memory string, so one
+          // task is all it needs, and it leaves one file per load date
+          val rows = sink.write(df.coalesce(1), spec.name, loadDate)
+          StepResult(spec.name, Some(rows), None)
       }
     } catch {
-      case e: Exception => StepResult(spec.name, None, Some(e.getMessage))
+      case e: Exception =>
+        StepResult(spec.name, None, Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
     }
 
   /** Run all steps; returns every outcome (callers decide whether a

@@ -20,8 +20,8 @@ object ExtractionMain {
     require(args.length >= 2, "usage: ExtractionMain <baseUrl> <lakeRoot> [loadDate]")
     val Array(baseUrl, lakeRoot) = args.take(2)
     val loadDate = args.lift(2).getOrElse(LocalDate.now().toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
+    val slots = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val spark = graft.core.GraftSession.builder(slots.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val client = new RestClient(new JavaHttpTransport(), RetryPolicy(minIntervalMillis = 1100L))
     val job = new ExtractionJob(spark, client, new LakeWriter(lakeRoot), baseUrl)
@@ -31,4 +31,14 @@ object ExtractionMain {
     spark.stop()
     if (results.forall(!_.ok)) sys.exit(1)
   }
+
+  /** Task slots from `SPARK_GRAFT_CPUS` (default 4); anything but a
+    * positive integer fails before a session starts, naming the
+    * variable, instead of reaching `local[...]` as a bad master URL.
+    */
+  private[jobs] def cpus(raw: Option[String]): Int =
+    raw.fold(4) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
 }

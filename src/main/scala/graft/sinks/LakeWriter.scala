@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Date-partitioned Parquet lake sink.
@@ -24,18 +24,28 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     */
   private[graft] def replaces: Boolean = mode != "append"
 
-  /** Write an entity snapshot under `root/<entity>/load_date=<d>/`.
+  /** Write an entity snapshot under `root/<entity>/load_date=<d>/`
+    * and return the number of rows written.
     * `partitionOverwriteMode=dynamic` scoped to this write: a re-run
     * replaces only the partitions it produces — monthly full loads
-    * don't clobber history.
+    * don't clobber history. The count is an [[Observation]] on the
+    * written frame, so it rides on the write's own job: no second
+    * action re-reads or re-parses the input. One file per task lands
+    * in the date directory; a caller that wants one file per write
+    * hands in a one-partition frame.
     */
-  def write(df: DataFrame, entity: String, loadDate: String): Unit =
+  def write(df: DataFrame, entity: String, loadDate: String): Long = {
+    val written = Observation()
     df.withColumn("load_date", lit(loadDate))
+      .observe(written, count(lit(1)).as("rows"))
       .write
       .mode(mode)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("load_date")
       .parquet(s"$root/$entity")
+    // only after the write returned: a failed write never reports
+    written.get("rows").asInstanceOf[Long]
+  }
 
   def read(spark: SparkSession, entity: String): DataFrame =
     spark.read.parquet(s"$root/$entity")

@@ -148,10 +148,16 @@ object Endpoints {
     EndpointSpec("scenarios_misc", "/scenarios/misc"),     // opendotaapi.py:675
     EndpointSpec("constants", "/constants"))               // opendotaapi.py:691,707
 
-  /** Constants maps pivoted to long-form rows (`opendotaapi.py:125-183`). */
+  /** Constants maps pivoted to long-form rows (`opendotaapi.py:125-183`).
+    * Unsorted: a lake partition keeps no row order, and a global sort
+    * would cost the load a sampling job and a shuffle.
+    */
   def constantsMap(name: String, keyName: String): EndpointSpec =
     EndpointSpec(name, s"/constants/$name",
-      rawNormalize = Some((s, body) => Normalize.pivotConstantsMap(s, body, keyName)))
+      rawNormalize = Some { (s, body) =>
+        import s.implicits._
+        Normalize.pivotMapColumn(Seq(body).toDF("payload"), $"payload", keyName, "name")
+      })
 
   val lobbyTypes: EndpointSpec = constantsMap("lobby_type", "lobby_id")
   val gameModes: EndpointSpec = constantsMap("game_mode", "mode_id")
