@@ -81,7 +81,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.GraftSession.cpus().toString
     val runs = math.max(sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3), 1)
     // dev-time subset: comma-separated name substrings (driver sets
     // no filter → full run)

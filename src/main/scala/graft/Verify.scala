@@ -24,7 +24,7 @@ object Verify {
     val only: String => Boolean =
       if (args.length > 2) { val pats = args(2).split(","); n => pats.exists(n.contains) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.GraftSession.cpus().toString
     val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

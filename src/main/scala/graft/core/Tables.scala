@@ -150,6 +150,16 @@ object Tables {
   * cluster these come from spark-defaults / dynamic allocation).
   */
 object GraftSession {
+  /** Task slots from `SPARK_GRAFT_CPUS` (default 4); anything but a
+    * positive integer fails before a session starts, naming the
+    * variable, instead of reaching `local[...]` as a bad master URL.
+    */
+  def cpus(raw: Option[String] = sys.env.get("SPARK_GRAFT_CPUS")): Int =
+    raw.fold(4) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
   def builder(cores: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")

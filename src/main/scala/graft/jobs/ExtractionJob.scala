@@ -26,8 +26,14 @@ final case class StepResult(
   *
   * Each successful step is one Spark write job (plus the schema
   * inference job of an inferred-schema entity) that leaves one Parquet
-  * file per entity and load date; [[StepResult.rows]] is the count
+  * file per entity and load date, committed by
+  * [[graft.sinks.LakeWriter.write]]'s staged swap into that date's
+  * directory (no `_SUCCESS` marker); [[StepResult.rows]] is the count
   * observed on that write, with no re-read of the payload or the lake.
+  * A re-run replaces its own date only. An empty payload is a clean
+  * load: with an explicit schema it commits a 0-row file carrying the
+  * schema; an inferred `[]` has no columns, so its date is removed and
+  * the step reports 0 rows.
   */
 final class ExtractionJob(
     spark: SparkSession,

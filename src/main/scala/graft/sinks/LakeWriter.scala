@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,10 +10,11 @@ import org.apache.spark.sql.functions._
   * (`YYYY-MM-DD-dadosprincipal.parquet`, `opendotaapi.py:114-118`) and
   * pushes bytes to S3 through an in-memory Arrow buffer + boto3
   * (`extract-data-dota.py:55-83`). Both are replaced by the idiomatic
-  * Spark shape: `partitionBy("load_date")` directories — which make
-  * the date a REAL partition column Catalyst can prune on — and the
-  * Hadoop s3a committer, which writes distributed (no driver-side
-  * buffering of the whole dataset, which at 100 TB is not optional).
+  * Spark shape: one `load_date=<d>` directory per entity and date —
+  * which makes the date a REAL partition column Catalyst can prune on
+  * — committed by a staged swap ([[write]]), and the Hadoop s3a
+  * committer, which writes distributed (no driver-side buffering of
+  * the whole dataset, which at 100 TB is not optional).
   */
 final class LakeWriter(root: String, mode: String = "overwrite") {
 
@@ -24,27 +26,70 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     */
   private[graft] def replaces: Boolean = mode != "append"
 
-  /** Write an entity snapshot under `root/<entity>/load_date=<d>/`
-    * and return the number of rows written.
-    * `partitionOverwriteMode=dynamic` scoped to this write: a re-run
-    * replaces only the partitions it produces — monthly full loads
-    * don't clobber history. The count is an [[Observation]] on the
-    * written frame, so it rides on the write's own job: no second
-    * action re-reads or re-parses the input. One file per task lands
-    * in the date directory; a caller that wants one file per write
-    * hands in a one-partition frame.
+  /** Commit an entity snapshot as `root/<entity>/load_date=<d>/` and
+    * return the number of rows written.
+    *
+    * The step names its one date, so the frame is written as a plain,
+    * unpartitioned Parquet write into a hidden sibling,
+    * `root/<entity>/_staging-<d>-<uuid>` (partition discovery skips
+    * `_` names that hold no `=`), and then swapped in for the date
+    * directory with [[compact]]'s old-aside-first rename order: the
+    * previous date moves to `_aside-<d>`, the staging directory is
+    * renamed in, and only then is the aside deleted. A re-run replaces
+    * exactly its own date and no other; a write that fails leaves the
+    * previous date untouched; a crash between the renames is repaired
+    * by the next write of that date, which also drops the date's stale
+    * staging directories. The rename is the commit, so no `_SUCCESS`
+    * marker is written. On s3a a rename is one COPY per file: one file
+    * per date for a one-partition frame, no worse than the staging
+    * rename of a dynamic partition overwrite.
+    *
+    * A frame with columns but no rows commits one 0-row file that
+    * carries its schema. A frame with no columns (an inferred `[]`
+    * payload) cannot be stored as Parquet: its date is removed through
+    * the same aside-then-delete order and 0 is returned.
+    *
+    * The count is an [[Observation]] on the written frame, so it rides
+    * on the write's own job: no second action re-reads or re-parses
+    * the input. One file per task lands in the date directory; a
+    * caller that wants one file per write hands in a one-partition
+    * frame. Writes of one (entity, date) must not run concurrently.
+    * Full snapshots only: an "append" writer is refused, since
+    * appending into a date would bypass the swap.
     */
   def write(df: DataFrame, entity: String, loadDate: String): Long = {
-    val written = Observation()
-    df.withColumn("load_date", lit(loadDate))
-      .observe(written, count(lit(1)).as("rows"))
-      .write
-      .mode(mode)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("load_date")
-      .parquet(s"$root/$entity")
-    // only after the write returned: a failed write never reports
-    written.get("rows").asInstanceOf[Long]
+    require(replaces, "LakeWriter.write commits full date snapshots; an append writer " +
+      "commits through commitBucketed")
+    require(!loadDate.exists("/=".contains(_)), s"load date '$loadDate' holds '/' or '='")
+    val dir = new Path(s"$root/$entity")
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val target = new Path(dir, s"load_date=$loadDate")
+    val aside = new Path(dir, s"_aside-$loadDate")
+    val stagingPrefix = s"_staging-$loadDate-"
+    LakeWriter.recoverAside(fs, target, aside)
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath).filter { p =>
+        val n = p.getName // the uuid is 36 chars: no other date's prefix matches
+        n.startsWith(stagingPrefix) && n.length == stagingPrefix.length + 36
+      }.foreach(fs.delete(_, true))
+    val data = df.drop("load_date")
+    if (data.columns.isEmpty) {
+      LakeWriter.swapIn(fs, None, target, aside)
+      0L
+    } else {
+      val staging = new Path(dir, stagingPrefix + java.util.UUID.randomUUID())
+      val written = Observation()
+      try {
+        data.observe(written, count(lit(1)).as("rows"))
+          .write
+          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .parquet(staging.toString)
+        // only after the write returned: a failed write never reports
+        val rows = written.get("rows").asInstanceOf[Long]
+        LakeWriter.swapIn(fs, Some(staging), target, aside)
+        rows
+      } finally { fs.delete(staging, true); () }
+    }
   }
 
   def read(spark: SparkSession, entity: String): DataFrame =
@@ -207,9 +252,8 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     * earlier delete-then-rename order had a window where the only
     * copy lived under the temp name). Returns the new file count.
     * For a date-partitioned entity, compact per partition directory
-    * (`entity/load_date=...`) — partition columns written by
-    * `partitionBy` live in the path, not the footers, so compacting
-    * the root would lose them.
+    * (`entity/load_date=...`) — partition columns live in the path,
+    * not the footers, so compacting the root would lose them.
     */
   def compact(
       spark: SparkSession, entity: String,
@@ -217,16 +261,9 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     import org.apache.hadoop.fs.Path
     val path = new Path(s"$root/$entity")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // self-recovery from a prior crash mid-swap: if the entity dir is
-    // missing but __old survives, the crash happened between the two
-    // renames — restore it; if both exist, __old is a superseded copy
-    // a crash failed to delete — drop it. Either way the set-aside
-    // rename below starts clean instead of failing opaquely.
+    // self-recovery from a prior crash mid-swap
     val old = new Path(s"$root/${entity}__old")
-    if (fs.exists(old)) {
-      if (!fs.exists(path)) require(fs.rename(old, path), s"could not recover $old")
-      else fs.delete(old, true)
-    }
+    LakeWriter.recoverAside(fs, path, old)
     // fail fast on a partitioned entity: partition columns written by
     // partitionBy live in the PATH, not the footers — compacting the
     // root would silently drop them. Compact per partition directory.
@@ -241,13 +278,7 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     spark.read.parquet(path.toString)
       .repartition(n)
       .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(path, old), s"compact could not set aside $path")
-    if (!fs.rename(tmp, path)) {
-      // roll back: the original is intact under __old
-      fs.rename(old, path)
-      throw new IllegalStateException(s"compact swap failed for $path; original restored")
-    }
-    fs.delete(old, true)
+    LakeWriter.swapIn(fs, Some(tmp), path, old)
     n
   }
 
@@ -838,6 +869,39 @@ object LakeWriter {
         maxRows = 10000, what = "enforceExpectations")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     if (bad.nonEmpty) throw new CommitRejectedException(table, version, bad)
+  }
+
+  /** Self-recovery from a crash in the middle of [[swapIn]]: if
+    * `target` is missing but `aside` survives, the crash came between
+    * the two renames, so the aside is restored; if both exist, the
+    * aside is a superseded copy a crash failed to delete, so it is
+    * dropped. Either way the next swap starts clean instead of
+    * failing opaquely.
+    */
+  private[sinks] def recoverAside(fs: FileSystem, target: Path, aside: Path): Unit =
+    if (fs.exists(aside)) {
+      if (!fs.exists(target)) require(fs.rename(aside, target), s"could not recover $aside")
+      else fs.delete(aside, true)
+    }
+
+  /** Replace `target` with `staged` (or remove it when `staged` is
+    * None) in the old-aside-first rename order: the current `target`
+    * is renamed to `aside`, the staged directory renamed in, and only
+    * then is the aside deleted. At every step a full copy of the data
+    * exists under a well-known name, so a crash loses nothing; a
+    * failed rename-in restores the aside and throws.
+    */
+  private[sinks] def swapIn(
+      fs: FileSystem, staged: Option[Path], target: Path, aside: Path): Unit = {
+    val hadOld = fs.exists(target)
+    if (hadOld) require(fs.rename(target, aside), s"could not set aside $target")
+    staged.foreach { s =>
+      if (!fs.rename(s, target)) {
+        if (hadOld) fs.rename(aside, target)
+        throw new IllegalStateException(s"could not swap $s in for $target; previous copy restored")
+      }
+    }
+    if (hadOld) fs.delete(aside, true)
   }
 
   /** Reserved commit-version partition column of manifested BUCKETED

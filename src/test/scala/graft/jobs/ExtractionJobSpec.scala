@@ -2,12 +2,13 @@ package graft.jobs
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, min, raise_error, when}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 import graft.TestSpark
+import graft.core.GraftSession
 import graft.sinks.LakeWriter
 import graft.sources._
 
@@ -71,7 +72,7 @@ class ExtractionJobSpec extends AnyFunSuite with TimeLimits {
       s"expected partition pruning in plan:\n$plan")
   }
 
-  test("dynamic partition overwrite re-runs replace only their own date") {
+  test("staged swap re-runs replace only their own date") {
     val root = Files.createTempDirectory("lake").toString
     val job = mkJob(Map(
       "http://api.test/publicMatches" -> RestResponse(200, Fixtures.publicMatchesJson)), root)
@@ -105,18 +106,98 @@ class ExtractionJobSpec extends AnyFunSuite with TimeLimits {
     val specs = Seq(Endpoints.publicMatches, heroStats, Endpoints.lobbyTypes, Endpoints.teams, proPlayers)
 
     val results = job.run(specs, date)
-    assert(results.map(_.rows) == Seq(Some(3L), Some(2L), Some(3L), Some(0L), None))
-    // an inferred `[]` has no column besides load_date: still a failed step
-    assert(results(4).error.exists(_.contains("ALL_PARTITION_COLUMNS_NOT_ALLOWED")), results(4))
+    assert(results.map(_.rows) == Seq(Some(3L), Some(2L), Some(3L), Some(0L), Some(0L)))
+    // an inferred `[]` has no column to store: its date holds nothing
+    assert(!new java.io.File(s"$root/pro_players/load_date=$date").exists, results(4))
 
     val lake = new LakeWriter(root)
-    for (r <- results.filter(_.ok)) {
+    for (r <- results.take(4)) {
       val held = lake.read(spark, r.entity).filter(col("load_date") === date).count()
       assert(r.rows.contains(held), r.entity)
     }
     for (r <- results.take(3))
       assert(parquetFiles(s"$root/${r.entity}/load_date=$date").size == 1, r.entity)
     assert(parquetFiles(s"$root/teams/load_date=2026-08-01").size == 1)
+  }
+
+  test("a `[]` re-run leaves 0 rows for its date, in one schema-carrying file") {
+    val root = Files.createTempDirectory("lake").toString
+    val full = mkJob(Map(
+      "http://api.test/publicMatches" -> RestResponse(200, Fixtures.publicMatchesJson)), root)
+    full.run(Seq(Endpoints.publicMatches), "2026-07-01")
+    full.run(Seq(Endpoints.publicMatches), "2026-08-01")
+    val schema = new LakeWriter(root).read(spark, "public_matches").schema
+    val empty = mkJob(Map("http://api.test/publicMatches" -> RestResponse(200, "[]")), root)
+    assert(empty.run(Seq(Endpoints.publicMatches), "2026-08-01").map(_.rows) == Seq(Some(0L)))
+
+    val back = new LakeWriter(root).read(spark, "public_matches")
+    assert(back.schema == schema)
+    assert(back.filter(col("load_date") === "2026-08-01").count() == 0)
+    assert(back.filter(col("load_date") === "2026-07-01").count() == 3)
+    assert(parquetFiles(s"$root/public_matches/load_date=2026-08-01").size == 1)
+  }
+
+  test("an explicit-schema `[]` first load reads back with its full schema") {
+    val root = Files.createTempDirectory("lake").toString
+    val job = mkJob(Map("http://api.test/teams" -> RestResponse(200, "[]")), root)
+    assert(job.run(Seq(Endpoints.teams), "2026-09-01").map(_.rows) == Seq(Some(0L)))
+
+    val back = new LakeWriter(root).read(spark, "teams")
+    assert(back.count() == 0)
+    assert(back.columns.toSeq == Endpoints.teams.schema.get.fieldNames.toSeq :+ "load_date")
+    assert(back.schema("load_date").dataType == org.apache.spark.sql.types.DateType)
+  }
+
+  test("an inferred `[]` removes its date and reports 0 rows; other dates stay") {
+    val root = Files.createTempDirectory("lake").toString
+    val full = mkJob(Map("http://api.test/proPlayers" -> RestResponse(200, Fixtures.heroesJson)), root)
+    full.run(Seq(proPlayers), "2026-07-01")
+    full.run(Seq(proPlayers), "2026-08-01")
+    val empty = mkJob(Map("http://api.test/proPlayers" -> RestResponse(200, "[]")), root)
+    val r = empty.runStep(proPlayers, "2026-08-01")
+    assert(r.ok && r.rows.contains(0L), r)
+
+    assert(new java.io.File(s"$root/pro_players").list().toSeq == Seq("load_date=2026-07-01"))
+    val back = new LakeWriter(root).read(spark, "pro_players")
+    assert(back.filter(col("load_date") === "2026-07-01").count() == 2)
+    assert(back.count() == 2)
+  }
+
+  test("a write failing inside its task keeps the previous date's rows and single file") {
+    val root = Files.createTempDirectory("lake").toString
+    val job = mkJob(Map(
+      "http://api.test/publicMatches" -> RestResponse(200, Fixtures.publicMatchesJson)), root)
+    job.run(Seq(Endpoints.publicMatches), "2026-08-01")
+    val dateDir = s"$root/public_matches/load_date=2026-08-01"
+    val before = parquetFiles(dateDir)
+    val firstId = spark.read.parquet(dateDir).agg(min("match_id")).head().getLong(0)
+    // the task throws on one row, after the others were already handed to the writer
+    val boom = Endpoints.publicMatches.copy(normalize = df =>
+      Endpoints.publicMatches.normalize(df).withColumn("boom",
+        when(col("match_id") =!= firstId, raise_error(lit("boom"))).otherwise(lit(1))))
+    val r = job.runStep(boom, "2026-08-01")
+    assert(!r.ok && r.rows.isEmpty && r.error.exists(_.contains("boom")), r)
+
+    assert(parquetFiles(dateDir) == before)
+    val back = new LakeWriter(root).read(spark, "public_matches")
+    assert(back.count() == 3 && !back.columns.contains("boom"))
+    assert(new java.io.File(s"$root/public_matches").list().toSeq == Seq("load_date=2026-08-01"))
+  }
+
+  test("a full load leaves no _SUCCESS, staging or aside entry under the lake") {
+    val root = Files.createTempDirectory("lake").toString
+    val job = mkJob(Map(
+      "http://api.test/publicMatches" -> RestResponse(200, Fixtures.publicMatchesJson),
+      "http://api.test/heroes" -> RestResponse(200, Fixtures.heroesJson),
+      "http://api.test/constants/lobby_type" -> RestResponse(200, Fixtures.lobbyTypesJson)),
+      root)
+    job.run(specs, "2026-08-01")
+    job.run(specs, "2026-08-01")
+    val names = Files.walk(java.nio.file.Paths.get(root)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    assert(!names.exists(_.startsWith("_")), names)
+    for (s <- specs)
+      assert(parquetFiles(s"$root/${s.name}/load_date=2026-08-01").size == 1, s.name)
   }
 
   test("a step whose exception has no message records the exception's class") {
@@ -139,10 +220,10 @@ class ExtractionJobSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("SPARK_GRAFT_CPUS must be a positive integer, named when it is not") {
-    assert(ExtractionMain.cpus(None) == 4)
-    assert(ExtractionMain.cpus(Some("8")) == 8)
+    assert(GraftSession.cpus(None) == 4)
+    assert(GraftSession.cpus(Some("8")) == 8)
     for (bad <- Seq("0", "-2", "four", "", " 4", "4*")) {
-      val e = intercept[IllegalArgumentException](ExtractionMain.cpus(Some(bad)))
+      val e = intercept[IllegalArgumentException](GraftSession.cpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
     }
   }

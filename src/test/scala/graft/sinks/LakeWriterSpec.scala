@@ -393,4 +393,57 @@ class LakeWriterSpec extends AnyFunSuite {
     // what makes load_date range predicates prune partitions
     assert(back.select("load_date").distinct().collect()(0).get(0).toString == "2026-08-12")
   }
+
+  test("leftover staging and aside directories are invisible to read") {
+    val root = Files.createTempDirectory("lake3").toString
+    val lw = new LakeWriter(root)
+    lw.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "ent", "2026-08-01")
+    lw.write(Seq((3L, "c")).toDF("id", "v"), "ent", "2026-09-01")
+    def snapshot() = {
+      val back = lw.read(spark, "ent")
+      (back.schema, back.collect().map(_.toString).sorted.toSeq)
+    }
+    val before = snapshot()
+    // a crash after the staged write (staging left) and one after the
+    // rename-in (a superseded aside left), each with other rows and columns
+    val other = Seq((9L, "x", 1.5)).toDF("id", "v", "extra")
+    other.write.parquet(s"$root/ent/_staging-2026-09-01-${java.util.UUID.randomUUID()}")
+    other.write.parquet(s"$root/ent/_aside-2026-08-01")
+    assert(snapshot() == before)
+  }
+
+  test("the next write of a date recovers it from its aside or drops the stale aside") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val root = Files.createTempDirectory("lake4").toString
+    val lw = new LakeWriter(root)
+    val first = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    lw.write(first, "ent", "2026-08-01")
+    val ent = new java.io.File(s"$root/ent")
+    // crash between the two renames: only the aside holds the date
+    require(new java.io.File(ent, "load_date=2026-08-01")
+      .renameTo(new java.io.File(ent, "_aside-2026-08-01")))
+    // the next write recovers the date first, so even a failing write keeps it
+    val failing = first.withColumn("v", when(col("id") === 2L, raise_error(lit("boom")))
+      .otherwise(col("v")))
+    intercept[Exception](lw.write(failing, "ent", "2026-08-01"))
+    assert(lw.read(spark, "ent").count() == 2)
+    assert(ent.list().toSeq == Seq("load_date=2026-08-01"))
+    // crash before the aside was deleted, plus a stale staging directory
+    first.write.parquet(s"$root/ent/_aside-2026-08-01")
+    first.write.parquet(s"$root/ent/_staging-2026-08-01-${java.util.UUID.randomUUID()}")
+    assert(lw.write(Seq((5L, "e")).toDF("id", "v"), "ent", "2026-08-01") == 1L)
+    assert(ent.list().toSeq == Seq("load_date=2026-08-01"))
+    assert(lw.read(spark, "ent").select("id").collect().map(_.getLong(0)).toSeq == Seq(5L))
+  }
+
+  test("write refuses an append writer and a load date that would break the layout") {
+    val root = Files.createTempDirectory("lake5").toString
+    val df = Seq(1L).toDF("id")
+    intercept[IllegalArgumentException] {
+      new LakeWriter(root, mode = "append").write(df, "ent", "2026-08-01")
+    }
+    for (bad <- Seq("2026=08", "2026/08"))
+      intercept[IllegalArgumentException](new LakeWriter(root).write(df, "ent", bad))
+    assert(!new java.io.File(s"$root/ent").exists)
+  }
 }
