@@ -82,7 +82,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.GraftSession.cpus().toString
-    val runs = math.max(sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3), 1)
+    val runs = graft.core.GraftSession.positiveInt("SPARK_GRAFT_BENCH_RUNS").getOrElse(3)
     // dev-time subset: comma-separated name substrings (driver sets
     // no filter → full run)
     val onlyEnv0 = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -114,7 +114,8 @@ object Bench {
         .map(b => math.max(b.getCollectionTime, 0L)).sum
     }
     val gcStart = gcMillis
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => only(q._1)).map { case (name, fn) =>
+    val results = SparkEntry.gates.sortBy(_.name).filter(g => only(g.name)).map { g =>
+      val name = g.name
       if (isolate) {
         // fresh JVM-wide Spark state per QUERY (not per run): the
         // session teardown/bringup is the expensive part; run-to-run
@@ -136,7 +137,7 @@ object Bench {
         val s0 = settledShuffle(shuffleBytes)
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          g.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           times += (System.nanoTime() - t0) / 1e9
           shuffles += (settledShuffle(shuffleBytes) - s0) / 1e6
         } catch { case e: Throwable =>

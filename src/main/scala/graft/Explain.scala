@@ -8,16 +8,17 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val gates = SparkEntry.gates.sortBy(_.name)
+    val names = if (args.length > 1) args.drop(1).toSeq else gates.map(_.name)
     val cpus = graft.core.GraftSession.cpus().toString
     val spark = graft.core.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
-      SparkEntry.queries.get(name) match {
+      gates.find(_.name == name) match {
         case None => System.err.println(s"unknown query: $name")
-        case Some(fn) =>
+        case Some(g) =>
           println(s"\n========== $name ==========")
-          fn(spark, sfDir).explain("formatted")
+          g.run(spark, sfDir).explain("formatted")
       }
     }
     spark.stop()

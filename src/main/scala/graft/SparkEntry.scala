@@ -2,22 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.analytics.{GraftSql, LlmSql, TpchSql, TpchSuite}
 import graft.core.Tables
-import graft.ops._
+import graft.gates._
+import graft.ops.Relational
 
 /** Driver contract — the declared operator surface (SURVEY.md §2).
   *
-  * EVERY declared query has a DuckDB-oracle twin in [[oracleSql]] —
-  * including the LSH/minhash/ANN family, whose seeded constants
-  * (hyperplanes, probe masks, affine coefficients) are baked into the
-  * twin SQL as literals so the candidate rules match by construction.
-  * Streaming and connector ingestion (not expressible as queries over
-  * the gate tables) are covered by ScalaTest specs instead.
-  *
-  * SQL twins follow the [[graft.ops.Exact]] portability contract:
-  * decimal sums, floor-quantization, micros-precision time arithmetic,
-  * md5 hex-string hashing, total ORDER BY with id tiebreaks.
+  * Every declared query is a [[graft.gates.Gate]]: its name, its
+  * DuckDB-oracle twin and its body, written side by side in one gate
+  * family under `graft/gates/` — including the LSH/minhash/ANN family,
+  * whose seeded constants (hyperplanes, probe masks, affine
+  * coefficients) are baked into the twin SQL as literals so the
+  * candidate rules match by construction. Streaming and connector
+  * ingestion (not expressible as queries over the gate tables) are
+  * covered by ScalaTest specs instead.
   */
 object SparkEntry {
 
@@ -27,7559 +25,17 @@ object SparkEntry {
     Relational.segmentRevenue(t.lineitem, t.orders, t.customer)
   }
 
-  // quantization fragments for the SQL twins (see Exact.scala):
-  // per-row floor-quantize in pure IEEE, exact integer-decimal sum.
-  private def mny(x: String): String =
-    s"floor(CAST(sum(CAST(floor(($x)*10000.0+0.5) AS DECIMAL(18,0))) AS DOUBLE)/10000.0*100.0+0.5)/100.0"
-  private def mean(x: String): String =
-    s"floor(CAST(sum(CAST(floor(($x)*1000000.0+0.5) AS DECIMAL(18,0))) AS DOUBLE)/1000000.0/count(*)*10000.0+0.5)/10000.0"
-  private def meanL(x: String): String =
-    s"floor(CAST(sum($x) AS DOUBLE)/count(*)*10000.0+0.5)/10000.0"
-  private def q4(x: String): String = s"floor(($x)*10000.0+0.5)/10000.0"
-  private val rev = "l_extendedprice*(1.0-l_discount)"
-  // derived PARTSUPP for the TPC-H twins — the identical integer
-  // derivation as TpchSuite.partsupp (no partsupp table in the
-  // synthetic schema; DIV/`//` exact in both engines)
-  private val psCte =
-    """ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-      |  CAST(sum(l_quantity) AS BIGINT) * 7 AS ps_availqty,
-      |  min(CAST(floor(l_extendedprice*100.0+0.5) AS BIGINT) //
-      |      CAST(l_quantity AS BIGINT)) AS ps_supplycost_cents
-      |  FROM lineitem GROUP BY 1, 2)""".stripMargin
-  private val toks = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-  // sequential-fold dot/norm over DOUBLE[] lists — bit-identical to
-  // Spark's aggregate() fold (see Similarity scaladoc)
-  /** t161 twin builder: k-core peeling unrolled to exactly `rounds`
-    * degree→filter→restrict rounds as MATERIALIZED chained CTEs (a
-    * plain CTE referenced three times per round would re-evaluate the
-    * whole prefix each time).
-    */
-  private def kCoreUnrolledSql(k: Int, rounds: Int): String = {
-    val head =
-      """WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk)""".stripMargin
-    val steps = (1 to rounds).map { i =>
-      s"""n$i AS MATERIALIZED (SELECT id FROM (
-         |    SELECT a AS id FROM e${i - 1} UNION ALL SELECT b FROM e${i - 1})
-         |  GROUP BY id HAVING count(*) >= $k),
-         |e$i AS MATERIALIZED (SELECT a, b FROM e${i - 1}
-         |  WHERE a IN (SELECT id FROM n$i) AND b IN (SELECT id FROM n$i))""".stripMargin
-    }
-    val tail =
-      s"""SELECT id, count(*) AS deg FROM (
-         |  SELECT a AS id FROM e$rounds UNION ALL SELECT b FROM e$rounds)
-         |GROUP BY id HAVING count(*) >= $k ORDER BY id""".stripMargin
-    (head +: steps).mkString(",\n") + "\n" + tail
-  }
+  /** Every declared gate, family by family; built on each call, so no
+    * twin string outlives its caller. */
+  def gates: Seq[Gate] =
+    RelationalGates.gates ++ EventGates.gates ++ TpchGates.gates ++
+      SqlGates.gates ++ TextGates.gates ++ SimilarityGates.gates ++
+      GraphGates.gates ++ MediaGates.gates ++ StreamingGates.gates ++
+      SourceGates.gates ++ LakeGates.gates
 
-  // t218 twin builder: Luby's MIS unrolled round by round over the
-  // co-purchase graph — same md5 priorities, same (hash, id) tuple
-  // comparisons, same fixed round count (vacuous once empty)
-  /** OLS trend twin — shared by the one-shot gate (t235) and the
-    * streaming moment-MV gate (t236). */
-  private lazy val trendSql: String =
-    """WITH daily AS (SELECT o_orderpriority AS grp,
-      |    date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-      |      AS t, count(*) AS x
-      |  FROM orders GROUP BY 1, 2),
-      |m AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n,
-      |    CAST(sum(t) AS HUGEINT) AS st, CAST(sum(x) AS HUGEINT) AS sx,
-      |    CAST(sum(CAST(t AS HUGEINT) * t) AS HUGEINT) AS stt,
-      |    CAST(sum(CAST(t AS HUGEINT) * x) AS HUGEINT) AS stx
-      |  FROM daily GROUP BY 1)
-      |SELECT grp, CAST(n AS BIGINT) AS n,
-      |  CAST(CASE WHEN n * stt - st * st > 0 THEN
-      |    ((n * stx - st * sx) * 1000000) // (n * stt - st * st)
-      |    END AS BIGINT) AS slope_micro,
-      |  CAST(CASE WHEN n * stt - st * st > 0 THEN
-      |    ((sx * stt - st * stx) * 1000000) // (n * stt - st * st)
-      |    END AS BIGINT) AS intercept_micro
-      |FROM m ORDER BY grp""".stripMargin
-
-  /** s49 candidate core — seed PQ codebooks, encode, reconstruct,
-    * ADC-score every (query, corpus) pair into `sc` (query_id,
-    * vec_id, cos). Shared by the one-shot top-k (s49) and the
-    * retrieve-rerank composition (s62). */
-  private lazy val s49CandCtes: String =
-    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (SELECT vec_id AS cid, v AS cv FROM e
-      |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-      |cs AS (SELECT cid, j, cv[j*8+1:j*8+8] AS scv
-      |  FROM cent, LATERAL (SELECT unnest(range(0, 8)) AS j) u),
-      |xs AS (SELECT vec_id, j, v[j*8+1:j*8+8] AS sv
-      |  FROM e, LATERAL (SELECT unnest(range(0, 8)) AS j) u
-      |  WHERE vec_id >= 5),
-      |code AS (SELECT vec_id, j, cid FROM (
-      |  SELECT xs.vec_id, xs.j, cs.cid,
-      |    row_number() OVER (PARTITION BY xs.vec_id, xs.j ORDER BY
-      |      list_sum(list_transform(range(1, 9), i -> (sv[i]-scv[i])*(sv[i]-scv[i]))),
-      |      cs.cid) AS rn
-      |  FROM xs JOIN cs ON cs.j = xs.j) WHERE rn = 1),
-      |rec AS (SELECT c.vec_id, flatten(list(cs.scv ORDER BY c.j)) AS rv
-      |  FROM code c JOIN cs ON cs.j = c.j AND cs.cid = c.cid GROUP BY 1),
-      |rn2 AS (SELECT vec_id, rv,
-      |  sqrt(list_sum(list_transform(range(1, 65), i -> rv[i]*rv[i]))) AS rnrm
-      |  FROM rec),
-      |q AS (SELECT vec_id AS query_id, v AS qv,
-      |  sqrt(list_sum(list_transform(range(1, 65), i -> v[i]*v[i]))) AS qn
-      |  FROM e WHERE vec_id < 5),
-      |sc AS (SELECT query_id, r.vec_id,
-      |  floor(list_sum(list_transform(range(1, 65), i -> qv[i]*r.rv[i]))
-      |    /(qn*r.rnrm)*1000000.0+0.5)/1000000.0 AS cos
-      |  FROM q CROSS JOIN rn2 r)""".stripMargin
-
-  /** Vocabulary twin — shared by the one-shot gate (t58) and the
-    * streaming count-MV gate (t232). */
-  private lazy val vocabSql: String =
-    s"""WITH w AS (SELECT unnest($toks) AS token FROM documents),
-       |c AS (SELECT token, count(*) AS cnt FROM w GROUP BY 1)
-       |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS token_id,
-       | token, cnt
-       |FROM c ORDER BY cnt DESC, token LIMIT 500""".stripMargin
-
-  /** TPC-H Q1 twin — shared by the one-shot gate (q64) and the
-    * streaming-MV gate (t230), whose folded state must render the
-    * identical rows. */
-  private lazy val tpch01Sql: String =
-    s"""SELECT l_returnflag, l_linestatus,
-       | CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-       | ${mny("l_extendedprice")} AS sum_base_price,
-       | ${mny(rev)} AS sum_disc_price,
-       | ${mny(rev + "*(1.0+l_tax)")} AS sum_charge,
-       | ${meanL("CAST(l_quantity AS BIGINT)")} AS avg_qty,
-       | ${mean("l_extendedprice")} AS avg_price,
-       | ${mean("l_discount")} AS avg_disc,
-       | count(*) AS count_order
-       |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-       |GROUP BY 1,2 ORDER BY 1,2""".stripMargin
-
-  /** t229 twin builder: BPE merge learning unrolled to `steps`
-    * count → top-1 → greedy-apply rounds as materialized chained CTEs
-    * — including the run-parity rule for overlapping (l, l) matches
-    * (leftmost-greedy merges the even offsets of each maximal run).
-    */
-  private def bpeUnrolledSql(steps: Int): String = {
-    val head =
-      s"""WITH s0 AS MATERIALIZED (SELECT doc_id,
-         |    CAST(unnest(range(1, len(tk) + 1)) AS BIGINT) AS pos,
-         |    unnest(tk) AS tok
-         |  FROM (SELECT doc_id, $toks AS tk FROM documents))""".stripMargin
-    val rounds = (1 to steps).map { i =>
-      val p = i - 1
-      s"""w$i AS MATERIALIZED (SELECT a.doc_id, a.pos, a.tok, b.tok AS btok
-         |  FROM s$p a LEFT JOIN s$p b
-         |    ON b.doc_id = a.doc_id AND b.pos = a.pos + 1),
-         |t$i AS MATERIALIZED (SELECT tok AS l, btok AS r, count(*) AS cnt
-         |  FROM w$i WHERE btok IS NOT NULL
-         |  GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1),
-         |runs$i AS MATERIALIZED (SELECT doc_id, pos,
-         |    (pos - min(pos) OVER (PARTITION BY doc_id, island)) % 2 = 0
-         |      AS even
-         |  FROM (SELECT w.doc_id, w.pos, w.pos - row_number()
-         |        OVER (PARTITION BY w.doc_id ORDER BY w.pos) AS island
-         |    FROM w$i w CROSS JOIN t$i t
-         |    WHERE w.tok = t.l AND t.l = t.r)),
-         |st$i AS MATERIALIZED (SELECT w.doc_id, w.pos, w.tok, t.l, t.r,
-         |    coalesce(w.tok = t.l AND w.btok = t.r
-         |      AND (t.l <> t.r OR coalesce(rs.even, false)), false) AS start
-         |  FROM w$i w CROSS JOIN t$i t
-         |  LEFT JOIN runs$i rs ON rs.doc_id = w.doc_id AND rs.pos = w.pos),
-         |s$i AS MATERIALIZED (SELECT doc_id,
-         |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-         |      AS BIGINT) AS pos,
-         |    CASE WHEN start THEN l || '_' || r ELSE tok END AS tok
-         |  FROM st$i x WHERE NOT EXISTS (SELECT 1 FROM st$i y
-         |    WHERE y.doc_id = x.doc_id AND y.pos = x.pos - 1 AND y.start))"""
-        .stripMargin
-    }
-    val finals = (1 to steps).map { i =>
-      s"""SELECT CAST($i AS BIGINT) AS step, l AS left_tok, r AS right_tok,
-         |  CAST(cnt AS BIGINT) AS cnt,
-         |  (SELECT count(*) FROM s$i) AS n_tokens_after
-         |FROM t$i""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    (head +: rounds).mkString(",\n") + "\n" + finals + "\nORDER BY step"
-  }
-
-  private def misUnrolledSql(seed: String, rounds: Int): String = {
-    def ph(i: Int, c: String) =
-      s"md5(concat_ws(':', '$seed', '$i', CAST($c AS VARCHAR)))"
-    val head =
-      """WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |rem0 AS MATERIALIZED (SELECT a AS id FROM e0 UNION SELECT b FROM e0)""".stripMargin
-    val steps = (1 to rounds).map { i =>
-      s"""sym$i AS (SELECT a AS u, b AS v FROM e${i - 1}
-         |  UNION ALL SELECT b, a FROM e${i - 1}),
-         |mn$i AS MATERIALIZED (SELECT u, ph, v FROM (
-         |  SELECT u, ${ph(i, "v")} AS ph, v,
-         |    row_number() OVER (PARTITION BY u
-         |      ORDER BY ${ph(i, "v")}, v) AS rn
-         |  FROM sym$i) WHERE rn = 1),
-         |sel$i AS MATERIALIZED (SELECT u AS id FROM mn$i
-         |  WHERE (${ph(i, "u")}, u) < (ph, v)),
-         |iso$i AS MATERIALIZED (SELECT id FROM rem${i - 1}
-         |  WHERE id NOT IN (SELECT u FROM sym$i)),
-         |rm$i AS MATERIALIZED (SELECT id FROM sel$i
-         |  UNION SELECT v FROM sym$i WHERE u IN (SELECT id FROM sel$i)),
-         |e$i AS MATERIALIZED (SELECT a, b FROM e${i - 1}
-         |  WHERE a NOT IN (SELECT id FROM rm$i)
-         |    AND b NOT IN (SELECT id FROM rm$i)),
-         |rem$i AS MATERIALIZED (SELECT id FROM rem${i - 1}
-         |  WHERE id NOT IN (SELECT id FROM iso$i)
-         |    AND id NOT IN (SELECT id FROM rm$i))""".stripMargin
-    }
-    val arms = (1 to rounds).flatMap(i =>
-      Seq(s"SELECT id FROM sel$i", s"SELECT id FROM iso$i")) :+
-      s"SELECT id FROM rem$rounds"
-    (head +: steps).mkString(",\n") + "\n" +
-      arms.mkString("", "\nUNION\n", "\nORDER BY id")
-  }
-
-  private def sqlDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1,65), i -> $a.v[i]*$b.v[i]))"
-  private val sqlNorm = "sqrt(list_sum(list_transform(range(1,65), i -> v[i]*v[i])))"
-  // affine-minhash constants shared with Dedup (same seed → same values)
-  private val mhP = graft.ops.Dedup.MinhashP
-  private val mhCoeffs = graft.ops.Dedup.minhashCoeffs(16)
-  private val chunkStride = TextOps.DefaultChunkWidth - TextOps.DefaultChunkOverlap
-  // s47's literal query — one constant interpolated into BOTH the
-  // Spark call and the twin SQL (single source of truth)
-  private val SearchQuery = "spark agg window merge vector"
-  // s55's query table — one constant Seq interpolated into BOTH the
-  // Spark frame and the twin's VALUES rows (single source of truth);
-  // query 1 is s53's literal so the batch form provably covers it
-  private val BatchQueries = Seq(
-    (1L, SearchQuery),
-    (2L, "customer query stream filter"),
-    (3L, "hash join sort column"))
-  private def batchQueryValues: String =
-    BatchQueries.map { case (id, q) => s"(CAST($id AS BIGINT), '$q')" }
-      .mkString(", ")
-  // t64/t65 media fixture as VALUES rows, generated from the SAME Seq
-  // the Spark-side frame is built from (Fixtures.mediaMeta)
-  private def mediaValues: String =
-    graft.sources.Fixtures.mediaMeta.map { case (id, kind, w, h, dur, codec) =>
-      s"(CAST($id AS BIGINT), '$kind', $w, $h, CAST($dur AS BIGINT), '$codec')"
-    }.mkString(",\n         |  ")
-  // centroid-component exact mean (Exact.meanOf6's SQL twin): quantize
-  // per row in pure IEEE, sum exactly as DECIMAL, divide once
-  private def cmean(x: String): String =
-    s"floor(CAST(sum(CAST(floor(($x)*1000000.0+0.5) AS DECIMAL(18,0))) AS DOUBLE)/1000000.0/count(*)*1000000.0+0.5)/1000000.0"
-
-  // t81 twin: one aggregate row unpivoted by a generated UNION — the
-  // same column list as Relational.tableProfile, same quantized
-  // min/max doubles, exact NDVs
-  private lazy val t81Sql: String = {
-    val cols = Relational.ProfileColumns
-    val per = cols.map(c =>
-      s"SELECT '$c' AS col_name, n_rows, nn_$c AS n_nulls, ndv_$c AS ndv, min_$c AS min_d, max_$c AS max_d FROM s")
-      .mkString("\nUNION ALL\n")
-    s"""WITH s AS (SELECT count(*) AS n_rows,
-       |  ${cols.map(c =>
-            s"CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_$c, " +
-              s"count(DISTINCT $c) AS ndv_$c, " +
-              s"${q4(s"CAST(min($c) AS DOUBLE)")} AS min_$c, " +
-              s"${q4(s"CAST(max($c) AS DOUBLE)")} AS max_$c").mkString(",\n  ")}
-       |  FROM lineitem)
-       |$per
-       |ORDER BY col_name""".stripMargin
-  }
-
-  // t70/t75 shared twin: the planted-paragraph corpus deduplicated by
-  // global first occurrence; `where` restricts the OUTPUT docs (t75's
-  // shard) while kept flags always see every occurrence
-  private def paragraphDedupSql(where: String): String =
-    s"""WITH p AS (SELECT doc_id,
-       |  substring(text,1,80) || chr(10)||chr(10) ||
-       |  ([${graft.ops.Dedup.BoilerParagraphs.map(b => s"'$b'").mkString(",")}])[CAST(doc_id % ${graft.ops.Dedup.BoilerParagraphs.size} + 1 AS INTEGER)] ||
-       |  chr(10)||chr(10) || substring(text,81,1000000) AS text FROM documents),
-       |sp AS (SELECT doc_id, string_split(text, chr(10)||chr(10)) AS ps FROM p),
-       |pr AS (SELECT doc_id, CAST(i-1 AS INTEGER) AS pos, ps[i] AS para
-       |  FROM sp, LATERAL (SELECT unnest(range(1, len(ps)+1)) AS i) u
-       |  WHERE length(ps[i]) > 0),
-       |k AS (SELECT doc_id, pos, para,
-       |  row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, pos) = 1 AS kept
-       |  FROM pr)
-       |SELECT doc_id, count(*) AS n_paras,
-       |  CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       |  coalesce(string_agg(CASE WHEN kept THEN para END, chr(10)||chr(10) ORDER BY pos), '') AS clean_text
-       |FROM k $where GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  // t23/q121 shared twin: normalized-fingerprint exact dedup — the
-  // SQL-text gate reuses the library gate's oracle verbatim
-  private lazy val exactDedupSql: String =
-    """WITH fp AS (SELECT doc_id,
-      |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-      |  FROM documents),
-      |c AS (SELECT fp, min(doc_id) AS canonical_id FROM fp GROUP BY 1)
-      |SELECT f.doc_id, c.canonical_id, f.doc_id <> c.canonical_id AS is_dup
-      |FROM fp f JOIN c ON f.fp = c.fp ORDER BY f.doc_id""".stripMargin
-
-  // s31/q123 shared twin: the sequential-fold cosine top-k recompute
-  private lazy val cosineTopKSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-       |d AS (SELECT a.vec_id AS qid, b.vec_id AS cid, ${sqlDot("a", "b")} AS dp
-       |  FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id >= 5),
-       |r AS (SELECT qid AS query_id, cid AS vec_id,
-       |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-       |  FROM d JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid)
-       |SELECT query_id, rnk, vec_id, cos FROM (
-       |  SELECT query_id, vec_id, cos,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-       |  FROM r)
-       |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-
-  // t243/q124 shared twin: the planted-contamination 13-gram
-  // verbatim-leak recompute — the SQL-text gate reuses it verbatim
-  private lazy val ngramDecontaminateSql: String =
-    s"""WITH d AS (SELECT doc_id, text FROM documents),
-       |esp AS (SELECT doc_id AS eid,
-       |  array_to_string(($toks)[1:13], ' ') AS span
-       |  FROM d WHERE doc_id % 20 = 0),
-       |tp AS (SELECT d.doc_id, d.text || ' ' || esp.span AS text
-       |  FROM d JOIN esp ON esp.eid = (d.doc_id // 20) * 20
-       |  WHERE d.doc_id % 20 <> 0 AND d.doc_id % 7 = 1),
-       |corpus AS (SELECT doc_id, text FROM d
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM tp)
-       |  UNION ALL SELECT doc_id, text FROM tp),
-       |t AS (SELECT doc_id, $toks AS tk FROM corpus),
-       |g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)-11),
-       |    i -> array_to_string(tk[i:i+12], ' '))) AS ng
-       |  FROM t WHERE len(tk) >= 13),
-       |ev AS (SELECT DISTINCT ng FROM g WHERE doc_id % 20 = 0),
-       |h AS (SELECT doc_id, count(*) AS n_hit FROM g
-       |  WHERE doc_id % 20 <> 0 AND ng IN (SELECT ng FROM ev)
-       |  GROUP BY 1)
-       |SELECT t.doc_id, CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit_grams,
-       |  coalesce(h.n_hit, 0) > 0 AS contaminated
-       |FROM t LEFT JOIN h ON h.doc_id = t.doc_id
-       |WHERE t.doc_id % 20 <> 0 ORDER BY t.doc_id""".stripMargin
-
-  // t25/t90 shared twin: the seeded minhash-LSH pair recompute —
-  // identical affine family, band rule, and quantized exact-Jaccard
-  // verify; t90 streams the same corpus and must emit the same pairs
-  private lazy val minhashPairsSql: String =
-    s"""WITH w AS (SELECT DISTINCT doc_id, tok FROM
-       |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-       |hb AS (SELECT doc_id,
-       |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % $mhP AS h FROM w),
-       |sig AS (SELECT doc_id,
-       |  ${mhCoeffs.zipWithIndex.map { case ((a, b), i) =>
-            s"min(($a*h+$b) % $mhP) AS h$i" }.mkString(",\n       |  ")}
-       |  FROM hb GROUP BY 1),
-       |band AS (
-       |  ${(0 until 4).map(b =>
-            s"SELECT doc_id, $b${if (b == 0) " AS b" else ""}, md5(${(4 * b until 4 * b + 4).map(i => s"h$i::VARCHAR").mkString("||','||")})${if (b == 0) " AS k" else ""} FROM sig")
-            .mkString(" UNION ALL\n       |  ")}),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM band a JOIN band b ON a.b = b.b AND a.k = b.k AND a.doc_id < b.doc_id),
-       |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-       |p AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-       |  FROM cand c JOIN w wa ON wa.doc_id = c.doc_a
-       |  JOIN w wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2)
-       |SELECT p.doc_a, p.doc_b,
-       | ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} AS jac
-       |FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-       |WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.5
-       |ORDER BY doc_a, doc_b""".stripMargin
-
-  // t114's planted accented tail — uppercase and lowercase accents,
-  // typographic dashes/quotes; one constant interpolated into BOTH
-  // the Spark plan and the twin SQL
-  private val NormPlantTail =
-    " Déjà Vu – “Naïve” CAFÉ"
-  private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  // s55/t117 shared twin: integer-cleared batch BM25 over the full
-  // corpus (the incremental index merge must reproduce it)
-  private lazy val bm25BatchSql: String =
-    s"""WITH w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |lens AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY 1),
-         |tot AS (SELECT CAST(sum(len) AS BIGINT) AS sl, count(*) AS nd FROM lens),
-         |q AS (SELECT * FROM (VALUES $batchQueryValues) AS v(query_id, qtext)),
-         |qt AS (SELECT DISTINCT query_id,
-         |    unnest(regexp_extract_all(lower(qtext), '[a-z0-9]+')) AS term FROM q),
-         |m AS (SELECT qt.query_id, tf.doc_id,
-         |  CAST(floor(
-         |    (44.0*(nd-df)*tf*sl) / (20.0*tf*sl + 6.0*sl + 18.0*len*nd)
-         |    * 1000000.0 + 0.5) AS BIGINT) AS ts
-         |  FROM tf JOIN qt USING (term) JOIN df USING (term)
-         |    JOIN lens ON lens.doc_id = tf.doc_id CROSS JOIN tot),
-         |s AS (SELECT query_id, doc_id, CAST(sum(ts) AS DOUBLE)/1000000.0 AS score
-         |  FROM m GROUP BY 1, 2)
-         |SELECT query_id, rnk, doc_id, score FROM (
-         |  SELECT query_id, doc_id, score,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         |  FROM s)
-         |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
-
-  // t112/t116 shared twin: the cohort retention triangle over the
-  // full event history (the incremental activity-index fold must
-  // reproduce it)
-  private lazy val cohortSql: String =
-    """WITH e AS (SELECT user_id,
-      |  CAST(floor(epoch_us(ts) / 604800000000.0) AS BIGINT) AS wk FROM events),
-      |f AS (SELECT user_id, min(wk) AS cohort_wk FROM e GROUP BY 1),
-      |a AS (SELECT DISTINCT f.cohort_wk, e.wk - f.cohort_wk AS wk_offset, e.user_id
-      |  FROM e JOIN f USING (user_id))
-      |SELECT cohort_wk, wk_offset, count(*) AS n_users
-      |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  // t111/t113 shared twin: the ordered per-user funnel over the
-  // full event table (the streaming state fold must equal it)
-  private lazy val funnelSql: String =
-    """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-      |s1 AS (SELECT user_id, min(us) AS t1 FROM e
-      |  WHERE event_type = 'view' GROUP BY 1),
-      |s2 AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN s1 USING (user_id)
-      |  WHERE event_type = 'click' AND us > t1 GROUP BY 1),
-      |s3 AS (SELECT e.user_id, min(us) AS t3 FROM e JOIN s2 USING (user_id)
-      |  WHERE event_type = 'purchase' AND us > t2 GROUP BY 1)
-      |SELECT s1.user_id,
-      |  CAST(1 + CASE WHEN t2 IS NULL THEN 0 ELSE 1 END
-      |         + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS stage,
-      |  t1, t2, t3
-      |FROM s1 LEFT JOIN s2 ON s2.user_id = s1.user_id
-      |  LEFT JOIN s3 ON s3.user_id = s1.user_id
-      |ORDER BY s1.user_id""".stripMargin
-
-  // t52/t110 shared twin: deterministic per-source content-hash
-  // sample over the FULL corpus (the incremental fold must equal it)
-  private lazy val stratSampleSql: String =
-    """WITH h AS (SELECT doc_id, source,
-      |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
-      |  FROM documents)
-      |SELECT source, rnk, doc_id, h FROM (
-      |  SELECT source, doc_id, h,
-      |    CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS rnk
-      |  FROM h) WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin
-
-  // s56/t109 shared fragment: hashed tf-idf vectors (the s47 CTEs) →
-  // non-zero-norm frame → first-8 seed centroids → argmax-cosine
-  // assignment; ends at CTE `r` = (doc_id, cid, sim, rn)
-  private lazy val topicClusterCtes: String =
-    s"""w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-       |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |nd AS (SELECT count(*) AS n_docs FROM documents),
-       |bw AS (SELECT doc_id,
-       |    CAST(('0x'||substr(md5(term),1,15)) AS BIGINT) % 64 AS b,
-       |    CAST(sum(tf * (n_docs - df)) AS BIGINT) AS num
-       |  FROM tf JOIN df USING (term) CROSS JOIN nd GROUP BY 1, 2),
-       |grid AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM tf),
-       |  (SELECT unnest(range(0, 64)) AS i)),
-       |dv AS (SELECT g.doc_id,
-       |    list(CAST(coalesce(bw.num, 0) AS DOUBLE) / nd.n_docs ORDER BY g.i) AS v
-       |  FROM grid g LEFT JOIN bw ON bw.doc_id = g.doc_id AND bw.b = g.i
-       |  CROSS JOIN nd GROUP BY 1),
-       |nz AS (SELECT doc_id, v, $sqlNorm AS nrm FROM dv
-       |  WHERE $sqlNorm > 0),
-       |cents AS (SELECT doc_id AS cid, v, nrm AS cn FROM nz
-       |  ORDER BY doc_id LIMIT 8),
-       |a AS (SELECT d.doc_id, c.cid,
-       |    ${sqlDot("d", "c")} / (d.nrm * c.cn) AS sim
-       |  FROM nz d CROSS JOIN cents c),
-       |r AS (SELECT doc_id, cid, sim,
-       |    row_number() OVER (PARTITION BY doc_id ORDER BY sim DESC, cid) AS rn
-       |  FROM a)""".stripMargin
-
-  /** t143/t144 shared planting: one row per distinct part name
-    * (keyed by min part key), each entity re-ingested TWICE — first
-    * character mangled (+1e6, invisible to a prefix block) and last
-    * character mangled (+2e6, invisible to a suffix block) — plus an
-    * unmatched md5-named singleton for every 5th entity (+3e6, so the
-    * entity-id assignment's no-match arm is non-vacuous). The twin
-    * fragment [[fuzzyCte]] plants identically.
-    */
-  private def fuzzyPlanted(t: graft.core.Tables): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat, expr, lit, md5, min, substring}
-    val base = t.part.groupBy(col("p_name").as("name"))
-      .agg(min("p_partkey").as("key")).select("key", "name")
-    base
-      .unionByName(base.select((col("key") + 1000000L).as("key"),
-        concat(lit("x"), substring(col("name"), 2, 1000)).as("name")))
-      .unionByName(base.select((col("key") + 2000000L).as("key"),
-        concat(expr("substr(name, 1, length(name)-1)"), lit("x")).as("name")))
-      .unionByName(base.filter(col("key") % 5 === 0)
-        .select((col("key") + 3000000L).as("key"),
-          concat(lit("z"), md5(col("key").cast("string"))).as("name")))
-  }
-
-  /** DuckDB twin of [[fuzzyPlanted]] + the two-pass blocked candidate
-    * chain — ends at CTE `m` = (key_a, key_b, dist), verified pairs.
-    */
-  private def fuzzyCte: String =
-    """ent AS (SELECT min(p_partkey) AS key, p_name AS name FROM part GROUP BY 2),
-      |named AS (SELECT key, name FROM ent
-      |  UNION ALL SELECT key + 1000000, 'x' || substr(name, 2) FROM ent
-      |  UNION ALL SELECT key + 2000000, substr(name, 1, length(name)-1) || 'x' FROM ent
-      |  UNION ALL SELECT key + 3000000, 'z' || md5(CAST(key AS VARCHAR)) FROM ent WHERE key % 5 = 0),
-      |b1 AS (SELECT key, name, substr(name, 2) AS b FROM named),
-      |b2 AS (SELECT key, name, substr(name, 1, length(name)-1) AS b FROM named),
-      |cand AS (
-      |  SELECT a.key AS key_a, b.key AS key_b FROM b1 a JOIN b1 b ON a.b = b.b AND a.key < b.key
-      |  UNION
-      |  SELECT a.key, b.key FROM b2 a JOIN b2 b ON a.b = b.b AND a.key < b.key),
-      |m AS (SELECT c.key_a, c.key_b,
-      |    CAST(levenshtein(na.name, nb.name) AS BIGINT) AS dist
-      |  FROM cand c JOIN named na ON na.key = c.key_a
-      |  JOIN named nb ON nb.key = c.key_b
-      |  WHERE levenshtein(na.name, nb.name) <= 2)""".stripMargin
-
-  // t71/t72 shared fragment: the planted raw-URL corpus (UrlOps
-  // .plantUrls verbatim) canonicalized by the same rule chain — ends
-  // at CTE `n` = (doc_id, url_norm, domain)
-  private def urlNormCte: String = urlNormCteNamed("", "")
-
-  /** [[urlNormCte]] with prefixed CTE names and a source predicate,
-    * so one twin (t135) can instantiate the chain twice — once
-    * shard-scoped, once corpus-wide — without CTE collisions.
-    */
-  private def urlNormCteNamed(p: String, where: String): String = {
-    // every fragment must actually occur in the body — a silent no-op
-    // replace (after a body edit drifts whitespace or adds a second
-    // reference) would leave the prefixed chain pointing at the
-    // corpus-wide CTEs, caught only when the t135 gate diffs at runtime
-    def sub(s: String, from: String, to: String): String = {
-      require(s.contains(from),
-        s"urlNormCteNamed: fragment '$from' not found — urlNormCteBody drifted")
-      s.replace(from, to)
-    }
-    Seq(
-      "FROM documents)" -> s"FROM documents$where)",
-      "u AS (" -> s"${p}u AS (",
-      "w AS (" -> s"${p}w AS (",
-      "c AS (" -> s"${p}c AS (",
-      "n AS (" -> s"${p}n AS (",
-      "FROM u)" -> s"FROM ${p}u)",
-      "FROM w)" -> s"FROM ${p}w)",
-      "FROM c))" -> s"FROM ${p}c))"
-    ).foldLeft(urlNormCteBody) { case (acc, (from, to)) => sub(acc, from, to) }
-  }
-
-  private def urlNormCteBody: String =
-    s"""u AS (SELECT doc_id,
-       |  CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.News.Site' ELSE 'HTTP://WWW.News.Site' END ||
-       |  (doc_id % 20) ||
-       |  CASE WHEN doc_id % 2 = 0 THEN '.COM:443' ELSE '.NET:80' END ||
-       |  '/Article/Item' || (doc_id % 50) || '/?utm_source=feed&id=' ||
-       |  (doc_id % 25) || '&ref=abc&utm_campaign=x#sec' || (doc_id % 5) AS url
-       |  FROM documents),
-       |w AS (SELECT doc_id, regexp_replace(trim(url), '#.*', '') AS wk FROM u),
-       |c AS (SELECT doc_id,
-       |  lower(regexp_extract(wk, '${graft.ops.UrlOps.UrlSchemeRe}', 1)) AS scheme,
-       |  regexp_replace(lower(regexp_extract(wk, '${graft.ops.UrlOps.UrlHostRe}', 1)), '^www\\.', '') AS hp,
-       |  regexp_replace(regexp_extract(wk, '${graft.ops.UrlOps.UrlPathRe}', 1), '/+$$', '') AS path,
-       |  regexp_extract(wk, '${graft.ops.UrlOps.UrlQueryRe}', 1) AS q FROM w),
-       |n AS (SELECT doc_id,
-       |  scheme || '://' || host || path ||
-       |    CASE WHEN qn = '' THEN '' ELSE '?' || qn END AS url_norm,
-       |  regexp_extract(regexp_replace(host, ':[0-9]+$$', ''), '${graft.ops.UrlOps.DomainRe}', 1) AS domain
-       |  FROM (SELECT doc_id, scheme, path,
-       |    CASE WHEN scheme = 'https' THEN regexp_replace(hp, ':443$$', '')
-       |         WHEN scheme = 'http' THEN regexp_replace(hp, ':80$$', '')
-       |         ELSE hp END AS host,
-       |    array_to_string(list_filter(string_split(q, '&'),
-       |      p -> p <> '' AND NOT regexp_matches(p, '${graft.ops.UrlOps.TrackingParamRe}')), '&') AS qn
-       |    FROM c))""".stripMargin
-
-  /** One unrolled Lloyd sweep for the s36 twin: assign the corpus to
-    * its argmax-similarity centroid from `prev`, then rebuild each
-    * surviving cell's centroid component-wise with [[cmean]] and
-    * re-derive the norm with the sequential fold. Emits CTEs
-    * a<i>, m<i>, cn<i>.
-    */
-  private def s36Iter(prev: String, it: Int): String =
-    s"""a$it AS (SELECT cid, v FROM (
-       |  SELECT c.v, ct.cid,
-       |    row_number() OVER (PARTITION BY c.vec_id
-       |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-       |        ct.cid) AS rn
-       |  FROM corpus c CROSS JOIN $prev ct) WHERE rn = 1),
-       |m$it AS (SELECT cid, pos, ${cmean("val")} AS m
-       |  FROM (SELECT cid, i AS pos, v[i] AS val FROM a$it, (SELECT unnest(range(1,65)) AS i))
-       |  GROUP BY 1,2),
-       |cn$it AS (SELECT cid, cv,
-       |  sqrt(list_sum(list_transform(range(1,65), j -> cv[j]*cv[j]))) AS cn
-       |  FROM (SELECT cid, list(m ORDER BY pos) AS cv FROM m$it GROUP BY 1))""".stripMargin
-
-  // s33's seeded hyperplanes as DuckDB VALUES rows (i, DOUBLE[64]);
-  // Double.toString round-trips exactly, so DuckDB parses the same
-  // 64-bit values the Spark plan carries as literals
-  private def s33PlanesSql: String =
-    Similarity.hyperplanes(12, 64).zipWithIndex.map { case (p, i) =>
-      s"($i, [${p.mkString(",")}])"
-    }.mkString(",\n         |  ")
-
-  // s36/s41 twin: one definition, two gate rows (the serving path
-  // must answer bit-identically to the one-shot Lloyd-refined IVF)
-  // t127's one-shot PIT-join SQL — shared verbatim by the t221
-  // streaming enrichment twin
-  private lazy val t127Sql: String =
-    """WITH o AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-      |  row_number() OVER (PARTITION BY o_custkey
-      |    ORDER BY o_orderdate, o_orderkey)
-      |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-      |    ORDER BY o_orderdate, o_orderkey) AS grp
-      |  FROM orders),
-      |r AS (SELECT o_custkey, o_orderstatus, grp,
-      |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key
-      |  FROM o GROUP BY 1, 2, 3),
-      |iv AS (SELECT o_custkey, o_orderstatus, valid_from,
-      |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-      |    ORDER BY valid_from, first_key) AS valid_to
-      |  FROM r),
-      |p AS (SELECT event_id, user_id + 1 AS custkey,
-      |  DATE '1992-01-01' + CAST(event_id % 2500 AS INTEGER) AS pdate
-      |  FROM events)
-      |SELECT p.event_id, p.custkey, p.pdate, iv.o_orderstatus, iv.valid_from
-      |FROM p LEFT JOIN iv ON iv.o_custkey = p.custkey
-      |  AND iv.valid_from <= p.pdate
-      |  AND (iv.valid_to IS NULL OR p.pdate < iv.valid_to)
-      |ORDER BY p.event_id""".stripMargin
-
-  // t204's one-shot islands SQL — shared verbatim by the t220
-  // streaming seam-stitch twin
-  private lazy val t204Sql: String =
-    """WITH ids AS (SELECT DISTINCT o_orderkey AS id FROM orders
-      |  WHERE o_orderkey % 13 <> 5),
-      |g AS (SELECT id, id - row_number() OVER (ORDER BY id) AS grpk FROM ids)
-      |SELECT min(id) AS island_start, max(id) AS island_end,
-      |  max(id) - min(id) + 1 AS span_len
-      |FROM g GROUP BY grpk ORDER BY island_start""".stripMargin
-
-  // t209's one-shot TWAP SQL — shared verbatim by the t217 streaming
-  // carry-fold twin
-  private lazy val t209Sql: String =
-    """WITH o AS (SELECT o_custkey AS k,
-      |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS t,
-      |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v FROM orders),
-      |p AS (SELECT k, t, v,
-      |    lead(t) OVER (PARTITION BY k ORDER BY t, v) AS t2 FROM o),
-      |f AS (SELECT k, CAST(t2 - t AS HUGEINT) AS w, CAST(v AS HUGEINT) AS v
-      |  FROM p WHERE t2 IS NOT NULL),
-      |m AS (SELECT k, count(*) AS n1, sum(w) AS span, sum(w * v) AS integral
-      |  FROM f GROUP BY 1)
-      |SELECT k, CAST(n1 + 1 AS BIGINT) AS n_obs, CAST(span AS BIGINT) AS span,
-      |  CAST((integral * 1000000) // span AS BIGINT) AS twap_micro
-      |FROM m WHERE span > 0 ORDER BY k""".stripMargin
-
-  // s35's seed-centroid IVF SQL (kmeansIters = 0) — shared verbatim
-  // by the t213 streaming-intake twin: the streamed index must be
-  // indistinguishable from the one-shot build
-  private lazy val s35Sql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-       |ev AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id),
-       |cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM ev
-       |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-       |asg AS (SELECT vec_id, v, nrm, cid FROM (
-       |  SELECT c.vec_id, c.v, c.nrm, ct.cid,
-       |    row_number() OVER (PARTITION BY c.vec_id
-       |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-       |        ct.cid) AS rn
-       |  FROM ev c CROSS JOIN cent ct WHERE c.vec_id >= 5)
-       |  WHERE rn = 1),
-       |qp AS (SELECT query_id, qv, qn, cid FROM (
-       |  SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qn, ct.cid,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY list_sum(list_transform(range(1,65), j -> q.v[j]*ct.cv[j]))/(q.nrm*ct.cn) DESC,
-       |        ct.cid) AS rn
-       |  FROM ev q CROSS JOIN cent ct WHERE q.vec_id < 5)
-       |  WHERE rn <= 4),
-       |s AS (SELECT DISTINCT query_id, a.vec_id,
-       |  floor(list_sum(list_transform(range(1,65), j -> qv[j]*a.v[j]))/(qn*a.nrm)*1000000.0+0.5)/1000000.0 AS cos
-       |  FROM qp JOIN asg a ON qp.cid = a.cid)
-       |SELECT query_id, rnk, vec_id, cos FROM (
-       |  SELECT query_id, vec_id, cos,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-       |  FROM s)
-       |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-
-  private lazy val s36Sql: String =
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |corpus AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id
-         |  WHERE e.vec_id >= 5),
-         |cn0 AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM corpus ORDER BY vec_id LIMIT 16),
-         |${s36Iter("cn0", 1)},
-         |${s36Iter("cn1", 2)},
-         |qv AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id
-         |  WHERE e.vec_id < 5),
-         |asg AS (SELECT vec_id, v, nrm, cid FROM (
-         |  SELECT c.vec_id, c.v, c.nrm, ct.cid,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM corpus c CROSS JOIN cn2 ct) WHERE rn = 1),
-         |qp AS (SELECT query_id, qvec, qn, cid FROM (
-         |  SELECT q.vec_id AS query_id, q.v AS qvec, q.nrm AS qn, ct.cid,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> q.v[j]*ct.cv[j]))/(q.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM qv q CROSS JOIN cn2 ct) WHERE rn <= 4),
-         |s AS (SELECT DISTINCT query_id, a.vec_id,
-         |  floor(list_sum(list_transform(range(1,65), j -> qvec[j]*a.v[j]))/(qn*a.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM qp JOIN asg a ON qp.cid = a.cid)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM s)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-
-  // s33/s40/s45 twin core: the ANN pipeline over whatever CTE chain
-  // defines `e` (vec_id, v DOUBLE[]) — raw embeddings for s33/s40,
-  // the int8 quantize→dequantize chain (s43's arithmetic, verbatim)
-  // for the quantized-index composition s45
-  private def s33SqlFrom(eCtes: String, bandWhere: String = ""): String =
-      s"""WITH $eCtes,
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |pl AS (SELECT * FROM (VALUES
-         |  $s33PlanesSql) AS t(i, pv)),
-         |bk AS (SELECT e.vec_id,
-         |  sum(CASE WHEN list_sum(list_transform(range(1,65), j -> e.v[j]*pl.pv[j])) > 0
-         |      THEN 1::BIGINT << pl.i ELSE 0::BIGINT END) AS bucket
-         |  FROM e CROSS JOIN pl GROUP BY 1),
-         |c AS (SELECT e.vec_id, e.v, nr.nrm, bk.bucket
-         |  FROM e JOIN nr ON nr.vec_id = e.vec_id JOIN bk ON bk.vec_id = e.vec_id
-         |  WHERE e.vec_id >= 5),
-         |q AS (SELECT e.vec_id AS query_id, e.v AS qv, nr.nrm AS qn,
-         |  xor(bk.bucket, pm.m) AS bucket
-         |  FROM e JOIN nr ON nr.vec_id = e.vec_id JOIN bk ON bk.vec_id = e.vec_id
-         |  CROSS JOIN (SELECT unnest([${(0L +: (0 until 12).map(1L << _).toSeq).mkString(",")}]) AS m) pm
-         |  WHERE e.vec_id < 5),
-         |s AS (SELECT DISTINCT query_id, c.vec_id,
-         |  floor(list_sum(list_transform(range(1,65), j -> qv[j]*c.v[j]))/(qn*c.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM q JOIN c ON q.bucket = c.bucket)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM s $bandWhere)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-
-  private lazy val s33Sql: String =
-    s33SqlFrom("e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)")
-
-  // s61: the s33 candidate pipeline over the s42/s44 planted corpus
-  // with the hard-negative cosine band filtered BEFORE the rank
-  private lazy val s61Sql: String = s33SqlFrom(
-    """u AS (
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 1000000 AS vec_id,
-      |    list_transform(range(1,65),
-      |      i -> CASE WHEN i = 64 THEN -embedding[i] ELSE embedding[i] END) AS embedding
-      |  FROM embeddings WHERE vec_id % 10 = 0),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u)""".stripMargin,
-    bandWhere = "WHERE cos >= 0.02 AND cos < 0.9")
-
-  // s45: the s43 quantize→dequantize chain feeding the s33 pipeline
-  private lazy val s45Sql: String = s33SqlFrom(
-    """e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |sc AS (SELECT vec_id, list_max(list_transform(v, x -> abs(x))) AS scale FROM e0),
-      |qt AS (SELECT e0.vec_id, sc.scale,
-      |  CASE WHEN sc.scale > 0.0
-      |    THEN list_transform(e0.v, x -> CAST(floor(x/sc.scale*127.0 + 0.5) AS BIGINT))
-      |    ELSE list_transform(e0.v, x -> CAST(0 AS BIGINT)) END AS q
-      |  FROM e0 JOIN sc ON sc.vec_id = e0.vec_id),
-      |e AS (SELECT vec_id,
-      |  list_transform(q, x -> CAST(x AS DOUBLE)*scale/127.0) AS v FROM qt)""".stripMargin)
-
-  // s57/s58: the seeded 64→16 Johnson–Lindenstrauss projection as
-  // DuckDB CTEs — the same hyperplane constants baked into the Spark
-  // plan, each component one sequential fold; ends at CTE `pf` =
-  // the projected top-5 (query_id, vec_id) with `pr` carrying cos
-  private lazy val projChainCtes: String = {
-    val planes = graft.ops.Similarity.hyperplanes(16, 64, 99L)
-    val comps = planes.map { p =>
-      s"list_sum(list_transform(range(1,65), i -> v[i] * ${p.mkString("[", ", ", "]")}[i]))"
-    }.mkString(",\n       |    ")
-    s"""e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |ep AS (SELECT vec_id, [
-       |    $comps] AS v FROM e0),
-       |pnr AS (SELECT vec_id,
-       |  sqrt(list_sum(list_transform(range(1,17), i -> v[i]*v[i]))) AS nrm FROM ep),
-       |pd AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-       |  list_sum(list_transform(range(1,17), i -> a.v[i]*b.v[i])) AS dp
-       |  FROM ep a JOIN ep b ON a.vec_id < 5 AND b.vec_id >= 5),
-       |pr AS (SELECT qid AS query_id, cid AS vec_id,
-       |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-       |  FROM pd JOIN pnr na ON na.vec_id = qid JOIN pnr nb ON nb.vec_id = cid),
-       |pf AS (SELECT query_id, vec_id, cos, rnk FROM (
-       |  SELECT query_id, vec_id, cos,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-       |  FROM pr) WHERE rnk <= 5)""".stripMargin
-  }
-
-  // s59 twin: the s31 top-10 retrieval for query 0 feeding FIVE
-  // unrolled greedy MMR rounds (the s36 sweep-unroll precedent) —
-  // identical quantized objective, identical (mmr DESC, doc_id)
-  // argmax, and the (1−λ) factor interpolated as the verbatim IEEE
-  // result of computing it from λ
-  private lazy val s59Sql: String = {
-    val lam = 0.7
-    val om = (1.0 - lam).toString
-    def qdot(a: String, b: String) =
-      s"list_sum(list_transform(range(1,65), i -> $a.v[i]*$b.v[i]))"
-    val rounds = (2 to 5).map { i =>
-      s"""m$i AS (SELECT c.doc_id,
-         |  max(floor(${qdot("c", "s")}/(c.nrm*s.nrm)*1000000.0+0.5)/1000000.0) AS maxsim
-         |  FROM cand c, sel${i - 1} s
-         |  WHERE c.doc_id NOT IN (SELECT doc_id FROM sel${i - 1})
-         |  GROUP BY c.doc_id),
-         |p$i AS (SELECT c.doc_id, c.score, c.v, c.nrm,
-         |  floor(($lam*c.score - $om*m.maxsim)*1000000.0+0.5)/1000000.0 AS mmr
-         |  FROM m$i m JOIN cand c ON c.doc_id = m.doc_id
-         |  ORDER BY mmr DESC, c.doc_id LIMIT 1),
-         |sel$i AS (SELECT doc_id, v, nrm FROM sel${i - 1}
-         |  UNION ALL SELECT doc_id, v, nrm FROM p$i)""".stripMargin
-    }.mkString(",\n")
-    val emit = (2 to 5).map(i =>
-      s"UNION ALL SELECT CAST($i AS BIGINT), doc_id, score, mmr FROM p$i")
-      .mkString("\n  ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-       |sc AS (SELECT b.vec_id, floor(${qdot("a", "b")}/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-       |  FROM e a JOIN e b ON a.vec_id < 1 AND b.vec_id >= 1
-       |  JOIN nr na ON na.vec_id = a.vec_id JOIN nr nb ON nb.vec_id = b.vec_id),
-       |top AS (SELECT vec_id, cos FROM (SELECT vec_id, cos,
-       |  row_number() OVER (ORDER BY cos DESC, vec_id) AS rnk FROM sc) WHERE rnk <= 10),
-       |cand AS (SELECT t.vec_id AS doc_id, t.cos AS score, c.v, n.nrm
-       |  FROM top t JOIN e c ON c.vec_id = t.vec_id JOIN nr n ON n.vec_id = t.vec_id),
-       |p1 AS (SELECT doc_id, score, v, nrm,
-       |  floor($lam*score*1000000.0+0.5)/1000000.0 AS mmr FROM cand
-       |  ORDER BY mmr DESC, doc_id LIMIT 1),
-       |sel1 AS (SELECT doc_id, v, nrm FROM p1),
-       |$rounds
-       |SELECT rnk, doc_id, score, mmr FROM (
-       |  SELECT CAST(1 AS BIGINT) AS rnk, doc_id, score, mmr FROM p1
-       |  $emit)
-       |ORDER BY rnk""".stripMargin
-  }
-
-  // s60 twin: s59's five unrolled greedy rounds GENERALIZED to a
-  // query table — the per-round argmax becomes a query-partitioned
-  // row_number and the selected-set joins key on query_id; identical
-  // quantized objective and tie-break
-  private lazy val s60Sql: String = {
-    val lam = 0.7
-    val om = (1.0 - lam).toString
-    def qdot(a: String, b: String) =
-      s"list_sum(list_transform(range(1,65), i -> $a.v[i]*$b.v[i]))"
-    val rounds = (2 to 5).map { i =>
-      s"""m$i AS (SELECT c.query_id, c.doc_id,
-         |  max(floor(${qdot("c", "s")}/(c.nrm*s.nrm)*1000000.0+0.5)/1000000.0) AS maxsim
-         |  FROM cand c JOIN sel${i - 1} s ON s.query_id = c.query_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM sel${i - 1} x
-         |    WHERE x.query_id = c.query_id AND x.doc_id = c.doc_id)
-         |  GROUP BY 1, 2),
-         |p$i AS (SELECT query_id, doc_id, score, v, nrm, mmr FROM (
-         |  SELECT c.query_id, c.doc_id, c.score, c.v, c.nrm,
-         |    floor(($lam*c.score - $om*m.maxsim)*1000000.0+0.5)/1000000.0 AS mmr,
-         |    row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY floor(($lam*c.score - $om*m.maxsim)*1000000.0+0.5)/1000000.0 DESC,
-         |        c.doc_id) AS rn
-         |  FROM m$i m JOIN cand c ON c.query_id = m.query_id AND c.doc_id = m.doc_id)
-         |  WHERE rn = 1),
-         |sel$i AS (SELECT query_id, doc_id, v, nrm FROM sel${i - 1}
-         |  UNION ALL SELECT query_id, doc_id, v, nrm FROM p$i)""".stripMargin
-    }.mkString(",\n")
-    val emit = (2 to 5).map(i =>
-      s"UNION ALL SELECT query_id, CAST($i AS BIGINT), doc_id, score, mmr FROM p$i")
-      .mkString("\n  ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-       |sc AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |  floor(${qdot("a", "b")}/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-       |  FROM e a JOIN e b ON a.vec_id < 3 AND b.vec_id >= 3
-       |  JOIN nr na ON na.vec_id = a.vec_id JOIN nr nb ON nb.vec_id = b.vec_id),
-       |top AS (SELECT query_id, vec_id, cos FROM (SELECT query_id, vec_id, cos,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-       |  FROM sc) WHERE rnk <= 10),
-       |cand AS (SELECT t.query_id, t.vec_id AS doc_id, t.cos AS score, c.v, n.nrm
-       |  FROM top t JOIN e c ON c.vec_id = t.vec_id JOIN nr n ON n.vec_id = t.vec_id),
-       |p1 AS (SELECT query_id, doc_id, score, v, nrm, mmr FROM (
-       |  SELECT query_id, doc_id, score, v, nrm,
-       |    floor($lam*score*1000000.0+0.5)/1000000.0 AS mmr,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY floor($lam*score*1000000.0+0.5)/1000000.0 DESC, doc_id) AS rn
-       |  FROM cand) WHERE rn = 1),
-       |sel1 AS (SELECT query_id, doc_id, v, nrm FROM p1),
-       |$rounds
-       |SELECT query_id, rnk, doc_id, score, mmr FROM (
-       |  SELECT query_id, CAST(1 AS BIGINT) AS rnk, doc_id, score, mmr FROM p1
-       |  $emit)
-       |ORDER BY query_id, rnk""".stripMargin
-  }
-
-  // t135 twin: the crawl-to-corpus capstone as ONE chained query —
-  // each stage is its gated twin's CTEs verbatim (t71 URL chain ×2,
-  // t124 blocklist, t55 rules, t107 banded decontam, t87 incremental
-  // near-dup + recursive cluster min, t121 resample, t92 temperature,
-  // t54 pack, t91 shuffle), wired in the same order as
-  // CorpusOps.crawlCorpusBuild. Constants: blocklist 0.6, decontam
-  // and near-dup at 0.9, budget 64, seqLen 512, seed 42.
-  private lazy val t135Sql: String = t135SqlFor(0)
-
-  // t240 twin: the SAME capstone chain on the DAY-2 slice — the
-  // multi-day streaming gate's day-2 corpus must equal the batch
-  // build over day-2 input with day-1 in history
-  private lazy val t240Sql: String = t135SqlFor(1)
-
-  private def t135SqlFor(day: Int): String = {
-    val sigBlock =
-      s"""hb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % $mhP AS h FROM fw),
-         |sig AS (SELECT doc_id,
-         |  ${mhCoeffs.zipWithIndex.map { case ((a, b), i) =>
-              s"min(($a*h+$b) % $mhP) AS h$i" }.mkString(",\n         |  ")}
-         |  FROM hb GROUP BY 1),
-         |band AS (
-         |  ${(0 until 4).map(b =>
-              s"SELECT doc_id, $b${if (b == 0) " AS b" else ""}, md5(${(4 * b until 4 * b + 4).map(i => s"h$i::VARCHAR").mkString("||','||")})${if (b == 0) " AS k" else ""} FROM sig")
-              .mkString(" UNION ALL\n         |  ")})""".stripMargin
-    val fp = "md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))"
-    s"""WITH RECURSIVE
-       |${urlNormCteNamed("s", s" WHERE doc_id % 5 = $day")},
-       |um AS (SELECT url_norm, min(doc_id) AS canonical_id FROM sn GROUP BY 1),
-       |d1 AS (SELECT sn.doc_id, sn.domain FROM sn JOIN um ON um.url_norm = sn.url_norm
-       |  AND sn.doc_id = um.canonical_id),
-       |$urlNormCte,
-       |ft AS MATERIALIZED (SELECT doc_id, $toks AS tk FROM documents),
-       |fm AS (SELECT doc_id,
-       |  CAST(len(tk) AS BIGINT) AS n_tokens,
-       |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-       |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-       |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','is','to','in'], x))) AS BIGINT) AS n_stop,
-       |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop_uniq
-       |  FROM ft),
-       |fq AS (SELECT doc_id, CAST(floor(
-       |  (${q4("CAST(n_uniq AS DOUBLE)/n_tokens*0.5 + least(CAST(n_tokens AS DOUBLE)/100.0, 1.0)*0.3 + (1.0 - CAST(n_stop AS DOUBLE)/n_tokens)*0.2")})
-       |  * 10000.0 + 0.5) AS BIGINT) AS q4i
-       |  FROM fm WHERE n_tokens > 0),
-       |blocked AS (SELECT n.domain FROM n JOIN fq ON fq.doc_id = n.doc_id
-       |  GROUP BY 1 HAVING sum(fq.q4i) < 6000 * count(*)),
-       |d2 AS (SELECT d1.doc_id FROM d1 LEFT JOIN blocked b ON b.domain = d1.domain
-       |  WHERE b.domain IS NULL),
-       |d3 AS MATERIALIZED (SELECT m.doc_id FROM fm m JOIN d2 ON d2.doc_id = m.doc_id
-       |  WHERE m.n_tokens >= 20 AND m.n_tokens <= 400
-       |    AND m.sum_len >= 3*m.n_tokens AND m.sum_len <= 10*m.n_tokens
-       |    AND m.n_stop_uniq >= 2 AND 5*m.n_uniq >= m.n_tokens),
-       |fw AS MATERIALIZED (SELECT DISTINCT doc_id, tok FROM
-       |  (SELECT doc_id, unnest(tk) AS tok FROM ft)),
-       |$sigBlock,
-       |fn AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM fw GROUP BY 1),
-       |evaldocs AS MATERIALIZED (SELECT doc_id FROM documents
-       |  WHERE doc_id % 5 != $day AND CAST(('0x'||substr($fp,1,4)) AS BIGINT) % 10 >= 8),
-       |db3 AS (SELECT band.* FROM band JOIN d3 ON d3.doc_id = band.doc_id),
-       |dbe AS (SELECT band.* FROM band JOIN evaldocs ev ON ev.doc_id = band.doc_id),
-       |dcand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM db3 a JOIN dbe b ON a.b = b.b AND a.k = b.k),
-       |dp AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-       |  FROM dcand c JOIN fw wa ON wa.doc_id = c.doc_a
-       |  JOIN fw wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2),
-       |contaminated AS (SELECT DISTINCT dp.doc_a AS doc_id
-       |  FROM dp JOIN fn na ON na.doc_id = dp.doc_a JOIN fn nb ON nb.doc_id = dp.doc_b
-       |  WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.9),
-       |d4 AS MATERIALIZED (SELECT d3.doc_id FROM d3
-       |  LEFT JOIN contaminated c ON c.doc_id = d3.doc_id WHERE c.doc_id IS NULL),
-       |nb4 AS (SELECT band.* FROM band JOIN d4 ON d4.doc_id = band.doc_id),
-       |nbh AS (SELECT band.* FROM band WHERE band.doc_id % 5 != $day),
-       |ncand AS (SELECT DISTINCT least(a.doc_id, o.doc_id) AS doc_a,
-       |    greatest(a.doc_id, o.doc_id) AS doc_b
-       |  FROM nb4 a JOIN (SELECT * FROM nb4 UNION ALL SELECT * FROM nbh) o
-       |    ON a.b = o.b AND a.k = o.k AND a.doc_id != o.doc_id),
-       |np AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-       |  FROM ncand c JOIN fw wa ON wa.doc_id = c.doc_a
-       |  JOIN fw wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2),
-       |npr AS MATERIALIZED (SELECT np.doc_a, np.doc_b,
-       |    da.doc_id IS NOT NULL AS a_new, db.doc_id IS NOT NULL AS b_new
-       |  FROM np JOIN fn na ON na.doc_id = np.doc_a JOIN fn nb ON nb.doc_id = np.doc_b
-       |  LEFT JOIN d4 da ON da.doc_id = np.doc_a
-       |  LEFT JOIN d4 db ON db.doc_id = np.doc_b
-       |  WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.9),
-       |hd AS (SELECT DISTINCT CASE WHEN a_new THEN doc_a ELSE doc_b END AS doc_id
-       |  FROM npr WHERE a_new != b_new),
-       |sp AS (SELECT doc_a, doc_b FROM npr WHERE a_new AND b_new),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM sp UNION SELECT doc_b, doc_a FROM sp),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-       |  UNION
-       |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src),
-       |cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-       |nc AS (SELECT doc_id FROM cl WHERE doc_id != cluster_id),
-       |d5 AS MATERIALIZED (SELECT d4.doc_id FROM d4
-       |  LEFT JOIN hd ON hd.doc_id = d4.doc_id
-       |  LEFT JOIN nc ON nc.doc_id = d4.doc_id
-       |  WHERE hd.doc_id IS NULL AND nc.doc_id IS NULL),
-       |rtb AS MATERIALIZED (SELECT doc_id,
-       |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % 1024 AS b
-       |  FROM (SELECT doc_id, unnest(tk) AS tok FROM ft)),
-       |rtc AS (SELECT b, count(*) AS tc FROM rtb WHERE doc_id % 10 < 3 GROUP BY 1),
-       |rrc AS (SELECT b, count(*) AS rc FROM rtb WHERE doc_id % 10 >= 3 GROUP BY 1),
-       |rwt AS (SELECT rrc.b,
-       |  CAST(floor(CAST(coalesce(rtc.tc, 0) + 1 AS DOUBLE) / (rrc.rc + 1) * 1000000.0 + 0.5) AS BIGINT) AS wq
-       |  FROM rrc LEFT JOIN rtc ON rtc.b = rrc.b),
-       |rsc AS (SELECT tb.doc_id, count(*) AS n_tok, CAST(sum(wq) AS BIGINT) AS swq
-       |  FROM rtb tb JOIN rwt ON rwt.b = tb.b JOIN d5 ON d5.doc_id = tb.doc_id
-       |  WHERE tb.doc_id % 10 >= 3 GROUP BY 1),
-       |ru AS (SELECT doc_id, CAST(('0x'||substr($fp,1,4)) AS BIGINT) AS u16 FROM documents),
-       |d6 AS (SELECT doc_id FROM d5 WHERE doc_id % 10 < 3
-       |  UNION
-       |  SELECT rsc.doc_id FROM rsc JOIN ru ON ru.doc_id = rsc.doc_id
-       |  WHERE ru.u16 * rsc.n_tok * 1000000 < rsc.swq * 65536),
-       |md AS (SELECT d.doc_id, d.source, $fp AS h FROM documents d
-       |  JOIN d6 ON d6.doc_id = d.doc_id),
-       |mc AS (SELECT source, count(*) AS n_docs FROM md GROUP BY 1),
-       |mw AS (SELECT source, n_docs,
-       |  CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000.0) AS BIGINT) AS w FROM mc),
-       |mt AS (SELECT sum(w) AS w_total FROM mw),
-       |mr AS (SELECT source, n_docs, w,
-       |  CAST((64 * w) // w_total AS BIGINT) AS target,
-       |  floor(least(1.0, CAST((64 * w) // w_total AS DOUBLE) / n_docs) * 4294967296.0) AS cut
-       |  FROM mw CROSS JOIN mt),
-       |d7 AS (SELECT md.doc_id, md.source FROM md JOIN mr ON mr.source = md.source
-       |  WHERE CAST(CAST(('0x'||substr(md.h,1,8)) AS BIGINT) AS DOUBLE) < mr.cut),
-       |pk AS (SELECT d7.source, d7.doc_id, CAST(len(t.tk) AS BIGINT) AS n
-       |  FROM d7 JOIN ft t ON t.doc_id = d7.doc_id),
-       |po AS (SELECT source, doc_id, n,
-       |  CAST(sum(n) OVER (PARTITION BY source ORDER BY doc_id
-       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off FROM pk),
-       |seqs AS (SELECT source, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-       |  count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-       |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-       |  FROM po GROUP BY 1,2)
-       |SELECT CAST(row_number() OVER (
-       |    ORDER BY md5('42:' || source || ':' || seq_id), source, seq_id) AS BIGINT) AS pos,
-       |  source, seq_id, n_docs, n_tokens, first_doc, last_doc
-       |FROM seqs ORDER BY pos""".stripMargin
-  }
-
+  // Name-keyed views of `gates`, kept because the benchmark harness
+  // under perfbench/ looks gates up by name in both.
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ sqlTextQueries
-
-  /** The SQL-TEXT front door, suite-wide (q88–q109): every TPC-H query
-    * ALSO submitted as Spark-dialect SQL text through `spark.sql` over
-    * registered views (TpchSql.scala) — same DuckDB twin as the
-    * DataFrame body, so SQL-text ≡ DataFrame ≡ oracle three ways. */
-  private def sqlTextQueries: Map[String, (SparkSession, String) => DataFrame] =
-    (1 to 22).map { i =>
-      f"q${87 + i}%d_tpch$i%02d_sql" ->
-        ((s: SparkSession, d: String) => TpchSql.run(s, Tables.load(s, d), i))
-    }.toMap ++ Map[String, (SparkSession, String) => DataFrame](
-      // ---- the front door beyond TPC-H (GraftSql.scala): the
-      // engine's own flagship shapes as SQL text, same twins as the
-      // DataFrame bodies (q22/q08/q58/t204/q51/q12 respectively)
-      "q110_sessionize_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "sessionize")),
-      "q111_top3_brand_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "top3_brand")),
-      "q112_exact_median_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "exact_median")),
-      "q113_islands_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "islands")),
-      "q114_mode_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "mode")),
-      "q115_rollup_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "rollup")),
-      "q118_range_frame_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "range_frame")),
-      "q119_ignore_nulls_sql" ->
-        ((s, d) => GraftSql.run(s, Tables.load(s, d), "ignore_nulls")),
-      // the NATIVE-FUNCTION front door: the engine's codegen'd
-      // Catalyst expression graft_max_sorted_run (registered by
-      // GraftExtensions) called from USER SQL TEXT — repetition
-      // scoring end to end as a query string, twin = t48's verbatim
-      "q117_native_fn_sql" -> ((s, d) => {
-        val t = Tables.load(s, d)
-        TpchSql.registerViews(t, Seq("documents"))
-        s.sql("""
-          WITH t AS (SELECT doc_id,
-            regexp_extract_all(lower(text), '[a-z0-9]+', 0) AS tk
-            FROM documents),
-          s AS (SELECT doc_id,
-            CASE WHEN size(tk) >= 3
-              THEN array_sort(transform(sequence(1, size(tk) - 2),
-                i -> concat_ws(' ', slice(tk, i, 3))))
-              ELSE CAST(array() AS ARRAY<STRING>) END AS sh
-            FROM t),
-          m AS (SELECT doc_id, graft_max_sorted_run(sh) AS top_count,
-            CAST(size(sh) AS BIGINT) AS n_shingles FROM s)
-          SELECT doc_id, top_count, n_shingles,
-            floor(CAST(top_count AS DOUBLE)/n_shingles*10000.0D+0.5D)/10000.0D
-              AS rep_ratio
-          FROM m WHERE n_shingles > 0 ORDER BY doc_id""")
-      }),
-      // the LAKE + SQL front door: a manifested bucketed table built
-      // with TWO commit versions (initial load, then a delta replace
-      // of the keys ≡3 mod 10), queried as SQL TEXT through the
-      // graft_lake CATALOG (LakeRelationRule) — fully LAZY: the
-      // merge-on-read plan resolves at analysis time, so pruning and
-      // pushdown reach the parquet scan and NOTHING is materialized
-      // before the text query runs (the round-16 localCheckpoint
-      // shape is gone; LakeCatalogSpec pins the plan)
-      "q116_lake_sql" -> ((s, d) => {
-        val tbl = "gate_lake_sql_orders"
-        lakeGateTable(s, d, tbl)
-        s.sql(s"""SELECT o_orderstatus, count(*) AS n_orders,
-          CAST(sum(cents) AS BIGINT) AS total_cents
-          FROM graft_lake.$tbl GROUP BY 1 ORDER BY 1""")
-      }),
-      // TIME TRAVEL from SQL text: the same two-commit lake table
-      // read at pinned manifest v1 via the `__v1` suffix — the delta
-      // commit must be invisible, so the twin is the plain base
-      // aggregate with no CASE arm
-      "q120_lake_timetravel_sql" -> ((s, d) => {
-        val tbl = "gate_lake_tt_orders"
-        lakeGateTable(s, d, tbl)
-        s.sql(s"""SELECT o_orderstatus, count(*) AS n_orders,
-          CAST(sum(cents) AS BIGINT) AS total_cents
-          FROM graft_lake.${tbl}__v1 GROUP BY 1 ORDER BY 1""")
-      }),
-      // the LLM-PIPELINE operator surface as SQL TEXT (LlmSql):
-      // exact dedup, banded MinHash-LSH near-dup detection (the
-      // native graft_minhash_sig / graft_sorted_inter expressions in
-      // a user query string), and cosine top-k through graft_dot —
-      // each against the SAME DuckDB twin as its library body
-      // (t23 / t25 / s31), SQL ≡ DataFrame asserted by LlmSqlSpec
-      "q121_exact_dedup_sql" ->
-        ((s, d) => LlmSql.run(s, Tables.load(s, d), "exact_dedup")),
-      "q122_minhash_lsh_sql" ->
-        ((s, d) => LlmSql.run(s, Tables.load(s, d), "minhash_lsh")),
-      "q123_cosine_topk_sql" ->
-        ((s, d) => LlmSql.run(s, Tables.load(s, d), "cosine_topk")),
-      "q124_decontaminate_sql" ->
-        ((s, d) => LlmSql.run(s, Tables.load(s, d), "decontaminate_13gram")),
-      // DESCRIBE HISTORY from SQL text: the two-commit fixture's
-      // manifest log via `graft_lake.<t>__history` — pure metadata
-      // (manifests are driver-side files), deterministic rows, so the
-      // twin is a VALUES literal
-      "q125_lake_history_sql" -> ((s, d) => {
-        val tbl = "gate_lake_hist_orders"
-        lakeGateTable(s, d, tbl)
-        s.sql(s"""SELECT version, n_live, live_commits
-          FROM graft_lake.${tbl}__history ORDER BY version""")
-      }))
-
-  /** Shared fixture for the lake+SQL gates: a manifested bucketed
-    * orders table with two commits — the base load, then a +100-cents
-    * delta replace of the keys ≡3 (mod 10). The catalog entry stays
-    * registered (each run starts with DROP + replace-commit), so the
-    * returned SQL plans stay lazy against the live manifest.
-    */
-  private def lakeGateTable(s: SparkSession, d: String, tbl: String): Unit = {
-    val t = Tables.load(s, d)
-    import org.apache.spark.sql.functions.{col, expr}
-    val root = java.nio.file.Files
-      .createTempDirectory("gate_lakesql").toString
-    val lw = new graft.sinks.LakeWriter(root)
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val base = t.orders.select(col("o_orderkey"), col("o_orderstatus"),
-      expr("CAST(floor(o_totalprice*100.0+0.5) AS BIGINT)").as("cents"))
-    lw.commitBucketed(base, tbl, 8, Seq("o_orderkey"), replace = true)
-    lw.commitBucketed(
-      base.filter(col("o_orderkey") % 10 === 3)
-        .withColumn("cents", col("cents") + 100L),
-      tbl, 8, Seq("o_orderkey"))
-  }
-
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.pricingSummary(t.lineitem) }),
-    "q02_filter_pushdown" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.filterPushdown(t.lineitem) }),
-    "q03_segment_revenue" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.segmentRevenue(t.lineitem, t.orders, t.customer) }),
-    "q04_region_revenue" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.regionRevenue(t.lineitem, t.supplier, t.nation, t.region) }),
-    "q05_exists_priority" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.existsPriority(t.orders, t.lineitem) }),
-    "q06_anti_no_orders" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.antiNoOrders(t.customer, t.orders) }),
-    "q07_order_count_hist" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.orderCountHistogram(t.customer, t.orders) }),
-    // full outer with both null arms non-vacuous: segment customers
-    // vs finished-order counts, side indicator names each arm
-    "q50_full_outer" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.fullOuterActivity(t.customer, t.orders) }),
-    // grouped MODE with deterministic tie-break
-    "q51_mode" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.modeQuantity(t.lineitem) }),
-    // ratio-to-report: per-nation revenue share of the grand total --
-    // integer-decimal sums on both levels, one exact share division
-    "q52_revenue_share" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.revenueShareByNation(t.lineitem, t.supplier, t.nation) }),
-    // CUBE over both dims (rollup's sibling; one-pass Expand)
-    "q53_cube_qty" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.cubeQty(t.lineitem) }),
-    // PIVOT with declared values: wide per-linestatus revenue columns
-    "q54_pivot_revenue" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.pivotRevenue(t.lineitem) }),
-    // UNPIVOT (melt): the wide columns back to rows — one Expand,
-    // zero shuffle; round-trips q54 under the gate
-    "q55_unpivot_revenue" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.unpivotRevenue(t.lineitem) }),
-    // correlated scalar subquery, decorrelated by Catalyst into one
-    // aggregate + one equi-join (no per-row re-execution; the plan is
-    // spec-asserted) — orders priced above their customer's average
-    "q56_correlated_subquery" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.priceAboveCustomerAvg(t.orders) }),
-    // RANGE-framed window: trailing 30 CALENDAR days by date value
-    // (not 30 rows), integer day-number frame, all-integer window math
-    "q57_range_frame" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.rolling30dOrders(t.orders) }),
-    // exact grouped median from per-value COUNTS — rank math over the
-    // <=50-row histogram, never a fact-table sort
-    "q58_exact_median" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.exactMedianQty(t.lineitem) }),
-    // sweep-line peak concurrent sessions per day — the global
-    // running sum via the two-phase distributed prefix sum, never an
-    // unpartitioned corpus window
-    "t148_concurrency" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.concurrentSessions(t.events) }),
-    // global interval-union coverage + peak: segment lengths from the
-    // same two-phase sweep, boundary lead stitched from a broadcast
-    // per-partition summary
-    "t149_active_coverage" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.activeCoverage(t.events) }),
-    // EWMA (alpha = 1/2) of per-series daily counts: one corpus pass
-    // to the per-day histogram, then an in-task sequential fold over
-    // each series' sorted |days| array — bit-identical halving
-    "t150_ewma" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.ewmaDailyQty(t.lineitem) }),
-    // linear multi-touch attribution: each purchase splits 1e6
-    // micro-credits over its segment's touches, remainder to the last
-    // touch — integer-auditable, all windows user-partitioned
-    "t151_attribution" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.attribution(t.events) }),
-    // incremental connected components: half the co-purchase edges
-    // labeled first, the other half FOLDED in — new edges contract
-    // onto current components, propagation runs on the contracted
-    // graph only; must equal the full-graph closure verbatim
-    // per-group 2-sigma outlier counts with ZERO floating point: the
-    // cross-multiplied integer test (n*x - S)^2 > 4n(nQ - S^2)
-    "t155_outliers" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.outlierCounts(t.lineitem) }),
-    // market-basket association rules: A-Priori-pruned pair support,
-    // confidence and lift from exact integer products, one-row basket
-    // total broadcast
-    "t154_market_basket" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.marketBasket(t.lineitem) }),
-    // STREAMING incremental components: edge shards across cold
-    // restarts, per-batch contraction folds + O(touched) delta commits
-    // to the manifested label table; final merged view = full closure
-    "t153_stream_cc" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.ccGate(t.lineitem) }),
-    "t152_incremental_cc" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.ok").as("ok"), col("a.pk").as("src"), col("b.pk").as("dst"))
-      val oldE = pairs.filter(col("ok") % 2 === 0).select("src", "dst")
-      val newE = pairs.filter(col("ok") % 2 === 1).select("src", "dst")
-      GraphOps.foldComponents(
-        GraphOps.connectedComponents(oldE, maxIter = 60), newE, maxIter = 60) }),
-    // CDC SNAPSHOT DIFF: the t147 upsert (plus a deletion arm)
-    // committed as manifested snapshot v2 over the dim's v1, both
-    // read back via TIME TRAVEL, diffed into the insert/update/delete
-    // change feed — O(changed) rows out
-    "t156_cdc_diff" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      import graft.sinks.LakeWriter
-      val dim = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
-      val upd = dim.filter(col("c_custkey") % 7 === 0)
-        .select(col("c_custkey"), lit("MERGED").as("c_mktsegment"),
-          (col("c_acctbal") + 100.0).as("c_acctbal"))
-        .unionByName(dim.filter(col("c_custkey") % 31 === 0)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            lit("NEWKEY").as("c_mktsegment"), col("c_acctbal")))
-      val v2 = Relational.mergeUpsert(dim, upd, "c_custkey")
-        .filter(col("c_custkey") % 13 =!= 3)
-      val root = java.nio.file.Files.createTempDirectory("cdc_gate").toString
-      val lw = new LakeWriter(root)
-      lw.commitManifested(dim, "cdc_dim", append = false)
-      lw.commitManifested(v2, "cdc_dim", append = false)
-      Relational.snapshotDiff(
-          lw.readManifested(s, "cdc_dim", 1),
-          lw.readManifested(s, "cdc_dim", 2), "c_custkey")
-        .orderBy("c_custkey", "change_type") }),
-    // BLOOM-prefiltered join: the dim key set crosses as a broadcast
-    // Bloom bitset, non-matching fact rows die on the scan side of
-    // the shuffle; result bit-identical to the plain join
-    "t157_bloom_join" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val dim = t.customer.filter(
-        col("c_mktsegment") === "BUILDING" && col("c_acctbal") > 7000.0)
-      Skew.bloomFilteredJoin(t.orders, dim, "o_custkey", "c_custkey")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"),
-          graft.ops.Exact.moneySum(col("o_totalprice")).as("total_price"))
-        .orderBy("o_orderpriority") }),
-    // HEAVY HITTERS: Misra-Gries candidates per partition (O(k)
-    // memory), exact recount of candidates only — the
-    // full-cardinality groupBy never runs; planted heavy values
-    // (low-quantity lines folded onto l_partkey % 7) sit over a long
-    // rare tail
-    "t158_heavy_hitters" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, when}
-      Relational.heavyHitters(t.lineitem,
-        when(col("l_quantity") <= 3.0, col("l_partkey") % 7)
-          .otherwise(col("l_partkey")), minCount = 400L) }),
-    // DETERMINISTIC stratified sample: exactly 20 docs per language
-    // by md5 rank of doc_id — reproducible across engines/retries,
-    // no RNG state (the twin re-derives the identical sample)
-    "t159_stratified_sample" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.stratifiedSample(t.documents, "lang", "doc_id", 20)
-        .select("doc_id", "lang").orderBy("lang", "doc_id") }),
-    // 2-D SKYLINE (min price, max size): local sorted-sweep skylines
-    // per range partition, then one tiny global sweep — no O(n²)
-    // dominance join at any stage
-    "t160_skyline" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.skyline2D(t.part, "p_retailprice", "p_size") }),
-    // K-CORE peeling (k=3, exactly 6 rounds) on the sparsified
-    // co-purchase graph; the twin unrolls the same 6 rounds as
-    // chained CTEs — replayable bit-for-bit
-    "t161_kcore" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.kCore(pairs, k = 3, rounds = 6) }),
-    // GRID-BUCKETED distance self-join: synthetic integer coords,
-    // 3x3 neighbor-cell equi-join + exact Chebyshev filter — the
-    // spatial/embedding-cell join with NO cross product (the twin IS
-    // the quadratic predicate join)
-    "t162_grid_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val pts = t.customer.select(col("c_custkey").as("id"),
-        (col("c_custkey") * 48271 % 10007 % 300).as("x"),
-        (col("c_custkey") * 16807 % 10007 % 300).as("y"))
-      GeoOps.chebyshevPairs(pts, d = 4) }),
-    // K-ANONYMITY release: md5 pseudonyms, quasi-identifier groups
-    // under k=10 suppressed wholesale, each surviving row carries its
-    // group size as the anonymity evidence
-    "t163_k_anonymity" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.kAnonymize(t.customer, "c_custkey",
-        Seq(col("c_nationkey"), floor(col("c_acctbal") / 1000.0).cast("long")),
-        Seq("nation", "bal_band"), k = 10) }),
-    // TOP-K AS AN AGGREGATE: bounded O(k) buffer per group with
-    // map-side combine — each partition ships <= k entries per group
-    // instead of the window-sort's every-row shuffle; twin is the
-    // row_number form it replaces
-    "t164_topk_aggregate" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{arrays_zip, col, posexplode}
-      t.customer.groupBy("c_mktsegment")
-        .agg(graft.functions.TopKAggregate.topK(5)(
-          col("c_acctbal"), col("c_custkey")).as("tk"))
-        .select(col("c_mktsegment"),
-          posexplode(arrays_zip(col("tk.vs"), col("tk.ids"))))
-        .select(col("c_mktsegment"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col.ids").as("c_custkey"), col("col.vs").as("c_acctbal"))
-        .orderBy("c_mktsegment", "rnk") }),
-    // PARENT-POINTER FOREST root+depth by pointer DOUBLING — log2(D)
-    // self-joins instead of D parent hops; twin is the recursive CTE
-    "t165_forest_depth" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr, when}
-      val nodes = t.part.select(col("p_partkey").cast("long").as("id"),
-        when(col("p_partkey") >= 7,
-          expr("CAST(p_partkey AS BIGINT) div 7")).as("parent"))
-      GraphOps.forestRootDepth(nodes) }),
-    // per-group LEAST-SQUARES trend in exact integer sufficient
-    // statistics (DECIMAL(38,0)); only the final division is float
-    "t166_linear_trend" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, datediff, floor, lit, to_date}
-      Relational.linearTrend(t.lineitem, col("l_returnflag"),
-        datediff(col("l_shipdate"), to_date(lit("1992-01-01"))).cast("long"),
-        floor(col("l_extendedprice") * 100.0 + 0.5).cast("long")) }),
-    // KEY-SKEW PROFILE: exact collision mass and hottest-key bound
-    // per candidate shuffle key — the pre-join planning statistic
-    "t167_key_skew" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.keySkewProfile(t.lineitem, Seq(
-        "l_orderkey" -> col("l_orderkey"),
-        "l_partkey" -> col("l_partkey"),
-        "l_suppkey" -> col("l_suppkey"))) }),
-    // TWO-PROPORTION A/B test with zero floating point: planted
-    // variant bias (conversion threshold 45 vs 50), pooled z-squared
-    // as a cross-multiplied DECIMAL(38,0) inequality
-    "t168_ab_test" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      EventOps.abTest(t.events, col("event_type"), col("user_id") % 2,
-        col("value") > lit(45.0) + lit(5.0) * (col("user_id") % 2).cast("double")) }),
-    // INCREMENTAL MV MAINTENANCE: the t156-style change feed folded
-    // into a grouped (count, cents-sum) materialized view — must
-    // equal the full recompute (the twin) without re-reading the base
-    "t169_incremental_mv" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor, lit, to_date, when}
-      val cut = to_date(lit("1996-01-01"))
-      val base = t.orders.select(col("o_orderkey"), col("o_orderpriority"),
-        col("o_totalprice"), col("o_orderdate"))
-      val mut = base.withColumn("o_totalprice",
-          when(col("o_orderkey") % 97 === 7, col("o_totalprice") + 10.0)
-            .otherwise(col("o_totalprice")))
-        .filter(col("o_orderkey") % 691 =!= 5)
-      val v1 = base.filter(col("o_orderdate") < cut).drop("o_orderdate")
-      val v2 = mut.drop("o_orderdate")
-      val cents = floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-      val mv0 = v1.groupBy(col("o_orderpriority").as("grp"))
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum(cents).as("s"))
-      Relational.incrementalGroupSum(mv0,
-          Relational.snapshotDiff(v1, v2, "o_orderkey"),
-          col("o_orderpriority"), cents)
-        .orderBy("grp") }),
-    // NULL-SAFE equi-join (<=>): NULL keys MATCH each other — the
-    // join SQL's = silently drops; still a hash join (EqualNullSafe
-    // is a supported join key), never a nested loop
-    "q59_nullsafe_join" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, expr, lit}
-      val a = t.customer.select(expr("nullif(c_nationkey % 7, 3)").as("k"))
-      val b = t.supplier.select(expr("nullif(s_nationkey % 7, 3)").as("kb"))
-      a.join(b, col("k") <=> col("kb"))
-        .groupBy("k").agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("k").asc_nulls_first) }),
-    // MULTISET set ops: EXCEPT ALL / INTERSECT ALL keep per-row
-    // multiplicity (q13 gates the DISTINCT forms) — the reconcile
-    // primitive for comparing two loads of the same feed
-    "q60_multiset_setops" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val a = t.orders.filter(col("o_orderkey") % 2 === 0).select("o_orderpriority")
-      val b = t.orders.filter(col("o_orderkey") % 3 === 0).select("o_orderpriority")
-      def cnt(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-          .select(lit(tag).as("op"), col("o_orderpriority"), col("n"))
-      cnt(a.exceptAll(b), "except_all")
-        .unionByName(cnt(a.intersectAll(b), "intersect_all"))
-        .orderBy("op", "o_orderpriority") }),
-    // TPC-H Q5-shaped snowflake: region→nation broadcast down a
-    // 6-table star, date-range filter pushed to the orders scan,
-    // customer and supplier co-located on nation — one plan, every
-    // dim broadcast, the fact tables shuffle at most once
-    "q61_star_join" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{broadcast, col, count, lit, to_date}
-      val nat = t.nation.join(
-        broadcast(t.region.filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      val cust = t.customer.join(broadcast(nat),
-        col("c_nationkey") === col("n_nationkey"))
-      val ord = t.orders.filter(
-        col("o_orderdate") >= to_date(lit("1994-01-01")) &&
-        col("o_orderdate") < to_date(lit("1996-01-01")))
-      ord.join(cust, col("o_custkey") === col("c_custkey"))
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-        .groupBy("n_name")
-        .agg(graft.ops.Exact.moneySum(
-            col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("n_name") }),
-    // IGNORE NULLS window navigation: last_value carries the most
-    // recent non-null observation forward (running frame),
-    // first_value pins the partition's first non-null — the sparse-
-    // column navigation SQL's plain first/last can't express
-    "q62_ignore_nulls" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{col, first, last, when}
-      val rows = t.orders.filter(col("o_custkey") % 50 === 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          when(col("o_totalprice") > 150000.0, col("o_orderpriority")).as("big_pri"))
-      val ord = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val full = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      rows.select(col("o_custkey"), col("o_orderkey"),
-          last("big_pri", ignoreNulls = true).over(run).as("last_big_pri"),
-          first("big_pri", ignoreNulls = true).over(full).as("first_big_pri"))
-        .orderBy("o_custkey", "o_orderkey") }),
-    // LATEST ROW PER KEY over an out-of-order version stream: ONE
-    // max_by aggregate (map-side combine ships <= |keys| rows per
-    // partition) instead of the window-sort that shuffles every
-    // version — the merge-on-read compaction kernel
-    "t170_latest_rows" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      val dim = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
-      val versions = dim.withColumn("seq", lit(0L))
-        .unionByName(dim.filter(col("c_custkey") % 5 === 0)
-          .select(col("c_custkey"), lit("UPD1").as("c_mktsegment"),
-            (col("c_acctbal") + 10.0).as("c_acctbal"), lit(1L).as("seq")))
-        .unionByName(dim.filter(col("c_custkey") % 10 === 0)
-          .select(col("c_custkey"), lit("UPD2").as("c_mktsegment"),
-            (col("c_acctbal") + 20.0).as("c_acctbal"), lit(2L).as("seq")))
-      Relational.latestRows(versions, "c_custkey", "seq")
-        .orderBy("c_custkey") }),
-    // REFERENTIAL-INTEGRITY audit: planted orphans (shifted FK
-    // values) counted per declared FK — exactly the rows an inner
-    // join would silently drop
-    "t171_fk_orphans" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, when}
-      val li = t.lineitem.withColumn("l_orderkey",
-        when(col("l_orderkey") % 1009 === 17, col("l_orderkey") + 100000000L)
-          .otherwise(col("l_orderkey")))
-      val ord = t.orders.withColumn("o_custkey",
-        when(col("o_orderkey") % 997 === 13, col("o_custkey") + 100000000L)
-          .otherwise(col("o_custkey")))
-      Relational.fkOrphanReport(Seq(
-        ("lineitem.l_orderkey->orders", li, "l_orderkey", t.orders, "o_orderkey"),
-        ("orders.o_custkey->customer", ord, "o_custkey", t.customer, "c_custkey"))) }),
-    // per-group WEIGHTED MEDIAN (price cents weighted by quantity):
-    // the window cumsum runs over the per-value histogram, never the
-    // fact rows
-    "t172_weighted_median" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.weightedMedian(t.lineitem, col("l_returnflag"),
-        floor(col("l_extendedprice") * 100.0 + 0.5).cast("long"),
-        col("l_quantity").cast("long")) }),
-    // MULTI-SOURCE BFS on the sparsified co-purchase graph: minimum
-    // hops (<= 4) from the seed parts; level-synchronous frontier
-    // expansion — work is frontier-sized per round, twin is the
-    // bounded recursive CTE
-    "t173_bfs" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      val nodes = pairs.select(col("src").as("id"))
-        .unionByName(pairs.select(col("dst").as("id"))).distinct()
-      GraphOps.bfsLevels(pairs, nodes.filter(col("id") % 101 === 0), rounds = 4) }),
-    // EXACT JOIN-CARDINALITY profile: predicted output rows for three
-    // candidate joins from per-key frequency products — the decision
-    // statistic BEFORE launching a 100 TB join
-    "t174_join_cardinality" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.joinCardinality(Seq(
-        ("lineitem_x_orders", t.lineitem, col("l_orderkey"), t.orders, col("o_orderkey")),
-        ("lineitem_x_part", t.lineitem, col("l_partkey"), t.part, col("p_partkey")),
-        // the many-to-many arm: a partkey self-join EXPLODES (est >>
-        // left+right) — exactly what the profile exists to catch
-        ("lineitem_x_lineitem", t.lineitem, col("l_partkey"), t.lineitem, col("l_partkey")),
-        ("orders_x_customer", t.orders, col("o_custkey"), t.customer, col("c_custkey")))) }),
-    // EQUI-WIDTH HISTOGRAM in two passes (tiny bounds aggregate
-    // broadcast back, then one hash agg on the bin index) — never a
-    // sort; integer bin math buckets identically on any engine
-    "t175_histogram" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.histogramInt(t.orders,
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long"), bins = 20) }),
-    // STREAMING MV maintenance: the orders fact in three key-range
-    // shards (each a cold restart), the grouped (count, cents-sum) MV
-    // folded per batch and committed as O(touched groups) deltas to a
-    // merge-on-read state table; final view = full recompute exactly
-    "t176_stream_mv" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.mvGate(t.orders) }),
-    // CROSS-TABLE RECONCILIATION: the copy lost every 911th order,
-    // duplicated every 1013th, and corrupted every 509th by one cent;
-    // 64 bucketed integer checksums localize ALL of it without a
-    // row-level join
-    "t177_reconciliation" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor, when}
-      val dst = t.orders.filter(col("o_orderkey") % 911 =!= 5)
-        .unionByName(t.orders.filter(col("o_orderkey") % 1013 === 7))
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 509 === 11, col("o_totalprice") + 0.01)
-            .otherwise(col("o_totalprice")))
-      Relational.reconciliationReport(t.orders, dst, col("o_orderkey"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long"), buckets = 64) }),
-    // GRID NEAREST NEIGHBOR: each point's closest other point within
-    // Chebyshev radius 4 — cell candidates + ONE argmin aggregate per
-    // point (min(struct(dist, id)) partial-aggregates; no per-point
-    // sort); twin is the quadratic candidate join + rank
-    "t178_geo_nn" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val pts = t.customer.select(col("c_custkey").as("id"),
-        (col("c_custkey") * 48271 % 10007 % 300).as("x"),
-        (col("c_custkey") * 16807 % 10007 % 300).as("y"))
-      GeoOps.nearestNeighbor(pts, d = 4) }),
-    // ITEM-ITEM collaborative filtering: basket-cosine top-3 partners
-    // per part ("bought X also bought Y" serving table) — pair frame
-    // bounded by basket width, windows only over each item's
-    // candidates
-    "t179_item_recs" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.itemItemRecs(t.lineitem, "l_orderkey", "l_partkey",
-        minSupport = 3L, k = 3) }),
-    // TPC-H Q21 SHAPE: correlated EXISTS + NOT EXISTS with the
-    // suppkey INEQUALITY in both inner predicates — decorrelated by
-    // Catalyst into semi/anti joins, never re-executed per row
-    "q63_waiting_suppliers" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.waitingSuppliers(t.lineitem, t.supplier, t.orders) }),
-    // SCHEMA EVOLUTION on a manifested table: commit v1 without
-    // c_acctbal, append v2 WITH it — the snapshot read pins the
-    // latest manifest's schema, so v1's carried files surface the
-    // added column as NULL (never footer-sampling nondeterminism)
-    "t180_schema_evolution" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val root = java.nio.file.Files.createTempDirectory("graft_evolve").toString
-      val lw = new graft.sinks.LakeWriter(root)
-      lw.commitManifested(t.customer.filter(col("c_custkey") % 2 === 0)
-        .select("c_custkey", "c_mktsegment"), "dim", append = false)
-      lw.commitManifested(t.customer.filter(col("c_custkey") % 2 === 1)
-        .select("c_custkey", "c_mktsegment", "c_acctbal"), "dim")
-      lw.readManifested(s, "dim").orderBy("c_custkey") }),
-    // SPEARMAN rank correlation (ties-correct, integer moments in
-    // DECIMAL(38,0), ranks from bounded-domain histograms): does
-    // quantity move with discount within each return flag?
-    "t181_spearman" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.spearmanByGroup(t.lineitem, col("l_returnflag"),
-        col("l_quantity").cast("long"),
-        floor(col("l_discount") * 100.0 + 0.5).cast("long")) }),
-    // MARKOV first-order transition matrix over per-user event
-    // sequences: one per-user lag window + one pair aggregate; row
-    // probabilities normalized against a broadcast |types|-sized total
-    "t182_markov" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.markovTransitions(t.events) }),
-    // HITS hubs/authorities on the customer->part bipartite graph,
-    // two mutual-reinforcement rounds in EXACT integer arithmetic
-    // (max-normalized by integer division, the t119 trick)
-    "t183_hits" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val e = t.orders.select("o_orderkey", "o_custkey")
-        .join(t.lineitem.select("l_orderkey", "l_partkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
-      GraphOps.hits(e, iters = 2) }),
-    // STREAM-STREAM LEFT OUTER interval join across cold restarts:
-    // null arms emit only when the watermark closes each window —
-    // driven past the corpus by two sentinel shards
-    "t184_stream_outer_join" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.outerJoinGate(t.events) }),
-    // ROBUST OUTLIERS by median absolute deviation (3-MAD rule),
-    // all-integer via x2/x4 scaling; values = ship-delay days, a
-    // bounded domain so both medians run on tiny histograms
-    "t185_mad_outliers" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, datediff}
-      val joined = t.lineitem.select("l_orderkey", "l_shipdate")
-        .join(t.orders.select("o_orderkey", "o_orderpriority", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-      Relational.madOutliers(joined, col("o_orderpriority"),
-        datediff(col("l_shipdate"), col("o_orderdate"))) }),
-    // dropDuplicatesWithinWatermark gate: same-batch exact copies AND
-    // cross-restart 90-minute re-deliveries both dropped — survivors
-    // must equal the natural corpus (ts in the checksum)
-    "t186_stream_dropdup" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.dropDupGate(t.events) }),
-    // CDC APPLY with full merge semantics: out-of-order upserts AND
-    // deletes per key, latest seq wins via ONE max_by aggregate —
-    // %12 keys are deleted then re-upserted (seq 3 beats 2), %6-only
-    // keys vanish, %4-only keys update, +1e6 keys insert
-    "t187_cdc_apply" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      val dim = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
-      val feed = dim.filter(col("c_custkey") % 4 === 0)
-        .select(col("c_custkey"), lit("upsert").as("change_type"),
-          lit(1L).as("seq"), lit("UPD1").as("c_mktsegment"),
-          (col("c_acctbal") + 5.0).as("c_acctbal"))
-        .unionByName(dim.filter(col("c_custkey") % 6 === 0)
-          .select(col("c_custkey"), lit("delete").as("change_type"),
-            lit(2L).as("seq"), lit(null).cast("string").as("c_mktsegment"),
-            lit(null).cast("double").as("c_acctbal")))
-        .unionByName(dim.filter(col("c_custkey") % 12 === 0)
-          .select(col("c_custkey"), lit("upsert").as("change_type"),
-            lit(3L).as("seq"), lit("UPD3").as("c_mktsegment"),
-            (col("c_acctbal") + 7.0).as("c_acctbal")))
-        .unionByName(dim.filter(col("c_custkey") % 31 === 0)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            lit("upsert").as("change_type"), lit(1L).as("seq"),
-            lit("NEW").as("c_mktsegment"), col("c_acctbal")))
-      Relational.applyCdc(dim, feed, "c_custkey", "seq")
-        .orderBy("c_custkey") }),
-    // WEIGHTED SHORTEST PATHS (bounded Bellman-Ford): exact min cost
-    // within 4 hops from the seed parts over the sparsified
-    // co-purchase graph, synthetic deterministic integer weights —
-    // per round one equi-join + min-combining groupBy, never |V|·|E|
-    "t188_sssp" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      val both = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      val weighted = both.withColumn("w",
-        (col("src") * 7 + col("dst") * 13) % 20 + 1)
-      val sources = both.select(col("src").as("id")).distinct()
-        .filter(col("id") % 101 === 0)
-      GraphOps.ssspInt(weighted, sources, rounds = 4) }),
-    // PERSONALIZED PageRank: restart mass concentrated on the seed
-    // parts (TrustRank shape) — exact integer micro-unit scores,
-    // bit-identical to the twin's unrolled CTEs
-    "t189_ppr" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") =!= col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      val sources = pairs.select(col("src").as("id")).distinct()
-        .filter(col("id") % 101 === 0)
-      GraphOps.pageRankPersonalizedInt(pairs, sources, iters = 3) }),
-    // LINK PREDICTION: non-adjacent part pairs with >= 2 common
-    // co-purchase neighbors, scored by common-neighbor count and
-    // degree product — the oriented wedge enumeration, existing
-    // edges anti-joined away
-    "t190_link_prediction" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 10)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.linkPrediction(pairs, minCommon = 2L) }),
-    // DETERMINISTIC random walks: 4 hash-argmin steps from every
-    // seed part — the replayable DeepWalk-style walk corpus; the
-    // twin unrolls the identical md5-argmin step rule
-    "t191_random_walks" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      val starts = pairs.select(col("src").as("id"))
-        .unionByName(pairs.select(col("dst").as("id"))).distinct()
-        .filter(col("id") % 29 === 0)
-      GraphOps.randomWalksDet(pairs, starts, steps = 4, seed = "walk13") }),
-    // BENFORD first-digit conformance: integer per-mille deviations
-    // against the fixed Benford constants — no float logs; synthetic
-    // TPC-H prices are uniform-ish, so the report SHOWS the
-    // non-conformance a fraud audit would flag
-    "t192_benford" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.benfordReport(t.orders, col("o_orderpriority"),
-        floor(col("o_totalprice"))) }),
-    // LAG-7 AUTOCORRELATION of each priority's daily order counts:
-    // one lead window over the pre-aggregated series, integer
-    // moments, one quantized double. The lag is POSITIONAL over the
-    // observed dates (lead(x, 7)), not calendar days — exact here
-    // because TPC-H order dates are dense per priority; a sparse
-    // series needs a date-spine join before this call
-
-    "t193_autocorr" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("x"))
-      Relational.autocorrInt(daily, col("pri"), col("dt"), col("x"), lag = 7) }),
-    // GINI concentration of order revenue per priority: exact integer
-    // rank-identity fold; the GATE hashes only small bounded integers
-    // (grp, n, gini_micro) — the DECIMAL(38,0) numer/denom audit
-    // columns stay in the library output but out of the hash, and no
-    // float is emitted at all (driver-hash portability, round 15)
-    "t194_gini" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.giniInt(t.orders, col("o_orderpriority"),
-        floor(col("o_totalprice") * 100.0 + 0.5))
-        .select("grp", "n", "gini_micro") }),
-    // L-DIVERSITY release: k=10 anonymity PLUS >= 3 distinct market
-    // segments per quasi-identifier group — the homogeneity-attack
-    // hardening over t163's k-anonymity
-    "t195_l_diversity" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      Relational.lDiversify(t.customer, "c_custkey",
-        Seq(col("c_nationkey"), floor(col("c_acctbal") / 1000.0).cast("long")),
-        Seq("nation", "bal_band"), col("c_mktsegment"), k = 10, l = 3) }),
-    // CUSUM changepoint: clamped cumulative sum = cumsum minus
-    // running min (two windows, no sequential fold), all integer via
-    // the n-scaled deviations; a planted +25/day level shift from
-    // 1996-06-01 must be detected, the pre-shift period must not
-    "t196_cusum" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, when}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("c"))
-        .select(col("pri"), col("dt"),
-          (col("c") + when(col("dt") >= lit("1996-06-01"), 25L)
-            .otherwise(0L)).as("x"))
-      Relational.cusumChangepoint(daily, col("pri"), col("dt"), col("x"),
-        h = 1000L) }),
-    // STREAMING CUSUM monitoring: the t196 planted shift, but the
-    // orders fact arrives in three date-range shards across cold
-    // restarts and the fixed-target clamped CUSUM folds forward with
-    // O(groups) carried state; must equal the batch closed form
-    "t197_stream_cusum" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.cusumGate(t.orders) }),
-    // DENSE DAILY SPINE: every calendar day between each priority's
-    // first and last SPARSE observation (1-in-97 orders), gaps
-    // zero-filled — the preprocessing that makes positional windows
-    // calendar-correct
-    "t198_date_spine" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val sparse = t.orders.filter(col("o_orderkey") % 97 === 0)
-        .groupBy(col("o_orderpriority").as("pri"), col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("c"))
-      Relational.denseDailySpine(sparse, col("pri"), col("dt"), col("c")) }),
-    // EXACT GROUPED CDF: cume_dist() semantics from the (grp, value)
-    // histogram — one fact aggregate, no fact-table sort window; twin
-    // is DuckDB's real cume_dist() window DISTINCT'd
-    "t199_cdf" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.cdfByGroup(t.lineitem, col("l_returnflag"),
-        col("l_quantity").cast("long")) }),
-    // DISCRETE HAZARD TABLE: per-user lifetime in HOURS (last - first
-    // activity; the fixture spans ~30 days), right-censored inside
-    // the final 24 hours; at-risk = reverse cumulative histogram,
-    // hazard in integer micro-units
-    "t200_hazard" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{broadcast, col, expr, max, min}
-      val ud = t.events.select(col("user_id"),
-        expr("unix_micros(ts) DIV 3600000000").as("hn"))
-      val span = ud.groupBy("user_id")
-        .agg(min("hn").as("fst"), max("hn").as("lst"))
-      val subj = span.crossJoin(broadcast(ud.agg(max("hn").as("cut"))))
-        .select((col("lst") - col("fst")).as("dur"),
-          (col("lst") < col("cut") - 24).as("churned"))
-      Relational.hazardTable(subj, col("dur"), col("churned")) }),
-    // KEY ERASURE on a manifested bucketed table: three key-range
-    // commits, then right-to-be-forgotten for custkey % 37 == 3 —
-    // the selective path rewrites ONLY affected commits and retires
-    // them in the same manifest publish; read-back must equal the
-    // batch filter
-    "t201_erasure" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor, max}
-      val root = java.nio.file.Files.createTempDirectory("g_erasure").toString
-      val lw = new graft.sinks.LakeWriter(root)
-      val tbl = "g_erasure_orders"
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val o = t.orders.select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
-      val mx = o.agg(max("o_orderkey")).head().getLong(0)
-      lw.commitBucketed(o.filter(col("o_orderkey") * 3 <= mx),
-        tbl, 8, Seq("o_custkey"), replace = true)
-      lw.commitBucketed(
-        o.filter(col("o_orderkey") * 3 > mx && col("o_orderkey") * 3 <= 2 * mx),
-        tbl, 8, Seq("o_custkey"))
-      lw.commitBucketed(o.filter(col("o_orderkey") * 3 > 2 * mx),
-        tbl, 8, Seq("o_custkey"))
-      val keys = o.select("o_custkey").distinct()
-        .filter(col("o_custkey") % 37 === 3)
-      lw.deleteKeysBucketed(s, tbl, Seq("o_custkey"), keys)
-      val out = graft.sinks.LakeWriter.readBucketedTable(s, tbl)
-        .select("o_orderkey", "o_custkey", "cents")
-        .orderBy("o_orderkey").localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      out }),
-    // CALENDAR-correct lag-7 autocorrelation: the t193 positional lag
-    // run over the t198 spine-filled sparse series — dense by
-    // construction, so position IS calendar
-    "t202_autocorr_calendar" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val sparse = t.orders.filter(col("o_orderkey") % 97 === 0)
-        .groupBy(col("o_orderpriority").as("pri"), col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("c"))
-      val dense = Relational.denseDailySpine(sparse, col("pri"), col("dt"),
-        col("c"))
-      Relational.autocorrInt(dense, col("grp"), col("dt"), col("x"), lag = 7) }),
-    // CHANGE DATA FEED between snapshots: two delta commits to a
-    // manifested bucketed table, then table_changes(v1, v2) — the
-    // planted upserts/inserts come back as exact CDC arms
-    "t203_table_changes" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor, when}
-      val root = java.nio.file.Files.createTempDirectory("g_cdf").toString
-      val lw = new graft.sinks.LakeWriter(root)
-      val tbl = "g_cdf_cust"
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val base = t.customer.select(col("c_custkey").as("k"),
-        col("c_mktsegment").as("seg"),
-        floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("cents"))
-      lw.commitBucketed(base, tbl, 8, Seq("k"), replace = true)
-      val delta = base.filter(col("k") % 4 === 0)
-          .select(col("k"), col("seg"), (col("cents") + 500L).as("cents"))
-        .unionByName(base.filter(col("k") % 31 === 0)
-          .select((col("k") + 1000000L).as("k"), col("seg"), col("cents")))
-      lw.commitBucketed(delta, tbl, 8, Seq("k"))
-      val out = graft.sinks.LakeWriter.tableChanges(s, tbl, "k", Seq("k"),
-        fromVersion = 1, toVersion = 2)
-        .orderBy("k", "change_type").localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      out }),
-    // ISLANDS & GAPS over a sparse key domain (the fixture's order
-    // keys are contiguous, so every key ≡ 5 (mod 13) is dropped to
-    // plant real gaps): two anti-joins find the boundaries, only
-    // O(islands) rows reach a window — never the classic full-domain
-    // id - row_number() sort
-    "t204_islands" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.islands(t.orders.filter(col("o_orderkey") % 13 =!= 5),
-        col("o_orderkey")) }),
-    // SUBTREE AGGREGATION (BOM rollup) over the part %7 forest:
-    // ancestor closure by repeated squaring (log-depth rounds), one
-    // groupBy on the ancestor — descendant counts + cents sums
-    "t205_subtree_agg" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr, floor}
-      val parents = t.part
-        .select(col("p_partkey").as("child"),
-          expr("p_partkey DIV 7").as("parent"))
-        .filter(col("parent") >= 1)
-      val values = t.part.select(col("p_partkey").as("id"),
-        floor(col("p_retailprice") * 100.0 + 0.5).cast("long").as("v"))
-      GraphOps.subtreeAggInt(parents, values, maxDepth = 8) }),
-    // NEAREST-event join: each click to its closest view of the same
-    // user within ±10 min, either direction — bucketed candidates +
-    // one argmin aggregate, ties to the earlier view
-    "t206_nearest_event" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.nearestEvent(t.events, "click", "view",
-        windowUs = 600L * 1000000L) }),
-    // TIME-WEIGHTED AVERAGE balance per customer: each order's cents
-    // held until the next order (LOCF step function), exact integer
-    // integral / span in micro-units; single-order customers omitted
-    "t209_twap" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, datediff, floor, lit}
-      Relational.timeWeightedAvg(t.orders, col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1970-01-01")),
-        floor(col("o_totalprice") * 100.0 + 0.5)) }),
-    // OHLC candlesticks per (event_type, hour): open/close via
-    // deterministic min/max-struct argmin (ties by id), one
-    // partial-aggregating pass; event_id stands in for the price
-    "t210_ohlc" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      Relational.ohlcBars(t.events, col("event_type"),
-        expr("unix_micros(ts) DIV 3600000000"), expr("unix_micros(ts)"),
-        col("event_id"), col("event_id")) }),
-    // DETERMINISTIC EXACT-k RESERVOIR: exactly 7 customers per market
-    // segment by md5 hash rank — fixed-size replayable sampling (the
-    // rate-based t52 gives binomial counts; this gives exactly k)
-    "t226_reservoir_k" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.reservoirK(
-          t.customer.select("c_custkey", "c_mktsegment", "c_nationkey"),
-          col("c_mktsegment"), col("c_custkey"), k = 7, seed = "res14")
-        .select("c_mktsegment", "sample_rank", "c_custkey", "c_nationkey")
-        .orderBy("c_mktsegment", "sample_rank") }),
-    // SNAPSHOT CLONE: version 1 of a delta-maintained table cloned to
-    // an independent table AFTER a v2 upsert landed — the clone must
-    // show the pre-upsert state (pinning, not latest)
-    "t227_snapshot_clone" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, floor}
-      val root = java.nio.file.Files.createTempDirectory("g_clone").toString
-      val lw = new graft.sinks.LakeWriter(root)
-      val (tbl, cln) = ("g_clone_src", "g_clone_v1")
-      s.sql(s"DROP TABLE IF EXISTS $tbl"); s.sql(s"DROP TABLE IF EXISTS $cln")
-      val base = t.customer.select(col("c_custkey").as("k"),
-        floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("cents"))
-      lw.commitBucketed(base, tbl, 8, Seq("k"), replace = true)
-      lw.commitBucketed(base.filter(col("k") % 3 === 0)
-          .select(col("k"), (col("cents") + 111L).as("cents")),
-        tbl, 8, Seq("k"))
-      lw.cloneSnapshot(s, tbl, cln, version = 1, mergeKeys = Seq("k"))
-      val out = graft.sinks.LakeWriter
-        .readBucketedTableMerged(s, cln, Seq("k"))
-        .orderBy("k").localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS $tbl"); s.sql(s"DROP TABLE IF EXISTS $cln")
-      out }),
-    // WEIGHTED PageRank: co-purchase edges weighted by shared-order
-    // count, 85% mass spread weight-proportionally, integer-floored
-    // contributions — heavier ties pull more rank
-    "t225_weighted_pagerank" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val weighted = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") =!= col("b.pk"))
-        .groupBy(col("a.pk").as("src"), col("b.pk").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      GraphOps.pageRankWeightedInt(weighted, iters = 3) }),
-    // POSITIONAL PHRASE SEARCH: 'table table' as a posting-list join
-    // chain on (doc_id, pos - k) — adjacency, not bag-of-words
-    "t223_phrase_search" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.phraseSearch(t.documents, Seq("table", "table")) }),
-    // DETERMINISTIC STRING_AGG: per-priority sorted distinct status
-    // roster — collect_set + array_sort + concat_ws, never the
-    // partition-order trap of bare collect_list
-    "t224_string_agg" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{array_sort, col, collect_set, concat_ws, count, lit}
-      t.orders.groupBy(col("o_orderpriority").as("pri"))
-        .agg(concat_ws(",", array_sort(collect_set(col("o_orderstatus"))))
-          .as("statuses"), count(lit(1)).as("n"))
-        .orderBy("pri") }),
-    // DEGREE ASSORTATIVITY of the co-purchase graph: Pearson over the
-    // degrees at every directed-pair's two ends, integer moments, one
-    // quantized division
-    "t222_assortativity" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.degreeAssortativity(pairs) }),
-    // STREAMING POINT-IN-TIME enrichment: probe shards across cold
-    // restarts, each micro-batch PIT-joined to the static SCD-2
-    // interval table; emissions union to the batch join
-    "t221_stream_pit" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.pitGate(t.events, t.orders) }),
-    // STREAMING ISLANDS maintenance: key-range shards across cold
-    // restarts, each batch's islands seam-stitched onto the carried
-    // frontier island by a one-row latest-wins delta; O(islands) state
-    "t220_stream_islands" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.islandsGate(t.orders) }),
-    // RECORD-LINKAGE EVALUATION: pairwise precision/recall/F1 of the
-    // t144 entity assignment against the planted ground truth (the
-    // +1e6/+2e6 variants share their base key's cluster; the +3e6
-    // md5 decoys are singletons) — pure integer pair counting
-    "t219_linkage_eval" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      val planted = fuzzyPlanted(t)
-      val pairs = TextOps.fuzzyMatchMultiBlock(planted,
-        Seq(expr("substr(name, 2)"), expr("substr(name, 1, length(name)-1)")),
-        maxDist = 2).select(col("key_a"), col("key_b"))
-      val assigned = TextOps.entityIds(planted, pairs)
-        .withColumn("truth", expr(
-          "CASE WHEN key >= 3000000 THEN key ELSE key % 1000000 END"))
-      Relational.clusteringPairMetrics(assigned, col("entity_id"),
-        col("truth")) }),
-    // MAXIMAL INDEPENDENT SET: Luby's algorithm with md5-hash
-    // priorities over the co-purchase graph — replayable symmetry
-    // breaking, O(log n) rounds, fail-loud round bound
-    "t218_mis" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
-      GraphOps.maximalIndependentSet(pairs, seed = "mis14", rounds = 12) }),
-    // STREAMING TWAP maintenance: date-range shards across cold
-    // restarts, per-customer LOCF integral folded forward with
-    // O(keys) carried state; must equal the batch closed form
-    "t217_stream_twap" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.twapGate(t.orders) }),
-    // STREAMING IVF intake: vec_id-range shards across cold restarts,
-    // centroids fixed by the first batch (seed contract), later
-    // batches assign-and-append only; serving must equal the one-shot
-    // s35 build bit-for-bit
-    "t213_stream_ivf" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.ivfGate(t.embeddings) }),
-    // TPC-H Q17 shape: revenue from small-quantity lineitems of one
-    // brand — quantity below 0.2× the part's average, the correlated
-    // aggregate CROSS-MULTIPLIED into pure integers (5·n·q < Σq)
-    "t214_tpch_q17" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, expr, floor, lit, sum}
-      import org.apache.spark.sql.types.DecimalType
-      val li = t.lineitem.select(col("l_partkey"),
-        floor(col("l_quantity") * 100.0 + 0.5).cast("long").as("q"),
-        floor(col("l_extendedprice") * 100.0 + 0.5).cast("long").as("cents"))
-      val brand = t.part.filter(col("p_brand") === "Brand#4")
-        .select(col("p_partkey"))
-      val joined = li.join(brand, col("l_partkey") === col("p_partkey"))
-      val stats = joined.groupBy("l_partkey")
-        .agg(count(lit(1)).as("n"), sum("q").as("sq"))
-      joined.join(stats, "l_partkey")
-        .filter(lit(5L) * col("n") * col("q") < col("sq"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("cents").cast(DecimalType(38, 0))).cast("long")
-            .as("total_cents"))
-        .select(col("n_rows"), col("total_cents"),
-          expr("CAST((total_cents * 1000) DIV 7 AS BIGINT)")
-            .as("avg_yearly_milli")) }),
-    // TPC-H Q22 shape: DORMANT rich customers — balance above the
-    // positive-balance average (integer cross-multiplied), from a
-    // nation set, with no order since 2001 (every fixture customer
-    // has SOME order, so the anti-join arm is recency-scoped) —
-    // scalar subquery + anti-join, per-nation rollup
-    "t215_tpch_q22" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{broadcast, col, count, floor, lit, sum}
-      val cust = t.customer
-        .filter(col("c_nationkey").isin(1, 3, 5, 7, 9, 11, 13))
-        .select(col("c_custkey"), col("c_nationkey"),
-          floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("bal"))
-      val pos = cust.filter(col("bal") > 0)
-        .agg(count(lit(1)).as("pn"), sum("bal").as("ps"))
-      cust.crossJoin(broadcast(pos))
-        .filter(col("bal") * col("pn") > col("ps"))
-        .join(t.orders.filter(col("o_orderdate") >= lit("2001-01-01"))
-            .select(col("o_custkey")),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("numcust"), sum("bal").as("totbal_cents"))
-        .orderBy("c_nationkey") }),
-    // EXACT NTILE(10): decile assignment with no fact-sized sort —
-    // histogram rank + within-tie row_number over $1000 price bands
-    "t216_ntile" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr, floor}
-      Relational.ntileExact(t.orders, col("o_orderpriority"),
-        expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) DIV 100000"),
-        col("o_orderkey"), k = 10) }),
-    // BITEMPORAL lookup: SCD-2 state committed at two TRANSACTION
-    // versions (pre-1996 build, then the fold delta); "status as of
-    // valid date 1997-06-01" answered at BOTH txn versions — the
-    // stale-knowledge arm vs the corrected one, via manifest pinning
-    "t211_bitemporal" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit, to_date}
-      val root = java.nio.file.Files.createTempDirectory("g_bitemp").toString
-      val lw = new graft.sinks.LakeWriter(root)
-      val tbl = "g_bitemp_scd2"
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val cut = to_date(lit("1996-01-01"))
-      lw.commitBucketed(
-        Relational.scd2State(t.orders.filter(col("o_orderdate") < cut)),
-        tbl, 8, Seq("o_custkey"), replace = true)
-      val st1 = graft.sinks.LakeWriter.readBucketedTableMerged(
-        s, tbl, Seq("o_custkey"))
-      lw.commitBucketed(
-        Relational.scd2FoldDelta(st1,
-          t.orders.filter(col("o_orderdate") >= cut)),
-        tbl, 8, Seq("o_custkey"))
-      val v = to_date(lit("1997-06-01"))
-      def asOf(tx: Int) = graft.sinks.LakeWriter
-        .readBucketedTableMerged(s, tbl, Seq("o_custkey"), version = tx)
-        .filter(col("valid_from") <= v &&
-          (col("valid_to").isNull || col("valid_to") > v))
-        .select(lit(tx).as("txn_v"), col("o_custkey"),
-          col("o_orderstatus"), col("valid_from"))
-      val out = asOf(1).unionByName(asOf(2))
-        .orderBy("txn_v", "o_custkey").localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      out }),
-    // DYNAMIC PARTITION PRUNING: the fact written month-partitioned,
-    // joined to a 12-row month dim — Catalyst injects the runtime
-    // pruning subquery so only 1995's partitions are scanned
-    // (plan-asserted in DppSpec); revenue per pruned month
-    "t212_dpp" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{broadcast, col, count, date_format, floor, lit, sum}
-      import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("g_dpp").toString +
-        "/orders_bymonth"
-      t.orders.select(col("o_orderkey"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        // cluster by the partition column before the partitioned write
-        // (guide §6): unclustered, every one of the fan-out tasks
-        // writes a file into every month directory — tasks×months tiny
-        // files, which the pruned scan below then pays to list/open.
-        // One exchange here ⇒ one file per month.
-        .repartition(col("month"))
-        .write.mode("overwrite").partitionBy("month").parquet(dir)
-      val fact = s.read.parquet(dir)
-      // the dim must be a FILE source carrying a selective filter —
-      // a literal relation constant-folds the predicate away and
-      // Catalyst then skips the pruning subquery
-      val dimDir = java.nio.file.Files.createTempDirectory("g_dpp_dim")
-        .toString + "/months"
-      (1 to 24).map(m => f"${1994 + (m - 1) / 12}-${(m - 1) % 12 + 1}%02d")
-        .toDF("month").write.mode("overwrite").parquet(dimDir)
-      val dim = s.read.parquet(dimDir).filter(col("month").startsWith("1995"))
-      fact.join(broadcast(dim), "month")
-        .groupBy("month")
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents"))
-        .orderBy("month") }),
-    // PIVOT: order counts + cents by priority × status, the wide BI
-    // crosstab via Spark's pivot operator (null-safe zero fill)
-    "t207_pivot" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{coalesce, col, count, floor, lit, sum}
-      val cents = floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-      val wide = t.orders.groupBy(col("o_orderpriority").as("pri"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)).as("cnt"), sum(cents).as("cents"))
-      wide.select(col("pri"),
-        coalesce(col("F_cnt"), lit(0L)).as("f_cnt"),
-        coalesce(col("F_cents"), lit(0L)).as("f_cents"),
-        coalesce(col("O_cnt"), lit(0L)).as("o_cnt"),
-        coalesce(col("O_cents"), lit(0L)).as("o_cents"),
-        coalesce(col("P_cnt"), lit(0L)).as("p_cnt"),
-        coalesce(col("P_cents"), lit(0L)).as("p_cents"))
-        .orderBy("pri") }),
-    // UNPIVOT: the same crosstab melted back to long form via
-    // Dataset.unpivot — (pri, status, n) rows
-    "t208_unpivot" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-      val wide = t.orders.groupBy(col("o_orderpriority").as("pri"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-      val filled = wide.select(col("pri"),
-        coalesce(col("F"), lit(0L)).as("F"),
-        coalesce(col("O"), lit(0L)).as("O"),
-        coalesce(col("P"), lit(0L)).as("P"))
-      filled.unpivot(Array(col("pri")),
-          Array(col("F"), col("O"), col("P")), "status", "n")
-        .orderBy("pri", "status") }),
-    // data-quality expectations: four row rules in one aggregate
-    // pass + a uniqueness constraint; the natural data violates the
-    // tight bounds, the planted re-ingestion (every 997th order's
-    // lines duplicated) violates the primary key
-    "t138_expectations" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val planted = t.lineitem.unionByName(
-        t.lineitem.filter(col("l_orderkey") % 997 === 1))
-      Relational.expectationsReport(planted,
-        Seq(
-          "l_discount_le_005" -> (col("l_discount") <= 0.05),
-          "l_extendedprice_positive" -> (col("l_extendedprice") > 0),
-          "l_quantity_in_1_30" -> (col("l_quantity") >= 1 && col("l_quantity") <= 30),
-          "l_returnflag_domain" -> col("l_returnflag").isin("A", "N", "R")),
-        Seq("pk_unique" -> Seq("l_orderkey", "l_linenumber"))) }),
-    // partition completeness: calendar days inside the table's span
-    // with no orders — the silent-missing-day ingestion alarm (the
-    // fixture has 6 natural gaps at sf0.01)
-    "t139_date_gaps" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.dateGaps(t.orders, "o_orderdate") }),
-    // time-series reindex + LOCF forward fill: per-flag daily revenue
-    // on the full calendar, missing days repaired from the last
-    // observation (dateGaps' repair; was_missing keeps it auditable)
-    "t141_forward_fill" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.forwardFillDaily(t.lineitem) }),
-    // fuzzy key match: every distinct name entity re-ingested once
-    // with a mangled first character, recovered by blocked
-    // candidates + exact Levenshtein verify
-    "t140_fuzzy_match" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, concat, expr, lit, min, substring}
-      // entity resolution runs over DISTINCT name entities (the
-      // fixture reuses 64 names across 2000 parts — matching row
-      // instances would be quadratic in the reuse count and say
-      // nothing new); each name keyed by its min part key, and every
-      // entity re-ingested once with a mangled first character
-      val base = t.part.groupBy(col("p_name").as("name"))
-        .agg(min("p_partkey").as("key")).select("key", "name")
-      val planted = base.unionByName(
-        base.select((col("key") + 1000000L).as("key"),
-          concat(lit("x"), substring(col("name"), 2, 1000)).as("name")))
-      TextOps.fuzzyMatch(planted, expr("substr(name, 2)"), maxDist = 2) }),
-    // TWO-PASS blocked fuzzy match: a first-character typo escapes
-    // the prefix block and a last-character typo escapes the suffix
-    // block — candidates union from BOTH complementary blocks, dedup,
-    // one shared verify. The planting mangles each entity at both
-    // ends, so each pass finds pairs the other is blind to
-    "t143_fuzzy_two_pass" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.expr
-      TextOps.fuzzyMatchMultiBlock(fuzzyPlanted(t),
-        Seq(expr("substr(name, 2)"), expr("substr(name, 1, length(name)-1)")),
-        maxDist = 2) }),
-    // entity-id assignment: the two-pass pairs through the shared
-    // min-label propagation core — every key gets the min key of its
-    // fuzzy component (base + both typo variants resolve to ONE id),
-    // unmatched singletons get themselves
-    "t144_entity_ids" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      val planted = fuzzyPlanted(t)
-      val pairs = TextOps.fuzzyMatchMultiBlock(planted,
-        Seq(expr("substr(name, 2)"), expr("substr(name, 1, length(name)-1)")),
-        maxDist = 2).select(col("key_a"), col("key_b"))
-      TextOps.entityIds(planted, pairs) }),
-    // generic connected components over a sparsified co-purchase
-    // graph (quantity-filtered, so components are real multi-hop
-    // structures, not one giant clique) — the dedup-cluster min-label
-    // core exposed for arbitrary edge frames
-    "t145_connected_components" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.connectedComponents(pairs, maxIter = 60) }),
-    // the SAME graph through the alternating big-star/small-star
-    // contraction — O(log n) rounds instead of O(diameter) sweeps,
-    // the huge-diameter 100× lever; output must match t145 verbatim
-    "t146_cc_bigstar" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem.filter(col("l_quantity") <= 5)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.connectedComponentsBigStar(pairs) }),
-    // MERGE INTO / SCD-1 upsert: every 7th customer's segment+balance
-    // overwritten in place, every 31st re-ingested under a new key —
-    // matched rows replaced wholesale, unmatched pass through, new
-    // keys insert
-    "t147_merge_upsert" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      val dim = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
-      val upd = dim.filter(col("c_custkey") % 7 === 0)
-        .select(col("c_custkey"), lit("MERGED").as("c_mktsegment"),
-          (col("c_acctbal") + 100.0).as("c_acctbal"))
-        .unionByName(dim.filter(col("c_custkey") % 31 === 0)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            lit("NEWKEY").as("c_mktsegment"), col("c_acctbal")))
-      Relational.mergeUpsert(dim, upd, "c_custkey").orderBy("c_custkey") }),
-    // SCD-2 interval build: order-status history collapsed into
-    // validity intervals (gaps-and-islands, customer-partitioned)
-    "t125_scd2_intervals" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.scd2Intervals(t.orders) }),
-    // STREAMING SCD-2: the orders history streamed in three
-    // date-range shards (each a cold restart), the interval state
-    // folded forward in a manifested bucketed table per batch; final
-    // state must equal the one-shot rebuild (t125's twin verbatim)
-    "t137_scd2_stream" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.scd2Gate(t.orders) }),
-    // INCREMENTAL SCD-2: fold the post-1996 slice into the pre-1996
-    // state (closed intervals untouched, open intervals extend or
-    // close); must equal the full rebuild — twin is t125's verbatim
-    "t133_scd2_fold" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit, to_date}
-      val cut = to_date(lit("1996-01-01"))
-      Relational.scd2Fold(
-          Relational.scd2State(t.orders.filter(col("o_orderdate") < cut)),
-          t.orders.filter(col("o_orderdate") >= cut))
-        .select("o_custkey", "o_orderstatus", "valid_from", "valid_to",
-          "first_key", "n_orders")
-        .orderBy("o_custkey", "valid_from", "first_key") }),
-    // rolling 7-day active users over the event stream (integer days)
-    "t126_rolling_active" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.rollingActiveUsers(t.events) }),
-    // the 100 TB form of the same curve: per-day mergeable HLL
-    // sketches unioned per window; gated the q38 way (exact count +
-    // within-10% boolean)
-    "t128_rolling_active_sketch" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.rollingActiveUsersSketch(t.events) }),
-    // top length-3 event-type journeys across user timelines
-    "t129_event_paths" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.topEventPaths(t.events) }),
-    // POINT-IN-TIME join: deterministic probe dates (event_id-derived,
-    // spanning the order-history years) look up the t125 intervals --
-    // the leakage-free feature-store lookup; probes before a key's
-    // first interval or with no intervals keep nulls
-    "t127_pit_join" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, date_add, lit, to_date}
-      val probes = t.events.select(
-        col("event_id"), (col("user_id") + 1).as("custkey"),
-        date_add(to_date(lit("1992-01-01")),
-          (col("event_id") % 2500).cast("int")).as("pdate"))
-      EventOps.pitJoin(probes, "custkey", "pdate",
-        Relational.scd2Intervals(t.orders), "o_custkey",
-        payload = Seq("o_orderstatus", "valid_from"))
-        .orderBy("event_id") }),
-    // unicode normalization (CCNet-style cleanup): accent/typography
-    // fold + lowercase + whitespace collapse, exercised by a planted
-    // accented tail (the t67 pattern — the fixture corpus is ASCII)
-    "t114_normalize_unicode" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, concat, lit, when}
-      TextOps.normalizeTexts(
-        t.documents.withColumn("text",
-          when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(NormPlantTail))).otherwise(col("text")))) }),
-    "q08_top3_per_brand" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.topPartsPerBrand(t.lineitem, t.part) }),
-    "q09_running_total" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.runningTotal(t.lineitem) }),
-    "q10_topk_parts" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.topkParts(t.lineitem, t.part) }),
-    "q11_distinct_counts" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.distinctCounts(t.lineitem) }),
-    "q12_rollup_qty" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.rollupQty(t.lineitem) }),
-    "q13_setops_status" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.setopsStatus(t.orders) }),
-    "q14_nation_f_share" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.nationStatusShare(t.orders, t.customer, t.nation) }),
-    "q15_monthly_orders" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.monthlyOrders(t.orders) }),
-    "q16_type_word_stats" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.typeWordStats(t.part) }),
-    "q17_part_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.partPairs(t.lineitem) }),
-    "q18_event_bursts" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.eventBursts(t.events) }),
-    "q19_asof_last_order" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.asofLastOrder(t.events, t.orders) }),
-    "q20_json_props" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.jsonProps(t.events) }),
-    "q21_events_hourly" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.hourlyStats(t.events) }),
-    "q22_sessionize" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.sessionize(t.events) }),
-    "q38_approx_distinct" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.approxDistinctCounts(t.lineitem) }),
-    "q43_event_heatmap" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.eventHeatmap(t.events) }),
-    // approximate quantiles: the sketch-merge shape for 100 TB
-    // (exact values + within-tolerance booleans, the q38 pattern)
-    "q48_approx_quantiles" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.approxQuantileReport(t.lineitem) }),
-    // incremental NDV: per-shard mergeable HLL sketches unioned to a
-    // corpus estimate — statistics that stay fresh without rescans
-    "q49_incremental_ndv" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.incrementalNdv(t.lineitem) }),
-    // ANALYZE-style per-column profile: null count, exact NDV,
-    // min/max in long format — the CBO statistics surface
-    "t81_table_profile" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.tableProfile(t.lineitem) }),
-    "q44_percentiles" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.groupedPercentiles(t.lineitem) }),
-    "q46_status_pivot" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.statusPivot(t.orders) }),
-    "q47_ship_delay" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.shipDelayStats(t.lineitem, t.orders) }),
-    "q45_rank_variants" -> ((s, d) => { val t = Tables.load(s, d)
-      Relational.rankVariants(t.part) }),
-    "t23_dedup_exact" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.exactDedup(t.documents) }),
-    "t24_jaccard_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.jaccardPairs(t.documents) }),
-    "t25_minhash_lsh" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.minhashLshPairs(t.documents) }),
-    "t26_simhash_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.simhashPairs(t.documents) }),
-    "t41_ngram_jaccard" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.ngramJaccardPairs(t.documents) }),
-    "t42_bpeish_tokens" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.bpeishTokenCounts(t.documents) }),
-    "t48_repetition" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.repetitionScores(t.documents) }),
-    // set-graph clustering: identical output to
-    // dedupClusters(jaccardPairs(...)), propagation over distinct
-    // token sets instead of the expanded doc-pair graph
-    "t49_dedup_clusters" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.jaccardClusters(t.documents) }),
-    "t50_decontaminate" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.containmentReport(t.documents) }),
-    // EXACT 13-gram decontamination (the GPT-3 rule): verbatim-leak
-    // flags over a corpus with PLANTED contamination — every train
-    // doc ≡1 mod 7 gets the first 13 tokens of its floor-multiple-
-    // of-20 eval doc appended, so the exact-hit arm fires beyond the
-    // fixture's two natural collisions; the twin builds the identical
-    // planted corpus
-    "t243_ngram_decontaminate" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{array_join, col, concat, expr, lit, slice}
-      val docs = t.documents.select(col("doc_id"), col("text"))
-      val evalSpan = docs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("eid"),
-          array_join(slice(graft.ops.TextOps.tokens(col("text")), 1, 13),
-            " ").as("span"))
-      val toPlant = docs
-        .filter(col("doc_id") % 20 =!= 0 && col("doc_id") % 7 === 1)
-        .withColumn("eid", expr("(doc_id DIV 20) * 20"))
-        .join(evalSpan, "eid")
-        .select(col("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = docs
-        .join(toPlant.select("doc_id"), Seq("doc_id"), "left_anti")
-        .unionByName(toPlant)
-      Dedup.ngramDecontaminate(corpus) }),
-    "t51_split_assign" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.splitAssign(t.documents) }),
-    "t52_sample_stratified" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.stratifiedSample(t.documents) }),
-    // incremental sample maintenance: yesterday's sample is the whole
-    // index; folding today's shard against it reproduces the one-shot
-    // full-corpus sample EXACTLY (greedy hash-smallest property) —
-    // twin is t52's full-corpus SQL verbatim
-    "t110_incremental_sample" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val idx = CorpusOps.stratifiedSample(t.documents.filter(col("doc_id") < 250))
-        .select("source", "doc_id", "h")
-      CorpusOps.incrementalStratifiedSample(
-        t.documents.filter(col("doc_id") >= 250), idx) }),
-    // ordered per-user funnel over the event stream: step i+1 counts
-    // only strictly after the first completion of step i
-    "t111_funnel" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.funnel(t.events) }),
-    // cohort retention triangle: users grouped by first-event week,
-    // counted distinct in every week-offset they return
-    "t112_cohort_retention" -> ((s, d) => { val t = Tables.load(s, d)
-      EventOps.cohortRetention(t.events) }),
-    // incremental cohort maintenance: the distinct (user, week)
-    // activity index folds a new shard without rescanning history;
-    // twin is t112's full-history SQL verbatim
-    "t116_incremental_cohort" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val idx = EventOps.activityWeeks(t.events.filter(col("event_id") < 5000))
-      EventOps.incrementalCohortRetention(
-        t.events.filter(col("event_id") >= 5000), idx)._1 }),
-    // politeness crawl schedule: distinct canonical URLs ranked into
-    // per-domain fetch slots (one fetch per domain per slot)
-    "t115_crawl_schedule" -> ((s, d) => { val t = Tables.load(s, d)
-      UrlOps.crawlSchedule(UrlOps.plantUrls(t.documents)) }),
-    // per-domain quality blocklist: page-level quality aggregated to
-    // the granularity a crawler acts on -- integer score sums, the
-    // decision bit a pure-integer comparison
-    "t124_domain_quality" -> ((s, d) => { val t = Tables.load(s, d)
-      UrlOps.domainQualityReport(t.documents, UrlOps.plantUrls(t.documents)) }),
-    // integer-scaled PageRank over the co-purchase graph (parts
-    // sharing an order, both directions): 3 power iterations, every
-    // per-edge contribution floored before the order-free integer sum
-    // the DSIR RESAMPLING step: t95's scores drive a deterministic
-    // content-hash Bernoulli accept (p = min(1, score), no PRNG) --
-    // pure integer cross-multiplied accept test, engine-exact
-    "t121_importance_resample" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.importanceResample(t.documents) }),
-    // source-overlap matrix: content jaccard between source pairs
-    // over distinct fingerprints -- the mirror-detection report a
-    // mixture designer runs before assigning per-source budgets
-    "t130_source_overlap" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      // the fixture's dups are within-source, so the cross-source arm
-      // is PLANTED (t67 pattern): every 10th==4 doc mirrored into a
-      // synthetic aggregator source at fresh ids
-      val planted = t.documents.select(col("doc_id"), col("source"), col("text"))
-        .unionByName(t.documents.filter(col("doc_id") % 10 === 4)
-          .select((col("doc_id") + 50000L).as("doc_id"),
-            concat(lit("mirror-of-"), col("source")).as("source"), col("text")))
-      CorpusOps.sourceOverlap(planted) }),
-    // MOSS-style winnowing-overlap pairs: partial-overlap dedup —
-    // any shared >= w+k-1 token run guarantees a shared fingerprint;
-    // boilerplate fingerprints df-capped before the pair join
-    "t123_winnow_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.winnowPairs(t.documents) }),
-    "t119_pagerank" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") =!= col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.pageRankInt(pairs) }),
-    // per-node triangle counts over the same co-purchase graph:
-    // oriented a<b<c wedge enumeration, each triangle once
-    "t120_triangles" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.triangleCounts(pairs) }),
-    // degree-CAPPED triangle counts: a planted star hub (id 9999999,
-    // an edge to every 3rd part) plus the natural co-purchase hubs
-    // are excluded before wedge generation; exact on the capped
-    // subgraph — the SCALE.md-named 100× lever for t120's Σ deg²
-    "t134_triangles_capped" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, lit}
-      val li = t.lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      val hub = t.part.select(col("p_partkey").as("src"))
-        .filter(col("src") % 3 === 0)
-        .withColumn("dst", lit(9999999L))
-      GraphOps.triangleCountsCapped(pairs.unionByName(hub), maxDeg = 100) }),
-    // DOULION-sampled triangle estimate: hash-Bernoulli edge keep at
-    // p=0.25 (no PRNG — the twin reproduces the subgraph exactly),
-    // exact count on the sample, unbiased 1/p^3 scale-up
-    "t136_triangles_sampled" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val li = t.lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.triangleCountsSampled(pairs, p = 0.25) }),
-    // re-crawl snapshot diff: per doc_id added/removed/changed/
-    // unchanged by content fingerprint — all four arms planted
-    // in-query (edit every 7th, drop every 11th≡3, add re-ids)
-    "t118_corpus_diff" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, concat, lit, when}
-      val base = t.documents.select(col("doc_id"), col("text"))
-      val after = base.filter(col("doc_id") % 11 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0,
-            concat(col("text"), lit(" re-crawl edit"))).otherwise(col("text")))
-        .unionByName(base.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      CorpusOps.corpusDiff(base, after) }),
-    // STREAMING search-index intake: per-batch index frames appended
-    // across cold restarts; the stream-built index must rank exactly
-    // like a one-shot rebuild (twin = s55 verbatim)
-    "t122_stream_bm25" -> ((s, d) => { val t = Tables.load(s, d)
-      import s.implicits._
-      graft.streaming.StreamGates.bm25Gate(
-        t.documents, BatchQueries.toDF("query_id", "qtext")) }),
-    // STREAMING funnel: the t111 rule as per-user keyed state over
-    // real restart-per-shard micro-batches — (t1, t2, t3) must
-    // restore across cold restarts for steps straddling shards
-    "t113_stream_funnel" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.funnelGate(t.events) }),
-    "t53_tfidf_terms" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.tfidfTopTerms(t.documents) }),
-    "t54_seq_pack" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.packSequences(t.documents) }),
-    "t55_quality_filter" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.gopherFilter(t.documents) }),
-    // capstone: dedup → gopher filter → split assign → pack manifest,
-    // one composed pipeline over the operators gated individually
-    "t56_corpus_build" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.corpusBuild(t.documents) }),
-    // the CRAWL-TO-CORPUS capstone: nine gated operators wired in
-    // production order over today's shard (t71 URL dedup → t124
-    // blocklist → t55 quality → t107 decontam → t87 near-dup-vs-
-    // index → t121 DSIR → t92 temperature → t54 pack → t91 shuffle)
-    "t135_crawl_corpus_build" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.crawlCorpusBuild(t.documents, UrlOps.plantUrls(t.documents)) }),
-    // the SAME nine-operator capstone as a foreachBatch intake stream
-    // across cold restarts (stages 1-4 per micro-batch against a
-    // persisted URL index + staging table, stages 5-9 at day close) —
-    // final corpus must equal the batch capstone VERBATIM, so the
-    // twin IS t135's SQL unchanged
-    "t228_stream_crawl_corpus" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.crawlCorpusGate(
-        t.documents, UrlOps.plantUrls(t.documents)) }),
-    // the capstone across TWO day-closes: day-1 streams and closes,
-    // its URL index carries over the day boundary, day-2 streams
-    // against it (planted refetches make the cross-day probe
-    // falsifiable) and closes — day-2's corpus must equal the batch
-    // build on the day-2 slice with day-1 in history
-    "t240_stream_crawl_multiday" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.crawlMultiDayGate(
-        t.documents, UrlOps.plantUrls(t.documents)) }),
-    // BPE merge-pair learning: 3 count→top-1→greedy-apply rounds over
-    // the document token streams; the run-parity rule makes greedy
-    // leftmost application exact in both engines
-    "t229_bpe_merges" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.bpeMerges(t.documents, nMerges = 3) }),
-    // TPC-H Q1 as a streaming MATERIALIZED VIEW: exact integer
-    // sufficient statistics folded per micro-batch across cold
-    // restarts, rendered at day close with the batch quant formulas —
-    // must equal the one-shot q64_tpch01 verbatim
-    "t230_stream_tpch_q1" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.tpchQ1Gate(t.lineitem) }),
-    // ANALYZE-style column statistics: exact equi-depth histogram
-    // (ntileExact — no fact-sized sort) + per-bucket n/NDV/min/max
-    // over order totals in cents
-    "t231_column_stats" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      Relational.columnStats(t.orders,
-        expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"),
-        col("o_orderkey"), k = 8) }),
-    // WEEKDAY SEASONAL PROFILE: robust per-(priority, ISO weekday)
-    // lower median of daily order counts via the histogram rank
-    "t239_weekday_profile" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Relational.weekdayMedianProfile(t.orders, col("o_orderpriority"),
-        col("o_orderdate")) }),
-    // streaming LINEAR-TREND MV: additive OLS moments folded per
-    // complete-day micro-batch across cold restarts ≡ t235 verbatim
-    "t236_stream_trend" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.trendGate(t.orders) }),
-    // MANN-KENDALL trend test: distribution-free monotone-trend S
-    // statistic per priority over the same daily series — all sign
-    // counts, no division anywhere
-    "t237_mann_kendall" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, datediff, lit}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("x"))
-      Relational.mannKendallInt(daily, col("pri"),
-        datediff(col("dt").cast("date"), lit("1995-01-01").cast("date"))
-          .cast("long"), col("x")) }),
-    // THEIL-SEN robust slope: lower-median pairwise micro slope per
-    // priority — the ~29%-contamination-proof trend companion
-    "t238_theil_sen" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, datediff, lit}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("x"))
-      Relational.theilSenInt(daily, col("pri"),
-        datediff(col("dt").cast("date"), lit("1995-01-01").cast("date"))
-          .cast("long"), col("x")) }),
-    // EXACT TRIMMED MEAN (5% each side) of order totals per priority:
-    // histogram-rank interval overlap, all integer — the robust
-    // location statistic for heavy-tailed feature columns
-    "t241_trimmed_mean" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, expr}
-      Relational.trimmedMeanInt(t.orders, col("o_orderpriority"),
-        expr("CAST(floor(o_totalprice*100.0+0.5) AS BIGINT)")) }),
-    // the SAME statistic as a streaming MV across cold restarts: the
-    // trimmed mean is not additive but its VALUE HISTOGRAM is — each
-    // batch folds an O(touched-cells) count delta, day close renders
-    // through the batch gate's own code path; twin = t241 verbatim
-    "t242_stream_trimmed_mean" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.trimmedMeanGate(t.orders) }),
-    // LINEAR TREND per priority: OLS slope/intercept of the daily
-    // order-count series in exact integer moments, micro-unit DIV
-    "t235_linear_trend" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, datediff, lit}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("x"))
-      Relational.linearTrendInt(daily, col("pri"),
-        datediff(col("dt").cast("date"), lit("1995-01-01").cast("date"))
-          .cast("long"), col("x")) }),
-    // SYSTEMATIC PPS SAMPLE: exactly 16 token-weighted draws from the
-    // documents corpus — deterministic weight-proportional selection
-    // with multiplicity (two-phase prefix sum, broadcast grid)
-    "t234_pps_sample" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, size}
-      CorpusOps.ppsSystematic(t.documents, col("doc_id"),
-        size(graft.ops.TextOps.tokens(col("text"))), k = 16) }),
-    // ROLLING EXACT MEDIAN: 7-observation lower median over the daily
-    // order-count series per priority — windows sort |series| rows,
-    // never the fact table (the autocorr/EWMA series contract)
-    "t233_rolling_median" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, datediff, lit}
-      val daily = t.orders.groupBy(col("o_orderpriority").as("pri"),
-          col("o_orderdate").as("dt"))
-        .agg(count(lit(1)).as("x"))
-      // day index, not epoch micros: o_orderdate is NTZ in some
-      // fixture generations and unix_micros rejects NTZ
-      Relational.rollingMedianInt(daily, col("pri"),
-        datediff(col("dt").cast("date"), lit("1995-01-01").cast("date"))
-          .cast("long"), col("x"), window = 7) }),
-    // streaming VOCABULARY maintenance: additive token counts folded
-    // per micro-batch across cold restarts (O(batch-vocab) delta
-    // commits), day-close top-k ≡ the one-shot t58 verbatim
-    "t232_stream_vocab" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.vocabGate(t.documents) }),
-    // daily-shard incremental corpus build: shard (doc_id ≡ 0 mod 5)
-    // dedups against the exact index of the rest, then the identical
-    // filter/split/pack tail over shard survivors only. The natural
-    // corpus has 500 distinct fingerprints (zero exact dups), so both
-    // dedup arms are exercised by PLANTED re-ingestions (s38/t67
-    // precedent): history docs (id%9==2) re-arrive in the shard under
-    // +1e6 ids — only the INDEX can drop them — and shard docs
-    // (id%25==10) arrive twice under +2e6 ids — dropped by the
-    // shard-local min rule alone. The twin plants identically; had
-    // either arm failed, the extra survivors would shift every
-    // offset/count downstream.
-    "t86_incremental_corpus_build" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val docs = t.documents.select("doc_id", "source", "text")
-      val history = docs.filter(col("doc_id") % 5 =!= 0)
-      val shard = docs.filter(col("doc_id") % 5 === 0)
-        .unionByName(history.filter(col("doc_id") % 9 === 2)
-          .withColumn("doc_id", col("doc_id") + 1000000L))
-        .unionByName(docs.filter(col("doc_id") % 25 === 10)
-          .withColumn("doc_id", col("doc_id") + 2000000L))
-      CorpusOps.incrementalCorpusBuild(shard, Dedup.exactDedupIndex(history)) }),
-    // t86's NEAR-dup sibling: the shard probes the persisted minhash
-    // band index (τ=0.9, the t80 threshold) — shard docs near-duping
-    // HISTORY drop (history-authoritative), shard-internal clusters
-    // keep their min; the fixture's dup-heavy structure makes both
-    // rules fire naturally (≈2.7k cross-history pairs, ≈300 internal
-    // at sf0.01), no planting needed
-    "t87_incremental_neardup_build" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val history = t.documents.filter(col("doc_id") % 5 =!= 0)
-      val shard = t.documents.filter(col("doc_id") % 5 === 0)
-      CorpusOps.incrementalCorpusBuildNearDup(
-        shard, Dedup.minhashIndexFrames(history)) }),
-    // the streaming intake family under the gate: each drives the
-    // REAL foreachBatch stream (file source, AvailableNow, a fresh
-    // query per range shard against a shared checkpoint — every
-    // shard boundary is a cold restart) and returns a frame whose
-    // batch twin is exact under arrival-order == doc_id-order
-    // sharding. See graft.streaming.StreamGates.
-    "t88_stream_exact_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.exactDedupGate(t.documents) }),
-    "t89_stream_paragraph_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.paragraphGate(t.documents) }),
-    "t90_stream_neardup_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.nearDupGate(t.documents) }),
-    // the event-analytics side of the streaming family under the
-    // gate: the watermarked 1-hour tumbling aggregation driven over
-    // time-contiguous micro-batch shards (complete-mode state
-    // surviving per-shard cold restarts) == the q21 batch twin
-    "t96_stream_hourly" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.hourlyGate(t.events) }),
-    // session_window state must merge across batches AND restarts; the
-    // twin is the batch lag-gap rule with end = last + gap
-    // STREAMING sliding windows (2h width / 1h slide): every event in
-    // BOTH overlapping windows, across cold restarts
-    "t142_stream_sliding" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.slidingGate(t.events) }),
-    "t97_stream_sessions" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.sessionGate(t.events) }),
-    // mapGroupsWithState under the gate: per-user running totals with
-    // a quantized-integer accumulator (order-free), final state per
-    // user == batch count + integer value sum
-    "t98_stream_state" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.runningTotalsGate(t.events) }),
-    // stream-static enrichment: per-batch broadcast join against the
-    // customer dim, hourly rollup per market segment
-    "t99_stream_enriched" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.enrichedGate(t.events, t.customer) }),
-    // watermarked stream-stream interval join: click→view pairs
-    // within 10 min; cross-shard pairs prove join state survives the
-    // per-shard cold restarts
-    "t100_stream_interval_join" -> ((s, d) => { val t = Tables.load(s, d)
-      graft.streaming.StreamGates.correlatedGate(t.events) }),
-    // mixture reweighting: uniform per-source budget, deterministic
-    // content-hash slice per source
-    "t57_mixture_sample" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.mixtureSample(t.documents) }),
-    // temperature-weighted mixture (α=0.5): per-source budget ∝ √n,
-    // exact integer share arithmetic (sqrt is the one IEEE-portable
-    // transcendental-adjacent op: correctly rounded everywhere)
-    "t92_mixture_temperature" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.mixtureSampleTemperature(t.documents) }),
-    // seeded global training-order permutation, two-phase rank
-    // (bucket offsets + within-bucket row_number — no global window)
-    "t91_shuffle_order" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.shuffleOrder(t.documents) }),
-    // vocabulary construction: top-k tokens by occurrence, dense ids
-    "t58_vocabulary" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.vocabulary(t.documents) }),
-    // collocation mining: window-2 co-occurrence, PMI-monotone ratio
-    "t59_cooccurrence" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.cooccurrence(t.documents) }),
-    // context-window chunk sizing: windows/stride/padding per source
-    "t60_chunk_plan" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.chunkPlan(t.documents) }),
-    // boilerplate detection: most-shared cross-document shingles
-    "t61_boilerplate" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.boilerplateShingles(t.documents) }),
-    // winnowing: rolling-hash document fingerprint selection
-    "t62_winnow" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.winnowFingerprints(t.documents) }),
-    // BPE training's inner loop under the gate: first-iteration
-    // adjacent character-pair frequencies over word types (the merge
-    // loop itself is spec'd differentially vs a reference impl)
-    "t76_bpe_pairs" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.bpePairCounts(t.documents) }),
-    // Kneser-Ney substrate: trigram counts + continuation diversity
-    "t77_lm_counts" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.lmCounts(t.documents) }),
-    // CCNet-style reference-LM quality signal: trigram backoff-level
-    // coverage of held-out docs against a reference slice's n-gram
-    // tables — integer hit counts plus ONE deferred IEEE division
-    "t94_lm_coverage" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.lmCoverageScores(t.documents) }),
-    // DSIR-style data selection: per-doc importance score from the
-    // ratio of target-slice vs candidate hashed-unigram counts —
-    // integer weight table broadcast to the candidates
-    "t95_importance_weights" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.importanceWeights(t.documents) }),
-    // the skew family's first gate row: the salted join's contract is
-    // EXACT equality with the plain join — brand revenue through the
-    // salted path must hash-match the unsalted twin
-    "t102_salted_join" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val big = t.lineitem.select(col("l_partkey").as("pk"),
-        col("l_extendedprice"), col("l_discount"))
-      val small = t.part.select(col("p_partkey").as("pk"), col("p_brand"))
-      graft.ops.Skew.saltedJoin(big, small, "pk")
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n_items"),
-          graft.ops.Exact.moneySum(
-            col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
-        .orderBy("p_brand") }),
-    // mixture upsampling: rare sources repeat (ceil(n_max/n), cap 4),
-    // the explicit epoch manifest a trainer's loader consumes
-    "t103_mixture_epochs" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.mixtureEpochs(t.documents) }),
-    // decontamination composed with the CONTENT-HASH split (t51's
-    // bucket rule): per val/test doc, its most-containing train doc —
-    // the leakage report that decides whether an eval set ships
-    "t104_split_leakage" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, conv, substring}
-      val bucket = conv(substring(TextOps.fingerprint(col("text")), 1, 4), 16, 10)
-        .cast("long") % 10
-      Dedup.containmentReportWhere(t.documents, bucket >= 8) }),
-    // FUZZY decontamination across the same content-hash split: train
-    // docs minhash-banded against val/test docs ONLY (within-split
-    // pairs unrepresentable) — catches the paraphrase-level
-    // contamination exact shingle containment (t104) misses
-    "t107_cross_decontaminate" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, conv, substring}
-      val bucket = conv(substring(TextOps.fingerprint(col("text")), 1, 4), 16, 10)
-        .cast("long") % 10
-      Dedup.crossNearDups(
-        t.documents.filter(bucket < 8),
-        t.documents.filter(bucket >= 8)) }),
-    // inverted index over rare terms, position-aware ordered postings
-    "t78_inverted_index" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.invertedIndex(t.documents) }),
-    // corpus card: the one-row dataset report (dup rate, quality keep
-    // rate, token budget, diversity), composed from gated operators
-    "t79_corpus_card" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.corpusCard(t.documents) }),
-    // the capstone with NEAR-dup canonicalization: one representative
-    // per Jaccard cluster (t49 machinery) feeds the t56 tail
-    "t80_corpus_build_neardup" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.corpusBuildNearDup(t.documents, threshold = 0.9) }),
-    // incremental dedup: a new shard (doc_id ≡ 0 mod 5) probes a
-    // minhash index built from the REST of the corpus — old×old work
-    // is unrepresentable in the plan. The twin recomputes the full
-    // LSH and restricts to pairs with ≥1 new side: equal by
-    // construction (same band rule, same exact verify).
-    "t63_incremental_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val newShard = t.documents.filter(col("doc_id") % 5 === 0)
-      val history = t.documents.filter(col("doc_id") % 5 =!= 0)
-      Dedup.incrementalMinhashPairs(newShard, Dedup.minhashIndexFrames(history)) }),
-    // incremental EXACT dedup on the same old/new split: the shard's
-    // canonical ids resolve against a (fp, canonical) index without
-    // rescanning history documents
-    "t66_incremental_exact" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val newShard = t.documents.filter(col("doc_id") % 5 === 0)
-      val history = t.documents.filter(col("doc_id") % 5 =!= 0)
-      Dedup.incrementalExactDedup(newShard, Dedup.exactDedupIndex(history)) }),
-    // character-window chunk extraction (width 200, overlap 50)
-    "t68_chunk_text" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.chunkTexts(t.documents) }),
-    // exact duplicated-substring spans (Lee et al. 2022 workflow as
-    // relational passes): >1-occurrence token 5-grams mark positions,
-    // adjacent marks merge into maximal spans
-    "t69_substring_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.duplicatedSpans(t.documents) }),
-    // the removal half of the same workflow: duplicated-span tokens
-    // stripped, documents rebuilt from survivors
-    "t82_substring_removal" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.removeDuplicatedSpans(t.documents) }),
-    // hashed tf-idf document vectors: the text→vector bridge; bucket
-    // weights are exact integer sums (common denominator N) with one
-    // final division, so the 64 doubles hash bit-identically. Gate
-    // shape: the vector is exploded to (doc_id, i, x) rows — the
-    // driver's comparator sorts scalar columns only, so an
-    // array<double> column is unscorable; the library API
-    // (hashedTfIdfVectors) keeps the dense vector for composition
-    "s46_tfidf_vectors" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, posexplode}
-      CorpusOps.hashedTfIdfVectors(t.documents)
-        .select(col("doc_id"), posexplode(col("vec")).as(Seq("i", "x")))
-        .select(col("doc_id"), col("i").cast("long").as("i"), col("x"))
-        .orderBy("doc_id", "i") }),
-    // embedding-free semantic search: the s46 bridge driven end-to-end
-    // — literal query → corpus-idf hashed vector → cosine top-k
-    "s47_tfidf_search" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.tfidfSearch(t.documents, SearchQuery) }),
-    // BM25-shaped retrieval: tf saturation + length normalization in
-    // integer-cleared arithmetic (44/20/6/18 at k1=1.2, b=0.75),
-    // linear idf — one IEEE division per (doc, term), integer sums
-    "s53_bm25_search" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.bm25Search(t.documents, SearchQuery) }),
-    // embedding-free topic clustering: hashed tf-idf vectors assigned
-    // to their argmax-cosine seed centroid (first-8-docs contract,
-    // the s42 shape) — the cluster-balanced-curation primitive with
-    // no model in the loop; zero-norm vectors excluded on both sides
-    "s56_topic_clusters" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.topicClusters(t.documents) }),
-    // cluster-balanced sampling: the t52 deterministic content-hash
-    // quota with s56's TOPIC assignment as the stratum — every
-    // cluster contributes equally to a budgeted subsample
-    "t109_cluster_sample" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.clusterBalancedSample(t.documents) }),
-    // BM25 batch serving: a 3-query TABLE scored in one corpus pass —
-    // tf/lens/totals computed once, the per-query df table broadcast
-    // onto the shared tf frame, per-query top-k by a partitioned rank
-    // window. The single-query s53 path delegates to this form.
-    "s55_bm25_batch" -> ((s, d) => { val t = Tables.load(s, d)
-      import s.implicits._
-      CorpusOps.bm25SearchBatch(
-        t.documents, BatchQueries.toDF("query_id", "qtext")) }),
-    // incremental search-index maintenance: two shard indexes merged
-    // (disjoint unions + integer totals) serve the same batch
-    // queries; twin = s55's full-corpus SQL verbatim, so the merge
-    // must shift df/idf/length-norm corpus-wide exactly as a rebuild
-    "t117_incremental_bm25" -> ((s, d) => { val t = Tables.load(s, d)
-      import s.implicits._
-      import org.apache.spark.sql.functions.col
-      val idx = CorpusOps.mergeBm25Index(
-        CorpusOps.bm25IndexFrames(t.documents.filter(col("doc_id") < 250)),
-        CorpusOps.bm25IndexFrames(t.documents.filter(col("doc_id") >= 250)))
-      CorpusOps.bm25SearchIndexed(
-        BatchQueries.toDF("query_id", "qtext"), idx) }),
-    // MMR diversified rerank: greedy λ·rel − (1−λ)·max-sim selection
-    // over the bounded s31 top-10 candidate set — the serving-tier
-    // diversification that stops k near-paraphrases of the best hit
-    "s59_mmr_rerank" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.mmrRerankTop(t.embeddings) }),
-    // BATCH MMR serving: three queries' top-10 candidate sets
-    // diversified in ONE k-round composition — per-query argmax is a
-    // partitioned window, so a million-query batch costs the same k
-    // jobs as one query (the s55 batch treatment; s59 delegates here)
-    "s60_mmr_rerank_batch" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.mmrRerankTopBatch(t.embeddings) }),
-    // seeded JL random projection (64→16, 4× memory/compute cut):
-    // brute-force cosine top-k in the PROJECTED space — projections
-    // bit-reproducible from the seeded hyperplane constants
-    "s57_projected_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.projectedTopK(t.embeddings) }),
-    // the recall eval for the projection trade: projected top-5 vs
-    // the full-precision ground truth, per query
-    "s58_projected_recall" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.recallAtK(
-        Similarity.cosineTopK(t.embeddings),
-        Similarity.projectedTopK(t.embeddings)) }),
-    // ANN eval harness: recall@k of the seed-centroid IVF (nProbe=4)
-    // against the brute-force ground truth — the measurement that
-    // gates any recall-for-speed trade before it ships. Twin composes
-    // s31's and s35's SQL verbatim and counts the overlap.
-    "s48_ivf_recall" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.recallAtK(
-        Similarity.cosineTopK(t.embeddings),
-        Similarity.ivfTopK(t.embeddings, kmeansIters = 0)) }),
-    // product-quantization serving: 8 codes × 16 seed codewords per
-    // vector (4 B vs 256 B fp32), queries score codebook
-    // reconstructions — ADC as a broadcast join + top-k window
-    "s49_pq_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.pqTopK(t.embeddings) }),
-    // IVF-PQ: the billion-scale serving layout — coarse seed cells
-    // restrict which vectors a query scores (nProbe=4 of 16), PQ
-    // reconstructions decide how (ADC); full-probe == s49 by spec
-    "s50_ivfpq_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.ivfPqTopK(t.embeddings) }),
-    // the s48 eval harness pointed at the PQ path: recall@k of ADC
-    // serving against the brute-force ground truth — the memory-for-
-    // recall trade measured, not guessed
-    "s51_pq_recall" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.recallAtK(
-        Similarity.cosineTopK(t.embeddings),
-        Similarity.pqTopK(t.embeddings)) }),
-    // PQ with LLOYD-TRAINED codebooks (the Jégou-paper production
-    // form): each subspace independently refines its 16 seed
-    // codewords by one squared-L2 k-means sweep with Exact-mean
-    // arithmetic, then the s49 ADC serving tail — the twin unrolls
-    // the sweep (s36/s44 precedent), so drift in assignment metric,
-    // tie-breaks, or mean arithmetic breaks the hash
-    "s54_pq_trained_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.pqTopKTrained(t.embeddings) }),
-    // vector ANALYZE: per-dimension count / exact mean / min / max /
-    // dead-component count — t81's sibling for the array column its
-    // scalar profile skips
-    "s52_embedding_profile" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.embeddingProfile(t.embeddings) }),
-    // count-min sketch heavy hitters: word-bigram occurrences →
-    // (d, bucket) counters → min-over-depth estimates for a sampled
-    // candidate slice; the twin recomputes the identical sketch (the
-    // md5-prefix bucket hash is the engine-portable minhash pattern)
-    "t84_cms_heavy_hitters" -> ((s, d) => { val t = Tables.load(s, d)
-      CorpusOps.cmsHeavyHitters(t.documents, threshold = 30L) }),
-    // BPE tokenizer APPLICATION under a REAL hash gate: iterative
-    // greedy segmentation with data-dependent merges is not
-    // ANSI-SQL-expressible, so the gate encodes the golden fixture
-    // (four planted docs) under a FIXED 10-merge table whose output is
-    // hand-derivable — the twin is the expected VALUES frame (t93/q41
-    // pattern; CorpusOps.goldenBpeFixture scaladoc walks the
-    // derivation). Exercises the full library path: tokenize →
-    // word-type table → batched merge composition → corpus reassembly.
-    // The trained full-corpus encode stays spec-covered (CorpusOpsSpec
-    // round-trip vs bpeTrain + reference-encoder differential).
-    "t85_bpe_encode" -> ((s, _) => {
-      import org.apache.spark.sql.functions.{col, concat_ws}
-      CorpusOps.bpeEncode(
-          CorpusOps.goldenBpeFixture(s), CorpusOps.goldenBpeMerges)
-        .select(col("doc_id"), col("n_tokens"),
-          concat_ws(" ", col("tokens")).as("tokens_str")) }),
-    // paragraph-level dedup (Dolma/CCNet): the gate texts are single
-    // blocks, so deterministic paragraph structure — shared
-    // boilerplate chrome between content halves — is planted in-query
-    // (s38/t67 precedent) and the twin rebuilds the same corpus
-    "t70_paragraph_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      Dedup.paragraphDedup(Dedup.plantParagraphs(t.documents)) }),
-    // incremental paragraph dedup: the shard (doc_id ≡ 0 mod 5)
-    // resolves against a first-occurrence index of the rest — global
-    // firsts decompose as least(indexed, shard-local), so the twin is
-    // t70's full recompute restricted to shard docs
-    "t75_incremental_paragraphs" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val planted = Dedup.plantParagraphs(t.documents)
-      Dedup.incrementalParagraphDedup(
-        planted.filter(col("doc_id") % 5 === 0),
-        Dedup.paragraphIndex(planted.filter(col("doc_id") % 5 =!= 0))) }),
-    // URL canonicalization + URL-level dedup over a planted raw-URL
-    // corpus (no URL column in the fixtures) that exercises every
-    // rule: case, www, default port, trailing slash, tracking
-    // params, fragment. 5 crawls per canonical URL → non-vacuous.
-    "t71_url_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      UrlOps.urlDedup(UrlOps.plantUrls(t.documents)) }),
-    // per-domain crawl stats over the same planted corpus
-    "t72_domain_stats" -> ((s, d) => { val t = Tables.load(s, d)
-      UrlOps.domainStats(UrlOps.plantUrls(t.documents)) }),
-    // Z-order (Morton) clustering key — the data-layout lever behind
-    // LakeWriter.writeZOrdered; the interleave is pure bit math both
-    // engines compute identically, so the key itself is gated and the
-    // file-pruning effect is spec-asserted on real parquet footers
-    "t73_zorder_key" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      t.lineitem.select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
-        graft.sinks.LakeWriter.zorderKey(col("l_partkey"), col("l_suppkey")).as("zkey"))
-        .orderBy("zkey", "l_orderkey", "l_linenumber") }),
-    // PII redaction; the fixture corpus carries no PII, so docs
-    // doc_id ≡ 0 (mod 7) gain a deterministic planted email/phone/IP
-    // tail (s38 precedent) — the gate checks real redactions
-    "t67_pii_redact" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions._
-      val planted = t.documents.withColumn("text",
-        when(col("doc_id") % 7 === 0, concat(col("text"),
-          lit(" reach user"), col("doc_id").cast("string"),
-          lit("@mail.example or 555-867-5309 from 10.0.0."),
-          (col("doc_id") % 250).cast("string"))).otherwise(col("text")))
-      TextOps.redactPii(planted) }),
-    // hashed-feature linear classifier serving (fasttext-shaped
-    // model-based quality filter): explode → bucket join → mean
-    // weight; fixture weights are the deterministic pseudo table
-    "t74_classifier_score" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.classifierScores(t.documents, TextOps.hashedWeightTable(s)) }),
-    // multimodal metadata plane under the gate (first oracle coverage
-    // for the family): resize targets and frame-sampling plans are
-    // pure integer/sequence math over the shared media fixture — the
-    // q39/q40 fixture pattern. Decode stays spec-covered.
-    "t64_resize_plan" -> ((s, _) => {
-      import org.apache.spark.sql.functions.col
-      graft.multimodal.MediaOps.resizePlan(
-        graft.sources.Fixtures.mediaFrame(s).filter(col("kind") === "image"), 256)
-        .select("media_id", "width", "height", "target_width", "target_height")
-        .orderBy("media_id") }),
-    "t65_frame_sample" -> ((s, _) =>
-      graft.multimodal.MediaOps.frameSample(graft.sources.Fixtures.mediaFrame(s), 1000L)
-        .orderBy("media_id", "frame_ms")),
-    // the audio side of the metadata plane: overlapping fixed-length
-    // chunk windows (10s/5s), partial tail clamped to the duration
-    "t101_audio_chunks" -> ((s, _) =>
-      graft.multimodal.MediaOps.audioChunkPlan(graft.sources.Fixtures.mediaFrame(s))
-        .orderBy("media_id", "start_ms")),
-    // multimodal near-dup END-TO-END: real PNG payloads → ImageIO
-    // decode → 8×8 aHash → pigeonhole pair join. The fixture's
-    // half-split patterns make every hash hand-derivable from the
-    // aHash definition (MediaOps.goldenImageFixture scaladoc), so the
-    // twin is the analytically-known golden frame (q41 pattern) —
-    // asserting decode, hash, candidate generation and hamming verify
-    // in one row
-    "t93_image_neardup" -> ((s, _) =>
-      graft.multimodal.MediaOps.imageNearDupPairs(
-        graft.multimodal.MediaOps.goldenImageFixture(s),
-        graft.multimodal.MediaOps.ImageIoDecoder, maxHamming = 5)),
-    // INCREMENTAL image near-dup: planted re-encodes (the golden
-    // patterns re-ingested at new ids — the monthly-re-crawl event)
-    // probe a hash index of the t93 corpus; old×old pairs are
-    // unrepresentable, history pixels never re-decode, and the novel
-    // all-dark image pairs with nothing. Twin = the hand-derived
-    // expected frame (goldenImageProbeFixture scaladoc). The
-    // persisted-bucketed form of the same index is spec-asserted
-    // zero-exchange (MediaOpsSpec).
-    "t105_incremental_image_neardup" -> ((s, _) => {
-      val M = graft.multimodal.MediaOps
-      M.incrementalImageNearDup(
-        M.goldenImageProbeFixture(s),
-        M.imageHashIndexFrame(M.goldenImageFixture(s), M.ImageIoDecoder),
-        M.ImageIoDecoder, maxHamming = 5) }),
-    // audio near-dup END-TO-END: real WAV payloads → JDK PCM decode →
-    // 64-bin envelope hash per chunk window → pigeonhole pair join
-    // per aligned window. The fixture's half-split envelopes at
-    // amplitude exactly 0.5 make every hash hand-derivable
-    // (MediaOps.goldenAudioFixture scaladoc), so the twin is the
-    // analytically-known golden frame — asserting decode, binning,
-    // thresholding, window alignment and hamming verify in one row
-    "t106_audio_neardup" -> ((s, _) =>
-      graft.multimodal.MediaOps.audioNearDupPairs(
-        graft.multimodal.MediaOps.goldenAudioFixture(s),
-        graft.multimodal.MediaOps.WavDecoder,
-        windowMs = 2000L, strideMs = 2000L, maxHamming = 5)),
-    // INCREMENTAL audio near-dup: re-encodes of the indexed envelopes
-    // at fresh ids probe a hash index of the t106 corpus; old×old
-    // pairs unrepresentable, history PCM never re-decoded, the novel
-    // all-silent file pairs with nothing. Twin = the hand-derived
-    // expected frame (goldenAudioProbeFixture scaladoc). The
-    // persisted-bucketed form is spec-asserted zero-exchange.
-    "t108_incremental_audio_neardup" -> ((s, _) => {
-      val M = graft.multimodal.MediaOps
-      M.incrementalAudioNearDup(
-        M.goldenAudioProbeFixture(s),
-        M.audioHashIndexFrame(M.goldenAudioFixture(s), M.WavDecoder,
-          windowMs = 2000L, strideMs = 2000L),
-        M.WavDecoder, windowMs = 2000L, strideMs = 2000L, maxHamming = 5) }),
-    // STREAMING image near-dup intake: golden corpus in 3 cold-
-    // restart shards against the persisted manifested aHash index;
-    // emission union must equal the one-shot batch pairs (t93 ∪ t105
-    // golden frames — pair (11,14) straddles the restart boundary)
-    "t131_image_neardup_stream" -> ((s, _) =>
-      graft.streaming.StreamGates.imageNearDupStreamGate(s)),
-    // STREAMING audio near-dup intake: t106 corpus + t108 re-encodes
-    // across restarts; (31,34) straddles the boundary
-    "t132_audio_neardup_stream" -> ((s, _) =>
-      graft.streaming.StreamGates.audioNearDupStreamGate(s)),
-    // label centroids: the vector-centroid capability under the gate
-    // (order-independent exact means, unlike the pipeline Aggregator)
-    "s37_label_centroids" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.labelCentroids(t.embeddings) }),
-    "t27_langid" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.langIdReport(t.documents) }),
-    "t28_quality" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.qualityScores(t.documents) }),
-    "t29_token_counts" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.tokenCounts(t.documents) }),
-    "t30_fingerprints" -> ((s, d) => { val t = Tables.load(s, d)
-      TextOps.fingerprints(t.documents) }),
-    // connector transforms under the gate: fixture payload (zero
-    // egress) -> normalize -> stable projection; oracle is the
-    // expected frame as VALUES
-    "q39_widen_arrays" -> ((s, _) => {
-      import org.apache.spark.sql.functions.col
-      val raw = graft.sources.RestSource.readJson(
-        s, graft.sources.Fixtures.publicMatchesJson,
-        Some(graft.sources.Endpoints.publicMatchesSchema))
-      graft.sources.Normalize.widenTeams(raw)
-        .select(
-          (Seq("match_id", "radiant_win", "duration") ++
-            (1 to 5).map(i => s"radiant_hero_$i") ++
-            (1 to 5).map(i => s"dire_hero_$i")).map(col): _*)
-        .orderBy("match_id")
-    }),
-    "q40_map_pivot" -> ((s, _) =>
-      graft.sources.Normalize.pivotConstantsMap(
-        s, graft.sources.Fixtures.lobbyTypesJson, "lobby_id")),
-    // the analytics module's flagship under the gate: fixture payload
-    // → RestSource → DotaQueries.heroWinRate; oracle is the
-    // hand-computed golden frame (q39 pattern)
-    "q41_hero_win_rate" -> ((s, _) =>
-      graft.analytics.DotaQueries.heroWinRate(
-        graft.sources.RestSource.readJson(
-          s, graft.sources.Fixtures.publicMatchesJson,
-          Some(graft.sources.Endpoints.publicMatchesSchema)))),
-    "s31_cosine_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.cosineTopK(t.embeddings) }),
-    "s32_embedding_neardup" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.embeddingNearDup(t.embeddings) }),
-    // s32's fixture corpus has no near-dups (green-but-0-rows at every
-    // SF); s38 plants them in-query — perturbed copies at vec_id+1e6
-    // with the last component negated — so the gate checks REAL pairs
-    // through the same LSH machinery.
-    "s38_neardup_planted" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.embeddingNearDup(Similarity.plantNearDups(t.embeddings)) }),
-    // incremental near-dup: the planted copies arrive as the NEW
-    // batch and probe a sign-sketch index of the originals — the
-    // vector-side t63. Twin = s38's full recompute restricted to
-    // pairs with a planted side (all planted ids are ≥ 1e6).
-    "s39_neardup_incremental" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      val planted = Similarity.plantNearDups(t.embeddings)
-        .filter(col("vec_id") >= 1000000L)
-      Similarity.incrementalEmbeddingNearDup(
-        planted, Similarity.embeddingIndexFrames(t.embeddings)) }),
-    "s33_ann_lsh" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.annLsh(t.embeddings) }),
-    // the ANN SERVING path: same queries, but the corpus goes through
-    // the persisted-index shape (annIndexFrame + annLshServe) — the
-    // twin is s33's SQL because the answers must be bit-identical
-    "s40_ann_serve" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Similarity.annLshServe(
-        t.embeddings.filter(col("vec_id") < 5),
-        Similarity.annIndexFrame(t.embeddings.filter(col("vec_id") >= 5))) }),
-    "s34_knn_classify" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.knnClassify(t.embeddings) }),
-    // s35 pins kmeansIters=0: the plain seed-centroid IVF, fully
-    // SQL-expressible with zero refinement machinery.
-    "s35_ivf_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.ivfTopK(t.embeddings, kmeansIters = 0) }),
-    // s36 gates the LLOYD-REFINED variant: refinement means are
-    // Exact.meanOf6 (order-independent quantized decimal sums), so
-    // the twin's unrolled iterations rebuild the exact centroid bits
-    // and every downstream assignment/probe/score matches by
-    // construction.
-    "s36_ivf_lloyd" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.ivfTopK(t.embeddings, kmeansIters = 2) }),
-    // IVF SERVING: same queries through the persisted-index shape
-    // (ivfIndexFrames + ivfServe); twin = s36's SQL, the answers must
-    // be bit-identical
-    "s41_ivf_serve" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.col
-      Similarity.ivfServe(
-        t.embeddings.filter(col("vec_id") < 5),
-        Similarity.ivfIndexFrames(t.embeddings.filter(col("vec_id") >= 5))) }),
-    // int8-quantized serving path: top-k over the dequantized index
-    // (4× memory compression; scores pinned by identical twin math)
-    "s43_quantized_topk" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.quantizedTopK(t.embeddings) }),
-    // SemDeDup over the planted corpus (s38 precedent: the fixture
-    // has no semantic near-dups, the planted perturbed copies are
-    // real ones) — cells from the seed-centroid assignment, one-pass
-    // earlier-id drop rule
-    "s42_semantic_dedup" -> ((s, d) => { val t = Tables.load(s, d)
-      // nCells pinned: the twin bakes LIMIT 16 as its seed-centroid
-      // contract; the scale path is the derived ≈√N default
-      Similarity.semanticDedup(Similarity.plantNearDups(t.embeddings), nCells = 16) }),
-    // SemDeDup on LLOYD-REFINED cells — the paper-faithful config:
-    // same planted corpus and one-pass drop rule as s42, cells
-    // tightened by two Exact-mean sweeps; the twin unrolls the
-    // refinement with the s36 machinery so every cell assignment and
-    // cosine is bit-identical
-    "s44_semantic_dedup_refined" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.semanticDedup(Similarity.plantNearDups(t.embeddings),
-        nCells = 16, kmeansIters = 2) }),
-    // int8-quantized ANN: the quantize→dequantize corpus through the
-    // ANN bucket index (annIndexFrame + annLshServe inside annLsh) —
-    // 4× index memory with the serving plan unchanged
-    "s45_quantized_ann" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.annLsh(Similarity.dequantizedEmbeddings(t.embeddings)) }),
-    // two-stage RETRIEVE-RERANK: PQ-ADC retrieves 32 candidates per
-    // query, finalists re-scored on the raw vectors — the production
-    // ANN serving shape (compressed scan, full precision only for
-    // the shortlist)
-    "s62_retrieve_rerank" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.retrieveRerank(t.embeddings) }),
-    // hard-negative mining over the PLANTED near-dup corpus: in-band
-    // (cos ∈ [0.02, 0.9)) top-k per anchor from the LSH bucket
-    // candidates — the ceiling excludes the planted near-dups (cos ≈
-    // 0.97, would be FALSE negatives), the floor excludes the
-    // uninformative tail, survivors are the contrastive negatives
-    "s61_hard_negatives" -> ((s, d) => { val t = Tables.load(s, d)
-      Similarity.hardNegatives(Similarity.plantNearDups(t.embeddings),
-        lo = 0.02, hi = 0.9) }),
-    // the SQL-TEXT front door: TPC-H Q1 submitted as ANSI SQL through
-    // spark.sql over a registered view — the Exact quantize formulas
-    // written in SQL directly, proving a user can drive this engine
-    // with query text and get oracle-exact answers (twin = the same
-    // Q1 SQL in DuckDB)
-    "q87_sql_text_api" -> ((s, d) => { val t = Tables.load(s, d)
-      t.lineitem.createOrReplaceTempView("lineitem_sqlv")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus,
-          CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-          floor(CAST(sum(CAST(floor(l_extendedprice*10000.0D+0.5D)
-              AS DECIMAL(18,0))) AS DOUBLE)/10000.0D*100.0D+0.5D)/100.0D
-            AS sum_base_price,
-          floor(CAST(sum(CAST(floor(l_extendedprice*(1.0D-l_discount)*10000.0D+0.5D)
-              AS DECIMAL(18,0))) AS DOUBLE)/10000.0D*100.0D+0.5D)/100.0D
-            AS sum_disc_price,
-          floor(CAST(sum(CAST(floor(l_extendedprice*(1.0D-l_discount)*(1.0D+l_tax)*10000.0D+0.5D)
-              AS DECIMAL(18,0))) AS DOUBLE)/10000.0D*100.0D+0.5D)/100.0D
-            AS sum_charge,
-          floor(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE)
-            /count(*)*10000.0D+0.5D)/10000.0D AS avg_qty,
-          floor(CAST(sum(CAST(floor(l_extendedprice*1000000.0D+0.5D)
-              AS DECIMAL(18,0))) AS DOUBLE)/1000000.0D/count(*)*10000.0D+0.5D)/10000.0D
-            AS avg_price,
-          CAST(floor(CAST(sum(CAST(floor(l_discount*1000000.0D+0.5D)
-              AS DECIMAL(18,0))) AS DOUBLE)/1000000.0D/count(*)*10000.0D+0.5D)/10000.0D
-            AS DOUBLE) AS avg_disc,
-          count(*) AS count_order
-        FROM lineitem_sqlv
-        WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-        GROUP BY 1, 2 ORDER BY 1, 2""") }),
-    // explicit GROUPING SETS (cube/rollup's general form): revenue at
-    // (flag, status), (flag), and grand-total levels in ONE Expand
-    // pass, aggregation level derived from the null pattern (source
-    // keys are non-null, so the derivation is unambiguous)
-    "q86_grouping_sets" -> ((s, d) => { val t = Tables.load(s, d)
-      import org.apache.spark.sql.functions.{col, count, lit, when}
-      t.lineitem
-        .groupingSets(
-          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-            Seq(col("l_returnflag")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(graft.ops.Exact.moneySum(
-            col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .withColumn("lvl",
-          when(col("l_returnflag").isNull && col("l_linestatus").isNull, 2L)
-            .when(col("l_linestatus").isNull, 1L).otherwise(0L))
-        .orderBy(col("lvl"), col("l_returnflag"), col("l_linestatus")) }),
-    // ---- the full TPC-H suite (Q1-Q22), adapted to the synthetic
-    // schema (analytics/TpchSuite.scala documents every adaptation).
-    // Each keeps the canonical plan shape: decorrelated scalars,
-    // broadcast dims, semi/anti EXISTS, exact-integer ratios.
-    "q64_tpch01" -> ((s, d) => TpchSuite.q01(Tables.load(s, d))),
-    "q65_tpch02" -> ((s, d) => TpchSuite.q02(Tables.load(s, d))),
-    "q66_tpch03" -> ((s, d) => TpchSuite.q03(Tables.load(s, d))),
-    "q67_tpch04" -> ((s, d) => TpchSuite.q04(Tables.load(s, d))),
-    "q68_tpch05" -> ((s, d) => TpchSuite.q05(Tables.load(s, d))),
-    "q69_tpch06" -> ((s, d) => TpchSuite.q06(Tables.load(s, d))),
-    "q70_tpch07" -> ((s, d) => TpchSuite.q07(Tables.load(s, d))),
-    "q71_tpch08" -> ((s, d) => TpchSuite.q08(Tables.load(s, d))),
-    "q72_tpch09" -> ((s, d) => TpchSuite.q09(Tables.load(s, d))),
-    "q73_tpch10" -> ((s, d) => TpchSuite.q10(Tables.load(s, d))),
-    "q74_tpch11" -> ((s, d) => TpchSuite.q11(Tables.load(s, d))),
-    "q75_tpch12" -> ((s, d) => TpchSuite.q12(Tables.load(s, d))),
-    "q76_tpch13" -> ((s, d) => TpchSuite.q13(Tables.load(s, d))),
-    "q77_tpch14" -> ((s, d) => TpchSuite.q14(Tables.load(s, d))),
-    "q78_tpch15" -> ((s, d) => TpchSuite.q15(Tables.load(s, d))),
-    "q79_tpch16" -> ((s, d) => TpchSuite.q16(Tables.load(s, d))),
-    "q80_tpch17" -> ((s, d) => TpchSuite.q17(Tables.load(s, d))),
-    "q81_tpch18" -> ((s, d) => TpchSuite.q18(Tables.load(s, d))),
-    "q82_tpch19" -> ((s, d) => TpchSuite.q19(Tables.load(s, d))),
-    "q83_tpch20" -> ((s, d) => TpchSuite.q20(Tables.load(s, d))),
-    "q84_tpch21" -> ((s, d) => TpchSuite.q21(Tables.load(s, d))),
-    "q85_tpch22" -> ((s, d) => TpchSuite.q22(Tables.load(s, d)))
-  )
-
-  // twins shared between a DataFrame gate and its SQL-text
-  // front-door sibling (q110-q115) - one string, verbatim
-  private lazy val q08Sql: String =
-    s"""WITH rv AS (
-         |  SELECT p_brand, p_partkey, ${mny(rev)} AS revenue
-         |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1,2)
-         |SELECT p_brand, rnk, p_partkey, revenue FROM (
-         |  SELECT p_brand, p_partkey, revenue,
-         |    row_number() OVER (PARTITION BY p_brand ORDER BY revenue DESC, p_partkey) AS rnk
-         |  FROM rv)
-         |WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin
-
-  private lazy val q58Sql: String =
-    """WITH x AS (SELECT l_returnflag AS rf, CAST(l_quantity AS BIGINT) AS q
-        |  FROM lineitem),
-        |c AS (SELECT rf, q, count(*) AS c FROM x GROUP BY 1, 2),
-        |cum AS (SELECT rf, q, sum(c) OVER (PARTITION BY rf ORDER BY q) AS cum,
-        |        sum(c) OVER (PARTITION BY rf) AS n FROM c),
-        |v1 AS (SELECT rf, min(q) AS v1 FROM cum WHERE cum >= (n+1)//2 GROUP BY rf),
-        |v2 AS (SELECT rf, min(q) AS v2 FROM cum WHERE cum >= (n+2)//2 GROUP BY rf)
-        |SELECT v1.rf, CAST(v1.v1 + v2.v2 AS DOUBLE) / 2.0 AS median_qty
-        |FROM v1 JOIN v2 USING (rf) ORDER BY rf""".stripMargin
-
-  private lazy val q51Sql: String =
-    """SELECT l_returnflag, l_quantity, n FROM (
-        |  SELECT l_returnflag, l_quantity, count(*) AS n,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY count(*) DESC, l_quantity) AS rn
-        |  FROM lineitem GROUP BY 1, 2)
-        |WHERE rn = 1 ORDER BY l_returnflag""".stripMargin
-
-  private lazy val q12Sql: String =
-    s"""SELECT l_returnflag, l_linestatus,
-         | CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-         | ${mny("l_quantity")} AS sum_qty, count(*) AS n_lines
-         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
-
-  private lazy val q22Sql: String =
-    """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER w IS NULL
-        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT user_id, us,
-        |  sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g),
-        |sess AS (SELECT user_id, session_id, count(*) AS n_events,
-        |  max(us) - min(us) AS dur_us FROM s GROUP BY 1,2)
-        |SELECT user_id, count(*) AS n_sessions,
-        | floor(CAST(sum(n_events) AS DOUBLE)/count(*)*10000.0+0.5)/10000.0 AS avg_events,
-        | max(dur_us) AS max_dur_us
-        |FROM sess GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private lazy val trimmedMeanSql: String =
-    """WITH x AS (SELECT o_orderpriority AS grp,
-        |    CAST(floor(o_totalprice*100.0+0.5) AS BIGINT) AS v FROM orders),
-        |h AS (SELECT grp, v, count(*) AS c FROM x GROUP BY 1, 2),
-        |cum AS (SELECT grp, v, c,
-        |  sum(c) OVER (PARTITION BY grp ORDER BY v) AS cum_end,
-        |  sum(c) OVER (PARTITION BY grp) AS n FROM h),
-        |k AS (SELECT grp, v, c, cum_end, cum_end - c AS cum_start, n,
-        |  (n * 50) // 1000 AS k_lo FROM cum),
-        |kp AS (SELECT grp, v, n,
-        |  greatest(0, least(cum_end, n - k_lo) - greatest(cum_start, k_lo))
-        |    AS keep FROM k)
-        |SELECT grp, CAST(min(n) AS BIGINT) AS n,
-        |  CAST(sum(keep) AS BIGINT) AS kept,
-        |  CAST(CASE WHEN sum(keep) > 0 THEN
-        |      (CAST(sum(CAST(v AS HUGEINT) * keep) AS HUGEINT) * 1000000)
-        |        // CAST(sum(keep) AS HUGEINT)
-        |    END AS BIGINT) AS trimmed_mean_micro
-        |FROM kp GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private lazy val t48Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |s AS (SELECT doc_id,
-         |  unnest(list_transform(range(1, len(tk)-1), i -> array_to_string(tk[i:i+2], ' '))) AS shingle
-         |  FROM t WHERE len(tk) >= 3),
-         |c AS (SELECT doc_id, shingle, count(*) AS c FROM s GROUP BY 1,2),
-         |m AS (SELECT doc_id, max(c) AS top_count, sum(c) AS n_shingles FROM c GROUP BY 1)
-         |SELECT doc_id, CAST(top_count AS BIGINT) AS top_count,
-         | CAST(n_shingles AS BIGINT) AS n_shingles,
-         | ${q4("CAST(top_count AS DOUBLE)/n_shingles")} AS rep_ratio
-         |FROM m ORDER BY doc_id""".stripMargin
-
-  private lazy val q57Sql: String =
-    """WITH o AS (SELECT o_custkey, o_orderkey,
-        |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS dn,
-        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-        |  FROM orders)
-        |SELECT o_custkey, o_orderkey, dn,
-        |  count(*) OVER w AS n_30d,
-        |  CAST(sum(cents) OVER w AS BIGINT) AS cents_30d
-        |FROM o
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY dn
-        |  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, dn, o_orderkey""".stripMargin
-
-  private lazy val q62Sql: String =
-    """WITH r AS (SELECT o_custkey, o_orderkey, o_orderdate,
-        |    CASE WHEN o_totalprice > 150000.0 THEN o_orderpriority END AS big_pri
-        |  FROM orders WHERE o_custkey % 50 = 3)
-        |SELECT o_custkey, o_orderkey,
-        |  last_value(big_pri IGNORE NULLS) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_big_pri,
-        |  first_value(big_pri IGNORE NULLS) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_big_pri
-        |FROM r ORDER BY o_custkey, o_orderkey""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         | ${mny("l_quantity")} AS sum_qty,
-         | ${mny("l_extendedprice")} AS sum_base_price,
-         | ${mny(rev)} AS sum_disc_price,
-         | ${mny(rev + "*(1.0+l_tax)")} AS sum_charge,
-         | ${mean("l_quantity")} AS avg_qty,
-         | ${mean("l_discount")} AS avg_disc,
-         | count(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-         |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q02_filter_pushdown" ->
-      """SELECT l_orderkey, l_partkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem
-        |WHERE l_shipdate BETWEEN TIMESTAMP '1997-01-01' AND TIMESTAMP '1997-12-31'
-        |  AND l_quantity <= 2.0 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_partkey, l_linenumber""".stripMargin,
-    "q03_segment_revenue" ->
-      s"""SELECT c_mktsegment, ${mny(rev)} AS revenue,
-         | count(DISTINCT o_orderkey) AS n_orders, count(*) AS n_lines
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q04_region_revenue" ->
-      s"""SELECT r_name, n_name, ${mny(rev)} AS revenue, count(*) AS n_lines
-         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q05_exists_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |  WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 30.0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q06_anti_no_orders" ->
-      s"""SELECT c_mktsegment, count(*) AS n_customers, ${mean("c_acctbal")} AS avg_acctbal
-         |FROM customer c
-         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-         |  AND o.o_orderdate >= TIMESTAMP '1998-01-01')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q07_order_count_hist" ->
-      """WITH pc AS (
-        |  SELECT c.c_custkey, count(o.o_orderkey) AS n_orders
-        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1)
-        |SELECT n_orders, count(*) AS n_customers FROM pc GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q08_top3_per_brand" -> q08Sql,
-    "q111_top3_brand_sql" -> q08Sql,
-
-    "q09_running_total" ->
-      """SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity,
-        | floor(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) OVER (
-        |   PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |   ROWS UNBOUNDED PRECEDING) AS DOUBLE)*100.0+0.5)/100.0 AS running_qty
-        |FROM lineitem
-        |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin,
-    "q10_topk_parts" ->
-      s"""WITH t AS (SELECT l_partkey, ${mny("l_quantity")} AS total_qty
-         |  FROM lineitem GROUP BY 1)
-         |SELECT l_partkey, p_name, total_qty FROM t JOIN part ON l_partkey = p_partkey
-         |ORDER BY total_qty DESC, l_partkey LIMIT 10""".stripMargin,
-    "q11_distinct_counts" ->
-      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_suppliers,
-        | count(DISTINCT l_partkey) AS n_parts, count(*) AS n_lines
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q12_rollup_qty" -> q12Sql,
-    "q115_rollup_sql" -> q12Sql,
-
-    "q53_cube_qty" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         | CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-         | ${mny("l_quantity")} AS sum_qty, count(*) AS n_lines
-         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    // q54 twin: the pivot as portable conditional aggregation — the
-    // same exact integer-decimal money sums per declared value
-    "q54_pivot_revenue" ->
-      s"""SELECT l_returnflag,
-         | coalesce(floor(CAST(sum(CASE WHEN l_linestatus = 'F'
-         |   THEN CAST(floor(($rev)*10000.0+0.5) AS DECIMAL(18,0)) END) AS DOUBLE)
-         |   /10000.0*100.0+0.5)/100.0, 0.0) AS rev_f,
-         | coalesce(floor(CAST(sum(CASE WHEN l_linestatus = 'O'
-         |   THEN CAST(floor(($rev)*10000.0+0.5) AS DECIMAL(18,0)) END) AS DOUBLE)
-         |   /10000.0*100.0+0.5)/100.0, 0.0) AS rev_o
-         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q55 twin: the q54 aggregation melted by a two-arm UNION ALL
-    "q55_unpivot_revenue" ->
-      s"""WITH wide AS (SELECT l_returnflag,
-         | coalesce(floor(CAST(sum(CASE WHEN l_linestatus = 'F'
-         |   THEN CAST(floor(($rev)*10000.0+0.5) AS DECIMAL(18,0)) END) AS DOUBLE)
-         |   /10000.0*100.0+0.5)/100.0, 0.0) AS rev_f,
-         | coalesce(floor(CAST(sum(CASE WHEN l_linestatus = 'O'
-         |   THEN CAST(floor(($rev)*10000.0+0.5) AS DECIMAL(18,0)) END) AS DOUBLE)
-         |   /10000.0*100.0+0.5)/100.0, 0.0) AS rev_o
-         |FROM lineitem GROUP BY 1)
-         |SELECT l_returnflag, metric, revenue FROM (
-         |  SELECT l_returnflag, 'rev_f' AS metric, rev_f AS revenue FROM wide
-         |  UNION ALL
-         |  SELECT l_returnflag, 'rev_o', rev_o FROM wide)
-         |ORDER BY l_returnflag, metric""".stripMargin,
-    // q56 twin: the SAME correlated-scalar-subquery text — DuckDB
-    // decorrelates identically, and the exact integer-quantized mean
-    // makes the averages bit-identical
-    "q56_correlated_subquery" ->
-      """SELECT o_orderkey, o_custkey, price, cust_avg FROM (
-        |  SELECT o1.o_orderkey, o1.o_custkey,
-        |    CAST(floor(o1.o_totalprice * 100.0 + 0.5) / 100.0 AS DOUBLE) AS price,
-        |    CAST((SELECT floor(CAST(sum(CAST(floor(o2.o_totalprice * 1000000.0 + 0.5)
-        |         AS DECIMAL(18,0))) AS DOUBLE) / 1000000.0 / count(*) * 10000.0 + 0.5) / 10000.0
-        |     FROM orders o2 WHERE o2.o_custkey = o1.o_custkey) AS DOUBLE) AS cust_avg
-        |  FROM orders o1)
-        |WHERE price > cust_avg
-        |ORDER BY o_orderkey""".stripMargin,
-    // q57 twin: the same integer day-number RANGE frame
-    "q57_range_frame" -> q57Sql,
-    "q118_range_frame_sql" -> q57Sql,
-
-    // q58 twin: identical histogram rank math — cumulative counts,
-    // min value reaching each middle rank, two-value average
-    "q58_exact_median" -> q58Sql,
-    "q112_exact_median_sql" -> q58Sql,
-
-    // t148 twin: q22's session CTEs -> interval deltas -> ONE global
-    // running sum (the oracle can afford the single window the engine
-    // replaces with the two-phase prefix sum), day peaks
-    "t148_concurrency" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER w IS NULL
-        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT user_id, us,
-        |  sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g),
-        |sess AS (SELECT user_id, session_id, min(us) AS st, max(us) AS en
-        |  FROM s GROUP BY 1, 2),
-        |d AS (SELECT st AS t, 1 AS d FROM sess
-        |      UNION ALL SELECT en + 1, -1 FROM sess),
-        |c AS (SELECT t, sum(d) OVER (ORDER BY t, d) AS conc FROM d)
-        |SELECT t // 86400000000 AS day, CAST(max(conc) AS BIGINT) AS peak
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t149 twin: one global window for conc AND the segment lead (the
-    // engine splits both across the two-phase machinery); peers get
-    // zero-length segments, so tie order can't move the union sum
-    "t149_active_coverage" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER w IS NULL
-        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT user_id, us,
-        |  sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g),
-        |sess AS (SELECT user_id, session_id, min(us) AS st, max(us) AS en
-        |  FROM s GROUP BY 1, 2),
-        |d AS (SELECT st AS t, 1 AS d FROM sess
-        |      UNION ALL SELECT en + 1, -1 FROM sess),
-        |c AS (SELECT t, sum(d) OVER (ORDER BY t, d) AS conc,
-        |  lead(t) OVER (ORDER BY t, d) AS nxt FROM d)
-        |SELECT CAST(coalesce(sum(CASE WHEN conc > 0 THEN nxt - t END), 0)
-        |    AS BIGINT) AS active_us,
-        |  CAST(max(conc) AS BIGINT) AS peak
-        |FROM c""".stripMargin,
-    // t150 twin: list_reduce seeds with the first element and folds
-    // left — exactly the engine's slice-and-seed aggregate
-    "t150_ewma" ->
-      """WITH daily AS (SELECT l_returnflag AS rf, CAST(l_shipdate AS DATE) AS dt,
-        |    CAST(count(*) AS DOUBLE) AS x
-        |  FROM lineitem GROUP BY 1, 2),
-        |arr AS (SELECT rf, list(x ORDER BY dt) AS a FROM daily GROUP BY rf)
-        |SELECT rf, list_reduce(a, (acc, x) -> (acc + x) / 2.0) AS ewma
-        |FROM arr ORDER BY rf""".stripMargin,
-    // t151 twin: identical segmentation (purchases strictly before),
-    // identical integer credit split with last-touch remainder
-    "t151_attribution" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-        |  FROM events),
-        |pb AS (SELECT user_id, event_id, event_type, us,
-        |  coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY us, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS seg
-        |  FROM e),
-        |t AS (SELECT user_id, seg, event_id, event_type, us FROM pb
-        |  WHERE event_type IN ('click', 'view')),
-        |p AS (SELECT user_id, seg FROM pb WHERE event_type = 'purchase'),
-        |j AS (SELECT t.user_id, t.seg, t.event_id, t.event_type, t.us
-        |  FROM t JOIN p ON p.user_id = t.user_id AND p.seg = t.seg),
-        |c AS (SELECT event_type,
-        |    1000000 // (count(*) OVER w)
-        |    + CASE WHEN row_number() OVER
-        |        (PARTITION BY user_id, seg ORDER BY us DESC, event_id DESC) = 1
-        |      THEN 1000000 % (count(*) OVER w) ELSE 0 END AS credit
-        |  FROM j WINDOW w AS (PARTITION BY user_id, seg))
-        |SELECT event_type, CAST(sum(credit) AS BIGINT) AS credit_micro,
-        |  count(*) AS n_touches
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t138 twin: identical planted dup slice, NOT-coalesce violation
-    // rule (NULL predicate = violation), surplus-row uniqueness count
-    "t138_expectations" ->
-      """WITH src AS (SELECT * FROM lineitem
-        |  UNION ALL SELECT * FROM lineitem WHERE l_orderkey % 997 = 1),
-        |rr AS (
-        |  SELECT 'l_discount_le_005' AS rule, CAST(sum(CASE WHEN NOT
-        |    coalesce(l_discount <= 0.05, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_extendedprice_positive', CAST(sum(CASE WHEN NOT
-        |    coalesce(l_extendedprice > 0, FALSE) THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_quantity_in_1_30', CAST(sum(CASE WHEN NOT
-        |    coalesce(l_quantity >= 1 AND l_quantity <= 30, FALSE) THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_returnflag_domain', CAST(sum(CASE WHEN NOT
-        |    coalesce(l_returnflag IN ('A','N','R'), FALSE) THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'pk_unique', CAST(coalesce(sum(c - 1), 0) AS BIGINT)
-        |  FROM (SELECT count(*) AS c FROM src
-        |        GROUP BY l_orderkey, l_linenumber HAVING count(*) > 1))
-        |SELECT rule, n_violations, n_violations = 0 AS pass
-        |FROM rr ORDER BY rule""".stripMargin,
-    // t141 twin: same daily money sums, same full-calendar reindex,
-    // LOCF via the count-of-observations group trick (grp = number of
-    // non-null values so far; fill = max within (flag, grp))
-    "t141_forward_fill" ->
-      s"""WITH daily AS (SELECT l_returnflag, CAST(l_shipdate AS DATE) AS day,
-         |  ${mny("l_extendedprice*(1.0-l_discount)")} AS revenue
-         |  FROM lineitem GROUP BY 1, 2),
-         |b AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
-         |cal AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day FROM b),
-         |flags AS (SELECT DISTINCT l_returnflag FROM lineitem),
-         |grid AS (SELECT f.l_returnflag, c.day, d.revenue
-         |  FROM cal c CROSS JOIN flags f
-         |  LEFT JOIN daily d ON d.l_returnflag = f.l_returnflag AND d.day = c.day),
-         |g AS (SELECT l_returnflag, day, revenue,
-         |  count(revenue) OVER (PARTITION BY l_returnflag ORDER BY day
-         |    ROWS UNBOUNDED PRECEDING) AS grp
-         |  FROM grid)
-         |SELECT l_returnflag, day,
-         |  max(revenue) OVER (PARTITION BY l_returnflag, grp) AS revenue,
-         |  revenue IS NULL AS was_missing
-         |FROM g ORDER BY l_returnflag, day""".stripMargin,
-    // t140 twin: identical planted variants, identical suffix block
-    // and the same classic Levenshtein DP (engine-exact integers)
-    "t140_fuzzy_match" ->
-      """WITH ent AS (SELECT min(p_partkey) AS key, p_name AS name FROM part GROUP BY 2),
-        |named AS (SELECT key, name FROM ent
-        |  UNION ALL
-        |  SELECT key + 1000000, 'x' || substr(name, 2) FROM ent),
-        |blk AS (SELECT key, name, substr(name, 2) AS b FROM named)
-        |SELECT DISTINCT a.key AS key_a, b.key AS key_b,
-        |  CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-        |FROM blk a JOIN blk b ON a.b = b.b AND a.key < b.key
-        |WHERE levenshtein(a.name, b.name) <= 2
-        |ORDER BY key_a, key_b""".stripMargin,
-    // t143 twin: identical double planting, identical two complementary
-    // blocks, one shared exact-Levenshtein verify over the deduped
-    // candidate union
-    "t143_fuzzy_two_pass" ->
-      s"""WITH $fuzzyCte
-         |SELECT key_a, key_b, dist FROM m ORDER BY key_a, key_b""".stripMargin,
-    // t144 twin: recursive closure over the verified pair graph (the
-    // t49 reach pattern), min key per component, singletons filled
-    // from the full key universe by the left-join null arm
-    "t144_entity_ids" ->
-      s"""WITH RECURSIVE $fuzzyCte,
-         |e AS (SELECT key_a AS src, key_b AS dst FROM m
-         |      UNION SELECT key_b, key_a FROM m),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src),
-         |cl AS (SELECT id, min(r) AS cid FROM reach GROUP BY id)
-         |SELECT n.key, coalesce(cl.cid, n.key) AS entity_id,
-         |  n.key = coalesce(cl.cid, n.key) AS is_canonical
-         |FROM (SELECT DISTINCT key FROM named) n
-         |LEFT JOIN cl ON cl.id = n.key
-         |ORDER BY key""".stripMargin,
-    // t145 twin: the same sparsified co-purchase edges, recursive
-    // reachability closure, min node id per component
-    "t145_connected_components" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t155 twin: the identical integer test in HUGEINT — nothing to
-    // round on either side
-    "t155_outliers" ->
-      """WITH x AS (SELECT l_returnflag AS rf,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS HUGEINT) AS c
-        |  FROM lineitem),
-        |st AS (SELECT rf, CAST(count(*) AS HUGEINT) AS n, sum(c) AS s,
-        |    sum(c * c) AS q
-        |  FROM x GROUP BY 1)
-        |SELECT x.rf, CAST(st.n AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN (st.n * x.c - st.s) * (st.n * x.c - st.s)
-        |    > 4 * st.n * (st.n * st.q - st.s * st.s) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM x JOIN st ON st.rf = x.rf
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    // t156 twin: the v2 state re-derived relationally (t147's merge
-    // plus the deletion arm), full-outer diff against the dim,
-    // null-safe payload compare
-    "t156_cdc_diff" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
-        |upd AS (SELECT c_custkey, 'MERGED' AS c_mktsegment,
-        |    c_acctbal + 100.0 AS c_acctbal FROM dim WHERE c_custkey % 7 = 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, 'NEWKEY', c_acctbal FROM dim
-        |  WHERE c_custkey % 31 = 0),
-        |v2 AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM (
-        |    SELECT d.c_custkey, d.c_mktsegment, d.c_acctbal FROM dim d
-        |    LEFT JOIN upd u ON u.c_custkey = d.c_custkey
-        |    WHERE u.c_custkey IS NULL
-        |    UNION ALL
-        |    SELECT c_custkey, c_mktsegment, c_acctbal FROM upd)
-        |  WHERE c_custkey % 13 <> 3)
-        |, j AS (SELECT o.c_custkey AS ko, n.c_custkey AS kn,
-        |    o.c_mktsegment AS os, o.c_acctbal AS ob,
-        |    n.c_mktsegment AS ns, n.c_acctbal AS nb
-        |  FROM dim o FULL OUTER JOIN v2 n ON o.c_custkey = n.c_custkey)
-        |SELECT kn AS c_custkey, 'insert' AS change_type,
-        |  ns AS c_mktsegment, nb AS c_acctbal FROM j WHERE ko IS NULL
-        |UNION ALL
-        |SELECT ko, 'delete', os, ob FROM j WHERE kn IS NULL
-        |UNION ALL
-        |SELECT ko, 'update_preimage', os, ob FROM j
-        |WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |  AND (os IS DISTINCT FROM ns OR ob IS DISTINCT FROM nb)
-        |UNION ALL
-        |SELECT ko, 'update_postimage', ns, nb FROM j
-        |WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |  AND (os IS DISTINCT FROM ns OR ob IS DISTINCT FROM nb)
-        |ORDER BY c_custkey, change_type""".stripMargin,
-    // t157 twin: the PLAIN join — the Bloom prefilter must be
-    // result-invisible at any fpp
-    "t157_bloom_join" ->
-      s"""SELECT o_orderpriority, count(*) AS n_orders,
-         | ${mny("o_totalprice")} AS total_price
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 7000.0
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t158 twin: the full-cardinality HAVING the sketch avoids
-    "t158_heavy_hitters" ->
-      """WITH x AS (SELECT CASE WHEN l_quantity <= 3.0 THEN l_partkey % 7
-        |    ELSE l_partkey END AS v FROM lineitem)
-        |SELECT v, count(*) AS cnt FROM x GROUP BY v
-        |HAVING count(*) >= 400 ORDER BY cnt DESC, v""".stripMargin,
-    // t159 twin: the identical md5-rank sample re-derived
-    "t159_stratified_sample" ->
-      """WITH r AS (SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents)
-        |SELECT doc_id, lang FROM r WHERE rn <= 20
-        |ORDER BY lang, doc_id""".stripMargin,
-    // t160 twin: the O(n²) dominance definition the sweep replaces
-    "t160_skyline" ->
-      """WITH pts AS (SELECT DISTINCT CAST(p_retailprice AS DOUBLE) AS p_retailprice,
-        |    CAST(p_size AS BIGINT) AS p_size FROM part)
-        |SELECT p_retailprice, p_size FROM pts p
-        |WHERE NOT EXISTS (SELECT 1 FROM pts q
-        |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
-        |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        |ORDER BY p_retailprice, p_size""".stripMargin,
-    // t161 twin: the same 6 peeling rounds unrolled as materialized
-    // chained CTEs (DuckDB re-evaluates plain CTEs per reference)
-    "t161_kcore" -> kCoreUnrolledSql(k = 3, rounds = 6),
-    // t162 twin: the quadratic predicate join (DuckDB IEJoin) the
-    // grid buckets replace
-    "t162_grid_pairs" ->
-      """WITH p AS (SELECT c_custkey AS id,
-        |    c_custkey * 48271 % 10007 % 300 AS x,
-        |    c_custkey * 16807 % 10007 % 300 AS y FROM customer)
-        |SELECT a.id AS id_a, b.id AS id_b, b.x - a.x AS dx, b.y - a.y AS dy
-        |FROM p a JOIN p b ON a.id < b.id
-        |  AND b.x BETWEEN a.x - 4 AND a.x + 4
-        |  AND b.y BETWEEN a.y - 4 AND a.y + 4
-        |ORDER BY id_a, id_b""".stripMargin,
-    // t163 twin: same pseudonym map, same suppression rule
-    "t163_k_anonymity" ->
-      """WITH r AS (SELECT md5(CAST(c_custkey AS VARCHAR)) AS pseud,
-        |    c_nationkey AS nation,
-        |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_band
-        |  FROM customer),
-        |g AS (SELECT nation, bal_band, count(*) AS group_size FROM r
-        |  GROUP BY 1, 2 HAVING count(*) >= 10)
-        |SELECT r.pseud, r.nation, r.bal_band, g.group_size
-        |FROM r JOIN g USING (nation, bal_band)
-        |ORDER BY pseud""".stripMargin,
-    // t164 twin: the window-sort form the bounded-buffer aggregate
-    // replaces (identical deterministic (value DESC, id) order)
-    "t164_topk_aggregate" ->
-      """WITH r AS (SELECT c_mktsegment, c_custkey, c_acctbal,
-        |    row_number() OVER (PARTITION BY c_mktsegment
-        |      ORDER BY c_acctbal DESC, c_custkey) AS rnk
-        |  FROM customer)
-        |SELECT c_mktsegment, rnk, c_custkey, c_acctbal FROM r WHERE rnk <= 5
-        |ORDER BY c_mktsegment, rnk""".stripMargin,
-    // t165 twin: the recursive CTE the pointer doubling replaces
-    "t165_forest_depth" ->
-      """WITH RECURSIVE r(id, node, d) AS (
-        |  SELECT p_partkey, p_partkey, CAST(0 AS BIGINT) FROM part
-        |  UNION ALL
-        |  SELECT id, node // 7, d + 1 FROM r WHERE node // 7 >= 1)
-        |SELECT id, node AS root, d AS depth FROM (
-        |  SELECT id, node, d,
-        |    row_number() OVER (PARTITION BY id ORDER BY d DESC) AS rn FROM r)
-        |WHERE rn = 1 ORDER BY id""".stripMargin,
-    // t166 twin: identical integer sufficient statistics in HUGEINT,
-    // identical final quantized division
-    "t166_linear_trend" ->
-      """WITH x AS (SELECT l_returnflag AS grp,
-        |    CAST(datediff('day', DATE '1992-01-01', l_shipdate) AS HUGEINT) AS x,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS HUGEINT) AS y
-        |  FROM lineitem),
-        |s AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-        |  FROM x GROUP BY 1)
-        |SELECT grp, CAST(n AS BIGINT) AS n,
-        |  floor(CAST(n * sxy - sx * sy AS DOUBLE)
-        |    / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS slope,
-        |  floor(CAST(sy * sxx - sx * sxy AS DOUBLE)
-        |    / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS intercept
-        |FROM s ORDER BY grp""".stripMargin,
-    // t167 twin: per-key frequency tables, exact integer moments
-    "t167_key_skew" ->
-      """WITH f1 AS (SELECT l_orderkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |f2 AS (SELECT l_partkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |f3 AS (SELECT l_suppkey AS k, count(*) AS f FROM lineitem GROUP BY 1)
-        |SELECT 'l_orderkey' AS key_name, CAST(sum(f) AS BIGINT) AS n_rows,
-        |  count(*) AS n_keys, CAST(sum(f * f) AS BIGINT) AS sum_f2,
-        |  max(f) AS max_f FROM f1
-        |UNION ALL
-        |SELECT 'l_partkey', CAST(sum(f) AS BIGINT), count(*),
-        |  CAST(sum(f * f) AS BIGINT), max(f) FROM f2
-        |UNION ALL
-        |SELECT 'l_suppkey', CAST(sum(f) AS BIGINT), count(*),
-        |  CAST(sum(f * f) AS BIGINT), max(f) FROM f3
-        |ORDER BY key_name""".stripMargin,
-    // t168 twin: the same cross-multiplied z-squared inequality in
-    // HUGEINT — borderline experiments can never flip on an ulp
-    "t168_ab_test" ->
-      """WITH e AS (SELECT event_type AS grp, user_id % 2 AS v,
-        |    CASE WHEN value > 45.0 + 5.0 * CAST(user_id % 2 AS DOUBLE)
-        |      THEN 1 ELSE 0 END AS c
-        |  FROM events),
-        |s AS (SELECT grp,
-        |    sum(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS n_a,
-        |    sum(CASE WHEN v = 0 THEN c ELSE 0 END) AS x_a,
-        |    sum(CASE WHEN v = 1 THEN 1 ELSE 0 END) AS n_b,
-        |    sum(CASE WHEN v = 1 THEN c ELSE 0 END) AS x_b
-        |  FROM e GROUP BY 1)
-        |SELECT grp, CAST(n_a AS BIGINT) AS n_a, CAST(x_a AS BIGINT) AS x_a,
-        |  CAST(n_b AS BIGINT) AS n_b, CAST(x_b AS BIGINT) AS x_b,
-        |  625 * CAST(x_a * n_b - x_b * n_a AS HUGEINT)
-        |      * CAST(x_a * n_b - x_b * n_a AS HUGEINT) * (n_a + n_b)
-        |    > 2401 * CAST(n_a AS HUGEINT) * n_b * (x_a + x_b)
-        |      * ((n_a + n_b) - (x_a + x_b)) AS significant
-        |FROM s ORDER BY grp""".stripMargin,
-    // t169 twin: the FULL recompute over the mutated base — the
-    // incremental fold must land on exactly these integers
-    "t169_incremental_mv" ->
-      """WITH v2 AS (SELECT o_orderpriority,
-        |    CASE WHEN o_orderkey % 97 = 7 THEN o_totalprice + 10.0
-        |      ELSE o_totalprice END AS tp
-        |  FROM orders WHERE o_orderkey % 691 <> 5)
-        |SELECT o_orderpriority AS grp, count(*) AS n,
-        |  CAST(sum(CAST(floor(tp * 100.0 + 0.5) AS HUGEINT)) AS BIGINT) AS s
-        |FROM v2 GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q59 twin: IS NOT DISTINCT FROM — the ANSI spelling of <=>
-    "q59_nullsafe_join" ->
-      """WITH a AS (SELECT nullif(c_nationkey % 7, 3) AS k FROM customer),
-        |b AS (SELECT nullif(s_nationkey % 7, 3) AS kb FROM supplier)
-        |SELECT k, count(*) AS n_pairs
-        |FROM a JOIN b ON k IS NOT DISTINCT FROM kb
-        |GROUP BY k ORDER BY k NULLS FIRST""".stripMargin,
-    // q60 twin: the ANSI multiset operators verbatim
-    "q60_multiset_setops" ->
-      """WITH a AS (SELECT o_orderpriority AS p FROM orders WHERE o_orderkey % 2 = 0),
-        |b AS (SELECT o_orderpriority AS p FROM orders WHERE o_orderkey % 3 = 0),
-        |ea AS (SELECT p FROM a EXCEPT ALL SELECT p FROM b),
-        |ia AS (SELECT p FROM a INTERSECT ALL SELECT p FROM b)
-        |SELECT 'except_all' AS op, p AS o_orderpriority, count(*) AS n
-        |FROM ea GROUP BY 2
-        |UNION ALL
-        |SELECT 'intersect_all' AS op, p AS o_orderpriority, count(*) AS n
-        |FROM ia GROUP BY 2
-        |ORDER BY op, o_orderpriority""".stripMargin,
-    // q61 twin: the same 6-table snowflake as one SQL block
-    "q61_star_join" ->
-      s"""SELECT n_name, ${mny(rev)} AS revenue, count(*) AS n_lines
-         |FROM customer
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |JOIN orders ON o_custkey = c_custkey
-         |JOIN lineitem ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-         |WHERE r_name = 'ASIA'
-         |  AND o_orderdate >= DATE '1994-01-01'
-         |  AND o_orderdate < DATE '1996-01-01'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q62 twin: the ANSI IGNORE NULLS window spelling
-    "q62_ignore_nulls" -> q62Sql,
-    "q119_ignore_nulls_sql" -> q62Sql,
-
-    // t170 twin: the window-sort form the one-pass aggregate replaces
-    "t170_latest_rows" ->
-      """WITH v AS (
-        |  SELECT c_custkey, c_mktsegment, c_acctbal, CAST(0 AS BIGINT) AS seq
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'UPD1', c_acctbal + 10.0, 1 FROM customer
-        |  WHERE c_custkey % 5 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, 'UPD2', c_acctbal + 20.0, 2 FROM customer
-        |  WHERE c_custkey % 10 = 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |    ORDER BY seq DESC) AS rn FROM v)
-        |SELECT c_custkey, seq, c_mktsegment, c_acctbal FROM r WHERE rn = 1
-        |ORDER BY c_custkey""".stripMargin,
-    // t171 twin: NOT IN anti-joins over the same planted orphans
-    "t171_fk_orphans" ->
-      """WITH li AS (SELECT CASE WHEN l_orderkey % 1009 = 17
-        |      THEN l_orderkey + 100000000 ELSE l_orderkey END AS k FROM lineitem),
-        |lpk AS (SELECT k, count(*) AS f FROM li GROUP BY 1),
-        |lo AS (SELECT k, f FROM lpk WHERE k NOT IN (SELECT o_orderkey FROM orders)),
-        |od AS (SELECT CASE WHEN o_orderkey % 997 = 13
-        |      THEN o_custkey + 100000000 ELSE o_custkey END AS k FROM orders),
-        |opk AS (SELECT k, count(*) AS f FROM od GROUP BY 1),
-        |oo AS (SELECT k, f FROM opk WHERE k NOT IN (SELECT c_custkey FROM customer))
-        |SELECT 'lineitem.l_orderkey->orders' AS fk_name,
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM lpk) AS child_rows,
-        |  CAST(coalesce(sum(f), 0) AS BIGINT) AS orphan_rows,
-        |  count(*) AS orphan_keys, min(k) AS min_orphan_key FROM lo
-        |UNION ALL
-        |SELECT 'orders.o_custkey->customer',
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM opk),
-        |  CAST(coalesce(sum(f), 0) AS BIGINT), count(*), min(k) FROM oo
-        |ORDER BY fk_name""".stripMargin,
-    // t172 twin: histogram-collapse first, identical cross-multiplied
-    // half-weight test
-    "t172_weighted_median" ->
-      """WITH h AS (SELECT l_returnflag AS grp,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS v,
-        |    CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-        |g AS (SELECT grp, v, CAST(sum(w) AS BIGINT) AS w FROM h GROUP BY 1, 2),
-        |c AS (SELECT grp, v,
-        |    sum(w) OVER (PARTITION BY grp ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(w) OVER (PARTITION BY grp) AS tot FROM g)
-        |SELECT grp, min(v) AS weighted_median,
-        |  CAST(max(tot) AS BIGINT) AS total_weight
-        |FROM c WHERE cum * 2 >= tot GROUP BY grp ORDER BY grp""".stripMargin,
-    // t173 twin: the bounded recursive CTE (states are (node, depth)
-    // pairs with depth <= 4, so the walk can't blow up)
-    "t173_bfs" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |walk(id, d) AS (
-        |  SELECT DISTINCT src, 0 FROM e WHERE src % 101 = 0
-        |  UNION
-        |  SELECT e.dst, w.d + 1 FROM walk w JOIN e ON w.id = e.src WHERE w.d < 4)
-        |SELECT id, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t174 twin: per-key frequency products summed — the exact
-    // cardinality the profile predicts
-    "t174_join_cardinality" ->
-      """WITH fl1 AS (SELECT l_orderkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |fr1 AS (SELECT o_orderkey AS k, count(*) AS f FROM orders GROUP BY 1),
-        |fl2 AS (SELECT l_partkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |fr2 AS (SELECT p_partkey AS k, count(*) AS f FROM part GROUP BY 1),
-        |fl3 AS (SELECT o_custkey AS k, count(*) AS f FROM orders GROUP BY 1),
-        |fr3 AS (SELECT c_custkey AS k, count(*) AS f FROM customer GROUP BY 1)
-        |SELECT 'lineitem_x_orders' AS join_name,
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fl1) AS left_rows,
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fr1) AS right_rows,
-        |  (SELECT CAST(coalesce(sum(a.f * b.f), 0) AS BIGINT)
-        |    FROM fl1 a JOIN fr1 b ON a.k = b.k) AS est_rows
-        |UNION ALL
-        |SELECT 'lineitem_x_part',
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fl2),
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fr2),
-        |  (SELECT CAST(coalesce(sum(a.f * b.f), 0) AS BIGINT)
-        |    FROM fl2 a JOIN fr2 b ON a.k = b.k)
-        |UNION ALL
-        |SELECT 'lineitem_x_lineitem',
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fl2),
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fl2),
-        |  (SELECT CAST(coalesce(sum(a.f * b.f), 0) AS BIGINT)
-        |    FROM fl2 a JOIN fl2 b ON a.k = b.k)
-        |UNION ALL
-        |SELECT 'orders_x_customer',
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fl3),
-        |  (SELECT CAST(sum(f) AS BIGINT) FROM fr3),
-        |  (SELECT CAST(coalesce(sum(a.f * b.f), 0) AS BIGINT)
-        |    FROM fl3 a JOIN fr3 b ON a.k = b.k)
-        |ORDER BY join_name""".stripMargin,
-    // t175 twin: identical integer bin math (// is floor division;
-    // numerators are non-negative, matching Spark's div)
-    "t175_histogram" ->
-      """WITH v AS (SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v
-        |  FROM orders),
-        |b AS (SELECT min(v) AS lo, max(v) AS hi FROM v),
-        |x AS (SELECT v, lo, hi, (hi - lo + 20) // 20 AS w FROM v CROSS JOIN b)
-        |SELECT (v - lo) // w AS bin,
-        |  min(lo + ((v - lo) // w) * w) AS bin_lo,
-        |  min(lo + ((v - lo) // w + 1) * w - 1) AS bin_hi,
-        |  count(*) AS cnt
-        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t176 twin: the full recompute the streamed fold must land on
-    "t176_stream_mv" ->
-      """SELECT o_orderpriority AS grp, count(*) AS n,
-        |  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS HUGEINT)) AS BIGINT) AS s
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t177 twin: identical planted drift, identical bucket checksums
-    "t177_reconciliation" ->
-      """WITH s AS (SELECT o_orderkey AS k,
-        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v FROM orders),
-        |d0 AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 911 <> 5
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 1013 = 7),
-        |d AS (SELECT o_orderkey AS k, CAST(floor(
-        |    (CASE WHEN o_orderkey % 509 = 11 THEN o_totalprice + 0.01
-        |      ELSE o_totalprice END) * 100.0 + 0.5) AS BIGINT) AS v FROM d0),
-        |ss AS (SELECT k % 64 AS bucket, count(*) AS n_src,
-        |    CAST(sum((k * 1000003) % 2147483647) AS BIGINT) AS ksum_src,
-        |    CAST(sum(v) AS BIGINT) AS vsum_src FROM s GROUP BY 1),
-        |dd AS (SELECT k % 64 AS bucket, count(*) AS n_dst,
-        |    CAST(sum((k * 1000003) % 2147483647) AS BIGINT) AS ksum_dst,
-        |    CAST(sum(v) AS BIGINT) AS vsum_dst FROM d GROUP BY 1)
-        |SELECT bucket, coalesce(n_src, 0) AS n_src, coalesce(n_dst, 0) AS n_dst,
-        |  coalesce(ksum_src, 0) AS ksum_src, coalesce(ksum_dst, 0) AS ksum_dst,
-        |  coalesce(vsum_src, 0) AS vsum_src, coalesce(vsum_dst, 0) AS vsum_dst
-        |FROM ss FULL OUTER JOIN dd USING (bucket)
-        |WHERE coalesce(n_src, 0) <> coalesce(n_dst, 0)
-        |  OR coalesce(ksum_src, 0) <> coalesce(ksum_dst, 0)
-        |  OR coalesce(vsum_src, 0) <> coalesce(vsum_dst, 0)
-        |ORDER BY bucket""".stripMargin,
-    // t178 twin: quadratic candidate join + deterministic (dist, id)
-    // rank — the definition the grid argmin must reproduce
-    "t178_geo_nn" ->
-      """WITH p AS (SELECT c_custkey AS id,
-        |    c_custkey * 48271 % 10007 % 300 AS x,
-        |    c_custkey * 16807 % 10007 % 300 AS y FROM customer),
-        |c AS (SELECT a.id AS id, greatest(abs(a.x - b.x), abs(a.y - b.y)) AS dist,
-        |    b.id AS nid
-        |  FROM p a JOIN p b ON a.id <> b.id
-        |    AND b.x BETWEEN a.x - 4 AND a.x + 4
-        |    AND b.y BETWEEN a.y - 4 AND a.y + 4),
-        |r AS (SELECT id, dist, nid,
-        |    row_number() OVER (PARTITION BY id ORDER BY dist, nid) AS rn FROM c)
-        |SELECT id, nid AS nn_id, dist AS nn_dist FROM r WHERE rn = 1
-        |ORDER BY id""".stripMargin,
-    // t179 twin: identical supports, identical quantized cosine,
-    // identical (sim DESC, id) rank
-    "t179_item_recs" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-        |supp AS (SELECT it, count(*) AS supp FROM b GROUP BY 1),
-        |ps AS (SELECT x.it AS ia, y.it AS ib, count(*) AS co
-        |  FROM b x JOIN b y ON x.bk = y.bk AND x.it < y.it
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
-        |dir AS (SELECT ia, ib, co FROM ps
-        |  UNION ALL SELECT ib, ia, co FROM ps),
-        |sc AS (SELECT d.ia, d.ib, d.co,
-        |    floor(CAST(d.co AS DOUBLE) / sqrt(CAST(sa.supp * sb.supp AS DOUBLE))
-        |      * 1000000.0 + 0.5) / 1000000.0 AS sim
-        |  FROM dir d JOIN supp sa ON sa.it = d.ia JOIN supp sb ON sb.it = d.ib),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY ia
-        |    ORDER BY sim DESC, ib) AS rnk FROM sc)
-        |SELECT ia AS item, CAST(rnk AS BIGINT) AS rnk, ib AS rec, co, sim
-        |FROM r WHERE rnk <= 3 ORDER BY item, rnk""".stripMargin,
-    // q63 twin: the same Q21 shape — DuckDB decorrelates the same way
-    "q63_waiting_suppliers" ->
-      """WITH l AS (SELECT l_orderkey, l_suppkey,
-        |    CASE WHEN datediff('day', o_orderdate, l_shipdate) > 90
-        |      THEN 1 ELSE 0 END AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F')
-        |SELECT s_name, count(*) AS numwait
-        |FROM supplier, l l1
-        |WHERE s_suppkey = l1.l_suppkey
-        |  AND l1.late = 1
-        |  AND EXISTS (SELECT 1 FROM l l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM l l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.late = 1)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 50""".stripMargin,
-    // t180 twin: v1 rows surface the added column as typed NULL
-    "t180_schema_evolution" ->
-      """SELECT c_custkey, c_mktsegment, CAST(NULL AS DOUBLE) AS c_acctbal
-        |FROM customer WHERE c_custkey % 2 = 0
-        |UNION ALL
-        |SELECT c_custkey, c_mktsegment, c_acctbal
-        |FROM customer WHERE c_custkey % 2 = 1
-        |ORDER BY c_custkey""".stripMargin,
-    // t181 twin: identical 2x-average-rank histograms, identical
-    // integer moments (HUGEINT), one IEEE division at the end
-    "t181_spearman" ->
-      """WITH b AS (SELECT l_returnflag AS grp, CAST(l_quantity AS BIGINT) AS x,
-        |    CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT) AS y FROM lineitem),
-        |hx AS (SELECT grp, x, count(*) AS c FROM b GROUP BY 1, 2),
-        |rx AS (SELECT grp, x, 2 * sum(c) OVER (PARTITION BY grp ORDER BY x
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS rx FROM hx),
-        |hy AS (SELECT grp, y, count(*) AS c FROM b GROUP BY 1, 2),
-        |ry AS (SELECT grp, y, 2 * sum(c) OVER (PARTITION BY grp ORDER BY y
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c + 1 AS ry FROM hy),
-        |j AS (SELECT b.grp, rx.rx, ry.ry FROM b
-        |  JOIN rx ON b.grp = rx.grp AND b.x = rx.x
-        |  JOIN ry ON b.grp = ry.grp AND b.y = ry.y),
-        |m AS (SELECT grp, count(*) AS n, sum(rx) AS sx, sum(ry) AS sy,
-        |    sum(rx * rx) AS sxx, sum(ry * ry) AS syy, sum(rx * ry) AS sxy
-        |  FROM j GROUP BY 1)
-        |SELECT grp, CAST(n AS BIGINT) AS n,
-        |  floor(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |         CAST(n * syy - sy * sy AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0
-        |    AS spearman
-        |FROM m ORDER BY grp""".stripMargin,
-    // t182 twin: identical per-user lead window, identical quantized
-    // row normalization
-    "t182_markov" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type
-        |  FROM events),
-        |p AS (SELECT event_type AS from_type, lead(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY us, event_id) AS to_type FROM e),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |  WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, sum(n) AS tot FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.n,
-        |  floor(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE) * 1000000.0 + 0.5)
-        |    / 1000000.0 AS p
-        |FROM c JOIN t USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-    // t183 twin: two unrolled mutual-reinforcement rounds, identical
-    // integer max-normalization (// is floor division on positives)
-    "t183_hits" ->
-      """WITH e AS (SELECT DISTINCT o_custkey AS src, l_partkey AS dst
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |h0 AS (SELECT DISTINCT src AS id, 1000000 AS score FROM e),
-        |a1r AS (SELECT dst AS id, sum(score) AS raw FROM e
-        |  JOIN h0 ON src = h0.id GROUP BY dst),
-        |a1 AS (SELECT id, raw * 1000000 // (SELECT max(raw) FROM a1r) AS score
-        |  FROM a1r),
-        |h1r AS (SELECT src AS id, sum(score) AS raw FROM e
-        |  JOIN a1 ON dst = a1.id GROUP BY src),
-        |h1 AS (SELECT id, raw * 1000000 // (SELECT max(raw) FROM h1r) AS score
-        |  FROM h1r),
-        |a2r AS (SELECT dst AS id, sum(score) AS raw FROM e
-        |  JOIN h1 ON src = h1.id GROUP BY dst),
-        |a2 AS (SELECT id, raw * 1000000 // (SELECT max(raw) FROM a2r) AS score
-        |  FROM a2r),
-        |h2r AS (SELECT src AS id, sum(score) AS raw FROM e
-        |  JOIN a2 ON dst = a2.id GROUP BY src),
-        |h2 AS (SELECT id, raw * 1000000 // (SELECT max(raw) FROM h2r) AS score
-        |  FROM h2r)
-        |SELECT 'hub' AS role, id, CAST(score AS BIGINT) AS score FROM h2
-        |UNION ALL
-        |SELECT 'authority' AS role, id, CAST(score AS BIGINT) AS score FROM a2
-        |ORDER BY role, id""".stripMargin,
-    // t184 twin: the plain batch LEFT JOIN — every unmatched click's
-    // window closed before the sentinel-driven final watermark
-    "t184_stream_outer_join" ->
-      """WITH c AS (SELECT user_id, event_id AS a_id, epoch_us(ts) AS a_us
-        |  FROM events WHERE event_type = 'click'),
-        |v AS (SELECT user_id AS vuser, event_id AS b_id, epoch_us(ts) AS b_us
-        |  FROM events WHERE event_type = 'view')
-        |SELECT user_id, a_id, b_id, a_us, b_us
-        |FROM c LEFT JOIN v ON user_id = vuser
-        |  AND b_us >= a_us AND b_us <= a_us + 600000000
-        |ORDER BY a_id, b_id NULLS FIRST""".stripMargin,
-    // t185 twin: identical x2/x4-scaled histogram medians, identical
-    // integer 3-MAD test
-    "t185_mad_outliers" ->
-      """WITH b AS (SELECT o_orderpriority AS grp,
-        |    CAST(datediff('day', o_orderdate, l_shipdate) AS BIGINT) AS v
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |h AS (SELECT grp, v, count(*) AS c FROM b GROUP BY 1, 2),
-        |hc AS (SELECT grp, v,
-        |    sum(c) OVER (PARTITION BY grp ORDER BY v) AS cum,
-        |    sum(c) OVER (PARTITION BY grp) AS n FROM h),
-        |m1 AS (SELECT grp, min(v) AS v1 FROM hc WHERE cum >= (n+1)//2 GROUP BY grp),
-        |m2 AS (SELECT grp, min(v) AS v2 FROM hc WHERE cum >= (n+2)//2 GROUP BY grp),
-        |med AS (SELECT grp, v1 + v2 AS med2 FROM m1 JOIN m2 USING (grp)),
-        |d AS (SELECT b.grp, abs(b.v * 2 - med.med2) AS v
-        |  FROM b JOIN med ON b.grp = med.grp),
-        |dh AS (SELECT grp, v, count(*) AS c FROM d GROUP BY 1, 2),
-        |dhc AS (SELECT grp, v,
-        |    sum(c) OVER (PARTITION BY grp ORDER BY v) AS cum,
-        |    sum(c) OVER (PARTITION BY grp) AS n FROM dh),
-        |dm1 AS (SELECT grp, min(v) AS v1 FROM dhc WHERE cum >= (n+1)//2 GROUP BY grp),
-        |dm2 AS (SELECT grp, min(v) AS v2 FROM dhc WHERE cum >= (n+2)//2 GROUP BY grp),
-        |mad AS (SELECT grp, v1 + v2 AS mad2 FROM dm1 JOIN dm2 USING (grp))
-        |SELECT b.grp, count(*) AS n,
-        |  CAST(min(med2) AS DOUBLE) / 2.0 AS median,
-        |  CAST(min(mad2) AS DOUBLE) / 4.0 AS mad,
-        |  CAST(sum(CASE WHEN abs(b.v * 2 - med2) * 2 > 3 * mad2
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM b JOIN med USING (grp) JOIN mad USING (grp)
-        |GROUP BY b.grp ORDER BY b.grp""".stripMargin,
-    // t186 twin: survivors = the natural corpus, every planted
-    // re-delivery dropped. ts_chk sums BOUNDED residues (epoch_us mod
-    // 1000003) so every hashed value stays < 2^53 — exact in BIGINT,
-    // HUGEINT, and any float64 round-trip; a surviving +90 min copy
-    // still shifts the residue (983803 mod 1000003 ≠ 0)
-    "t186_stream_dropdup" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(epoch_us(ts) % 1000003) AS BIGINT) AS ts_chk
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t187 twin: the latest-change-wins semantics spelled as CASE
-    // arms — %12 re-upserted after delete, %6-only deleted, %4-only
-    // updated, %31 inserted under +1e6 keys
-    "t187_cdc_apply" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-        |WHERE c_custkey % 4 <> 0 AND c_custkey % 6 <> 0
-        |UNION ALL
-        |SELECT c_custkey, 'UPD1', c_acctbal + 5.0 FROM customer
-        |WHERE c_custkey % 4 = 0 AND c_custkey % 6 <> 0
-        |UNION ALL
-        |SELECT c_custkey, 'UPD3', c_acctbal + 7.0 FROM customer
-        |WHERE c_custkey % 12 = 0
-        |UNION ALL
-        |SELECT c_custkey + 1000000, 'NEW', c_acctbal FROM customer
-        |WHERE c_custkey % 31 = 0
-        |ORDER BY c_custkey""".stripMargin,
-    // t188 twin: hop-bounded recursive enumeration of weighted walks
-    // (h <= 4), min cost per node — exactly what 4 Bellman-Ford
-    // relaxation rounds compute
-    "t188_sssp" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e0 AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |e AS (SELECT src, dst, (src * 7 + dst * 13) % 20 + 1 AS w FROM e0),
-        |walk(id, d, h) AS (
-        |  SELECT DISTINCT src, CAST(0 AS BIGINT), 0 FROM e WHERE src % 101 = 0
-        |  UNION
-        |  SELECT e.dst, wk.d + e.w, wk.h + 1
-        |  FROM walk wk JOIN e ON wk.id = e.src WHERE wk.h < 4)
-        |SELECT id, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t189 twin: t119's unrolled integer power iteration with the
-    // restart mass CASE-gated onto the seed set
-    "t189_ppr" -> {
-      val iter = (i: Int) =>
-        s"""c$i AS (SELECT e.dst AS id, sum((85 * s.s) // (100 * d.deg)) AS sc
-           |  FROM e JOIN s${i - 1} s ON s.id = e.src JOIN deg d ON d.src = e.src
-           |  GROUP BY 1),
-           |s$i AS (SELECT n.id,
-           |  CAST(CASE WHEN n.id % 101 = 0 THEN 150000 ELSE 0 END
-           |    + coalesce(c$i.sc, 0) AS BIGINT) AS s
-           |  FROM n LEFT JOIN c$i ON c$i.id = n.id)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_quantity <= 5),
-         |e AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk <> b.pk),
-         |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-         |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         |s0 AS (SELECT id, CAST(CASE WHEN id % 101 = 0 THEN 1000000 ELSE 0 END
-         |  AS BIGINT) AS s FROM n),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT id, s FROM s3 ORDER BY id""".stripMargin
-    },
-    // t190 twin: the same oriented wedge candidates, existing edges
-    // anti-joined, integer degree products
-    "t190_link_prediction" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 10),
-        |e AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |adj AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-        |cand AS (SELECT x.v AS a, y.v AS b, count(*) AS common_neighbors
-        |  FROM adj x JOIN adj y ON x.u = y.u AND x.v < y.v
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |ne AS (SELECT c.* FROM cand c LEFT JOIN e ON e.a = c.a AND e.b = c.b
-        |  WHERE e.a IS NULL),
-        |deg AS (SELECT u, count(*) AS deg FROM adj GROUP BY 1)
-        |SELECT ne.a AS id_a, ne.b AS id_b, ne.common_neighbors,
-        |  da.deg * db.deg AS deg_product
-        |FROM ne JOIN deg da ON da.u = ne.a JOIN deg db ON db.u = ne.b
-        |ORDER BY common_neighbors DESC, id_a, id_b""".stripMargin,
-    // t191 twin: the identical md5-argmin step rule unrolled — one
-    // row_number CTE pair per step
-    "t191_random_walks" -> {
-      val step = (i: Int) =>
-        s"""n$i AS (SELECT w.walk_id, e.dst,
-           |    md5(concat_ws(':', 'walk13', '$i',
-           |      CAST(w.node AS VARCHAR), CAST(e.dst AS VARCHAR))) AS h
-           |  FROM w${i - 1} w JOIN e ON w.node = e.src),
-           |w$i AS (SELECT walk_id, CAST($i AS BIGINT) AS step, dst AS node
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY walk_id
-           |      ORDER BY h, dst) AS rn FROM n$i) WHERE rn = 1)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_quantity <= 5),
-         |p AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |e AS (SELECT a AS src, b AS dst FROM p UNION ALL SELECT b, a FROM p),
-         |n AS (SELECT DISTINCT src AS id FROM e),
-         |w0 AS (SELECT id AS walk_id, CAST(0 AS BIGINT) AS step, id AS node
-         |  FROM n WHERE id % 29 = 0),
-         |${(1 to 4).map(step).mkString(",\n")}
-         |${(0 to 4).map(i => s"SELECT * FROM w$i").mkString("\nUNION ALL\n")}
-         |ORDER BY walk_id, step""".stripMargin
-    },
-    // t192 twin: identical first-digit histogram against the fixed
-    // Benford per-mille constants, identical integer deviations
-    "t192_benford" ->
-      """WITH base AS (SELECT o_orderpriority AS grp,
-        |    CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR),
-        |      1, 1) AS BIGINT) AS digit
-        |  FROM orders WHERE CAST(floor(o_totalprice) AS BIGINT) > 0),
-        |obs AS (SELECT grp, digit, count(*) AS observed FROM base GROUP BY 1, 2),
-        |tot AS (SELECT grp, count(*) AS n FROM base GROUP BY 1),
-        |dig AS (SELECT CAST(d AS BIGINT) AS digit, CAST(e AS BIGINT) AS exp_milli
-        |  FROM (VALUES (1, 301), (2, 176), (3, 125), (4, 97), (5, 79),
-        |    (6, 67), (7, 58), (8, 51), (9, 46)) AS t(d, e))
-        |SELECT tot.grp AS grp, dig.digit AS digit,
-        |  CAST(coalesce(obs.observed, 0) AS BIGINT) AS observed,
-        |  CAST(tot.n AS BIGINT) AS n,
-        |  CAST(coalesce(obs.observed, 0) * 1000 - tot.n * dig.exp_milli
-        |    AS BIGINT) AS dev_milli
-        |FROM tot CROSS JOIN dig
-        |LEFT JOIN obs ON obs.grp = tot.grp AND obs.digit = dig.digit
-        |ORDER BY tot.grp, dig.digit""".stripMargin,
-    // t193 twin: identical positional lead(7) over the pre-aggregated
-    // daily series, identical HUGEINT moments, one quantized division
-    "t193_autocorr" ->
-      """WITH daily AS (SELECT o_orderpriority AS pri, o_orderdate AS dt,
-        |    count(*) AS x FROM orders GROUP BY 1, 2),
-        |p AS (SELECT pri AS grp, CAST(x AS HUGEINT) AS x,
-        |    CAST(lead(x, 7) OVER (PARTITION BY pri ORDER BY dt) AS HUGEINT) AS y
-        |  FROM daily),
-        |f AS (SELECT grp, x, y FROM p WHERE y IS NOT NULL),
-        |m AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy,
-        |    sum(x * y) AS sxy FROM f GROUP BY 1)
-        |SELECT grp, CAST(n AS BIGINT) AS n_pairs,
-        |  floor(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |         CAST(n * syy - sy * sy AS DOUBLE)) * 1000000.0 + 0.5)
-        |    / 1000000.0 AS acf
-        |FROM m ORDER BY grp""".stripMargin,
-    // t194 twin: the identical histogram-run fold of the rank
-    // identity — 2·Σ i·x = Σ_runs v·c·(2r+c+1). All-integer output:
-    // gini_micro = ⌊numer·10⁶/denom⌋ via HUGEINT // (exact, no float
-    // and no >2⁵³ value anywhere in the hashed row)
-    "t194_gini" ->
-      """WITH b AS (SELECT o_orderpriority AS grp,
-        |    CAST(floor(o_totalprice * 100.0 + 0.5) AS HUGEINT) AS v FROM orders),
-        |h AS (SELECT grp, v, CAST(count(*) AS HUGEINT) AS c FROM b GROUP BY 1, 2),
-        |r AS (SELECT grp, v, c,
-        |    sum(c) OVER (PARTITION BY grp ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c AS r FROM h),
-        |m AS (SELECT grp, sum(c) AS n, sum(v * c) AS sx,
-        |    sum(v * c * (2 * r + c + 1)) AS six2 FROM r GROUP BY 1)
-        |SELECT grp, CAST(n AS BIGINT) AS n,
-        |  CAST(CASE WHEN n * sx > 0
-        |    THEN (six2 - (n + 1) * sx) * 1000000 // (n * sx) END
-        |    AS BIGINT) AS gini_micro
-        |FROM m ORDER BY grp""".stripMargin,
-    // t195 twin: t163's pseudonym map + suppression rule hardened
-    // with the distinct-sensitive-values floor (null-safe group join)
-    "t195_l_diversity" ->
-      """WITH r AS (SELECT md5(CAST(c_custkey AS VARCHAR)) AS pseud,
-        |    c_nationkey AS nation,
-        |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_band,
-        |    c_mktsegment AS sens
-        |  FROM customer),
-        |g AS (SELECT nation, bal_band, count(*) AS group_size,
-        |    count(DISTINCT sens) AS sensitive_diversity FROM r
-        |  GROUP BY 1, 2 HAVING count(*) >= 10 AND count(DISTINCT sens) >= 3)
-        |SELECT r.pseud, r.nation, r.bal_band, g.group_size,
-        |  g.sensitive_diversity
-        |FROM r JOIN g ON r.nation IS NOT DISTINCT FROM g.nation
-        |  AND r.bal_band IS NOT DISTINCT FROM g.bal_band
-        |ORDER BY pseud""".stripMargin,
-    // t196 twin: the identical closed form — clamped CUSUM = cumsum
-    // minus running min, n-scaled integer deviations, planted shift
-    "t196_cusum" ->
-      """WITH daily AS (SELECT o_orderpriority AS pri, o_orderdate AS dt,
-        |    count(*) + CASE WHEN CAST(o_orderdate AS DATE) >= DATE '1996-06-01'
-        |      THEN 25 ELSE 0 END AS x
-        |  FROM orders GROUP BY 1, 2),
-        |b AS (SELECT pri AS grp, dt AS t, CAST(x AS HUGEINT) AS x FROM daily),
-        |s AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sm
-        |  FROM b GROUP BY 1),
-        |c AS (SELECT b.grp, b.t, s.n,
-        |    sum(b.x * s.n - s.sm) OVER (PARTITION BY b.grp ORDER BY b.t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-        |  FROM b JOIN s USING (grp)),
-        |k AS (SELECT grp, t, n, c - least(CAST(0 AS HUGEINT),
-        |    min(c) OVER (PARTITION BY grp ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS cusum
-        |  FROM c)
-        |SELECT grp, CAST(max(n) AS BIGINT) AS n_periods,
-        |  min(CASE WHEN cusum > n * 1000 THEN t END) AS t_detect,
-        |  CAST(max(cusum) AS BIGINT) AS s_max
-        |FROM k GROUP BY grp ORDER BY grp""".stripMargin,
-    // t197 twin: the one-shot fixed-target closed form over the full
-    // corpus — the streamed carry fold must land on it exactly
-    "t197_stream_cusum" ->
-      """WITH daily AS (SELECT o_orderpriority AS pri, o_orderdate AS dt,
-        |    count(*) + CASE WHEN CAST(o_orderdate AS DATE) >= DATE '1996-06-01'
-        |      THEN 25 ELSE 0 END AS x
-        |  FROM orders GROUP BY 1, 2),
-        |b AS (SELECT pri AS grp, dt AS t, CAST(x AS HUGEINT) AS x FROM daily),
-        |c AS (SELECT grp, t,
-        |    sum(x - 2) OVER (PARTITION BY grp ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c FROM b),
-        |k AS (SELECT grp, t, c - least(CAST(0 AS HUGEINT),
-        |    min(c) OVER (PARTITION BY grp ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS cusum
-        |  FROM c)
-        |SELECT grp, CAST(count(*) AS BIGINT) AS n_periods,
-        |  min(CASE WHEN cusum > 500 THEN t END) AS t_detect,
-        |  CAST(max(cusum) AS BIGINT) AS s_max
-        |FROM k GROUP BY grp ORDER BY grp""".stripMargin,
-    // t198 twin: the same per-group bounds + generate_series spine,
-    // zero-filled left join
-    "t198_date_spine" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    CAST(o_orderdate AS DATE) AS dt, count(*) AS x
-        |  FROM orders WHERE o_orderkey % 97 = 0 GROUP BY 1, 2),
-        |b AS (SELECT grp, min(dt) AS lo, max(dt) AS hi FROM daily GROUP BY 1),
-        |s AS (SELECT grp, CAST(unnest(generate_series(lo, hi,
-        |    INTERVAL 1 DAY)) AS DATE) AS dt FROM b)
-        |SELECT s.grp, s.dt, CAST(coalesce(d.x, 0) AS BIGINT) AS x
-        |FROM s LEFT JOIN daily d USING (grp, dt)
-        |ORDER BY grp, dt""".stripMargin,
-    // t199 twin: the REAL cume_dist() window, DISTINCT'd per value —
-    // the histogram form must equal it exactly (one IEEE division)
-    "t199_cdf" ->
-      """SELECT DISTINCT l_returnflag AS grp, CAST(l_quantity AS BIGINT) AS v,
-        |  cume_dist() OVER (PARTITION BY l_returnflag
-        |    ORDER BY CAST(l_quantity AS BIGINT)) AS cd
-        |FROM lineitem ORDER BY grp, v""".stripMargin,
-    // t200 twin: identical lifetime/censoring rule, reverse cumulative
-    // at-risk histogram, integer micro-hazard
-    "t200_hazard" ->
-      """WITH ud AS (SELECT user_id, epoch_us(ts) // 3600000000 AS hn
-        |  FROM events),
-        |span AS (SELECT user_id, min(hn) AS fst, max(hn) AS lst
-        |  FROM ud GROUP BY 1),
-        |cut AS (SELECT max(hn) AS cut FROM ud),
-        |subj AS (SELECT lst - fst AS t,
-        |    CASE WHEN lst < cut - 24 THEN 1 ELSE 0 END AS e
-        |  FROM span CROSS JOIN cut),
-        |h AS (SELECT t, count(*) AS c, sum(e) AS d FROM subj GROUP BY 1),
-        |r AS (SELECT t, c, d, sum(c) OVER (ORDER BY t DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS at_risk
-        |  FROM h)
-        |SELECT t, CAST(at_risk AS BIGINT) AS at_risk,
-        |  CAST(d AS BIGINT) AS events,
-        |  CAST((d * 1000000) // at_risk AS BIGINT) AS hazard_micro
-        |FROM r WHERE d > 0 ORDER BY t""".stripMargin,
-    // t201 twin: erasure = the batch anti-filter over the fact
-    "t201_erasure" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-        |FROM orders WHERE o_custkey % 37 <> 3
-        |ORDER BY o_orderkey""".stripMargin,
-    // t202 twin: the t198 spine feeding the t193 lead(7) moments —
-    // positional lag over a dense series IS the calendar lag
-    "t202_autocorr_calendar" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    CAST(o_orderdate AS DATE) AS dt, count(*) AS x
-        |  FROM orders WHERE o_orderkey % 97 = 0 GROUP BY 1, 2),
-        |b AS (SELECT grp, min(dt) AS lo, max(dt) AS hi FROM daily GROUP BY 1),
-        |s AS (SELECT grp, CAST(unnest(generate_series(lo, hi,
-        |    INTERVAL 1 DAY)) AS DATE) AS dt FROM b),
-        |dense AS (SELECT s.grp, s.dt, coalesce(d.x, 0) AS x
-        |  FROM s LEFT JOIN daily d USING (grp, dt)),
-        |p AS (SELECT grp, CAST(x AS HUGEINT) AS x,
-        |    CAST(lead(x, 7) OVER (PARTITION BY grp ORDER BY dt) AS HUGEINT) AS y
-        |  FROM dense),
-        |f AS (SELECT grp, x, y FROM p WHERE y IS NOT NULL),
-        |m AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy,
-        |    sum(x * y) AS sxy FROM f GROUP BY 1)
-        |SELECT grp, CAST(n AS BIGINT) AS n_pairs,
-        |  floor(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |         CAST(n * syy - sy * sy AS DOUBLE)) * 1000000.0 + 0.5)
-        |    / 1000000.0 AS acf
-        |FROM m ORDER BY grp""".stripMargin,
-    // t203 twin: the planted CDC arms spelled out — %4 upserts emit
-    // pre+post images, %31 new keys emit inserts
-    "t203_table_changes" ->
-      """WITH base AS (SELECT c_custkey AS k, c_mktsegment AS seg,
-        |    CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS cents
-        |  FROM customer)
-        |SELECT k, 'update_preimage' AS change_type, seg, cents
-        |FROM base WHERE k % 4 = 0
-        |UNION ALL
-        |SELECT k, 'update_postimage', seg, cents + 500 FROM base WHERE k % 4 = 0
-        |UNION ALL
-        |SELECT k + 1000000, 'insert', seg, cents FROM base WHERE k % 31 = 0
-        |ORDER BY k, change_type""".stripMargin,
-    // t204 twin: the classic id - row_number() islands form the
-    // anti-join boundaries replace
-    "t204_islands" -> t204Sql,
-    "q113_islands_sql" -> t204Sql,
-    // q116 twin: the merged latest-wins state expressed directly —
-    // base rows, with the second commit's +100 applied to keys ≡3
-    // mod 10
-    "q116_lake_sql" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |  CAST(sum(CASE WHEN o_orderkey % 10 = 3
-        |    THEN CAST(floor(o_totalprice*100.0+0.5) AS BIGINT) + 100
-        |    ELSE CAST(floor(o_totalprice*100.0+0.5) AS BIGINT) END)
-        |    AS BIGINT) AS total_cents
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q125 twin: the fixture commits exactly twice (base replace,
-    // then the ≡3-mod-10 delta), so the manifest log is literal
-    "q125_lake_history_sql" ->
-      """SELECT CAST(version AS BIGINT) AS version,
-        |  CAST(n_live AS BIGINT) AS n_live, live_commits
-        |FROM (VALUES (1, 1, '1'), (2, 2, '1,2'))
-        |  AS t(version, n_live, live_commits)
-        |ORDER BY version""".stripMargin,
-    // q120 twin: manifest v1 pins the PRE-delta snapshot, so time
-    // travel must reproduce the plain base aggregate — no CASE arm
-    "q120_lake_timetravel_sql" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice*100.0+0.5) AS BIGINT))
-        |    AS BIGINT) AS total_cents
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t220 twin: t204's one-shot SQL VERBATIM — the streamed
-    // seam-stitched fold must be indistinguishable
-    "t220_stream_islands" -> t204Sql,
-    // t205 twin: the recursive ancestor CTE the squaring closure
-    // replaces — same self-inclusive subtree accounting
-    "t205_subtree_agg" ->
-      """WITH RECURSIVE anc(id, a) AS (
-        |  SELECT p_partkey, p_partkey FROM part
-        |  UNION ALL
-        |  SELECT id, a // 7 FROM anc WHERE a // 7 >= 1),
-        |v AS (SELECT p_partkey AS id,
-        |    CAST(floor(p_retailprice * 100.0 + 0.5) AS BIGINT) AS v FROM part)
-        |SELECT anc.a AS id, count(*) AS n_nodes,
-        |  CAST(sum(v.v) AS BIGINT) AS subtree_v
-        |FROM anc JOIN v ON anc.id = v.id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t206 twin: the quadratic same-user candidate join + the same
-    // deterministic (|Δ|, earlier, smaller-id) argmin rank
-    "t206_nearest_event" ->
-      """WITH c AS (SELECT user_id, event_id AS a_id, epoch_us(ts) AS a_us
-        |  FROM events WHERE event_type = 'click'),
-        |v AS (SELECT user_id AS vu, event_id AS b_id, epoch_us(ts) AS b_us
-        |  FROM events WHERE event_type = 'view'),
-        |cand AS (SELECT c.user_id, c.a_id, c.a_us, v.b_id, v.b_us
-        |  FROM c JOIN v ON c.user_id = v.vu
-        |    AND abs(v.b_us - c.a_us) <= 600000000),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY a_id
-        |    ORDER BY abs(b_us - a_us), b_us, b_id) AS rn FROM cand)
-        |SELECT user_id, a_id, b_id, CAST(b_us - a_us AS BIGINT) AS delta_us
-        |FROM rk WHERE rn = 1 ORDER BY a_id""".stripMargin,
-    // t214 twin: the same integer cross-multiplied Q17 predicate
-    "t214_tpch_q17" ->
-      """WITH li AS (SELECT l_partkey,
-        |    CAST(floor(l_quantity * 100.0 + 0.5) AS BIGINT) AS q,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |b AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#4'),
-        |j AS (SELECT li.l_partkey, li.q, li.cents FROM li
-        |  JOIN b ON li.l_partkey = b.p_partkey),
-        |st AS (SELECT l_partkey, count(*) AS n, sum(q) AS sq
-        |  FROM j GROUP BY 1),
-        |f AS (SELECT j.cents FROM j JOIN st ON j.l_partkey = st.l_partkey
-        |  WHERE 5 * st.n * j.q < st.sq)
-        |SELECT count(*) AS n_rows, CAST(sum(cents) AS BIGINT) AS total_cents,
-        |  CAST((sum(cents) * 1000) // 7 AS BIGINT) AS avg_yearly_milli
-        |FROM f""".stripMargin,
-    // t215 twin: the same scalar average cross-multiplied + NOT EXISTS
-    "t215_tpch_q22" ->
-      """WITH cust AS (SELECT c_custkey, c_nationkey,
-        |    CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS bal
-        |  FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)),
-        |pos AS (SELECT count(*) AS pn, sum(bal) AS ps FROM cust WHERE bal > 0)
-        |SELECT c_nationkey, count(*) AS numcust,
-        |  CAST(sum(bal) AS BIGINT) AS totbal_cents
-        |FROM cust CROSS JOIN pos
-        |WHERE bal * pn > ps
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |    AND CAST(o_orderdate AS DATE) >= DATE '2001-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t216 twin: DuckDB's real ntile(10) under the identical
-    // (band, orderkey) ordering
-    "t216_ntile" ->
-      """SELECT o_orderpriority AS grp, o_orderkey AS id,
-        |  CAST(ntile(10) OVER (PARTITION BY o_orderpriority
-        |    ORDER BY CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)
-        |      // 100000, o_orderkey) AS BIGINT) AS bucket
-        |FROM orders ORDER BY grp, id""".stripMargin,
-    // t211 twin: the t125 run collapse evaluated at both knowledge
-    // states (pre-cut slice, full history), as-of-filtered and
-    // union'd with txn arms
-    "t211_bitemporal" ->
-      """WITH o1 AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)
-        |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-        |    ORDER BY o_orderdate, o_orderkey) AS grp
-        |  FROM orders WHERE CAST(o_orderdate AS DATE) < DATE '1996-01-01'),
-        |r1 AS (SELECT o_custkey, o_orderstatus, grp,
-        |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key
-        |  FROM o1 GROUP BY 1, 2, 3),
-        |s1 AS (SELECT o_custkey, o_orderstatus, valid_from,
-        |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-        |    ORDER BY valid_from, first_key) AS valid_to FROM r1),
-        |o2 AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)
-        |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-        |    ORDER BY o_orderdate, o_orderkey) AS grp
-        |  FROM orders),
-        |r2 AS (SELECT o_custkey, o_orderstatus, grp,
-        |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key
-        |  FROM o2 GROUP BY 1, 2, 3),
-        |s2 AS (SELECT o_custkey, o_orderstatus, valid_from,
-        |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-        |    ORDER BY valid_from, first_key) AS valid_to FROM r2)
-        |SELECT CAST(1 AS INTEGER) AS txn_v, o_custkey, o_orderstatus,
-        |  valid_from
-        |FROM s1 WHERE valid_from <= DATE '1997-06-01'
-        |  AND (valid_to IS NULL OR valid_to > DATE '1997-06-01')
-        |UNION ALL
-        |SELECT CAST(2 AS INTEGER), o_custkey, o_orderstatus, valid_from
-        |FROM s2 WHERE valid_from <= DATE '1997-06-01'
-        |  AND (valid_to IS NULL OR valid_to > DATE '1997-06-01')
-        |ORDER BY txn_v, o_custkey""".stripMargin,
-    // t212 twin: the pruned months recomputed as a plain filter-group
-    "t212_dpp" ->
-      """SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS month,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
-        |    AS BIGINT) AS cents
-        |FROM orders
-        |WHERE strftime(CAST(o_orderdate AS DATE), '%Y-%m') LIKE '1995-%'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t209 twin: identical lead window, HUGEINT integral, identical
-    // integer micro-division
-    "t209_twap" -> t209Sql,
-    // t217 twin: t209's one-shot SQL VERBATIM — the streamed carry
-    // fold must be indistinguishable from the batch closed form
-    "t217_stream_twap" -> t209Sql,
-    // t218 twin: the identical Luby rounds unrolled
-    "t218_mis" -> misUnrolledSql(seed = "mis14", rounds = 12),
-    // t226 twin: the identical md5 rank under the same tie-break
-    "t226_reservoir_k" ->
-      """SELECT c_mktsegment, CAST(rn AS BIGINT) AS sample_rank,
-        |  c_custkey, c_nationkey
-        |FROM (SELECT c_mktsegment, c_custkey, c_nationkey,
-        |  row_number() OVER (PARTITION BY c_mktsegment
-        |    ORDER BY md5(concat_ws(':', 'res14', CAST(c_custkey AS VARCHAR))),
-        |      c_custkey) AS rn
-        |  FROM customer)
-        |WHERE rn <= 7 ORDER BY c_mktsegment, rn""".stripMargin,
-    // t227 twin: the clone must equal the PRE-upsert base exactly
-    "t227_snapshot_clone" ->
-      """SELECT c_custkey AS k,
-        |  CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS cents
-        |FROM customer ORDER BY k""".stripMargin,
-    // t225 twin: the identical weighted power iteration unrolled
-    "t225_weighted_pagerank" -> {
-      val iter = (i: Int) =>
-        s"""c$i AS (SELECT e.dst AS id,
-           |  sum((85 * s.s * e.w) // (100 * wo.wsum)) AS sc
-           |  FROM e JOIN s${i - 1} s ON s.id = e.src
-           |  JOIN wo ON wo.src = e.src
-           |  GROUP BY 1),
-           |s$i AS (SELECT n.id,
-           |  CAST(150000 + coalesce(c$i.sc, 0) AS BIGINT) AS s
-           |  FROM n LEFT JOIN c$i ON c$i.id = n.id)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_quantity <= 5),
-         |e AS (SELECT a.pk AS src, b.pk AS dst, count(*) AS w
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk <> b.pk
-         |  GROUP BY 1, 2),
-         |wo AS (SELECT src, sum(w) AS wsum FROM e GROUP BY 1),
-         |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         |s0 AS (SELECT id, CAST(1000000 AS BIGINT) AS s FROM n),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT id, s FROM s3 ORDER BY id""".stripMargin
-    },
-    // t223 twin: the same adjacency predicate evaluated list-wise
-    "t223_phrase_search" ->
-      s"""WITH d AS (SELECT doc_id, $toks AS tk FROM documents),
-         |h AS (SELECT doc_id,
-         |  CAST(list_sum(list_transform(range(1, len(tk)),
-         |    i -> CASE WHEN tk[i] = 'table' AND tk[i + 1] = 'table'
-         |      THEN 1 ELSE 0 END)) AS BIGINT) AS n_hits,
-         |  CAST(list_aggregate(list_filter(range(1, len(tk)),
-         |    i -> tk[i] = 'table' AND tk[i + 1] = 'table'), 'min')
-         |    AS BIGINT) AS first_pos
-         |  FROM d)
-         |SELECT doc_id, n_hits, first_pos FROM h
-         |WHERE n_hits > 0 ORDER BY doc_id""".stripMargin,
-    // t224 twin: sorted-distinct list rendered to the same csv
-    "t224_string_agg" ->
-      """SELECT o_orderpriority AS pri,
-        |  array_to_string(list_sort(list(DISTINCT o_orderstatus)), ',')
-        |    AS statuses,
-        |  count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t222 twin: identical degree-pair HUGEINT moments, one division
-    "t222_assortativity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |sym AS (SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p),
-        |deg AS (SELECT u, count(*) AS deg FROM sym GROUP BY 1),
-        |x AS (SELECT CAST(d1.deg AS HUGEINT) AS x, CAST(d2.deg AS HUGEINT) AS y
-        |  FROM sym JOIN deg d1 ON d1.u = sym.u JOIN deg d2 ON d2.u = sym.v),
-        |m AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * x) AS sxx, sum(y * y) AS syy,
-        |    sum(x * y) AS sxy FROM x)
-        |SELECT CAST(n AS BIGINT) AS n_pairs,
-        |  floor(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |         CAST(n * syy - sy * sy AS DOUBLE)) * 1000000.0 + 0.5)
-        |    / 1000000.0 AS assortativity
-        |FROM m""".stripMargin,
-    // t219 twin: t144's assignment chain + the same integer pair sums
-    "t219_linkage_eval" ->
-      s"""WITH RECURSIVE $fuzzyCte,
-         |e AS (SELECT key_a AS src, key_b AS dst FROM m
-         |      UNION SELECT key_b, key_a FROM m),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src),
-         |cl AS (SELECT id, min(r) AS cid FROM reach GROUP BY id),
-         |asg AS (SELECT n.key, coalesce(cl.cid, n.key) AS entity_id
-         |  FROM (SELECT DISTINCT key FROM named) n
-         |  LEFT JOIN cl ON cl.id = n.key),
-         |w AS (SELECT entity_id AS p,
-         |    CASE WHEN key >= 3000000 THEN key ELSE key % 1000000 END AS t
-         |  FROM asg),
-         |pp AS (SELECT coalesce(sum((c * (c - 1)) // 2), 0) AS pred_pairs
-         |  FROM (SELECT count(*) AS c FROM w GROUP BY p)),
-         |tt AS (SELECT coalesce(sum((c * (c - 1)) // 2), 0) AS true_pairs
-         |  FROM (SELECT count(*) AS c FROM w GROUP BY t)),
-         |b AS (SELECT coalesce(sum((c * (c - 1)) // 2), 0) AS tp
-         |  FROM (SELECT count(*) AS c FROM w GROUP BY p, t))
-         |SELECT CAST(tp AS BIGINT) AS tp,
-         |  CAST(pred_pairs AS BIGINT) AS pred_pairs,
-         |  CAST(true_pairs AS BIGINT) AS true_pairs,
-         |  CAST(CASE WHEN pred_pairs > 0
-         |    THEN (tp * 1000000) // pred_pairs END AS BIGINT)
-         |    AS precision_micro,
-         |  CAST(CASE WHEN true_pairs > 0
-         |    THEN (tp * 1000000) // true_pairs END AS BIGINT)
-         |    AS recall_micro,
-         |  CAST(CASE WHEN pred_pairs + true_pairs > 0
-         |    THEN (2 * tp * 1000000) // (pred_pairs + true_pairs) END
-         |    AS BIGINT) AS f1_micro
-         |FROM b CROSS JOIN pp CROSS JOIN tt""".stripMargin,
-    // t210 twin: open/close as rank-1 rows under the same (t, id)
-    // tie-break, high/low/n from the plain aggregate
-    "t210_ohlc" ->
-      """WITH e AS (SELECT event_type AS s, epoch_us(ts) // 3600000000 AS b,
-        |    epoch_us(ts) AS t, event_id AS i, event_id AS v FROM events),
-        |rko AS (SELECT s, b, v, row_number() OVER (PARTITION BY s, b
-        |    ORDER BY t, i) AS rn FROM e),
-        |rkc AS (SELECT s, b, v, row_number() OVER (PARTITION BY s, b
-        |    ORDER BY t DESC, i DESC) AS rn FROM e),
-        |agg AS (SELECT s, b, max(v) AS high, min(v) AS low, count(*) AS n
-        |  FROM e GROUP BY 1, 2)
-        |SELECT agg.s AS s, agg.b AS b, o.v AS open, agg.high, agg.low,
-        |  c.v AS close, agg.n
-        |FROM agg JOIN rko o ON o.s = agg.s AND o.b = agg.b AND o.rn = 1
-        |JOIN rkc c ON c.s = agg.s AND c.b = agg.b AND c.rn = 1
-        |ORDER BY agg.s, agg.b""".stripMargin,
-    // t207 twin: the conditional-aggregation crosstab Spark's pivot
-    // compiles to, zero-filled
-    "t207_pivot" ->
-      """SELECT o_orderpriority AS pri,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS f_cnt,
-        |  CAST(coalesce(sum(CASE WHEN o_orderstatus = 'F'
-        |    THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END), 0)
-        |    AS BIGINT) AS f_cents,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS o_cnt,
-        |  CAST(coalesce(sum(CASE WHEN o_orderstatus = 'O'
-        |    THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END), 0)
-        |    AS BIGINT) AS o_cents,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS p_cnt,
-        |  CAST(coalesce(sum(CASE WHEN o_orderstatus = 'P'
-        |    THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END), 0)
-        |    AS BIGINT) AS p_cents
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t208 twin: the long form as explicit UNION arms
-    "t208_unpivot" ->
-      """WITH w AS (SELECT o_orderpriority AS pri,
-        |    CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS f,
-        |    CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS o,
-        |    CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS p
-        |  FROM orders GROUP BY 1)
-        |SELECT pri, 'F' AS status, f AS n FROM w
-        |UNION ALL SELECT pri, 'O', o FROM w
-        |UNION ALL SELECT pri, 'P', p FROM w
-        |ORDER BY pri, status""".stripMargin,
-    // t154 twin: identical pair/item supports, identical quantized
-    // confidence and lift divisions
-    "t154_market_basket" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |nb AS (SELECT count(DISTINCT ok) AS nb FROM b),
-        |isupp AS (SELECT pk, count(*) AS supp FROM b GROUP BY 1),
-        |ps AS (SELECT a.pk AS pa, b2.pk AS pb, count(*) AS pair_supp
-        |  FROM b a JOIN b b2 ON a.ok = b2.ok AND a.pk < b2.pk
-        |  GROUP BY 1, 2 HAVING count(*) >= 3)
-        |SELECT pa, pb, pair_supp,
-        |  floor(CAST(pair_supp AS DOUBLE) / sa.supp * 1000000.0 + 0.5) / 1000000.0 AS conf_ab,
-        |  floor(CAST(pair_supp AS DOUBLE) / sb.supp * 1000000.0 + 0.5) / 1000000.0 AS conf_ba,
-        |  floor(CAST(pair_supp * nb.nb AS DOUBLE) / CAST(sa.supp * sb.supp AS DOUBLE)
-        |    * 1000000.0 + 0.5) / 1000000.0 AS lift
-        |FROM ps JOIN isupp sa ON sa.pk = ps.pa
-        |JOIN isupp sb ON sb.pk = ps.pb CROSS JOIN nb
-        |ORDER BY pa, pb""".stripMargin,
-    // t153 twin: the t145 full-graph closure verbatim — the streamed
-    // delta-committed label table must reproduce it exactly
-    "t153_stream_cc" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t152 twin: the t145 full-graph closure verbatim — the fold over
-    // the half-graph labeling must reproduce it exactly
-    "t152_incremental_cc" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t146 twin: the t145 closure verbatim — the alternating
-    // contraction must produce the identical component map
-    "t146_cc_bigstar" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity <= 5),
-        |p AS (SELECT a.pk AS src, b.pk AS dst
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-    // t147 twin: identical update slice; MERGE = target-minus-matched
-    // UNION ALL updates
-    "t147_merge_upsert" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
-        |upd AS (SELECT c_custkey, 'MERGED' AS c_mktsegment,
-        |    c_acctbal + 100.0 AS c_acctbal FROM dim WHERE c_custkey % 7 = 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, 'NEWKEY', c_acctbal FROM dim
-        |  WHERE c_custkey % 31 = 0)
-        |SELECT c_custkey, c_mktsegment, c_acctbal FROM (
-        |  SELECT d.c_custkey, d.c_mktsegment, d.c_acctbal FROM dim d
-        |  LEFT JOIN upd u ON u.c_custkey = d.c_custkey
-        |  WHERE u.c_custkey IS NULL
-        |  UNION ALL
-        |  SELECT c_custkey, c_mktsegment, c_acctbal FROM upd)
-        |ORDER BY c_custkey""".stripMargin,
-    // t139 twin: same distinct-days → full-calendar anti-join
-    "t139_date_gaps" ->
-      """WITH d AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS dt FROM orders
-        |  WHERE o_orderdate IS NOT NULL),
-        |b AS (SELECT min(dt) AS lo, max(dt) AS hi FROM d),
-        |al AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS dt
-        |  FROM b)
-        |SELECT al.dt AS missing_date FROM al LEFT JOIN d ON d.dt = al.dt
-        |WHERE d.dt IS NULL ORDER BY missing_date""".stripMargin,
-    "q13_setops_status" ->
-      """WITH o AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'),
-        |     f AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |SELECT o_custkey, 'both' AS tag FROM (SELECT * FROM o INTERSECT SELECT * FROM f)
-        |UNION ALL
-        |SELECT o_custkey, 'only_o' AS tag FROM (SELECT * FROM o EXCEPT SELECT * FROM f)
-        |UNION ALL
-        |SELECT o_custkey, 'only_f' AS tag FROM (SELECT * FROM f EXCEPT SELECT * FROM o)
-        |ORDER BY o_custkey, tag""".stripMargin,
-    "q14_nation_f_share" ->
-      s"""SELECT n_name,
-         | ${meanL("CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END")} AS f_share,
-         | count(*) AS n_orders
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q15_monthly_orders" ->
-      s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-         | CAST(month(o_orderdate) AS BIGINT) AS mth,
-         | count(*) AS n_orders, ${mny("o_totalprice")} AS total_price
-         |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q16_type_word_stats" ->
-      s"""SELECT string_split(p_type, ' ')[1] AS type_word, count(*) AS n_parts,
-         | ${mean("p_retailprice")} AS avg_price, max(p_size) AS max_size
-         |FROM part GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q17_part_pairs" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
-        |SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_orders
-        |FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |GROUP BY 1,2 ORDER BY n_orders DESC, pa, pb LIMIT 20""".stripMargin,
-    "q18_event_bursts" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events)
-        |SELECT a.event_type AS type_first, b.event_type AS type_next, count(*) AS n_pairs
-        |FROM e a JOIN e b ON a.user_id = b.user_id AND a.event_id <> b.event_id
-        |  AND b.us > a.us AND b.us <= a.us + 600000000
-        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q19_asof_last_order" ->
-      """WITH r AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-        |  FROM orders GROUP BY 1,2)
-        |SELECT e.event_id, e.user_id, e.event_type, r.o_orderkey
-        |FROM events e ASOF JOIN r
-        |  ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    "q20_json_props" ->
-      s"""SELECT event_type, ${meanL("k")} AS avg_k, min(k) AS min_k, max(k) AS max_k,
-         | count(*) AS n_events
-         |FROM (SELECT event_type, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-         |      FROM events)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q21_events_hourly" ->
-      s"""SELECT epoch_us(date_trunc('hour', ts)) AS hour, event_type, count(*) AS n_events,
-         | ${mny("value")} AS sum_value, ${mean("value")} AS avg_value
-         |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // t142 twin: each event assigned its TWO window starts explicitly
-    // (w <= ts < w+2h on hour boundaries), then the same money sums
-    "t142_stream_sliding" ->
-      s"""WITH e2 AS (
-         |  SELECT epoch_us(date_trunc('hour', ts)) AS wstart, event_type, value FROM events
-         |  UNION ALL
-         |  SELECT epoch_us(date_trunc('hour', ts) - INTERVAL 1 HOUR), event_type, value FROM events)
-         |SELECT wstart, event_type, count(*) AS n_events, ${mny("value")} AS sum_value
-         |FROM e2 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // t96 twin: the stream's final complete-mode aggregate must equal
-    // the one-shot batch rollup — q21's SQL verbatim
-    "t96_stream_hourly" ->
-      s"""SELECT epoch_us(date_trunc('hour', ts)) AS hour, event_type, count(*) AS n_events,
-         | ${mny("value")} AS sum_value, ${mean("value")} AS avg_value
-         |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // t99 twin: the plain batch join + hourly rollup per segment
-    "t99_stream_enriched" ->
-      s"""SELECT epoch_us(date_trunc('hour', ts)) AS hour, c_mktsegment,
-         |  count(*) AS n_events, ${mny("value")} AS sum_value
-         |FROM events JOIN customer ON c_custkey = user_id
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // t100 twin: the batch self-join with the identical interval
-    // bounds — every qualifying pair exactly once
-    "t100_stream_interval_join" ->
-      """SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-        |  epoch_us(a.ts) AS a_us, epoch_us(b.ts) AS b_us
-        |FROM events a JOIN events b ON a.user_id = b.user_id
-        |  AND a.event_type = 'click' AND b.event_type = 'view'
-        |  AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-        |ORDER BY a_id, b_id""".stripMargin,
-    // t98 twin: the per-user batch rollup of the same quantized
-    // integer the stream state accumulates — order-free by
-    // construction, so the streamed final state matches exactly
-    "t98_stream_state" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(value*10000.0+0.5) AS DECIMAL(18,0))) AS BIGINT) AS q_total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t97 twin: q22's lag-gap session CTEs, emitted per session with
-    // session_window's end convention (last event + gap)
-    "t97_stream_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER w IS NULL
-        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT user_id, us,
-        |  sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g)
-        |SELECT min(us) AS session_start, max(us) + 1800000000 AS session_end,
-        |  user_id, count(*) AS n_events
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start""".stripMargin,
-    "q22_sessionize" -> q22Sql,
-    "q110_sessionize_sql" -> q22Sql,
-
-    // q50 twin: identical pre-aggregated full outer + side indicator
-    "q50_full_outer" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment FROM customer
-        |  WHERE c_mktsegment = 'BUILDING'),
-        |o AS (SELECT o_custkey, count(*) AS n_orders FROM orders
-        |  WHERE o_orderstatus = 'F' GROUP BY 1)
-        |SELECT coalesce(c_custkey, o_custkey) AS custkey, c_mktsegment, n_orders,
-        |  CASE WHEN c_custkey IS NULL THEN 'orders_only'
-        |       WHEN o_custkey IS NULL THEN 'customer_only'
-        |       ELSE 'both' END AS side
-        |FROM c FULL OUTER JOIN o ON o.o_custkey = c.c_custkey
-        |ORDER BY custkey""".stripMargin,
-    // q51 twin: counts + the same (n DESC, value) rank rule
-    "q51_mode" -> q51Sql,
-    "q114_mode_sql" -> q51Sql,
-
-    // t114 twin: the IDENTICAL fold table and planted tail (both
-    // interpolated from the same Scala constants), translate/lower/
-    // collapse applied in the same order
-    "t114_normalize_unicode" ->
-      s"""WITH p AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 5 = 0 THEN text || ${sqlLit(NormPlantTail)}
-         |       ELSE text END AS text
-         |  FROM documents),
-         |n AS (SELECT doc_id,
-         |  trim(regexp_replace(translate(lower(text),
-         |    ${sqlLit(TextOps.UnicodeFoldFrom)}, ${sqlLit(TextOps.UnicodeFoldTo)}),
-         |    '\\s+', ' ', 'g')) AS norm_text
-         |  FROM p)
-         |SELECT doc_id, norm_text, CAST(length(norm_text) AS BIGINT) AS n_chars
-         |FROM n ORDER BY doc_id""".stripMargin,
-    // t111 twin: per-step firsts chained by strictly-after joins —
-    // the same user-keyed min cascade, stage from null-ness
-    "t111_funnel" -> funnelSql,
-    // t113 twin: the stream's final per-user funnel state must equal
-    // the one-shot batch funnel — t111's SQL verbatim
-    "t113_stream_funnel" -> funnelSql,
-    // t112 twin: identical integer week arithmetic (floor of epoch
-    // micros over 7 days — no calendar functions on either side)
-    "t112_cohort_retention" -> cohortSql,
-    // t116 twin: t112's full-history SQL verbatim — the incremental
-    // activity-index fold must reproduce the one-shot triangle
-    "t116_incremental_cohort" -> cohortSql,
-    // t121 twin: t95's weight CTEs + the identical integer
-    // cross-multiplied accept test on the content-hash uniform
-    "t121_importance_resample" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($toks) AS w FROM documents),
-         |tb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(w),1,15)) AS BIGINT) % 1024 AS b FROM tk),
-         |tc AS (SELECT b, count(*) AS tc FROM tb WHERE doc_id % 10 < 3 GROUP BY 1),
-         |rc AS (SELECT b, count(*) AS rc FROM tb WHERE doc_id % 10 >= 3 GROUP BY 1),
-         |wt AS (SELECT rc.b,
-         |  CAST(floor(CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
-         |    / (rc.rc + 1) * 1000000.0 + 0.5) AS BIGINT) AS wq
-         |  FROM rc LEFT JOIN tc ON tc.b = rc.b),
-         |sc AS (SELECT doc_id, count(*) AS n_tok,
-         |  CAST(sum(wq) AS BIGINT) AS swq,
-         |  floor(CAST(sum(wq) AS DOUBLE) / 1000000.0 / count(*)
-         |    * 1000000.0 + 0.5) / 1000000.0 AS score
-         |  FROM tb JOIN wt ON wt.b = tb.b
-         |  WHERE doc_id % 10 >= 3 GROUP BY 1),
-         |u AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))),1,4)) AS BIGINT) AS u16
-         |  FROM documents)
-         |SELECT sc.doc_id, sc.score
-         |FROM sc JOIN u ON u.doc_id = sc.doc_id
-         |WHERE u.u16 * sc.n_tok * 1000000 < sc.swq * 65536
-         |ORDER BY sc.doc_id""".stripMargin,
-    // q52 twin: identical integer-decimal sums at both levels, the
-    // same single share division on exact operands
-    "q52_revenue_share" ->
-      """WITH g AS (SELECT n_name,
-        |  sum(CAST(floor((l_extendedprice*(1.0-l_discount))*10000.0+0.5) AS DECIMAL(18,0))) AS revq
-        |  FROM lineitem
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation ON n_nationkey = s_nationkey
-        |  GROUP BY 1),
-        |t AS (SELECT sum(revq) AS totq FROM g)
-        |SELECT n_name,
-        |  floor(CAST(revq AS DOUBLE)/10000.0*100.0+0.5)/100.0 AS revenue,
-        |  floor(CAST(revq AS DOUBLE)/CAST(totq AS DOUBLE)*1000000.0+0.5)/1000000.0 AS share
-        |FROM g CROSS JOIN t ORDER BY n_name""".stripMargin,
-    // t128 twin: the exact window counts + literal TRUE tolerance
-    // booleans (the q38 oracle pattern — the estimate must land
-    // within 10% for the row to hash-match)
-    "t128_rolling_active_sketch" ->
-      """WITH du AS (SELECT DISTINCT user_id,
-        |  CAST(floor(epoch_us(ts) / 86400000000.0) AS BIGINT) AS day FROM events),
-        |ds AS (SELECT DISTINCT day AS d FROM du)
-        |SELECT d, count(DISTINCT user_id) AS active_users, TRUE AS within_10pct
-        |FROM du JOIN ds ON du.day >= ds.d - 6 AND du.day <= ds.d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t129 twin: per-user ordered type sequence via string_agg, the
-    // same 3-gram slide, identical (count DESC, path) top-k
-    "t129_event_paths" ->
-      """WITH s AS (SELECT user_id,
-        |  string_agg(event_type, ' ' ORDER BY epoch_us(ts), event_id) AS seq
-        |  FROM events GROUP BY 1),
-        |tk AS (SELECT string_split(seq, ' ') AS t FROM s),
-        |g AS (SELECT array_to_string(t[i:i+2], ' ') AS path
-        |  FROM tk, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i) u
-        |  WHERE len(t) >= 3),
-        |c AS (SELECT path, count(*) AS n_paths FROM g GROUP BY 1)
-        |SELECT rnk, path, n_paths FROM (
-        |  SELECT path, n_paths,
-        |    CAST(row_number() OVER (ORDER BY n_paths DESC, path) AS BIGINT) AS rnk
-        |  FROM c) WHERE rnk <= 20 ORDER BY rnk""".stripMargin,
-    // t126 twin: the identical distinct-activity range join over
-    // integer days
-    "t126_rolling_active" ->
-      """WITH du AS (SELECT DISTINCT user_id,
-        |  CAST(floor(epoch_us(ts) / 86400000000.0) AS BIGINT) AS day FROM events),
-        |ds AS (SELECT DISTINCT day AS d FROM du)
-        |SELECT d, count(DISTINCT user_id) AS active_users
-        |FROM du JOIN ds ON du.day >= ds.d - 6 AND du.day <= ds.d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t127 twin: t125's interval CTEs probed with the identical
-    // containment rule and the same deterministic probe dates
-    "t127_pit_join" -> t127Sql,
-    // t221 twin: t127's one-shot SQL VERBATIM — per-micro-batch
-    // enrichment emissions must union to the batch join
-    "t221_stream_pit" -> t127Sql,
-    // t125 twin: the identical gaps-and-islands run collapse and
-    // lead() interval chaining -- dates and integers only
-    "t125_scd2_intervals" ->
-      """WITH o AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)
-        |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-        |    ORDER BY o_orderdate, o_orderkey) AS grp
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_orderstatus, grp,
-        |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key,
-        |  count(*) AS n_orders
-        |  FROM o GROUP BY 1, 2, 3)
-        |SELECT o_custkey, o_orderstatus, valid_from,
-        |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-        |    ORDER BY valid_from, first_key) AS valid_to,
-        |  first_key, n_orders
-        |FROM r ORDER BY o_custkey, valid_from, first_key""".stripMargin,
-    // t133/t137 twins: t125's full-rebuild SQL VERBATIM — the
-    // incremental fold (batch and streamed) must be indistinguishable
-    // from rebuilding over all orders
-    "t133_scd2_fold" ->
-      """WITH o AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)
-        |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-        |    ORDER BY o_orderdate, o_orderkey) AS grp
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_orderstatus, grp,
-        |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key,
-        |  count(*) AS n_orders
-        |  FROM o GROUP BY 1, 2, 3)
-        |SELECT o_custkey, o_orderstatus, valid_from,
-        |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-        |    ORDER BY valid_from, first_key) AS valid_to,
-        |  first_key, n_orders
-        |FROM r ORDER BY o_custkey, valid_from, first_key""".stripMargin,
-    "t137_scd2_stream" ->
-      """WITH o AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)
-        |  - row_number() OVER (PARTITION BY o_custkey, o_orderstatus
-        |    ORDER BY o_orderdate, o_orderkey) AS grp
-        |  FROM orders),
-        |r AS (SELECT o_custkey, o_orderstatus, grp,
-        |  min(o_orderdate) AS valid_from, min(o_orderkey) AS first_key,
-        |  count(*) AS n_orders
-        |  FROM o GROUP BY 1, 2, 3)
-        |SELECT o_custkey, o_orderstatus, valid_from,
-        |  lead(valid_from, 1) OVER (PARTITION BY o_custkey
-        |    ORDER BY valid_from, first_key) AS valid_to,
-        |  first_key, n_orders
-        |FROM r ORDER BY o_custkey, valid_from, first_key""".stripMargin,
-    // t130 twin: the identical distinct-fingerprint equi-join and
-    // exact-integer jaccard per source pair
-    "t130_source_overlap" ->
-      """WITH p AS (SELECT source, text FROM documents
-        |  UNION ALL
-        |  SELECT 'mirror-of-' || source AS source, text FROM documents
-        |  WHERE doc_id % 10 = 4),
-        |sf AS (SELECT DISTINCT source,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |  FROM p),
-        |sz AS (SELECT source, count(*) AS n FROM sf GROUP BY 1),
-        |iv AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS inter
-        |  FROM sf a JOIN sf b ON a.fp = b.fp AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT src_a, src_b, inter,
-        |  floor(CAST(inter AS DOUBLE) / (za.n + zb.n - inter) * 10000.0 + 0.5) / 10000.0 AS jac
-        |FROM iv JOIN sz za ON za.source = src_a JOIN sz zb ON zb.source = src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-    // t123 twin: t62's fingerprint CTEs exploded, the same df cap,
-    // pair join and quantized overlap
-    "t123_winnow_pairs" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |h AS (SELECT doc_id,
-         |  list_transform(range(1, len(tk)-1), i -> CAST(('0x'||substr(md5(array_to_string(tk[i:i+2], ' ')),1,15)) AS BIGINT)) AS hs
-         |  FROM t WHERE len(tk) >= 3),
-         |fp AS (SELECT doc_id,
-         |  CASE WHEN len(hs) >= 4
-         |    THEN list_distinct(list_transform(range(1, len(hs)-2), i -> list_min(hs[i:i+3])))
-         |    ELSE [list_min(hs)] END AS fp
-         |  FROM h WHERE len(hs) > 0),
-         |x AS (SELECT doc_id, CAST(len(fp) AS BIGINT) AS n_fp, unnest(fp) AS f FROM fp),
-         |keep AS (SELECT f FROM (SELECT f, count(*) AS df FROM x GROUP BY 1) WHERE df <= 150),
-         |px AS (SELECT x.doc_id, x.n_fp, x.f FROM x JOIN keep USING (f)),
-         |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_fp AS na, b.n_fp AS nb,
-         |  count(*) AS shared
-         |  FROM px a JOIN px b ON a.f = b.f AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2, 3, 4)
-         |SELECT doc_a, doc_b, shared,
-         |  floor(CAST(shared AS DOUBLE) / least(na, nb) * 10000.0 + 0.5) / 10000.0 AS overlap
-         |FROM pr WHERE shared >= 2 ORDER BY doc_a, doc_b""".stripMargin,
-    // t119 twin: the identical integer update, 3 iterations unrolled —
-    // `div`/`//` both truncate on positive operands, the per-edge
-    // floor-then-sum is order-free on both engines
-    "t119_pagerank" -> {
-      val iter = (i: Int) =>
-        s"""c$i AS (SELECT e.dst AS id, sum((85 * s.s) // (100 * d.deg)) AS sc
-           |  FROM e JOIN s${i - 1} s ON s.id = e.src JOIN deg d ON d.src = e.src
-           |  GROUP BY 1),
-           |s$i AS (SELECT n.id, CAST(150000 + coalesce(c$i.sc, 0) AS BIGINT) AS s
-           |  FROM n LEFT JOIN c$i ON c$i.id = n.id)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |e AS (SELECT DISTINCT a.pk AS src, b.pk AS dst
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk <> b.pk),
-         |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-         |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         |s0 AS (SELECT id, CAST(1000000 AS BIGINT) AS s FROM n),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT id, s FROM s3 ORDER BY id""".stripMargin
-    },
-    // t120 twin: identical oriented wedge closure over the canonical
-    // a<b edge set; per-node counts from the three corners
-    "t120_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1 JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (SELECT x AS id FROM tri UNION ALL
-        |  SELECT y FROM tri UNION ALL SELECT z FROM tri),
-        |pn AS (SELECT id, count(*) AS n_triangles FROM corners GROUP BY 1),
-        |n AS (SELECT a AS id FROM e UNION SELECT b FROM e)
-        |SELECT n.id, CAST(coalesce(pn.n_triangles, 0) AS BIGINT) AS n_triangles
-        |FROM n LEFT JOIN pn ON pn.id = n.id ORDER BY n.id""".stripMargin,
-    // t134 twin: the same planted hub, degree filter on the full
-    // canonical edge set, then t120's wedge closure on the survivors
-    "t134_triangles_capped" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |  UNION
-        |  SELECT DISTINCT least(p_partkey, 9999999) AS a,
-        |    greatest(p_partkey, 9999999) AS b
-        |  FROM part WHERE p_partkey % 3 = 0 AND p_partkey <> 9999999),
-        |deg AS (SELECT id, count(*) AS d FROM
-        |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |keep AS (SELECT id FROM deg WHERE d <= 100),
-        |e AS (SELECT a, b FROM e0
-        |  WHERE a IN (SELECT id FROM keep) AND b IN (SELECT id FROM keep)),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1 JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (SELECT x AS id FROM tri UNION ALL
-        |  SELECT y FROM tri UNION ALL SELECT z FROM tri),
-        |pn AS (SELECT id, count(*) AS n_triangles FROM corners GROUP BY 1),
-        |n AS (SELECT a AS id FROM e UNION SELECT b FROM e)
-        |SELECT n.id, CAST(coalesce(pn.n_triangles, 0) AS BIGINT) AS n_triangles
-        |FROM n LEFT JOIN pn ON pn.id = n.id ORDER BY n.id""".stripMargin,
-    // t136 twin: identical hash-Bernoulli edge sample (cut =
-    // floor(0.25*2^32)), t120's wedge closure on the sample, the
-    // same exact 64.0 (=1/0.25^3) scale-up quantized to 4 dp
-    "t136_triangles_sampled" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS (SELECT DISTINCT a.pk AS a, b.pk AS b
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |e AS (SELECT a, b FROM e0
-        |  WHERE CAST(('0x'||substr(md5('tri:'||a||':'||b),1,8)) AS BIGINT) < 1073741824),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1 JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (SELECT x AS id FROM tri UNION ALL
-        |  SELECT y FROM tri UNION ALL SELECT z FROM tri),
-        |pn AS (SELECT id, count(*) AS n_sampled FROM corners GROUP BY 1),
-        |n AS (SELECT a AS id FROM e UNION SELECT b FROM e)
-        |SELECT n.id, CAST(coalesce(pn.n_sampled, 0) AS BIGINT) AS n_sampled,
-        |  floor(CAST(coalesce(pn.n_sampled, 0) AS DOUBLE) * 64.0 * 10000.0 + 0.5)/10000.0 AS est_triangles
-        |FROM n LEFT JOIN pn ON pn.id = n.id ORDER BY n.id""".stripMargin,
-    // t118 twin: identical planted snapshot B (edit/drop/re-id arms)
-    // and identical normalized-fingerprint comparison
-    "t118_corpus_diff" ->
-      """WITH b AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp_a
-        |  FROM documents),
-        |a0 AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || ' re-crawl edit' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 11 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 13 = 0),
-        |a AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp_b
-        |  FROM a0)
-        |SELECT coalesce(b.doc_id, a.doc_id) AS doc_id,
-        |  CASE WHEN fp_a IS NULL THEN 'added'
-        |       WHEN fp_b IS NULL THEN 'removed'
-        |       WHEN fp_a = fp_b THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM b FULL OUTER JOIN a ON a.doc_id = b.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    // t124 twin: the t71 domain chain + t28's quality CTEs, the same
-    // integer score sums and integer blocklist comparison
-    "t124_domain_quality" ->
-      s"""WITH $urlNormCte,
-         |t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','is','to','in'], x))) AS BIGINT) AS n_stop
-         |  FROM t),
-         |q AS (SELECT doc_id, CAST(floor(
-         |  (${q4("CAST(n_uniq AS DOUBLE)/n_tokens*0.5 + least(CAST(n_tokens AS DOUBLE)/100.0, 1.0)*0.3 + (1.0 - CAST(n_stop AS DOUBLE)/n_tokens)*0.2")})
-         |  * 10000.0 + 0.5) AS BIGINT) AS q4i
-         |  FROM m WHERE n_tokens > 0),
-         |g AS (SELECT n.domain, count(*) AS n_docs,
-         |  CAST(sum(q.q4i) AS BIGINT) AS sq, min(q.q4i) AS minq
-         |  FROM n JOIN q ON q.doc_id = n.doc_id GROUP BY 1)
-         |SELECT domain, n_docs,
-         |  floor(CAST(sq AS DOUBLE) / 10000.0 / n_docs * 1000000.0 + 0.5) / 1000000.0 AS mean_quality,
-         |  CAST(minq AS DOUBLE) / 10000.0 AS min_quality,
-         |  sq < 7000 * n_docs AS blocked
-         |FROM g ORDER BY domain""".stripMargin,
-    // t115 twin: the t71 canonicalization chain -> distinct per-domain
-    // URLs -> the same (url_norm) rank rule
-    "t115_crawl_schedule" ->
-      s"""WITH $urlNormCte,
-         |d AS (SELECT DISTINCT domain, url_norm FROM n)
-         |SELECT domain, url_norm, CAST(row_number() OVER (
-         |    PARTITION BY domain ORDER BY url_norm) AS BIGINT) AS slot
-         |FROM d ORDER BY domain, slot""".stripMargin,
-    "t23_dedup_exact" -> exactDedupSql,
-    // q121 twin: t23's verbatim — exact dedup driven from SQL text
-    "q121_exact_dedup_sql" -> exactDedupSql,
-    // q122 twin: t25's verbatim — the banded minhash recompute
-    "q122_minhash_lsh_sql" -> minhashPairsSql,
-    // incremental-exact twin: the full recompute restricted to new
-    // rows — the global min per fingerprint decomposes into
-    // least(indexed canonical, shard minimum), so both forms agree
-    "t66_incremental_exact" ->
-      """WITH fp AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |c AS (SELECT fp, min(doc_id) AS canonical_id FROM fp GROUP BY 1)
-        |SELECT f.doc_id, c.canonical_id, f.doc_id <> c.canonical_id AS is_dup
-        |FROM fp f JOIN c ON f.fp = c.fp WHERE f.doc_id % 5 = 0
-        |ORDER BY f.doc_id""".stripMargin,
-    // chunk-extraction twin: identical 1-based substring arithmetic
-    // with the geometry interpolated from TextOps (single source of
-    // truth); starts are 1 + k·stride so the chunk_id division is exact
-    "t68_chunk_text" ->
-      s"""WITH d AS (SELECT doc_id, text, length(text) AS len
-         |  FROM documents WHERE length(text) > 0),
-         |s AS (SELECT doc_id, text,
-         |  CAST(unnest(range(1, len + 1, $chunkStride)) AS INTEGER) AS start FROM d)
-         |SELECT doc_id, CAST((start - 1) // $chunkStride AS BIGINT) AS chunk_id,
-         |  CAST(start AS BIGINT) AS start,
-         |  substring(text, start, ${TextOps.DefaultChunkWidth}) AS chunk
-         |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
-    // duplicated-substring twin: same 5-gram unit (space-joined md5),
-    // same >1-occurrence rule, same gaps-and-islands merge
-    "t69_substring_dedup" ->
-      """WITH tk AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    md5(array_to_string(t[i:i+4], ' ')) AS gfp
-        |  FROM tk, LATERAL (SELECT unnest(range(1, len(t)-5+2)) AS i) u
-        |  WHERE len(t) >= 5),
-        |d AS (SELECT gfp FROM g GROUP BY gfp HAVING count(*) > 1),
-        |h AS (SELECT doc_id, pos FROM g JOIN d USING (gfp)),
-        |isl AS (SELECT doc_id, pos,
-        |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM h)
-        |SELECT doc_id, min(pos) AS span_start, count(*) AS n_grams,
-        |  max(pos)-min(pos)+5 AS span_tokens
-        |FROM isl GROUP BY doc_id, grp ORDER BY doc_id, span_start""".stripMargin,
-    // paragraph-dedup twin: identical planted corpus (constants
-    // interpolated from Dedup.BoilerParagraphs — single source of
-    // truth), identical first-occurrence rule ((doc_id, pos)
-    // lexicographic min per paragraph md5), identical reassembly
-    "t70_paragraph_dedup" -> paragraphDedupSql(""),
-    // incremental twin: the full recompute restricted to shard docs —
-    // kept flags are computed over ALL occurrences, only the output
-    // docs are filtered (= least(indexed, local) decomposition)
-    "t75_incremental_paragraphs" -> paragraphDedupSql("WHERE doc_id % 5 = 0"),
-    // URL twins: identical planted construction, identical rule chain
-    // (pattern constants interpolated from UrlOps — single source of
-    // truth); RE2 and Java agree on every pattern used
-    "t71_url_dedup" ->
-      s"""WITH $urlNormCte,
-         |m AS (SELECT url_norm, min(doc_id) AS canonical_id FROM n GROUP BY 1)
-         |SELECT n.doc_id, n.url_norm, n.domain, m.canonical_id,
-         |  n.doc_id <> m.canonical_id AS is_dup
-         |FROM n JOIN m USING (url_norm) ORDER BY n.doc_id""".stripMargin,
-    "t72_domain_stats" ->
-      s"""WITH $urlNormCte
-         |SELECT domain, count(*) AS n_docs,
-         |  count(DISTINCT url_norm) AS n_unique_urls
-         |FROM n GROUP BY 1 ORDER BY 1""".stripMargin,
-    // classifier twin: same 60-bit md5 feature hash, same integer
-    // weight formula (constants from TextOps), same exact long sum
-    // with the two divisions + quantize at the end
-    "t74_classifier_score" ->
-      s"""WITH w AS (SELECT i AS bucket,
-         |  (${TextOps.ClassifierA}*i + ${TextOps.ClassifierB}) % ${TextOps.ClassifierP} AS w_int
-         |  FROM (SELECT unnest(range(0, 4096)) AS i)),
-         |tk AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % 4096 AS bucket
-         |  FROM (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |s AS (SELECT doc_id, count(*) AS n_tokens, sum(w_int) AS s
-         |  FROM tk JOIN w USING (bucket) GROUP BY 1)
-         |SELECT doc_id, n_tokens,
-         |  floor((CAST(s AS DOUBLE)/n_tokens/${TextOps.ClassifierP}.0 - 0.5)*10000.0+0.5)/10000.0 AS score,
-         |  floor((CAST(s AS DOUBLE)/n_tokens/${TextOps.ClassifierP}.0 - 0.5)*10000.0+0.5)/10000.0 > 0.0 AS keep
-         |FROM s ORDER BY doc_id""".stripMargin,
-    // Morton-interleave twin: the same 16+16 shift/mask terms
-    "t73_zorder_key" ->
-      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         | ${(0 until 16).map(i =>
-              s"(((l_partkey >> $i) & 1) << ${2 * i + 1}) + (((l_suppkey >> $i) & 1) << ${2 * i})")
-              .mkString("\n |  + ")} AS zkey
-         |FROM lineitem
-         |ORDER BY zkey, l_orderkey, l_linenumber""".stripMargin,
-    // removal twin: t69's span CTEs → covered token positions
-    // (adjacent islands CAN overlap in token space → DISTINCT) →
-    // anti-join → ordered reassembly; sub-k-gram docs pass untouched
-    "t82_substring_removal" ->
-      """WITH tk AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    md5(array_to_string(t[i:i+4], ' ')) AS gfp
-        |  FROM tk, LATERAL (SELECT unnest(range(1, len(t)-5+2)) AS i) u
-        |  WHERE len(t) >= 5),
-        |d AS (SELECT gfp FROM g GROUP BY gfp HAVING count(*) > 1),
-        |h AS (SELECT doc_id, pos FROM g JOIN d USING (gfp)),
-        |isl AS (SELECT doc_id, pos,
-        |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM h),
-        |sp AS (SELECT doc_id, min(pos) AS s, max(pos)-min(pos)+5 AS n
-        |  FROM isl GROUP BY doc_id, grp),
-        |cov AS (SELECT DISTINCT doc_id, CAST(s + u.i AS BIGINT) AS pos
-        |  FROM sp, LATERAL (SELECT unnest(range(0, n)) AS i) u),
-        |p AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, t[i] AS tok
-        |  FROM tk, LATERAL (SELECT unnest(range(1, len(t)+1)) AS i) u),
-        |kept AS (SELECT p.doc_id, p.pos, p.tok FROM p ANTI JOIN cov
-        |  ON cov.doc_id = p.doc_id AND cov.pos = p.pos),
-        |nt AS (SELECT doc_id, count(*) AS n_tokens FROM p GROUP BY 1),
-        |k2 AS (SELECT doc_id, count(*) AS n_kept,
-        |  string_agg(tok, ' ' ORDER BY pos) AS clean_text FROM kept GROUP BY 1)
-        |SELECT nt.doc_id, nt.n_tokens,
-        |  nt.n_tokens - coalesce(k2.n_kept, 0) AS n_removed,
-        |  coalesce(k2.clean_text, '') AS clean_text
-        |FROM nt LEFT JOIN k2 ON k2.doc_id = nt.doc_id
-        |ORDER BY nt.doc_id""".stripMargin,
-    // tf-idf vector twin: identical bucket hash, identical integer
-    // numerators, same deferred division; exploded (doc_id, i, x)
-    // rows from a doc × range(dim) grid left-joined to bucket sums
-    "s46_tfidf_vectors" ->
-      s"""WITH w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |nd AS (SELECT count(*) AS n_docs FROM documents),
-         |bw AS (SELECT doc_id,
-         |    CAST(('0x'||substr(md5(term),1,15)) AS BIGINT) % 64 AS b,
-         |    CAST(sum(tf * (n_docs - df)) AS BIGINT) AS num
-         |  FROM tf JOIN df USING (term) CROSS JOIN nd GROUP BY 1, 2),
-         |grid AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM tf),
-         |  (SELECT unnest(range(0, 64)) AS i))
-         |SELECT g.doc_id, CAST(g.i AS BIGINT) AS i,
-         |    CAST(coalesce(bw.num, 0) AS DOUBLE) / nd.n_docs AS x
-         |  FROM grid g LEFT JOIN bw ON bw.doc_id = g.doc_id AND bw.b = g.i
-         |  CROSS JOIN nd
-         |ORDER BY g.doc_id, g.i""".stripMargin,
-    // tf-idf search twin: the s46 vectors rebuilt (list-assembled this
-    // time — the dot needs arrays), the query folded with the SAME
-    // corpus idf into INTEGER components (scale-invariant cosine
-    // skips the /N), sequential-fold cosine quantized before ranking
-    "s47_tfidf_search" ->
-      s"""WITH w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |nd AS (SELECT count(*) AS n_docs FROM documents),
-         |bw AS (SELECT doc_id,
-         |    CAST(('0x'||substr(md5(term),1,15)) AS BIGINT) % 64 AS b,
-         |    CAST(sum(tf * (n_docs - df)) AS BIGINT) AS num
-         |  FROM tf JOIN df USING (term) CROSS JOIN nd GROUP BY 1, 2),
-         |grid AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM tf),
-         |  (SELECT unnest(range(0, 64)) AS i)),
-         |dv AS (SELECT g.doc_id,
-         |    list(CAST(coalesce(bw.num, 0) AS DOUBLE) / nd.n_docs ORDER BY g.i) AS v
-         |  FROM grid g LEFT JOIN bw ON bw.doc_id = g.doc_id AND bw.b = g.i
-         |  CROSS JOIN nd GROUP BY 1),
-         |qt AS (SELECT unnest(regexp_extract_all(lower('$SearchQuery'), '[a-z0-9]+')) AS term),
-         |qtf AS (SELECT term, count(*) AS tf FROM qt GROUP BY 1),
-         |qbw AS (SELECT CAST(('0x'||substr(md5(term),1,15)) AS BIGINT) % 64 AS b,
-         |    CAST(sum(tf * (n_docs - df)) AS BIGINT) AS num
-         |  FROM qtf JOIN df USING (term) CROSS JOIN nd GROUP BY 1),
-         |qv AS (SELECT list(CAST(coalesce(q.num, 0) AS DOUBLE) ORDER BY g.i) AS v
-         |  FROM (SELECT unnest(range(0, 64)) AS i) g LEFT JOIN qbw q ON q.b = g.i),
-         |sc AS (SELECT a.doc_id,
-         |    floor(${sqlDot("a", "b")} /
-         |      (sqrt(list_sum(list_transform(range(1,65), i -> a.v[i]*a.v[i]))) *
-         |       sqrt(list_sum(list_transform(range(1,65), i -> b.v[i]*b.v[i]))))
-         |      *1000000.0+0.5)/1000000.0 AS score
-         |  FROM dv a CROSS JOIN qv b
-         |  WHERE sqrt(list_sum(list_transform(range(1,65), i -> a.v[i]*a.v[i]))) > 0
-         |    AND sqrt(list_sum(list_transform(range(1,65), i -> b.v[i]*b.v[i]))) > 0)
-         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk,
-         |  doc_id, score
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-    // s56 twin: the s47 vector CTEs + the s42 assignment shape —
-    // seed centroids are the first 8 non-zero-norm docs' vectors,
-    // cosine is the sequential-fold dot over both lists, argmax by
-    // (sim DESC, cid), quantized to 6 dp in the output
-    "s56_topic_clusters" ->
-      s"""WITH $topicClusterCtes
-         |SELECT doc_id, cid, floor(sim*1000000.0+0.5)/1000000.0 AS cos
-         |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // t109 twin: the s56 assignment CTEs as the stratum for the t52
-    // rank rule — per-CLUSTER content-hash selection (the pre-filter
-    // is lossless, so the twin ranks everything per cid)
-    "t109_cluster_sample" ->
-      s"""WITH $topicClusterCtes,
-         |asg AS (SELECT doc_id, cid FROM r WHERE rn = 1),
-         |hh AS (SELECT doc_id,
-         |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
-         |  FROM documents),
-         |j AS (SELECT asg.cid, asg.doc_id, hh.h FROM asg JOIN hh USING (doc_id))
-         |SELECT cid, rnk, doc_id, h FROM (
-         |  SELECT cid, doc_id, h,
-         |    CAST(row_number() OVER (PARTITION BY cid ORDER BY h, doc_id) AS BIGINT) AS rnk
-         |  FROM j) WHERE rnk <= 5 ORDER BY cid, rnk""".stripMargin,
-    // s53 twin: identical integer-cleared BM25 — same 44/20/6/18
-    // coefficients, same single division per (doc, term), same
-    // 6-dp integer quantization and integer per-doc sum
-    "s53_bm25_search" ->
-      s"""WITH w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |lens AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY 1),
-         |tot AS (SELECT CAST(sum(len) AS BIGINT) AS sl, count(*) AS nd FROM lens),
-         |qt AS (SELECT DISTINCT unnest(regexp_extract_all(lower('$SearchQuery'), '[a-z0-9]+')) AS term),
-         |m AS (SELECT tf.doc_id,
-         |  CAST(floor(
-         |    (44.0*(nd-df)*tf*sl) / (20.0*tf*sl + 6.0*sl + 18.0*len*nd)
-         |    * 1000000.0 + 0.5) AS BIGINT) AS ts
-         |  FROM tf JOIN qt USING (term) JOIN df USING (term)
-         |    JOIN lens ON lens.doc_id = tf.doc_id CROSS JOIN tot),
-         |s AS (SELECT doc_id, CAST(sum(ts) AS DOUBLE)/1000000.0 AS score
-         |  FROM m GROUP BY 1)
-         |SELECT rnk, doc_id, score FROM (
-         |  SELECT doc_id, score,
-         |    CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         |  FROM s)
-         |WHERE rnk <= 10 ORDER BY rnk""".stripMargin,
-    // s55 twin: the s53 arithmetic with query_id carried through —
-    // VALUES query table, per-query rank window, same 44/20/6/18
-    // integer-cleared scoring and 6-dp quantization
-    "s55_bm25_batch" -> bm25BatchSql,
-    // t117 twin: s55's full-corpus SQL verbatim — the merged shard
-    // indexes must serve identical rankings to a one-shot build
-    "t117_incremental_bm25" -> bm25BatchSql,
-    // t122 twin: s55's full-corpus SQL verbatim — the stream-built
-    // index must serve identical rankings
-    "t122_stream_bm25" -> bm25BatchSql,
-    // CMS twin: the identical sketch — same salted md5-prefix bucket
-    // hash ('d:' || gram, 60-bit '0x' cast ≡ Spark's conv(hex,16,10)),
-    // same (d, bucket) counters over bigram OCCURRENCES, same sampled
-    // candidate slice, min-over-depth estimate, threshold 30
-    "t84_cms_heavy_hitters" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |occ AS (SELECT doc_id,
-         |    unnest(list_transform(range(1, len(tk)), i -> array_to_string(tk[i:i+1], ' '))) AS gram
-         |  FROM t WHERE len(tk) >= 2),
-         |dd AS (SELECT unnest(range(0, 4)) AS d),
-         |sk AS (SELECT d,
-         |    CAST(('0x'||substr(md5(d::VARCHAR||':'||gram),1,15)) AS BIGINT) % 2048 AS bucket,
-         |    count(*) AS cnt
-         |  FROM occ, dd GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT gram FROM occ WHERE doc_id % 20 = 0),
-         |probe AS (SELECT gram, d,
-         |    CAST(('0x'||substr(md5(d::VARCHAR||':'||gram),1,15)) AS BIGINT) % 2048 AS bucket
-         |  FROM cand, dd),
-         |est AS (SELECT p.gram, min(s.cnt) AS est
-         |  FROM probe p JOIN sk s ON s.d = p.d AND s.bucket = p.bucket GROUP BY 1)
-         |SELECT gram, est FROM est WHERE est >= 30 ORDER BY gram""".stripMargin,
-    // PII twin: identical planted tail, identical pattern constants
-    // (interpolated from TextOps — single source of truth), identical
-    // email→phone→IP order with counts on the text as redacted so far
-    "t67_pii_redact" ->
-      s"""WITH p AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 7 = 0 THEN text || ' reach user' || doc_id ||
-         |    '@mail.example or 555-867-5309 from 10.0.0.' || (doc_id % 250)
-         |  ELSE text END AS text FROM documents),
-         |e AS (SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${TextOps.EmailRe}')) AS BIGINT) AS n_emails,
-         |  regexp_replace(text, '${TextOps.EmailRe}', '[EMAIL]', 'g') AS t1 FROM p),
-         |ph AS (SELECT doc_id, n_emails,
-         |  CAST(len(regexp_extract_all(t1, '${TextOps.PhoneRe}')) AS BIGINT) AS n_phones,
-         |  regexp_replace(t1, '${TextOps.PhoneRe}', '[PHONE]', 'g') AS t2 FROM e)
-         |SELECT doc_id, n_emails, n_phones,
-         |  CAST(len(regexp_extract_all(t2, '${TextOps.Ipv4Re}')) AS BIGINT) AS n_ips,
-         |  regexp_replace(t2, '${TextOps.Ipv4Re}', '[IP]', 'g') AS redacted
-         |FROM ph ORDER BY doc_id""".stripMargin,
-    "t24_jaccard_pairs" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM w a JOIN w b ON a.tok = b.tok AND a.doc_id < b.doc_id GROUP BY 1,2)
-         |SELECT doc_a, doc_b,
-         | ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} AS jac
-         |FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.6
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // minhash twin: identical affine family — ONE md5 per token
-    // (60-bit prefix mod p), then min((a_i·h + b_i) mod p) per
-    // signature row, with the seeded coefficients baked in as
-    // literals. Bound a·h+b < 2^62: DuckDB BIGINT multiply errors on
-    // overflow instead of wrapping, so the 31-bit modulus matters.
-    "t25_minhash_lsh" -> minhashPairsSql,
-    // streamed near-dup intake: every pair is found exactly once
-    // under range sharding (in b's batch, in-batch or vs the index),
-    // so the emission union must equal t25's one-shot recompute —
-    // the twin is shared verbatim
-    "t90_stream_neardup_pairs" -> minhashPairsSql,
-    // streamed exact dedup: emissions ⋈ final index must equal the
-    // batch min-per-fingerprint rule on the identically-planted
-    // corpus (re-ingests under +1e6 ids; an in-batch novel-text dup
-    // pair under +2e6/+3e6 — mirrors StreamGates.exactDedupGate)
-    "t88_stream_exact_dedup" ->
-      """WITH pl AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 9 = 2
-        |  UNION ALL SELECT doc_id + 2000000, text || ' zz novel tail' FROM documents WHERE doc_id % 25 = 10
-        |  UNION ALL SELECT doc_id + 3000000, text || ' zz novel tail' FROM documents WHERE doc_id % 25 = 10),
-        |fp AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |  FROM pl)
-        |SELECT min(doc_id) AS doc_id, fp FROM fp GROUP BY fp
-        |ORDER BY doc_id""".stripMargin,
-    // streamed paragraph dedup: arrival-order firstness under range
-    // sharding equals the batch least() rule, so the emission union
-    // is exactly t70's planted-corpus recompute — twin shared
-    "t89_stream_paragraph_dedup" -> paragraphDedupSql(""),
-    // incremental-dedup twin: the SAME affine family and band rule as
-    // t25, but the band index is folded INTO the key (md5("b,h..")) —
-    // one-column candidate join — and candidacy requires ≥1 side in
-    // the new shard (doc_id ≡ 0 mod 5). A full recompute restricted
-    // this way equals the incremental new×(old∪new) probe exactly.
-    "t63_incremental_dedup" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |hb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % $mhP AS h FROM w),
-         |sig AS (SELECT doc_id,
-         |  ${mhCoeffs.zipWithIndex.map { case ((a, b), i) =>
-              s"min(($a*h+$b) % $mhP) AS h$i" }.mkString(",\n         |  ")}
-         |  FROM hb GROUP BY 1),
-         |band AS (
-         |  ${(0 until 4).map(b =>
-              s"SELECT doc_id, md5('$b,'||${(4 * b until 4 * b + 4).map(i => s"h$i::VARCHAR").mkString("||','||")})${if (b == 0) " AS k" else ""} FROM sig")
-              .mkString(" UNION ALL\n         |  ")}),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM band a JOIN band b ON a.k = b.k AND a.doc_id < b.doc_id
-         |  WHERE a.doc_id % 5 = 0 OR b.doc_id % 5 = 0),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-         |  FROM cand c JOIN w wa ON wa.doc_id = c.doc_a
-         |  JOIN w wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2)
-         |SELECT p.doc_a, p.doc_b,
-         | ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} AS jac
-         |FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // HLL++ internals aren't oracle-portable; the declared output is
-    // exact counts + within-10%-of-exact booleans (see Relational
-    // scaladoc), which the oracle CAN check.
-    "q38_approx_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_suppliers,
-        | count(DISTINCT l_partkey) AS n_parts,
-        | TRUE AS suppliers_ok, TRUE AS parts_ok
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // DataSketches HLL bytes aren't oracle-portable (q38 precedent);
-    // the declared output is exact counts + within-tolerance booleans
-    "q49_incremental_ndv" ->
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        | count(DISTINCT l_suppkey) AS n_suppliers,
-        | TRUE AS parts_ok, TRUE AS suppliers_ok
-        |FROM lineitem""".stripMargin,
-    "t81_table_profile" -> t81Sql,
-    // GK-sketch internals aren't oracle-portable (q38 precedent); the
-    // declared output is exact percentiles + within-tolerance booleans
-    "q48_approx_quantiles" ->
-      s"""SELECT l_returnflag,
-         | ${q4("quantile_cont(l_quantity, 0.5)")} AS med_qty,
-         | ${q4("quantile_cont(l_extendedprice, 0.9)")} AS p90_price,
-         | TRUE AS med_ok, TRUE AS p90_ok,
-         | count(*) AS n_lines
-         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Spark `percentile` == DuckDB `quantile_cont` (SQL-standard
-    // rank interpolation; verified bit-identical on this data)
-    "q44_percentiles" ->
-      s"""SELECT l_returnflag,
-         | ${q4("quantile_cont(l_quantity, 0.5)")} AS med_qty,
-         | ${q4("quantile_cont(l_quantity, 0.9)")} AS p90_qty,
-         | ${q4("quantile_cont(l_extendedprice, 0.5)")} AS med_price,
-         | count(*) AS n_lines
-         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // CAST to BIGINT: DuckDB's sum() over integers returns HUGEINT
-    // (decimal128 in parquet), while Spark's pivot+count emits BIGINT —
-    // same values, different physical type, hash mismatch (round-2
-    // judge-reproduced).
-    "q46_status_pivot" ->
-      """SELECT o_orderpriority,
-        | CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS "F",
-        | CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS "O",
-        | CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS "P"
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q47_ship_delay" ->
-      s"""SELECT o_orderpriority,
-         | ${meanL("datediff('day', o_orderdate, l_shipdate)")} AS avg_delay,
-         | min(datediff('day', o_orderdate, l_shipdate)) AS min_delay,
-         | max(datediff('day', o_orderdate, l_shipdate)) AS max_delay,
-         | count(*) AS n_lines
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q45_rank_variants" ->
-      s"""SELECT p_brand, p_partkey,
-         | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-         | ${q4("percent_rank() OVER w")} AS pr,
-         | ${q4("cume_dist() OVER w")} AS cd
-         |FROM part WINDOW w AS (PARTITION BY p_brand ORDER BY p_retailprice, p_partkey)
-         |ORDER BY p_brand, p_partkey""".stripMargin,
-    "q43_event_heatmap" ->
-      """SELECT CAST(floor(value/25.0) AS BIGINT) AS x_bin,
-        | CAST(floor(CAST(json_extract_string(props, '$.k') AS BIGINT)/2.0) AS BIGINT) AS y_bin,
-        | count(*) AS n
-        |FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
-        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // SimHash is deterministic md5 bit-math — fully SQL-expressible.
-    // DuckDB parses '0x…' hex strings in BIGINT casts; verified equal
-    // to Spark's conv(hex,16,10) on the same md5 prefix.
-    "t26_simhash_pairs" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |h AS (SELECT doc_id, CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) AS h FROM w),
-         |b AS (SELECT doc_id, j, sum(CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) AS s
-         |  FROM h, (SELECT unnest(range(0,60)) AS j) GROUP BY 1,2),
-         |sh AS (SELECT doc_id,
-         |  sum(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0::BIGINT END) AS simhash
-         |  FROM b GROUP BY 1),
-         |chunk AS (SELECT doc_id, simhash, c, (simhash >> (c*15)) & 32767 AS ckey
-         |  FROM sh, (SELECT unnest(range(0,4)) AS c)),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |  FROM chunk a JOIN chunk b
-         |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, hamming FROM cand
-         |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin,
-    // word-3-gram shingles; DuckDB list_slice bounds are INCLUSIVE
-    // (tk[i:i+2] is 3 tokens) and docs under 3 tokens drop on both
-    // sides (empty shingle set can share nothing)
-    "t41_ngram_jaccard" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |s AS (SELECT doc_id,
-         |  list_distinct(list_transform(range(1, len(tk)-1), i -> array_to_string(tk[i:i+2], ' '))) AS sh
-         |  FROM t WHERE len(tk) >= 3),
-         |w AS (SELECT DISTINCT doc_id, unnest(sh) AS tok FROM s),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM w a JOIN w b ON a.tok = b.tok AND a.doc_id < b.doc_id GROUP BY 1,2)
-         |SELECT doc_a, doc_b,
-         | ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} AS jac
-         |FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.6
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "t42_bpeish_tokens" ->
-      s"""SELECT source, CAST(sum(n) AS BIGINT) AS total_tokens,
-         | ${meanL("n")} AS avg_tokens, count(*) AS n_docs
-         |FROM (SELECT source,
-         |   CAST(len(regexp_extract_all(lower(text), '${graft.ops.TextOps.bpeishPattern.replace("'", "''")}')) AS BIGINT) AS n
-         | FROM documents)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // connected components over the jaccard>=0.6 pair graph, as a
-    // recursive transitive closure (min reachable node per doc)
-    "t49_dedup_clusters" ->
-      s"""WITH RECURSIVE
-         |w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM w a JOIN w b ON a.tok = b.tok AND a.doc_id < b.doc_id GROUP BY 1,2),
-         |pr AS (SELECT doc_a, doc_b
-         |  FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |  WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.6),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |      UNION SELECT doc_b, doc_a FROM pr),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src)
-         |SELECT id AS doc_id, min(r) AS cluster_id,
-         |  (id = min(r)) AS is_canonical
-         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    // repeated-3-gram fraction; shingles WITH multiplicity
-    "t48_repetition" -> t48Sql,
-    // t243 twin: identical planting, identical 13-gram hit rule
-    "t243_ngram_decontaminate" -> ngramDecontaminateSql,
-    // q124 twin: t243's verbatim — the 13-gram rule driven from SQL
-    // text must render the identical contamination report
-    "q124_decontaminate_sql" -> ngramDecontaminateSql,
-    // q117 twin: t48 verbatim — the SQL-text call of the native
-    // codegen expression must render the identical rows
-    "q117_native_fn_sql" -> t48Sql,
-
-    // decontamination twin: same stop-shingle cap (df <= 150 over ALL
-    // docs), same kept-shingle denominator, same (containment DESC,
-    // train_id) tiebreak
-    "t50_decontaminate" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |s0 AS (SELECT doc_id,
-         |  unnest(list_distinct(list_transform(range(1, len(tk)-1), i -> array_to_string(tk[i:i+2], ' ')))) AS s
-         |  FROM t WHERE len(tk) >= 3),
-         |keep AS (SELECT s FROM (SELECT s, count(*) AS df FROM s0 GROUP BY 1) WHERE df <= 150),
-         |k AS (SELECT s0.doc_id, s0.s FROM s0 JOIN keep USING (s)),
-         |tn AS (SELECT doc_id, count(*) AS tn FROM k WHERE doc_id % 20 = 0 GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS test_id, b.doc_id AS train_id, count(*) AS inter
-         |  FROM k a JOIN k b ON a.s = b.s AND a.doc_id % 20 = 0 AND b.doc_id % 20 <> 0
-         |  GROUP BY 1,2),
-         |scored AS (SELECT test_id, train_id,
-         |  ${q4("CAST(inter AS DOUBLE)/tn.tn")} AS containment
-         |  FROM inter JOIN tn ON tn.doc_id = test_id)
-         |SELECT test_id AS doc_id, train_id, containment FROM (
-         |  SELECT test_id, train_id, containment,
-         |    row_number() OVER (PARTITION BY test_id ORDER BY containment DESC, train_id) AS rn
-         |  FROM scored) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // split twin: 16-bit md5 prefix of the normalized text, mod 10
-    "t51_split_assign" ->
-      """WITH b AS (SELECT source, n_chars,
-        |  CAST(('0x'||substr(md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))),1,4)) AS BIGINT) % 10 AS bucket
-        |  FROM documents)
-        |SELECT source,
-        | CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val' ELSE 'test' END AS split,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM b GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // stratified sample twin: same (content-hash, doc_id) order, same
-    // per-source quota — md5 hex strings compare identically (ASCII)
-    "t52_sample_stratified" -> stratSampleSql,
-    // t110 twin: t52's FULL-CORPUS SQL verbatim — the incremental fold
-    // (yesterday's sample index + today's shard) must reproduce the
-    // one-shot sample bit-for-bit, which is the exactness claim of
-    // hash-smallest greedy maintenance
-    "t110_incremental_sample" -> stratSampleSql,
-    // linear-idf score tf/df: single IEEE division of exact integers —
-    // bit-identical in every engine (ln is libm-dependent, so no log)
-    "t53_tfidf_terms" ->
-      s"""WITH w AS (SELECT doc_id, unnest($toks) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1,2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-         |SELECT doc_id, rnk, term, score FROM (
-         |  SELECT tf.doc_id, tf.term, CAST(tf.tf AS DOUBLE)/df.df AS score,
-         |    CAST(row_number() OVER (PARTITION BY tf.doc_id
-         |      ORDER BY CAST(tf.tf AS DOUBLE)/df.df DESC, tf.term) AS BIGINT) AS rnk
-         |  FROM tf JOIN df USING (term))
-         |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    // packing twin: same per-source doc_id-ordered cumulative sum; the
-    // integral-valued floor division is exact as DOUBLE (< 2^53)
-    "t54_seq_pack" ->
-      s"""WITH t AS (SELECT source, doc_id, CAST(len($toks) AS BIGINT) AS n FROM documents),
-         |o AS (SELECT source, doc_id, n,
-         |  CAST(sum(n) OVER (PARTITION BY source ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off
-         |  FROM t)
-         |SELECT source, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-         | count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    // filter twin: integer cross-multiplied rule bounds, coalesce(,0)
-    // because DuckDB list_aggregate of an empty list is NULL where
-    // Spark's aggregate returns the seed
-    "t55_quality_filter" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM t)
-         |SELECT doc_id, n AS n_tokens,
-         | (n >= 20 AND n <= 400) AS ok_len,
-         | (sum_len >= 3*n AND sum_len <= 10*n) AS ok_word_len,
-         | (n_stop >= 2) AS ok_stopwords,
-         | (5*n_uniq >= n) AS ok_ttr,
-         | (n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |   AND n_stop >= 2 AND 5*n_uniq >= n) AS keep
-         |FROM m ORDER BY doc_id""".stripMargin,
-    "t135_crawl_corpus_build" -> t135Sql,
-    // t228 twin: the batch capstone's SQL verbatim — the streaming
-    // intake must converge to the identical corpus
-    "t228_stream_crawl_corpus" -> t135Sql,
-    "t240_stream_crawl_multiday" -> t240Sql,
-    // t229 twin: the identical 3 unrolled BPE rounds (builder above)
-    "t229_bpe_merges" -> bpeUnrolledSql(steps = 3),
-    // capstone twin: the t23 dedup CTE → t55 rule bounds → t51 split
-    // rule (same fingerprint) → t54 packing per (source, split)
-    "t56_corpus_build" ->
-      s"""WITH fp AS (SELECT doc_id, source, text,
-         |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM documents),
-         |c AS (SELECT fp, min(doc_id) AS canonical_id FROM fp GROUP BY 1),
-         |canon AS (SELECT f.doc_id, f.source, f.text, f.fp
-         |  FROM fp f JOIN c ON f.fp = c.fp WHERE f.doc_id = c.canonical_id),
-         |t AS (SELECT doc_id, source,
-         |  CASE WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 8 THEN 'train'
-         |       WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 9 THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  $toks AS tk FROM canon),
-         |m AS (SELECT doc_id, source, split,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM t),
-         |k AS (SELECT source, split, doc_id, n FROM m
-         |  WHERE n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |    AND n_stop >= 2 AND 5*n_uniq >= n),
-         |o AS (SELECT source, split, doc_id, n,
-         |  CAST(sum(n) OVER (PARTITION BY source, split ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off FROM k)
-         |SELECT source, split, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-         | count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-    // incremental-capstone twin: t56's pipeline with dedup restricted
-    // the t66 way — history (doc_id % 5 != 0) contributes ONLY its fp
-    // set; a shard doc survives iff its fp is new to history and it
-    // is the shard's min for that fp; tail verbatim (offsets restart
-    // within the shard — finalized shards are immutable). The planted
-    // re-ingestions (+1e6 from history, +2e6 intra-shard copies) are
-    // constructed identically here; all must be dropped.
-    "t86_incremental_corpus_build" ->
-      s"""WITH shard0 AS (
-         |  SELECT doc_id, source, text FROM documents WHERE doc_id % 5 = 0
-         |  UNION ALL SELECT doc_id + 1000000, source, text FROM documents
-         |    WHERE doc_id % 5 != 0 AND doc_id % 9 = 2
-         |  UNION ALL SELECT doc_id + 2000000, source, text FROM documents
-         |    WHERE doc_id % 25 = 10),
-         |fp AS (SELECT doc_id, source, text,
-         |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM shard0),
-         |hist AS (SELECT DISTINCT
-         |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM documents WHERE doc_id % 5 != 0),
-         |shard AS (SELECT * FROM fp),
-         |c AS (SELECT fp, min(doc_id) AS canonical_id FROM shard GROUP BY 1),
-         |canon AS (SELECT s.doc_id, s.source, s.text, s.fp
-         |  FROM shard s JOIN c ON s.fp = c.fp
-         |  WHERE s.doc_id = c.canonical_id AND s.fp NOT IN (SELECT fp FROM hist)),
-         |t AS (SELECT doc_id, source,
-         |  CASE WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 8 THEN 'train'
-         |       WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 9 THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  $toks AS tk FROM canon),
-         |m AS (SELECT doc_id, source, split,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM t),
-         |k AS (SELECT source, split, doc_id, n FROM m
-         |  WHERE n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |    AND n_stop >= 2 AND 5*n_uniq >= n),
-         |o AS (SELECT source, split, doc_id, n,
-         |  CAST(sum(n) OVER (PARTITION BY source, split ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off FROM k)
-         |SELECT source, split, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-         | count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-    // incremental near-dup build twin: t63's banded-LSH incremental
-    // candidate rule (≥1 shard side) at τ=0.9, split into the two
-    // drop rules — cross-history pairs drop their shard side
-    // (history-authoritative), shard-internal pairs close recursively
-    // (t80 fragment) and drop non-min members — then t56's tail over
-    // shard survivors
-    "t87_incremental_neardup_build" ->
-      s"""WITH RECURSIVE
-         |w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |hb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % $mhP AS h FROM w),
-         |sig AS (SELECT doc_id,
-         |  ${mhCoeffs.zipWithIndex.map { case ((a, b), i) =>
-              s"min(($a*h+$b) % $mhP) AS h$i" }.mkString(",\n         |  ")}
-         |  FROM hb GROUP BY 1),
-         |band AS (
-         |  ${(0 until 4).map(b =>
-              s"SELECT doc_id, md5('$b,'||${(4 * b until 4 * b + 4).map(i => s"h$i::VARCHAR").mkString("||','||")})${if (b == 0) " AS k" else ""} FROM sig")
-              .mkString(" UNION ALL\n         |  ")}),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM band a JOIN band b ON a.k = b.k AND a.doc_id < b.doc_id
-         |  WHERE a.doc_id % 5 = 0 OR b.doc_id % 5 = 0),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-         |  FROM cand c JOIN w wa ON wa.doc_id = c.doc_a
-         |  JOIN w wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2),
-         |pr AS (SELECT p.doc_a, p.doc_b
-         |  FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |  WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.9),
-         |hd AS (SELECT DISTINCT
-         |    CASE WHEN doc_a % 5 = 0 AND doc_b % 5 != 0 THEN doc_a ELSE doc_b END AS doc_id
-         |  FROM pr WHERE (doc_a % 5 = 0) != (doc_b % 5 = 0)),
-         |sp AS (SELECT doc_a, doc_b FROM pr WHERE doc_a % 5 = 0 AND doc_b % 5 = 0),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM sp
-         |      UNION SELECT doc_b, doc_a FROM sp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src),
-         |cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-         |nc AS (SELECT doc_id FROM cl WHERE doc_id != cluster_id),
-         |dropped AS (SELECT doc_id FROM hd UNION SELECT doc_id FROM nc),
-         |kept0 AS (SELECT d.doc_id, d.source, d.text,
-         |    md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM documents d
-         |  WHERE d.doc_id % 5 = 0
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM dropped)),
-         |t AS (SELECT doc_id, source,
-         |  CASE WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 8 THEN 'train'
-         |       WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 9 THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  $toks AS tk FROM kept0),
-         |m AS (SELECT doc_id, source, split,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM t),
-         |k AS (SELECT source, split, doc_id, n FROM m
-         |  WHERE n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |    AND n_stop >= 2 AND 5*n_uniq >= n),
-         |o AS (SELECT source, split, doc_id, n,
-         |  CAST(sum(n) OVER (PARTITION BY source, split ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off FROM k)
-         |SELECT source, split, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-         | count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-    // near-dup capstone twin: t49's recursive cluster closure picks
-    // the survivors (cluster-less docs keep themselves), then t56's
-    // split/filter/pack tail verbatim
-    "t80_corpus_build_neardup" ->
-      s"""WITH RECURSIVE
-         |w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest($toks) AS tok FROM documents)),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM w a JOIN w b ON a.tok = b.tok AND a.doc_id < b.doc_id GROUP BY 1,2),
-         |pr AS (SELECT doc_a, doc_b
-         |  FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |  WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.9),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-         |      UNION SELECT doc_b, doc_a FROM pr),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e UNION SELECT src, dst FROM e
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src),
-         |cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-         |kept0 AS (SELECT d.doc_id, d.source, d.text,
-         |    md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id
-         |  WHERE cl.cluster_id IS NULL OR d.doc_id = cl.cluster_id),
-         |t AS (SELECT doc_id, source,
-         |  CASE WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 8 THEN 'train'
-         |       WHEN CAST(('0x'||substr(fp,1,4)) AS BIGINT) % 10 < 9 THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  $toks AS tk FROM kept0),
-         |m AS (SELECT doc_id, source, split,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM t),
-         |k AS (SELECT source, split, doc_id, n FROM m
-         |  WHERE n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |    AND n_stop >= 2 AND 5*n_uniq >= n),
-         |o AS (SELECT source, split, doc_id, n,
-         |  CAST(sum(n) OVER (PARTITION BY source, split ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS off FROM k)
-         |SELECT source, split, CAST(floor(CAST(off AS DOUBLE)/512.0) AS BIGINT) AS seq_id,
-         | count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-    // mixture twin: identical arithmetic chain — integer floor-div
-    // budget/n_sources, exactly-rounded rate division, power-of-two
-    // scale, floor — then the same 32-bit hash-prefix threshold
-    "t57_mixture_sample" ->
-      """WITH h AS (SELECT doc_id, source,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
-        |  FROM documents),
-        |c AS (SELECT source, count(*) AS n_docs FROM h GROUP BY 1),
-        |ns AS (SELECT count(*) AS n_sources FROM c),
-        |r AS (SELECT source, n_docs,
-        |  CAST(floor(CAST(200 AS DOUBLE) / n_sources) AS BIGINT) AS target,
-        |  floor(least(1.0, CAST(CAST(floor(CAST(200 AS DOUBLE) / n_sources) AS BIGINT) AS DOUBLE) / n_docs) * 4294967296.0) AS cut
-        |  FROM c CROSS JOIN ns)
-        |SELECT h.source, count(*) AS n_docs, r.target AS target,
-        | CAST(sum(CASE WHEN CAST(CAST(('0x'||substr(h.h,1,8)) AS BIGINT) AS DOUBLE) < r.cut
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM h JOIN r ON r.source = h.source
-        |GROUP BY 1, r.target ORDER BY 1""".stripMargin,
-    // temperature-mixture twin: identical integer-quantized √n
-    // weights (w = floor(sqrt(n)·1e6) — sqrt correctly rounded IEEE
-    // in both engines, floor exact below 2^53), integer-div targets,
-    // same md5-prefix keep rule as t57
-    "t92_mixture_temperature" ->
-      """WITH h AS (SELECT doc_id, source,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
-        |  FROM documents),
-        |c AS (SELECT source, count(*) AS n_docs FROM h GROUP BY 1),
-        |wt AS (SELECT source, n_docs,
-        |  CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000.0) AS BIGINT) AS w FROM c),
-        |tt AS (SELECT sum(w) AS w_total FROM wt),
-        |r AS (SELECT source, n_docs, w,
-        |  CAST((200 * w) // w_total AS BIGINT) AS target,
-        |  floor(least(1.0, CAST((200 * w) // w_total AS DOUBLE) / n_docs) * 4294967296.0) AS cut
-        |  FROM wt CROSS JOIN tt)
-        |SELECT h.source, count(*) AS n_docs, r.w AS w, r.target AS target,
-        | CAST(sum(CASE WHEN CAST(CAST(('0x'||substr(h.h,1,8)) AS BIGINT) AS DOUBLE) < r.cut
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM h JOIN r ON r.source = h.source
-        |GROUP BY 1, r.w, r.target ORDER BY 1""".stripMargin,
-    // shuffle-order twin: the same seeded key, one global window (the
-    // oracle may centralize; the engine's two-phase rank may not)
-    "t91_shuffle_order" ->
-      """SELECT doc_id,
-        |  CAST(row_number() OVER (ORDER BY md5('42:' || doc_id), doc_id) AS BIGINT) AS pos
-        |FROM documents ORDER BY pos""".stripMargin,
-    // vocabulary twin: same (count desc, token) total order for both
-    // the top-k cut and the dense ids
-    "t58_vocabulary" -> vocabSql,
-    // t232 twin: the streamed count-MV must equal the one-shot
-    // vocabulary verbatim
-    "t232_stream_vocab" -> vocabSql,
-    // t236 twin: the streamed moment-MV must equal the one-shot OLS
-    "t236_stream_trend" -> trendSql,
-    // t239 twin: identical histogram rank cut per (grp, isodow) cell
-    "t239_weekday_profile" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    CAST(o_orderdate AS DATE) AS d, count(*) AS x
-        |  FROM orders GROUP BY 1, 2),
-        |h AS (SELECT grp, isodow(d) AS wd, x, count(*) AS c
-        |  FROM daily GROUP BY 1, 2, 3),
-        |cum AS (SELECT grp, wd, x, c,
-        |    sum(c) OVER (PARTITION BY grp, wd ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(c) OVER (PARTITION BY grp, wd) AS n FROM h)
-        |SELECT grp, CAST(wd AS BIGINT) AS wd,
-        |  CAST(max(n) AS BIGINT) AS n_days,
-        |  CAST(min(x) AS BIGINT) AS median_daily
-        |FROM cum WHERE cum >= (n + 1) // 2
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // t237 twin: the identical pair-sign sum over the same series
-    "t237_mann_kendall" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-        |      AS t, count(*) AS x
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT a.grp, count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN b.x > a.x THEN 1
-        |    WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        |FROM daily a JOIN daily b ON a.grp = b.grp AND a.t < b.t
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t235 twin: the identical HUGEINT moments and micro DIV with the
-    // same variance guard (shared with the streamed MV t236)
-    "t235_linear_trend" -> trendSql,
-    // t241 twin: the identical histogram-rank interval-overlap math.
-    // t242 (streaming histogram MV) must render the SAME rows — twin
-    // shared verbatim
-    "t241_trimmed_mean" -> trimmedMeanSql,
-    "t242_stream_trimmed_mean" -> trimmedMeanSql,
-    // t238 twin: the identical pair-slope micro DIV and lower-median
-    // rank cut under the same (sm, ta, tb) total order
-    "t238_theil_sen" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-        |      AS t, count(*) AS x
-        |  FROM orders GROUP BY 1, 2),
-        |p AS (SELECT a.grp, a.t AS ta, b.t AS tb,
-        |    ((b.x - a.x) * 1000000) // (b.t - a.t) AS sm
-        |  FROM daily a JOIN daily b ON a.grp = b.grp AND a.t < b.t),
-        |r AS (SELECT grp, sm,
-        |    row_number() OVER (PARTITION BY grp ORDER BY sm, ta, tb) AS rn,
-        |    count(*) OVER (PARTITION BY grp) AS m FROM p)
-        |SELECT grp, CAST(m AS BIGINT) AS n_pairs,
-        |  CAST(sm AS BIGINT) AS theil_sen_micro
-        |FROM r WHERE rn = (m + 1) // 2 ORDER BY grp""".stripMargin,
-    // t234 twin: the identical grid-containment rule over the same
-    // cumulative weight layout (HUGEINT grid arithmetic)
-    "t234_pps_sample" ->
-      s"""WITH s AS (SELECT doc_id AS id,
-         |    CAST(len($toks) AS BIGINT) AS w FROM documents),
-         |c AS (SELECT id, w, sum(w) OVER (ORDER BY id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
-         |  FROM s),
-         |t AS (SELECT max(hi) AS wtot FROM c),
-         |g AS (SELECT j, CAST((CAST(wtot AS HUGEINT) * (2*j + 1)) // 32
-         |    AS BIGINT) AS g
-         |  FROM t CROSS JOIN (SELECT unnest(range(0, 16)) AS j))
-         |SELECT g.j AS sample_ord, c.id, c.w
-         |FROM c JOIN g ON g.g >= c.hi - c.w AND g.g < c.hi
-         |ORDER BY sample_ord""".stripMargin,
-    // t233 twin: the identical lower-median element index over the
-    // same ROWS frame — no interpolation on either side
-    "t233_rolling_median" ->
-      """WITH daily AS (SELECT o_orderpriority AS grp,
-        |    date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-        |      AS tt, count(*) AS x
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT grp, CAST(tt AS BIGINT) AS t, CAST(x AS BIGINT) AS x,
-        |  CAST((list_sort(list(x) OVER w))[
-        |    CAST((count(*) OVER w + 1) // 2 AS BIGINT)] AS BIGINT) AS med
-        |FROM daily
-        |WINDOW w AS (PARTITION BY grp ORDER BY tt
-        |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY grp, t""".stripMargin,
-    // t231 twin: DuckDB's real ntile under the identical (v, id)
-    // total order, then the per-bucket statistics
-    "t231_column_stats" ->
-      """WITH b AS (SELECT CAST(floor(o_totalprice*100.0+0.5) AS BIGINT) AS v,
-        |    o_orderkey AS id FROM orders),
-        |t AS (SELECT v, id,
-        |    CAST(ntile(8) OVER (ORDER BY v, id) AS BIGINT) AS bucket FROM b)
-        |SELECT bucket, count(*) AS n, count(DISTINCT v) AS ndv,
-        |  min(v) AS min_v, max(v) AS max_v
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-    // co-occurrence twin: parallel unnests zip positions with tokens;
-    // the ratio multiplies exactly-representable ints as doubles, so
-    // the single division (then quant) is bit-identical
-    "t59_cooccurrence" ->
-      s"""WITH tk AS (SELECT doc_id, $toks AS tks FROM documents),
-         |pos AS (SELECT doc_id, unnest(range(1, len(tks)+1)) AS pos, unnest(tks) AS tok FROM tk),
-         |p AS (SELECT least(a.tok, b.tok) AS ta, greatest(a.tok, b.tok) AS tb,
-         |    count(*) AS c_ab
-         |  FROM pos a JOIN pos b ON a.doc_id = b.doc_id
-         |    AND b.pos > a.pos AND b.pos <= a.pos + 2
-         |  GROUP BY 1,2),
-         |c AS (SELECT tok, count(*) AS c FROM pos GROUP BY 1),
-         |n AS (SELECT count(*) AS n_tok FROM pos),
-         |s AS (SELECT ta, tb, c_ab,
-         |  floor((CAST(n_tok AS DOUBLE) * CAST(c_ab AS DOUBLE))
-         |    / (CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE)) * 1000000.0 + 0.5)/1000000.0 AS score
-         |  FROM p JOIN c ca ON ca.tok = p.ta JOIN c cb ON cb.tok = p.tb CROSS JOIN n)
-         |SELECT ta, tb, c_ab, score FROM s
-         |ORDER BY score DESC, ta, tb LIMIT 50""".stripMargin,
-    // BPE first-iteration twin: same word-type weights, same adjacent
-    // character pairs, same (freq DESC, pair) total order
-    "t76_bpe_pairs" ->
-      s"""WITH w AS (SELECT tok AS w, count(*) AS cnt
-         |  FROM (SELECT unnest($toks) AS tok FROM documents) GROUP BY 1),
-         |p AS (SELECT substring(w, i, 1) || ' ' || substring(w, i+1, 1) AS pair, cnt
-         |  FROM w, LATERAL (SELECT unnest(range(1, length(w))) AS i) u
-         |  WHERE length(w) >= 2)
-         |SELECT pair, CAST(sum(cnt) AS BIGINT) AS freq
-         |FROM p GROUP BY 1 ORDER BY freq DESC, pair LIMIT 20""".stripMargin,
-    // LM-counts twin: parallel list indexing builds the trigrams
-    "t77_lm_counts" ->
-      s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-         |g AS (SELECT tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
-         |  FROM tk, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) u
-         |  WHERE len(tk) >= 3)
-         |SELECT w1, w2, count(*) AS n_trigrams,
-         |  count(DISTINCT w3) AS n_continuations
-         |FROM g GROUP BY 1,2 ORDER BY n_trigrams DESC, w1, w2 LIMIT 50""".stripMargin,
-    // t94 twin: same trigram stream, same doc_id % 10 < 3 reference
-    // slice, same three DISTINCT backoff tables and CASE ladder; the
-    // only double is the final floor(x·1e6+0.5)/1e6 coverage ratio
-    "t94_lm_coverage" ->
-      s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-         |g AS (SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
-         |  FROM tk, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) u
-         |  WHERE len(tk) >= 3),
-         |r3 AS (SELECT DISTINCT w1, w2, w3 FROM g WHERE doc_id % 10 < 3),
-         |r2 AS (SELECT DISTINCT w2, w3 FROM g WHERE doc_id % 10 < 3),
-         |r1 AS (SELECT DISTINCT w3 FROM g WHERE doc_id % 10 < 3),
-         |lv AS (SELECT g.doc_id,
-         |  CASE WHEN r3.w1 IS NOT NULL THEN 3
-         |       WHEN r2.w2 IS NOT NULL THEN 2
-         |       WHEN r1.w3 IS NOT NULL THEN 1 ELSE 0 END AS lvl
-         |  FROM g
-         |  LEFT JOIN r3 ON g.w1 = r3.w1 AND g.w2 = r3.w2 AND g.w3 = r3.w3
-         |  LEFT JOIN r2 ON g.w2 = r2.w2 AND g.w3 = r2.w3
-         |  LEFT JOIN r1 ON g.w3 = r1.w3
-         |  WHERE g.doc_id % 10 >= 3)
-         |SELECT doc_id, count(*) AS n_tri,
-         |  CAST(sum(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit3,
-         |  CAST(sum(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit2,
-         |  CAST(sum(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit1,
-         |  CAST(sum(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-         |  floor(CAST(sum(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*) * 1000000.0 + 0.5) / 1000000.0 AS coverage
-         |FROM lv GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    // t102 twin: the UNSALTED join — the salted path's whole contract
-    "t102_salted_join" ->
-      s"""SELECT p_brand, count(*) AS n_items, ${mny(rev)} AS revenue
-         |FROM lineitem JOIN part ON p_partkey = l_partkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // t103 twin: same integer epoch rule ((n_max+n-1)//n capped at 4)
-    "t103_mixture_epochs" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |mx AS (SELECT max(n) AS n_max FROM c),
-        |r AS (SELECT source, least((n_max + n - 1) // n, 4) AS epochs
-        |  FROM c CROSS JOIN mx)
-        |SELECT doc_id, d.source, CAST(u.e AS BIGINT) AS epoch
-        |FROM documents d JOIN r ON r.source = d.source,
-        |  LATERAL (SELECT unnest(range(1, epochs + 1)) AS e) u
-        |ORDER BY doc_id, epoch""".stripMargin,
-    // t104 twin: t50's containment CTEs with the holdout predicate
-    // swapped for t51's content-hash bucket rule (bucket >= 8)
-    "t104_split_leakage" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk,
-         |  CAST(('0x'||substr(md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))),1,4)) AS BIGINT) % 10 AS bucket
-         |  FROM documents),
-         |s0 AS (SELECT doc_id, bucket >= 8 AS is_test,
-         |  unnest(list_distinct(list_transform(range(1, len(tk)-1), i -> array_to_string(tk[i:i+2], ' ')))) AS s
-         |  FROM t WHERE len(tk) >= 3),
-         |keep AS (SELECT s FROM (SELECT s, count(*) AS df FROM s0 GROUP BY 1) WHERE df <= 150),
-         |k AS (SELECT s0.doc_id, s0.is_test, s0.s FROM s0 JOIN keep USING (s)),
-         |tn AS (SELECT doc_id, count(*) AS tn FROM k WHERE is_test GROUP BY 1),
-         |inter AS (SELECT a.doc_id AS test_id, b.doc_id AS train_id, count(*) AS inter
-         |  FROM k a JOIN k b ON a.s = b.s AND a.is_test AND NOT b.is_test
-         |  GROUP BY 1,2),
-         |scored AS (SELECT test_id, train_id,
-         |  ${q4("CAST(inter AS DOUBLE)/tn.tn")} AS containment
-         |  FROM inter JOIN tn ON tn.doc_id = test_id)
-         |SELECT test_id AS doc_id, train_id, containment FROM (
-         |  SELECT test_id, train_id, containment,
-         |    row_number() OVER (PARTITION BY test_id ORDER BY containment DESC, train_id) AS rn
-         |  FROM scored) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // t107 twin: the t25 minhash recompute with the candidate join
-    // RESTRICTED to train-side × eval-side under the t104 bucket rule
-    // — same affine family, band keys, and quantized Jaccard verify;
-    // within-split pairs must be absent by construction
-    "t107_cross_decontaminate" ->
-      s"""WITH base AS (SELECT doc_id, $toks AS tk,
-         |  CAST(('0x'||substr(md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))),1,4)) AS BIGINT) % 10 AS bucket
-         |  FROM documents),
-         |w AS (SELECT DISTINCT doc_id, tok FROM
-         |  (SELECT doc_id, unnest(tk) AS tok FROM base)),
-         |hb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(tok),1,15)) AS BIGINT) % $mhP AS h FROM w),
-         |sig AS (SELECT doc_id,
-         |  ${mhCoeffs.zipWithIndex.map { case ((a, b), i) =>
-            s"min(($a*h+$b) % $mhP) AS h$i" }.mkString(",\n         |  ")}
-         |  FROM hb GROUP BY 1),
-         |band AS (
-         |  ${(0 until 4).map(b =>
-            s"SELECT doc_id, $b${if (b == 0) " AS b" else ""}, md5(${(4 * b until 4 * b + 4).map(i => s"h$i::VARCHAR").mkString("||','||")})${if (b == 0) " AS k" else ""} FROM sig")
-            .mkString(" UNION ALL\n         |  ")}),
-         |side AS (SELECT doc_id, bucket FROM base),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM band a JOIN band b ON a.b = b.b AND a.k = b.k
-         |  JOIN side sa ON sa.doc_id = a.doc_id
-         |  JOIN side sb ON sb.doc_id = b.doc_id
-         |  WHERE sa.bucket < 8 AND sb.bucket >= 8),
-         |n AS (SELECT doc_id, count(*) AS n FROM w GROUP BY 1),
-         |p AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-         |  FROM cand c JOIN w wa ON wa.doc_id = c.doc_a
-         |  JOIN w wb ON wb.doc_id = c.doc_b AND wb.tok = wa.tok GROUP BY 1,2)
-         |SELECT p.doc_a AS train_id, p.doc_b AS eval_id,
-         | ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} AS jac
-         |FROM p JOIN n na ON na.doc_id = p.doc_a JOIN n nb ON nb.doc_id = p.doc_b
-         |WHERE ${q4("CAST(inter AS DOUBLE)/(na.n+nb.n-inter)")} >= 0.5
-         |ORDER BY train_id, eval_id""".stripMargin,
-    // t95 twin: same md5-prefix unigram buckets (the s46 hash), same
-    // target slice, same integer weight table (one floored division
-    // per bucket), same integer per-doc sums + one deferred division
-    "t95_importance_weights" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($toks) AS w FROM documents),
-         |tb AS (SELECT doc_id,
-         |  CAST(('0x'||substr(md5(w),1,15)) AS BIGINT) % 1024 AS b FROM tk),
-         |tc AS (SELECT b, count(*) AS tc FROM tb WHERE doc_id % 10 < 3 GROUP BY 1),
-         |rc AS (SELECT b, count(*) AS rc FROM tb WHERE doc_id % 10 >= 3 GROUP BY 1),
-         |wt AS (SELECT rc.b,
-         |  CAST(floor(CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
-         |    / (rc.rc + 1) * 1000000.0 + 0.5) AS BIGINT) AS wq
-         |  FROM rc LEFT JOIN tc ON tc.b = rc.b)
-         |SELECT doc_id, count(*) AS n_tok,
-         |  CAST(sum(wq) AS BIGINT) AS swq,
-         |  floor(CAST(sum(wq) AS DOUBLE) / 1000000.0 / count(*)
-         |    * 1000000.0 + 0.5) / 1000000.0 AS score
-         |FROM tb JOIN wt ON wt.b = tb.b
-         |WHERE doc_id % 10 >= 3
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    // inverted-index twin: same 3-gram phrase unit, same rare-gram
-    // cap, same ordered doc:pos postings (0-based positions)
-    "t78_inverted_index" ->
-      s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-         |p AS (SELECT doc_id, CAST(i-1 AS INTEGER) AS pos,
-         |    array_to_string(tk[i:i+2], ' ') AS term
-         |  FROM tk, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) u
-         |  WHERE len(tk) >= 3)
-         |SELECT term, count(DISTINCT doc_id) AS df, count(*) AS n_postings,
-         |  string_agg(doc_id || ':' || pos, ',' ORDER BY doc_id, pos) AS postings
-         |FROM p GROUP BY 1 HAVING count(DISTINCT doc_id) <= 3
-         |ORDER BY term""".stripMargin,
-    // corpus-card twin: t23's dedup CTE + t55's rule bounds + plain
-    // aggregates, one row
-    "t79_corpus_card" ->
-      s"""WITH fp AS (SELECT doc_id,
-         |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-         |  FROM documents),
-         |c AS (SELECT fp, min(doc_id) AS canonical_id FROM fp GROUP BY 1),
-         |dup AS (SELECT f.doc_id, f.doc_id <> c.canonical_id AS is_dup
-         |  FROM fp f JOIN c ON f.fp = c.fp),
-         |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(['the','a','of','and','is','to','in'], s -> list_contains(tk, s))) AS BIGINT) AS n_stop
-         |  FROM (SELECT doc_id, $toks AS tk FROM documents)),
-         |k AS (SELECT doc_id, n,
-         |  (n >= 20 AND n <= 400 AND sum_len >= 3*n AND sum_len <= 10*n
-         |    AND n_stop >= 2 AND 5*n_uniq >= n) AS keep FROM m),
-         |t AS (SELECT doc_id, lang, source FROM documents)
-         |SELECT count(*) AS n_docs, CAST(sum(k.n) AS BIGINT) AS n_tokens,
-         |  count(DISTINCT t.lang) AS n_langs, count(DISTINCT t.source) AS n_sources,
-         |  CAST(sum(CASE WHEN dup.is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_dups,
-         |  CAST(sum(CASE WHEN k.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_keep
-         |FROM t JOIN dup ON dup.doc_id = t.doc_id JOIN k ON k.doc_id = t.doc_id""".stripMargin,
-    // winnowing twin: same k-gram hash sequence (60-bit md5 prefix),
-    // same length-w window minima; DuckDB list slices are INCLUSIVE
-    // (hs[i:i+3] is 4 hashes) and both engines min over BIGINTs
-    "t62_winnow" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |h AS (SELECT doc_id,
-         |  list_transform(range(1, len(tk)-1), i -> CAST(('0x'||substr(md5(array_to_string(tk[i:i+2], ' ')),1,15)) AS BIGINT)) AS hs
-         |  FROM t WHERE len(tk) >= 3),
-         |s AS (SELECT doc_id, CAST(len(hs) AS BIGINT) AS n_shingles,
-         |  CASE WHEN len(hs) >= 4
-         |    THEN list_distinct(list_transform(range(1, len(hs)-2), i -> list_min(hs[i:i+3])))
-         |    ELSE [list_min(hs)] END AS fp
-         |  FROM h WHERE len(hs) > 0)
-         |SELECT doc_id, n_shingles, CAST(len(fp) AS BIGINT) AS n_fp,
-         | list_min(fp) AS fp_min, list_max(fp) AS fp_max
-         |FROM s ORDER BY doc_id""".stripMargin,
-    // boilerplate twin: t50's distinct-shingle CTE, df count, same
-    // (df desc, shingle) total order for cut and ranks
-    "t61_boilerplate" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |s AS (SELECT doc_id,
-         |  unnest(list_distinct(list_transform(range(1, len(tk)-1), i -> array_to_string(tk[i:i+2], ' ')))) AS shingle
-         |  FROM t WHERE len(tk) >= 3),
-         |c AS (SELECT shingle, count(*) AS df FROM s GROUP BY 1)
-         |SELECT CAST(row_number() OVER (ORDER BY df DESC, shingle) AS BIGINT) AS rnk,
-         | shingle, df
-         |FROM c WHERE df >= 2 ORDER BY df DESC, shingle LIMIT 50""".stripMargin,
-    // chunk-plan twin: identical integer ceil arithmetic
-    "t60_chunk_plan" ->
-      s"""WITH t AS (SELECT source, CAST(len($toks) AS BIGINT) AS n FROM documents),
-         |c AS (SELECT source, n,
-         |  CASE WHEN n = 0 THEN 0
-         |       ELSE 1 + (greatest(n - 64, 0) + 31) // 32 END AS chunks
-         |  FROM t)
-         |SELECT source, count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
-         | CAST(sum(chunks) AS BIGINT) AS n_chunks,
-         | CAST(sum(CASE WHEN chunks = 0 THEN 0
-         |   ELSE greatest((chunks-1)*32 + 64 - n, 0) END) AS BIGINT) AS pad_tokens
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    // centroid twin: parallel unnests zip dims with components; the
-    // per-component mean is cmean (order-independent, engine-exact)
-    "s37_label_centroids" ->
-      s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |x AS (SELECT label, unnest(range(1,65)) AS dim, unnest(v) AS x FROM e)
-         |SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
-         | ${cmean("x")} AS m, count(*) AS n
-         |FROM x GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "t27_langid" ->
-      s"""WITH t AS (SELECT lang, $toks AS tk FROM documents),
-         |s AS (SELECT lang,
-         |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','is'], x))) AS BIGINT) AS s_en,
-         |  CAST(len(list_filter(tk, x -> list_contains(['el','la','de','que','los'], x))) AS BIGINT) AS s_es,
-         |  CAST(len(list_filter(tk, x -> list_contains(['der','die','das','und','ist'], x))) AS BIGINT) AS s_de,
-         |  CAST(len(list_filter(tk, x -> list_contains(['le','les','des','et','est'], x))) AS BIGINT) AS s_fr
-         |  FROM t),
-         |p AS (SELECT lang,
-         |  CASE WHEN greatest(s_en,s_es,s_de,s_fr) > 0 THEN
-         |    CASE WHEN s_en = greatest(s_en,s_es,s_de,s_fr) THEN 'en'
-         |         WHEN s_es = greatest(s_en,s_es,s_de,s_fr) THEN 'es'
-         |         WHEN s_de = greatest(s_en,s_es,s_de,s_fr) THEN 'de'
-         |         ELSE 'fr' END
-         |  ELSE 'unknown' END AS pred_lang FROM s)
-         |SELECT lang, pred_lang, count(*) AS n_docs FROM p GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "t28_quality" ->
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_uniq,
-         |  CAST(list_aggregate(list_transform(tk, x -> length(x)), 'sum') AS BIGINT) AS sum_len,
-         |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','is','to','in'], x))) AS BIGINT) AS n_stop
-         |  FROM t)
-         |SELECT doc_id, n_tokens, n_uniq,
-         | ${q4("CAST(sum_len AS DOUBLE)/n_tokens")} AS avg_token_len,
-         | ${q4("CAST(n_uniq AS DOUBLE)/n_tokens")} AS uniq_ratio,
-         | ${q4("CAST(n_stop AS DOUBLE)/n_tokens")} AS stop_ratio,
-         | ${q4("CAST(n_uniq AS DOUBLE)/n_tokens*0.5 + least(CAST(n_tokens AS DOUBLE)/100.0, 1.0)*0.3 + (1.0 - CAST(n_stop AS DOUBLE)/n_tokens)*0.2")} AS quality_score
-         |FROM m WHERE n_tokens > 0 ORDER BY doc_id""".stripMargin,
-    "t29_token_counts" ->
-      s"""SELECT source, CAST(sum(n) AS BIGINT) AS total_tokens,
-         | ${meanL("n")} AS avg_tokens, count(*) AS n_docs
-         |FROM (SELECT source, CAST(len($toks) AS BIGINT) AS n FROM documents)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "t30_fingerprints" ->
-      """SELECT doc_id,
-        | md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        | n_chars - n_chars % 100 AS len_bucket
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Golden frames for the connector-transform queries: the fixture
-    // payload is fixed, so the oracle is the expected output itself.
-    "q39_widen_arrays" ->
-      """SELECT * FROM (VALUES
-        | (8000000001, true, 2400, 14,21,34,51,86, 7,19,40,72,99),
-        | (8000000002, false, 1800, 1,2,3,4,5, 6,8,9,10,11),
-        | (8000000003, true, 3105, NULL,NULL,NULL,NULL,NULL, NULL,NULL,NULL,NULL,NULL)
-        |) AS t(match_id, radiant_win, duration,
-        |  radiant_hero_1, radiant_hero_2, radiant_hero_3, radiant_hero_4, radiant_hero_5,
-        |  dire_hero_1, dire_hero_2, dire_hero_3, dire_hero_4, dire_hero_5)
-        |ORDER BY match_id""".stripMargin,
-    "q40_map_pivot" ->
-      """SELECT * FROM (VALUES ('0','Normal'),('1','Practice'),('7','Ranked'))
-        |AS t(lobby_id, name) ORDER BY lobby_id""".stripMargin,
-    // q41 golden frame: fixture match 1 — radiant {14,21,34,51,86}
-    // beats dire {7,19,40,72,99}; match 2 — dire {6,8,9,10,11} beats
-    // radiant {1..5}; match 3 has no team arrays and contributes no
-    // hero rows
-    "q41_hero_win_rate" ->
-      """SELECT * FROM (VALUES
-        | (1,1,0,0.0),(2,1,0,0.0),(3,1,0,0.0),(4,1,0,0.0),(5,1,0,0.0),
-        | (6,1,1,1.0),(7,1,0,0.0),(8,1,1,1.0),(9,1,1,1.0),(10,1,1,1.0),
-        | (11,1,1,1.0),(14,1,1,1.0),(19,1,0,0.0),(21,1,1,1.0),(34,1,1,1.0),
-        | (40,1,0,0.0),(51,1,1,1.0),(72,1,0,0.0),(86,1,1,1.0),(99,1,0,0.0)
-        |) AS t(hero_id, games, wins, win_rate) ORDER BY hero_id""".stripMargin,
-    // multimodal metadata twins: the VALUES list is GENERATED from
-    // Fixtures.mediaMeta (same Seq that builds the Spark frame), so
-    // fixture and oracle cannot drift. Division is forced to DOUBLE —
-    // a bare 256.0 literal is DECIMAL in DuckDB and divides by
-    // different rules than Spark's double math.
-    "t64_resize_plan" ->
-      s"""WITH m(media_id, kind, width, height, duration_ms, codec) AS (VALUES
-         |  $mediaValues),
-         |s AS (SELECT media_id, width, height,
-         |  least(CAST(256 AS DOUBLE)/width, CAST(256 AS DOUBLE)/height,
-         |        CAST(1 AS DOUBLE)) AS sc
-         |  FROM m WHERE kind = 'image')
-         |SELECT media_id, width, height,
-         |  CAST(floor(width*sc) AS INTEGER) AS target_width,
-         |  CAST(floor(height*sc) AS INTEGER) AS target_height
-         |FROM s ORDER BY media_id""".stripMargin,
-    "t65_frame_sample" ->
-      s"""WITH m(media_id, kind, width, height, duration_ms, codec) AS (VALUES
-         |  $mediaValues)
-         |SELECT media_id, frame_ms, width, height, codec FROM (
-         |  SELECT media_id, unnest(range(0, duration_ms, 1000)) AS frame_ms,
-         |    width, height, codec
-         |  FROM m WHERE kind = 'video' AND duration_ms > 0)
-         |ORDER BY media_id, frame_ms""".stripMargin,
-    // t101 twin: same stride sequence, same clamped partial tail
-    "t101_audio_chunks" ->
-      s"""WITH m(media_id, kind, width, height, duration_ms, codec) AS (VALUES
-         |  $mediaValues)
-         |SELECT media_id, start_ms, least(start_ms + 10000, duration_ms) AS end_ms,
-         |  codec FROM (
-         |  SELECT media_id, unnest(range(0, duration_ms, 5000)) AS start_ms,
-         |    duration_ms, codec
-         |  FROM m WHERE kind = 'audio' AND duration_ms > 0)
-         |ORDER BY media_id, start_ms""".stripMargin,
-    // t93 twin: the GOLDEN pair frame, derived by hand from the aHash
-    // definition over the half-split fixture (MediaOps
-    // .goldenImageFixture scaladoc walks the derivation) — the q41
-    // golden-oracle pattern for a pipeline SQL can't recompute
-    // (PNG decode). Any drift in decode, grid averaging, thresholding,
-    // chunking or the hamming verify breaks the match.
-    "t93_image_neardup" ->
-      """SELECT * FROM (VALUES
-        | (1, 2, 0), (1, 3, 1), (2, 3, 1)
-        |) AS t(media_a, media_b, hamming) ORDER BY media_a, media_b""".stripMargin,
-    // t105 twin: the GOLDEN incremental pair frame — re-encoded
-    // patterns at new ids against the indexed t93 corpus, derived by
-    // hand from the aHash definition (goldenImageProbeFixture
-    // scaladoc). Old×old pairs (1,2)/(1,3)/(2,3) are absent BY
-    // CONSTRUCTION — their appearance would fail the hash match.
-    "t105_incremental_image_neardup" ->
-      """SELECT * FROM (VALUES
-        | (CAST(1 AS BIGINT), CAST(11 AS BIGINT), CAST(0 AS BIGINT)),
-        | (1, 14, 0), (2, 11, 0), (2, 14, 0), (3, 11, 1), (3, 14, 1),
-        | (4, 12, 0), (11, 14, 0)
-        |) AS t(media_a, media_b, hamming) ORDER BY media_a, media_b""".stripMargin,
-    // t106 twin: the GOLDEN audio window-pair frame, derived by hand
-    // from the envelope-hash definition over the half-split WAV
-    // fixture (MediaOps.goldenAudioFixture scaladoc walks the
-    // derivation). The 16 kHz re-encode pairs at hamming 0, the
-    // first-bin edit at exactly 1 bit; the reversed envelope (64
-    // bits away) must be absent.
-    "t106_audio_neardup" ->
-      """SELECT * FROM (VALUES
-        | (CAST(21 AS BIGINT), CAST(22 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        | (21, 23, 0, 1), (22, 23, 0, 1)
-        |) AS t(media_a, media_b, start_ms, hamming)
-        |ORDER BY media_a, media_b, start_ms""".stripMargin,
-    // t108 twin: the GOLDEN incremental audio pair frame — re-encoded
-    // envelopes at new ids against the indexed t106 corpus, derived by
-    // hand from the envelope-hash definition (goldenAudioProbeFixture
-    // scaladoc). Old×old pairs (21,22)/(21,23)/(22,23) are absent BY
-    // CONSTRUCTION — their appearance would fail the hash match.
-    "t108_incremental_audio_neardup" ->
-      """SELECT * FROM (VALUES
-        | (CAST(21 AS BIGINT), CAST(31 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        | (21, 34, 0, 0), (22, 31, 0, 0), (22, 34, 0, 0), (23, 31, 0, 1),
-        | (23, 34, 0, 1), (24, 32, 0, 0), (31, 34, 0, 0)
-        |) AS t(media_a, media_b, start_ms, hamming)
-        |ORDER BY media_a, media_b, start_ms""".stripMargin,
-    // t131 twin: the streamed emission union must equal the one-shot
-    // batch pairs over the full golden corpus — t93's in-batch frame
-    // plus t105's incremental frame, nothing else (an index append
-    // bug, restart state loss, or replay fan-out shows as a row diff)
-    "t131_image_neardup_stream" ->
-      """SELECT * FROM (VALUES
-        | (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(0 AS BIGINT)),
-        | (1, 3, 1), (1, 11, 0), (1, 14, 0), (2, 3, 1), (2, 11, 0),
-        | (2, 14, 0), (3, 11, 1), (3, 14, 1), (4, 12, 0), (11, 14, 0)
-        |) AS t(media_a, media_b, hamming) ORDER BY media_a, media_b""".stripMargin,
-    // t132 twin: t106's in-batch window pairs plus t108's incremental
-    // frame — the streamed union of both golden derivations
-    "t132_audio_neardup_stream" ->
-      """SELECT * FROM (VALUES
-        | (CAST(21 AS BIGINT), CAST(22 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        | (21, 23, 0, 1), (21, 31, 0, 0), (21, 34, 0, 0), (22, 23, 0, 1),
-        | (22, 31, 0, 0), (22, 34, 0, 0), (23, 31, 0, 1), (23, 34, 0, 1),
-        | (24, 32, 0, 0), (31, 34, 0, 0)
-        |) AS t(media_a, media_b, start_ms, hamming)
-        |ORDER BY media_a, media_b, start_ms""".stripMargin,
-    // t85 twin: the GOLDEN encode frame — four planted docs under the
-    // fixed 10-merge table, hand-derived in CorpusOps.goldenBpeFixture's
-    // scaladoc. Any drift in tokenization, rank-ordered merge
-    // application, greedy-leftmost overlap handling ("aaa" → [aa, a]),
-    // or positional document reassembly breaks the hash match.
-    "t85_bpe_encode" ->
-      """SELECT * FROM (VALUES
-        | (CAST(1 AS BIGINT), CAST(5 AS BIGINT), 'low low er low est'),
-        | (2, 5, 'new new est new s'),
-        | (3, 5, 'wid e wid est low'),
-        | (4, 12, 'aa a a b a b b a n a n a')
-        |) AS t(doc_id, n_tokens, tokens_str) ORDER BY doc_id""".stripMargin,
-    // Similarity oracles compute dot products with
-    // list_sum(list_transform(...)) — a SEQUENTIAL left-to-right fold,
-    // bit-identical to Spark's `aggregate` higher-order function. A
-    // grouped sum() accumulates in engine-chosen order and differs by
-    // ulps (measured), which can flake across a quantization boundary.
-    // quantized-serving twin: identical per-vector scale, identical
-    // round (floor(+0.5)) with the same division order, identical
-    // dequant arithmetic — then s31's top-k shape over the
-    // dequantized vectors
-    "s43_quantized_topk" ->
-      s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |sc AS (SELECT vec_id, list_max(list_transform(v, x -> abs(x))) AS scale FROM e0),
-         |qt AS (SELECT e0.vec_id, sc.scale,
-         |  CASE WHEN sc.scale > 0.0
-         |    THEN list_transform(e0.v, x -> CAST(floor(x/sc.scale*127.0 + 0.5) AS BIGINT))
-         |    ELSE list_transform(e0.v, x -> CAST(0 AS BIGINT)) END AS q
-         |  FROM e0 JOIN sc ON sc.vec_id = e0.vec_id),
-         |e AS (SELECT vec_id,
-         |  list_transform(q, x -> CAST(x AS DOUBLE)*scale/127.0) AS v FROM qt),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |d AS (SELECT a.vec_id AS qid, b.vec_id AS cid, ${sqlDot("a", "b")} AS dp
-         |  FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id >= 5),
-         |r AS (SELECT qid AS query_id, cid AS vec_id,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM d JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM r)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "s31_cosine_topk" -> cosineTopKSql,
-    // q123 twin: s31's verbatim — the SQL-text rendering through
-    // graft_dot must be indistinguishable from the library body
-    "q123_cosine_topk_sql" -> cosineTopKSql,
-    // Twin of the sign-sketch banded-LSH near-dup: the candidate rule
-    // (4 bands × 16 sign bits, hamming ≤ 2 probes) is replicated
-    // exactly, so Spark and the oracle agree by construction at any
-    // recall level. Sign bits are float comparisons — no arithmetic,
-    // no ulp hazard.
-    "s32_embedding_neardup" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |x AS (SELECT vec_id, i, v[i] AS val FROM e, (SELECT unnest(range(1,65)) AS i)),
-         |keys AS (SELECT vec_id, CAST((i-1)//16 AS INT) AS band,
-         |  sum(CASE WHEN val > 0 THEN 1::BIGINT << ((i-1)%16) ELSE 0::BIGINT END) AS bkey
-         |  FROM x GROUP BY 1,2),
-         |probes AS (SELECT vec_id, band, xor(bkey, pm.m) AS pkey
-         |  FROM keys CROSS JOIN (SELECT unnest([${Similarity.probeMasks(16).mkString(",")}]) AS m) pm),
-         |cand AS (SELECT DISTINCT p.vec_id AS vec_a, k.vec_id AS vec_b
-         |  FROM probes p JOIN keys k
-         |  ON p.band = k.band AND p.pkey = k.bkey AND p.vec_id < k.vec_id),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |d AS (SELECT c.vec_a, c.vec_b, ${sqlDot("a", "b")} AS dp
-         |  FROM cand c JOIN e a ON a.vec_id = c.vec_a JOIN e b ON b.vec_id = c.vec_b),
-         |r AS (SELECT vec_a, vec_b,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM d JOIN nr na ON na.vec_id = vec_a JOIN nr nb ON nb.vec_id = vec_b)
-         |SELECT vec_a, vec_b, cos FROM r WHERE cos >= 0.9 ORDER BY vec_a, vec_b""".stripMargin,
-    // s38 twin: the identical planted-copy construction (negate last
-    // component — a sign-bit flip, exact in IEEE — and offset the id)
-    // followed by s32's candidate rule verbatim. The planted pairs
-    // sit at cos ≈ 0.97 with a 1-bit band-3 sketch difference, so
-    // both engines MUST surface them — a non-empty exact compare.
-    "s38_neardup_planted" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS vec_id,
-         |    list_transform(range(1,65),
-         |      i -> CASE WHEN i = 64 THEN -embedding[i] ELSE embedding[i] END) AS embedding
-         |  FROM embeddings WHERE vec_id % 10 = 0),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-         |x AS (SELECT vec_id, i, v[i] AS val FROM e, (SELECT unnest(range(1,65)) AS i)),
-         |keys AS (SELECT vec_id, CAST((i-1)//16 AS INT) AS band,
-         |  sum(CASE WHEN val > 0 THEN 1::BIGINT << ((i-1)%16) ELSE 0::BIGINT END) AS bkey
-         |  FROM x GROUP BY 1,2),
-         |probes AS (SELECT vec_id, band, xor(bkey, pm.m) AS pkey
-         |  FROM keys CROSS JOIN (SELECT unnest([${Similarity.probeMasks(16).mkString(",")}]) AS m) pm),
-         |cand AS (SELECT DISTINCT p.vec_id AS vec_a, k.vec_id AS vec_b
-         |  FROM probes p JOIN keys k
-         |  ON p.band = k.band AND p.pkey = k.bkey AND p.vec_id < k.vec_id),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |d AS (SELECT c.vec_a, c.vec_b, ${sqlDot("a", "b")} AS dp
-         |  FROM cand c JOIN e a ON a.vec_id = c.vec_a JOIN e b ON b.vec_id = c.vec_b),
-         |r AS (SELECT vec_a, vec_b,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM d JOIN nr na ON na.vec_id = vec_a JOIN nr nb ON nb.vec_id = vec_b)
-         |SELECT vec_a, vec_b, cos FROM r WHERE cos >= 0.9 ORDER BY vec_a, vec_b""".stripMargin,
-    // s39 twin: s38's pipeline with candidacy restricted to pairs
-    // with a planted side (vec_b ≥ 1e6 — planted ids are offset past
-    // every original, and vec_a < vec_b, so this is exactly "≥1 new
-    // side"). Equal to the incremental probe by construction.
-    "s39_neardup_incremental" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS vec_id,
-         |    list_transform(range(1,65),
-         |      i -> CASE WHEN i = 64 THEN -embedding[i] ELSE embedding[i] END) AS embedding
-         |  FROM embeddings WHERE vec_id % 10 = 0),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-         |x AS (SELECT vec_id, i, v[i] AS val FROM e, (SELECT unnest(range(1,65)) AS i)),
-         |keys AS (SELECT vec_id, CAST((i-1)//16 AS INT) AS band,
-         |  sum(CASE WHEN val > 0 THEN 1::BIGINT << ((i-1)%16) ELSE 0::BIGINT END) AS bkey
-         |  FROM x GROUP BY 1,2),
-         |probes AS (SELECT vec_id, band, xor(bkey, pm.m) AS pkey
-         |  FROM keys CROSS JOIN (SELECT unnest([${Similarity.probeMasks(16).mkString(",")}]) AS m) pm),
-         |cand AS (SELECT DISTINCT p.vec_id AS vec_a, k.vec_id AS vec_b
-         |  FROM probes p JOIN keys k
-         |  ON p.band = k.band AND p.pkey = k.bkey AND p.vec_id < k.vec_id
-         |  WHERE k.vec_id >= 1000000),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |d AS (SELECT c.vec_a, c.vec_b, ${sqlDot("a", "b")} AS dp
-         |  FROM cand c JOIN e a ON a.vec_id = c.vec_a JOIN e b ON b.vec_id = c.vec_b),
-         |r AS (SELECT vec_a, vec_b,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM d JOIN nr na ON na.vec_id = vec_a JOIN nr nb ON nb.vec_id = vec_b)
-         |SELECT vec_a, vec_b, cos FROM r WHERE cos >= 0.9 ORDER BY vec_a, vec_b""".stripMargin,
-    // ANN twin: the hyperplanes are SEEDED DRIVER-SIDE CONSTANTS
-    // (Similarity.hyperplanes(12,64), same call both sides), so the
-    // whole bucket + hamming-1 multiprobe rule bakes into SQL exactly
-    // like s32's probe masks. Sign bits come from a sequential-fold
-    // dot product against literal plane vectors — same fold both
-    // engines, and the comparison `> 0` is exact, so bucket ids are
-    // identical by construction.
-    "s33_ann_lsh" -> s33Sql,
-    // s40 serves the SAME queries through the persisted-index path
-    // (annIndexFrame + annLshServe) — output is identical to s33 by
-    // construction, so the twin is literally s33's SQL
-    "s40_ann_serve" -> s33Sql,
-    "s34_knn_classify" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |d AS (SELECT a.vec_id AS qid, b.vec_id AS cid, ${sqlDot("a", "b")} AS dp
-         |  FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id >= 5),
-         |r AS (SELECT qid AS query_id, cid AS vec_id,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM d JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid),
-        |topk AS (SELECT query_id, vec_id FROM (
-        |  SELECT query_id, vec_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-        |  FROM r) WHERE rnk <= 5),
-        |v AS (SELECT t.query_id, emb.label, count(*) AS votes
-        |  FROM topk t JOIN embeddings emb ON t.vec_id = emb.vec_id GROUP BY 1,2)
-        |SELECT query_id, CAST(label AS BIGINT) AS pred_label, votes FROM (
-        |  SELECT query_id, label, votes,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label) AS rn
-        |  FROM v)
-        |WHERE rn = 1 ORDER BY query_id""".stripMargin,
-    // IVF twin (kmeansIters=0 pinned — see the queries entry): seed
-    // centroids are the 16 lowest-id corpus vectors; every similarity
-    // is the sequential-fold dot over DOUBLE[], so assignment argmax,
-    // probe ranking, and final scores are bit-identical to the Spark
-    // plan by construction.
-    "s35_ivf_topk" -> s35Sql,
-    // t213 twin: s35's one-shot build SQL VERBATIM — the streamed
-    // train-once/assign-forever intake must be indistinguishable
-    "t213_stream_ivf" -> s35Sql,
-    // s48 twin: s31's brute-force CTEs and s35's IVF CTEs verbatim,
-    // then recall = |overlap| / k per ground-truth query with the one
-    // deferred IEEE division (Exact.quant6's floor(x·1e6+0.5)/1e6).
-    // Left join keeps silently-missed queries at recall 0.
-    "s59_mmr_rerank" -> s59Sql,
-    "s60_mmr_rerank_batch" -> s60Sql,
-    // s57 twin: the projection chain + the s31 top-k shape at 16 dims
-    "s57_projected_topk" ->
-      s"""WITH $projChainCtes
-         |SELECT query_id, rnk, vec_id, cos FROM pf
-         |ORDER BY query_id, rnk""".stripMargin,
-    // s58 twin: s31's brute-force top-5 (the ground truth) overlapped
-    // with the projected top-5 — the s48 recall-select shape
-    "s58_projected_recall" ->
-      s"""WITH $projChainCtes,
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e0),
-         |bd AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-         |  list_sum(list_transform(range(1,65), i -> a.v[i]*b.v[i])) AS dp
-         |  FROM e0 a JOIN e0 b ON a.vec_id < 5 AND b.vec_id >= 5),
-         |br AS (SELECT qid AS query_id, cid AS vec_id,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM bd JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid),
-         |bf AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM br) WHERE rnk <= 5),
-         |h AS (SELECT b.query_id, count(*) AS hits FROM bf b
-         |  JOIN pf a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-         |  GROUP BY 1)
-         |SELECT q.query_id, CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-         |  floor(CAST(COALESCE(h.hits, 0) AS DOUBLE)/CAST(5.0 AS DOUBLE)*1000000.0+0.5)/1000000.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf) q
-         |LEFT JOIN h ON h.query_id = q.query_id ORDER BY q.query_id""".stripMargin,
-    "s48_ivf_recall" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |bd AS (SELECT a.vec_id AS qid, b.vec_id AS cid, ${sqlDot("a", "b")} AS dp
-         |  FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id >= 5),
-         |br AS (SELECT qid AS query_id, cid AS vec_id,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM bd JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid),
-         |bf AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM br) WHERE rnk <= 5),
-         |ev AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id),
-         |cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM ev
-         |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT vec_id, v, nrm, cid FROM (
-         |  SELECT c.vec_id, c.v, c.nrm, ct.cid,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM ev c CROSS JOIN cent ct WHERE c.vec_id >= 5)
-         |  WHERE rn = 1),
-         |qp AS (SELECT query_id, qv, qn, cid FROM (
-         |  SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qn, ct.cid,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> q.v[j]*ct.cv[j]))/(q.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM ev q CROSS JOIN cent ct WHERE q.vec_id < 5)
-         |  WHERE rn <= 4),
-         |sc AS (SELECT DISTINCT query_id, a.vec_id,
-         |  floor(list_sum(list_transform(range(1,65), j -> qv[j]*a.v[j]))/(qn*a.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM qp JOIN asg a ON qp.cid = a.cid),
-         |ivf AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc) WHERE rnk <= 5),
-         |h AS (SELECT b.query_id, count(*) AS hits FROM bf b
-         |  JOIN ivf a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-         |  GROUP BY 1)
-         |SELECT q.query_id, CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-         |  floor(CAST(COALESCE(h.hits, 0) AS DOUBLE)/CAST(5.0 AS DOUBLE)*1000000.0+0.5)/1000000.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf) q
-         |LEFT JOIN h ON h.query_id = q.query_id
-         |ORDER BY q.query_id""".stripMargin,
-    // s49 twin: same seed codebook (first 16 corpus vectors sliced
-    // into 8 subvectors of 8), same sequential-fold squared-L2 argmin
-    // with cid tiebreak, reconstructions re-assembled in subspace
-    // order; then s31's broadcast-query top-k over the
-    // reconstructions (query side full precision — ADC)
-    "s49_pq_topk" ->
-      s"""WITH $s49CandCtes
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // s62 twin: s49's compressed scoring restricted to rank ≤ 32,
-    // then the finalists re-scored on the RAW vectors and re-ranked
-    "s62_retrieve_rerank" ->
-      s"""WITH $s49CandCtes,
-         |cand AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc) WHERE rnk <= 32),
-         |ex AS (SELECT c.query_id, c.vec_id,
-         |  floor(list_sum(list_transform(range(1, 65), i -> q.qv[i]*e.v[i]))
-         |    /(q.qn*sqrt(list_sum(list_transform(range(1, 65), i -> e.v[i]*e.v[i]))))
-         |    *1000000.0+0.5)/1000000.0 AS cos
-         |  FROM cand c JOIN q ON q.query_id = c.query_id
-         |  JOIN e ON e.vec_id = c.vec_id)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM ex)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // s54 twin: s49's CTEs with ONE unrolled per-subspace Lloyd sweep
-    // between seed and encode — assign every corpus subvector to its
-    // nearest seed codeword (sequential-fold squared-L2, cid
-    // tiebreak), rebuild each surviving (j, cid) codeword
-    // component-wise with the exact-mean arithmetic (cmean — the
-    // s36Iter precedent, per subspace), then the s49 encode/
-    // reconstruct/serve tail against the refined codewords
-    "s54_pq_trained_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cent AS (SELECT vec_id AS cid, v AS cv FROM e
-         |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |cs0 AS (SELECT cid, j, cv[j*8+1:j*8+8] AS scv
-         |  FROM cent, LATERAL (SELECT unnest(range(0, 8)) AS j) u),
-         |xs AS (SELECT vec_id, j, v[j*8+1:j*8+8] AS sv
-         |  FROM e, LATERAL (SELECT unnest(range(0, 8)) AS j) u
-         |  WHERE vec_id >= 5),
-         |a1 AS (SELECT j, cid, sv FROM (
-         |  SELECT xs.j, cs0.cid, xs.sv,
-         |    row_number() OVER (PARTITION BY xs.vec_id, xs.j ORDER BY
-         |      list_sum(list_transform(range(1, 9), i -> (sv[i]-scv[i])*(sv[i]-scv[i]))),
-         |      cs0.cid) AS rn
-         |  FROM xs JOIN cs0 ON cs0.j = xs.j) WHERE rn = 1),
-         |m1 AS (SELECT j, cid, pos, ${cmean("val")} AS m
-         |  FROM (SELECT j, cid, i AS pos, sv[i] AS val
-         |    FROM a1, (SELECT unnest(range(1, 9)) AS i))
-         |  GROUP BY 1, 2, 3),
-         |cs AS (SELECT j, cid, list(m ORDER BY pos) AS scv FROM m1 GROUP BY 1, 2),
-         |code AS (SELECT vec_id, j, cid FROM (
-         |  SELECT xs.vec_id, xs.j, cs.cid,
-         |    row_number() OVER (PARTITION BY xs.vec_id, xs.j ORDER BY
-         |      list_sum(list_transform(range(1, 9), i -> (sv[i]-scv[i])*(sv[i]-scv[i]))),
-         |      cs.cid) AS rn
-         |  FROM xs JOIN cs ON cs.j = xs.j) WHERE rn = 1),
-         |rec AS (SELECT c.vec_id, flatten(list(cs.scv ORDER BY c.j)) AS rv
-         |  FROM code c JOIN cs ON cs.j = c.j AND cs.cid = c.cid GROUP BY 1),
-         |rn2 AS (SELECT vec_id, rv,
-         |  sqrt(list_sum(list_transform(range(1, 65), i -> rv[i]*rv[i]))) AS rnrm
-         |  FROM rec),
-         |q AS (SELECT vec_id AS query_id, v AS qv,
-         |  sqrt(list_sum(list_transform(range(1, 65), i -> v[i]*v[i]))) AS qn
-         |  FROM e WHERE vec_id < 5),
-         |sc AS (SELECT query_id, r.vec_id,
-         |  floor(list_sum(list_transform(range(1, 65), i -> qv[i]*r.rv[i]))
-         |    /(qn*r.rnrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM q CROSS JOIN rn2 r)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // s50 twin: s48's coarse-cell CTEs (full-precision seed-centroid
-    // assignment + nProbe=4 query probes) composed with s49's
-    // reconstruction CTEs — probed cells join the PQ-scored side
-    "s50_ivfpq_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |ev AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id),
-         |cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM ev
-         |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT c.vec_id, ct.cid,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM ev c CROSS JOIN cent ct WHERE c.vec_id >= 5)
-         |  WHERE rn = 1),
-         |qp AS (SELECT query_id, qv, qn, cid FROM (
-         |  SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qn, ct.cid,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> q.v[j]*ct.cv[j]))/(q.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM ev q CROSS JOIN cent ct WHERE q.vec_id < 5)
-         |  WHERE rn <= 4),
-         |cs AS (SELECT cid, j, cv[j*8+1:j*8+8] AS scv
-         |  FROM cent, LATERAL (SELECT unnest(range(0, 8)) AS j) u),
-         |xs AS (SELECT vec_id, j, v[j*8+1:j*8+8] AS sv
-         |  FROM e, LATERAL (SELECT unnest(range(0, 8)) AS j) u
-         |  WHERE vec_id >= 5),
-         |code AS (SELECT vec_id, j, cid FROM (
-         |  SELECT xs.vec_id, xs.j, cs.cid,
-         |    row_number() OVER (PARTITION BY xs.vec_id, xs.j ORDER BY
-         |      list_sum(list_transform(range(1, 9), i -> (sv[i]-scv[i])*(sv[i]-scv[i]))),
-         |      cs.cid) AS rn
-         |  FROM xs JOIN cs ON cs.j = xs.j) WHERE rn = 1),
-         |rec AS (SELECT c.vec_id, flatten(list(cs.scv ORDER BY c.j)) AS rv
-         |  FROM code c JOIN cs ON cs.j = c.j AND cs.cid = c.cid GROUP BY 1),
-         |rn2 AS (SELECT vec_id, rv,
-         |  sqrt(list_sum(list_transform(range(1, 65), i -> rv[i]*rv[i]))) AS rnrm
-         |  FROM rec),
-         |sc AS (SELECT DISTINCT qp.query_id, a.vec_id,
-         |  floor(list_sum(list_transform(range(1, 65), i -> qp.qv[i]*r.rv[i]))
-         |    /(qp.qn*r.rnrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM qp JOIN asg a ON a.cid = qp.cid JOIN rn2 r ON r.vec_id = a.vec_id)
-         |SELECT query_id, rnk, vec_id, cos FROM (
-         |  SELECT query_id, vec_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // s51 twin: s48's brute-force CTEs + s49's PQ CTEs verbatim, then
-    // the same hits/recall tail (left join keeps missed queries at 0)
-    "s51_pq_recall" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |bd AS (SELECT a.vec_id AS qid, b.vec_id AS cid, ${sqlDot("a", "b")} AS dp
-         |  FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id >= 5),
-         |br AS (SELECT qid AS query_id, cid AS vec_id,
-         |  floor(dp/(na.nrm*nb.nrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM bd JOIN nr na ON na.vec_id = qid JOIN nr nb ON nb.vec_id = cid),
-         |bf AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM br) WHERE rnk <= 5),
-         |cent AS (SELECT vec_id AS cid, v AS cv FROM e
-         |  WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |cs AS (SELECT cid, j, cv[j*8+1:j*8+8] AS scv
-         |  FROM cent, LATERAL (SELECT unnest(range(0, 8)) AS j) u),
-         |xs AS (SELECT vec_id, j, v[j*8+1:j*8+8] AS sv
-         |  FROM e, LATERAL (SELECT unnest(range(0, 8)) AS j) u
-         |  WHERE vec_id >= 5),
-         |code AS (SELECT vec_id, j, cid FROM (
-         |  SELECT xs.vec_id, xs.j, cs.cid,
-         |    row_number() OVER (PARTITION BY xs.vec_id, xs.j ORDER BY
-         |      list_sum(list_transform(range(1, 9), i -> (sv[i]-scv[i])*(sv[i]-scv[i]))),
-         |      cs.cid) AS rn
-         |  FROM xs JOIN cs ON cs.j = xs.j) WHERE rn = 1),
-         |rec AS (SELECT c.vec_id, flatten(list(cs.scv ORDER BY c.j)) AS rv
-         |  FROM code c JOIN cs ON cs.j = c.j AND cs.cid = c.cid GROUP BY 1),
-         |rn2 AS (SELECT vec_id, rv,
-         |  sqrt(list_sum(list_transform(range(1, 65), i -> rv[i]*rv[i]))) AS rnrm
-         |  FROM rec),
-         |q AS (SELECT vec_id AS query_id, v AS qv,
-         |  sqrt(list_sum(list_transform(range(1, 65), i -> v[i]*v[i]))) AS qn
-         |  FROM e WHERE vec_id < 5),
-         |psc AS (SELECT query_id, r.vec_id,
-         |  floor(list_sum(list_transform(range(1, 65), i -> qv[i]*r.rv[i]))
-         |    /(qn*r.rnrm)*1000000.0+0.5)/1000000.0 AS cos
-         |  FROM q CROSS JOIN rn2 r),
-         |pq AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM psc) WHERE rnk <= 5),
-         |h AS (SELECT b.query_id, count(*) AS hits FROM bf b
-         |  JOIN pq a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-         |  GROUP BY 1)
-         |SELECT q.query_id, CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-         |  floor(CAST(COALESCE(h.hits, 0) AS DOUBLE)/CAST(5.0 AS DOUBLE)*1000000.0+0.5)/1000000.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf) q
-         |LEFT JOIN h ON h.query_id = q.query_id
-         |ORDER BY q.query_id""".stripMargin,
-    // s52 twin: same per-dimension explode, same order-independent
-    // quantized-decimal mean (Exact.meanOf6's documented SQL twin)
-    "s52_embedding_profile" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |x AS (SELECT i AS dim, v[i] AS x
-         |  FROM e, LATERAL (SELECT unnest(range(1, 65)) AS i) u)
-         |SELECT CAST(dim AS BIGINT) AS dim, count(*) AS n,
-         |  floor(CAST(sum(CAST(floor(x*1000000.0+0.5) AS DECIMAL(18,0))) AS DOUBLE)
-         |    /1000000.0/count(*)*1000000.0+0.5)/1000000.0 AS m,
-         |  min(x) AS mn, max(x) AS mx,
-         |  CAST(sum(CASE WHEN x = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero
-         |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Lloyd-refined IVF twin: two unrolled sweeps (s36Iter) rebuild
-    // the refined centroids with the SAME order-independent quantized
-    // means the Spark plan uses (Exact.meanOf6), so cell assignment,
-    // probe ranking and final scores are bit-identical by construction
-    "s36_ivf_lloyd" -> s36Sql,
-    // SemDeDup twin: s38's planted union + s35's seed-centroid
-    // assignment + the one-pass earlier-id drop rule, verbatim
-    "s42_semantic_dedup" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS vec_id,
-         |    list_transform(range(1,65),
-         |      i -> CASE WHEN i = 64 THEN -embedding[i] ELSE embedding[i] END) AS embedding
-         |  FROM embeddings WHERE vec_id % 10 = 0),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |ev AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id),
-         |cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM ev
-         |  ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT vec_id, v, nrm, cid FROM (
-         |  SELECT c.vec_id, c.v, c.nrm, ct.cid,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM ev c CROSS JOIN cent ct) WHERE rn = 1),
-         |d AS (SELECT b.vec_id, min(a.vec_id) AS dup_of
-         |  FROM asg b JOIN asg a ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  WHERE floor(list_sum(list_transform(range(1,65), j -> a.v[j]*b.v[j]))/(a.nrm*b.nrm)*1000000.0+0.5)/1000000.0 >= 0.9
-         |  GROUP BY 1)
-         |SELECT asg.vec_id, asg.cid, d.dup_of, d.dup_of IS NULL AS kept
-         |FROM asg LEFT JOIN d ON d.vec_id = asg.vec_id
-         |ORDER BY asg.vec_id""".stripMargin,
-    // s41 serves the SAME queries through the persisted-IVF-index
-    // path (ivfIndexFrames + ivfServe) — answers must be
-    // bit-identical to the one-shot s36, so the twin is its SQL
-    "s41_ivf_serve" -> s36Sql,
-    // s44: s42's planted corpus and drop rule over cells tightened by
-    // two unrolled Lloyd sweeps (s36Iter — Exact-mean arithmetic, so
-    // refined centroids and every downstream cosine match bit-exactly)
-    "s44_semantic_dedup_refined" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS vec_id,
-         |    list_transform(range(1,65),
-         |      i -> CASE WHEN i = 64 THEN -embedding[i] ELSE embedding[i] END) AS embedding
-         |  FROM embeddings WHERE vec_id % 10 = 0),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM u),
-         |nr AS (SELECT vec_id, $sqlNorm AS nrm FROM e),
-         |corpus AS (SELECT e.vec_id, e.v, nr.nrm FROM e JOIN nr ON nr.vec_id = e.vec_id),
-         |cn0 AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM corpus
-         |  ORDER BY vec_id LIMIT 16),
-         |${s36Iter("cn0", 1)},
-         |${s36Iter("cn1", 2)},
-         |asg AS (SELECT vec_id, v, nrm, cid FROM (
-         |  SELECT c.vec_id, c.v, c.nrm, ct.cid,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY list_sum(list_transform(range(1,65), j -> c.v[j]*ct.cv[j]))/(c.nrm*ct.cn) DESC,
-         |        ct.cid) AS rn
-         |  FROM corpus c CROSS JOIN cn2 ct) WHERE rn = 1),
-         |d AS (SELECT b.vec_id, min(a.vec_id) AS dup_of
-         |  FROM asg b JOIN asg a ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  WHERE floor(list_sum(list_transform(range(1,65), j -> a.v[j]*b.v[j]))/(a.nrm*b.nrm)*1000000.0+0.5)/1000000.0 >= 0.9
-         |  GROUP BY 1)
-         |SELECT asg.vec_id, asg.cid, d.dup_of, d.dup_of IS NULL AS kept
-         |FROM asg LEFT JOIN d ON d.vec_id = asg.vec_id
-         |ORDER BY asg.vec_id""".stripMargin,
-    // s45: the quantized-index ANN composition — s33's pipeline over
-    // the s43 dequantization chain
-    "s45_quantized_ann" -> s45Sql,
-    // s61: the s33 pipeline + the pre-rank cosine band
-    "s61_hard_negatives" -> s61Sql,
-    // q86 twin: the identical three grouping sets and null-pattern
-    // level derivation
-    "q86_grouping_sets" ->
-      s"""SELECT l_returnflag, l_linestatus, ${mny(rev)} AS revenue,
-         |  count(*) AS n_lines,
-         |  CAST(CASE WHEN l_returnflag IS NULL AND l_linestatus IS NULL
-         |    THEN 2 WHEN l_linestatus IS NULL THEN 1 ELSE 0 END
-         |    AS BIGINT) AS lvl
-         |FROM lineitem
-         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-         |  (l_returnflag), ())
-         |ORDER BY lvl, l_returnflag, l_linestatus""".stripMargin,
-    // ---- TPC-H suite twins (adaptations documented in TpchSuite).
-    // q64-q85 (DataFrame bodies) and q88-q109 (SQL-text bodies) are
-    // appended programmatically below, BOTH sharing tpchTwin(i)
-    // VERBATIM — the three-way equality contract (TpchSql scaladoc).
-    // q87 twin: Q1 again — the spark.sql text path must be value-
-    // exact with the DataFrame path and the oracle alike
-    "q87_sql_text_api" -> tpch01Sql,
-    // t230 twin: the MV must equal the one-shot Q1 verbatim
-    "t230_stream_tpch_q1" -> tpch01Sql
-  ) ++ (1 to 22).flatMap(i => Seq(
-    f"q${63 + i}%d_tpch$i%02d" -> tpchTwin(i),
-    f"q${87 + i}%d_tpch$i%02d_sql" -> tpchTwin(i)))
-
-  /** DuckDB twins for the TPC-H suite, keyed by canonical query
-    * number — shared VERBATIM by the DataFrame gates (q64–q85) and
-    * the SQL-text gates (q88–q109): both paths must hash-match the
-    * same oracle rows. */
-  private lazy val tpchTwin: Map[Int, String] = Map(
-    1 -> tpch01Sql,
-    2 ->
-      s"""WITH $psCte,
-         |eur AS (SELECT s_suppkey, s_name, s_acctbal, n_name
-         |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-         |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'),
-         |pse AS (SELECT ps.*, eur.s_name, eur.s_acctbal, eur.n_name
-         |  FROM ps JOIN eur ON ps_suppkey = eur.s_suppkey),
-         |mc AS (SELECT ps_partkey AS mc_partkey,
-         |  min(ps_supplycost_cents) AS mc_cost FROM pse GROUP BY 1)
-         |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-         |  ps_supplycost_cents
-         |FROM part JOIN pse ON p_partkey = ps_partkey
-         |JOIN mc ON ps_partkey = mc_partkey
-         |  AND ps_supplycost_cents = mc_cost
-         |WHERE p_size = 15 AND p_type = 'STANDARD'
-         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-         |LIMIT 100""".stripMargin,
-    3 ->
-      s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
-         |  ${mny(rev)} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |WHERE c_mktsegment = 'BUILDING'
-         |  AND o_orderdate < TIMESTAMP '1998-03-15'
-         |  AND l_shipdate > TIMESTAMP '1998-03-15'
-         |GROUP BY 1,2,3
-         |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    4 ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-07-01'
-        |  AND o_orderdate < TIMESTAMP '1997-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    5 ->
-      s"""SELECT n_name, ${mny(rev)} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN customer ON o_custkey = c_custkey
-         |  AND c_nationkey = s_nationkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA'
-         |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-         |  AND o_orderdate < TIMESTAMP '1998-01-01'
-         |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-    6 ->
-      s"""SELECT ${mny("l_extendedprice*l_discount")} AS revenue,
-         |  count(*) AS n_lines
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-         |  AND l_discount >= 0.05 AND l_discount <= 0.07
-         |  AND l_quantity < 24""".stripMargin,
-    7 ->
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |  CAST(year(l_shipdate) AS BIGINT) AS l_year, ${mny(rev)} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-         |  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-         |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-         |GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-    8 ->
-      """WITH r AS (
-        | SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |   CAST(floor((l_extendedprice*(1.0-l_discount))*10000.0+0.5)
-        |     AS BIGINT) AS v,
-        |   n2.n_name AS supp_nation
-        | FROM lineitem JOIN part ON l_partkey = p_partkey
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        | JOIN region ON n1.n_regionkey = r_regionkey
-        | JOIN supplier ON l_suppkey = s_suppkey
-        | JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        | WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
-        |   AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |   AND o_orderdate < TIMESTAMP '1998-01-01'),
-        |m AS (SELECT o_year,
-        |   CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN v ELSE 0 END)
-        |     AS HUGEINT) AS num,
-        |   CAST(sum(v) AS HUGEINT) AS den FROM r GROUP BY 1)
-        |SELECT o_year,
-        |  CAST(CASE WHEN den > 0 THEN (num * 1000000) // den END AS BIGINT)
-        |    AS mkt_share_micro
-        |FROM m ORDER BY o_year""".stripMargin,
-    9 ->
-      s"""WITH $psCte
-         |SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         | CAST(sum(CAST(floor((l_extendedprice*(1.0-l_discount))*10000.0+0.5)
-         |     AS BIGINT)
-         |   - ps_supplycost_cents * 100 * CAST(l_quantity AS BIGINT))
-         |   AS BIGINT) AS profit_tmil
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |JOIN ps ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |JOIN orders ON l_orderkey = o_orderkey
-         |WHERE p_brand IN ('Brand#1','Brand#2','Brand#3')
-         |GROUP BY 1,2 ORDER BY nation, o_year DESC""".stripMargin,
-    10 ->
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name, ${mny(rev)} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |WHERE l_returnflag = 'R'
-         |  AND o_orderdate >= TIMESTAMP '1997-10-01'
-         |  AND o_orderdate < TIMESTAMP '1998-01-01'
-         |GROUP BY 1,2,3,4 ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    11 ->
-      s"""WITH $psCte,
-         |v AS (SELECT ps_partkey,
-         |   CAST(sum(ps_supplycost_cents * ps_availqty) AS BIGINT)
-         |     AS value_cents
-         | FROM ps JOIN supplier ON ps_suppkey = s_suppkey
-         | JOIN nation ON s_nationkey = n_nationkey
-         | WHERE n_name = 'NATION_5' GROUP BY 1),
-         |g AS (SELECT CAST(sum(value_cents) AS BIGINT) AS global_cents FROM v)
-         |SELECT ps_partkey, value_cents FROM v CROSS JOIN g
-         |WHERE value_cents * 10000 > global_cents
-         |ORDER BY value_cents DESC, ps_partkey""".stripMargin,
-    12 ->
-      """SELECT l_returnflag AS ship_mode,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |   THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |WHERE l_returnflag IN ('A','N')
-        |  AND l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    13 ->
-      """WITH co AS (SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY 1)
-        |SELECT CAST(c_count AS BIGINT) AS c_count, count(*) AS custdist
-        |FROM co GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    14 ->
-      """WITH r AS (SELECT
-        |  CAST(floor((l_extendedprice*(1.0-l_discount))*10000.0+0.5)
-        |    AS BIGINT) AS v, p_type
-        | FROM lineitem JOIN part ON l_partkey = p_partkey
-        | WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-        |   AND l_shipdate < TIMESTAMP '1997-10-01'),
-        |m AS (SELECT
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN v ELSE 0 END)
-        |    AS HUGEINT) AS num,
-        |  CAST(sum(v) AS HUGEINT) AS den, count(*) AS n_lines FROM r)
-        |SELECT CAST(CASE WHEN den > 0 THEN (num * 1000000) // den END
-        |  AS BIGINT) AS promo_share_micro, n_lines FROM m""".stripMargin,
-    15 ->
-      """WITH rev AS (SELECT l_suppkey AS supplier_no,
-        |  CAST(sum(CAST(floor((l_extendedprice*(1.0-l_discount))*10000.0+0.5)
-        |    AS BIGINT)) AS BIGINT) AS total_rev_tmil
-        | FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |   AND l_shipdate < TIMESTAMP '1997-04-01'
-        | GROUP BY 1),
-        |m AS (SELECT max(total_rev_tmil) AS max_rev FROM rev)
-        |SELECT s_suppkey, s_name, total_rev_tmil
-        |FROM rev CROSS JOIN m JOIN supplier ON supplier_no = s_suppkey
-        |WHERE total_rev_tmil = max_rev ORDER BY s_suppkey""".stripMargin,
-    16 ->
-      s"""WITH $psCte
-         |SELECT p_brand, p_type, p_size,
-         |  count(DISTINCT ps_suppkey) AS supplier_cnt
-         |FROM ps JOIN part ON ps_partkey = p_partkey
-         |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-         |  AND p_size IN (1,4,9,16,25,36,49)
-         |  AND ps_suppkey NOT IN
-         |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-         |GROUP BY 1,2,3
-         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    17 ->
-      """WITH b AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS q,
-        |   CAST(floor(l_extendedprice*10000.0+0.5) AS BIGINT) AS pt
-        | FROM lineitem JOIN part ON l_partkey = p_partkey
-        | WHERE p_brand = 'Brand#7'),
-        |a AS (SELECT l_partkey AS ap_key, CAST(sum(q) AS BIGINT) AS sum_q,
-        |   count(*) AS n_q FROM b GROUP BY 1)
-        |SELECT CAST(CAST(sum(pt) AS HUGEINT) // 7 AS BIGINT) AS weekly_tmil,
-        |  count(*) AS n_lines
-        |FROM b JOIN a ON l_partkey = ap_key
-        |WHERE q * 5 * n_q < sum_q""".stripMargin,
-    18 ->
-      """WITH big AS (SELECT l_orderkey AS big_okey,
-        |  CAST(sum(l_quantity) AS BIGINT) AS total_qty
-        | FROM lineitem GROUP BY 1
-        | HAVING CAST(sum(l_quantity) AS BIGINT) > 320)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |  total_qty
-        |FROM orders JOIN big ON o_orderkey = big_okey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    19 ->
-      s"""SELECT ${mny(rev)} AS revenue, count(*) AS n_lines
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-         |    AND l_quantity BETWEEN 1 AND 11)
-         |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-         |    AND l_quantity BETWEEN 10 AND 20)
-         |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-         |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    20 ->
-      s"""WITH $psCte,
-         |sh AS (SELECT l_partkey AS sh_pkey, l_suppkey AS sh_skey,
-         |  CAST(sum(l_quantity) AS BIGINT) AS sh_qty
-         | FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-         |   AND l_shipdate < TIMESTAMP '1998-01-01'
-         | GROUP BY 1,2),
-         |ex AS (SELECT DISTINCT ps_suppkey FROM ps
-         | JOIN sh ON ps_partkey = sh_pkey AND ps_suppkey = sh_skey
-         | WHERE ps_partkey IN
-         |     (SELECT p_partkey FROM part WHERE p_brand = 'Brand#4')
-         |   AND ps_availqty * 2 > sh_qty)
-         |SELECT s_suppkey, s_name FROM supplier
-         |WHERE s_nationkey IN
-         |    (SELECT n_nationkey FROM nation WHERE n_name = 'NATION_4')
-         |  AND s_suppkey IN (SELECT ps_suppkey FROM ex)
-         |ORDER BY s_suppkey""".stripMargin,
-    21 ->
-      """WITH ofo AS (SELECT o_orderkey, o_orderdate FROM orders
-        |  WHERE o_orderstatus = 'F'),
-        |ln AS (SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
-        |  FROM lineitem JOIN ofo ON l_orderkey = o_orderkey),
-        |late AS (SELECT l_orderkey AS okey, l_suppkey AS skey FROM ln
-        |  WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY),
-        |l1 AS (SELECT late.okey, late.skey, s_name
-        |  FROM late JOIN supplier ON skey = s_suppkey
-        |  WHERE s_nationkey IN
-        |    (SELECT n_nationkey FROM nation WHERE n_name = 'NATION_6'))
-        |SELECT s_name, count(*) AS numwait FROM l1
-        |WHERE EXISTS (SELECT 1 FROM ln
-        |    WHERE ln.l_orderkey = l1.okey AND ln.l_suppkey <> l1.skey)
-        |  AND NOT EXISTS (SELECT 1 FROM late la
-        |    WHERE la.okey = l1.okey AND la.skey <> l1.skey)
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-    22 ->
-      """WITH cust AS (SELECT c_custkey, c_acctbal,
-        |   CAST(CAST(c_nationkey % 10 AS BIGINT) AS VARCHAR) AS cntrycode
-        | FROM customer WHERE c_nationkey % 10 IN (1,3,5,7,9)),
-        |a AS (SELECT CAST(sum(CAST(floor(c_acctbal*100.0+0.5) AS BIGINT))
-        |    AS BIGINT) AS sum_cents, count(*) AS n_pos
-        |  FROM cust WHERE c_acctbal > 0.0)
-        |SELECT cntrycode, count(*) AS numcust,
-        |  floor(CAST(sum(CAST(floor(c_acctbal*100.0+0.5) AS BIGINT))
-        |    AS DOUBLE)/100.0*100.0+0.5)/100.0 AS totacctbal
-        |FROM cust CROSS JOIN a
-        |WHERE CAST(floor(c_acctbal*100.0+0.5) AS BIGINT) * n_pos > sum_cents
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin
-  )
+    gates.map(g => g.name -> ((s: SparkSession, d: String) => g.run(s, d))).toMap
+  def oracleSql: Map[String, String] = gates.map(g => g.name -> g.twin).toMap
 }

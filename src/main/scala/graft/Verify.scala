@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions.col
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.gates result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Round-15 addition: a DIFFABLE snapshot of every query's output is
@@ -34,13 +34,15 @@ object Verify {
         if (new java.io.File("/root/repo").isDirectory)
           "/root/repo/verify_out_snapshot"
         else "verify_out_snapshot"))
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => only(q._1)).flatMap { case (name, fn) =>
+    val gates = SparkEntry.gates.sortBy(_.name)
+    val failed = gates.filter(g => only(g.name)).flatMap { g =>
+      val name = g.name
       // storage back to baseline between queries — no query inherits
       // another's persisted frames, and the dedup caches can't
       // accumulate across the 50+ query dump
       graft.core.GraftCaches.release(spark)
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         snapDir.foreach { sd =>
           // read the EXACT bytes the driver will hash (the parquet
@@ -92,28 +94,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(g => s"${q(g.name)}: ${q(g.twin)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    // report EVERYTHING before any exit — a run with both a board
-    // mismatch and query failures must show both in the log
-    var rc = 0
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
-      rc = 1 // a broken run must exit nonzero — never mistakable for green
+      sys.exit(1) // a broken run must exit nonzero — never mistakable for green
     }
-    // the board contract: EVERY declared query has a DuckDB twin. An
-    // ungated query must be a LOCAL failure, not a driver discovery
-    // (round 13 shipped five `no_oracle` rows this guard now forbids).
-    val ungated = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val orphanSql = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    if (ungated.nonEmpty || orphanSql.nonEmpty) {
-      System.err.println(s"[verify] BOARD MISMATCH — queries without a " +
-        s"twin: ${ungated.toSeq.sorted.mkString(", ")}; twins without a " +
-        s"query: ${orphanSql.toSeq.sorted.mkString(", ")}")
-      rc = 2
-    }
-    if (rc != 0) sys.exit(rc)
   }
 }

@@ -89,6 +89,11 @@ object TpchSuite {
     new java.util.concurrent.ConcurrentHashMap[
       (org.apache.spark.sql.SparkSession, String), DataFrame]()
 
+  /** Run TPC-H query `i` (1..22) as DataFrame code. */
+  def run(t: Tables, i: Int): DataFrame = Seq[Tables => DataFrame](
+    q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11,
+    q12, q13, q14, q15, q16, q17, q18, q19, q20, q21, q22)(i - 1)(t)
+
   /** Q1 pricing summary: one wide partial-aggregable scan — every
     * measure is a map-side-combined sum/count; no shuffle beyond the
     * 6-group exchange. */

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * directories; everything downstream takes a [[DataFrame]] so the
   * swap is purely a change of path here.
   */
-final class Tables(spark: SparkSession, dir: String) {
+final class Tables(val spark: SparkSession, dir: String) {
   /** Identity of this table set — the memo key for derived frames
     * that should materialize ONCE per (session, data directory), e.g.
     * the TPC-H suite's derived partsupp. */
@@ -150,15 +150,28 @@ object Tables {
   * cluster these come from spark-defaults / dynamic allocation).
   */
 object GraftSession {
-  /** Task slots from `SPARK_GRAFT_CPUS` (default 4); anything but a
-    * positive integer fails before a session starts, naming the
-    * variable, instead of reaching `local[...]` as a bad master URL.
+  /** Environment variable `name` as a positive integer, if set. A set
+    * value that is not one fails, naming the variable, before it can
+    * reach a conf or a loop bound. `env` is the environment lookup.
+    */
+  def positiveInt(name: String, env: String => Option[String] = sys.env.get): Option[Int] =
+    checked(name, env, "a positive integer")(_.toIntOption.filter(_ > 0))
+
+  /** Environment variable `name` as `true` or `false`, if set; any
+    * other value fails, naming the variable. */
+  def boolean(name: String, env: String => Option[String] = sys.env.get): Option[Boolean] =
+    checked(name, env, "true or false")(v => Option.when(v == "true" || v == "false")(v == "true"))
+
+  private def checked[T](name: String, env: String => Option[String], what: String)(
+      parse: String => Option[T]): Option[T] =
+    env(name).map(v => parse(v).getOrElse(
+      throw new IllegalArgumentException(s"$name must be $what, got '$v'")))
+
+  /** Task slots from `SPARK_GRAFT_CPUS` (default 4), checked before a
+    * session starts instead of reaching `local[...]` as a bad master URL.
     */
   def cpus(raw: Option[String] = sys.env.get("SPARK_GRAFT_CPUS")): Int =
-    raw.fold(4) { v =>
-      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-    }
+    positiveInt("SPARK_GRAFT_CPUS", _ => raw).getOrElse(4)
 
   def builder(cores: String): SparkSession.Builder =
     SparkSession.builder()
@@ -189,6 +202,6 @@ object GraftSession {
       // (or spark-defaults) — no code edit, no knowledge of Spark's
       // conf key required.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_CHECKSUM", "false"))
+        boolean("SPARK_GRAFT_CHECKPOINT_CHECKSUM").getOrElse(false))
       .config("spark.ui.enabled", "false")
 }

@@ -248,9 +248,10 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     * rewrite renamed in, and only then is the old copy deleted — at
     * every step a full copy of the data exists under a well-known
     * name, so a crash mid-swap loses nothing (a crash between the
-    * two renames leaves the data at `<entity>__old`, never gone; the
-    * earlier delete-then-rename order had a window where the only
-    * copy lived under the temp name). Returns the new file count.
+    * two renames leaves the data at `_old-<name>`, never gone, and
+    * the next compact restores it). Both siblings are hidden names,
+    * `_`-prefixed with any `=` replaced, so partition discovery never
+    * reads them as a partition. Returns the new file count.
     * For a date-partitioned entity, compact per partition directory
     * (`entity/load_date=...`) — partition columns live in the path,
     * not the footers, so compacting the root would lose them.
@@ -262,7 +263,7 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     val path = new Path(s"$root/$entity")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // self-recovery from a prior crash mid-swap
-    val old = new Path(s"$root/${entity}__old")
+    val old = LakeWriter.compactSibling(path, "old")
     LakeWriter.recoverAside(fs, path, old)
     // fail fast on a partitioned entity: partition columns written by
     // partitionBy live in the PATH, not the footers — compacting the
@@ -274,7 +275,7 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
         "directory instead — compacting the root would lose the partition columns")
     val total = fs.getContentSummary(path).getLength
     val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    val tmp = new Path(s"$root/${entity}__compacting")
+    val tmp = LakeWriter.compactSibling(path, "compacting")
     spark.read.parquet(path.toString)
       .repartition(n)
       .write.mode("overwrite").parquet(tmp.toString)
@@ -392,12 +393,8 @@ final class LakeWriter(root: String, mode: String = "overwrite") {
     // writes at most `buckets` files. At scale the same shuffle is the
     // standard pre-write clustering; commit parallelism stays the
     // bucket count, which production sizes to the cluster.
-    val clustered =
-      if (sys.props.get("graft.lake.clusterWrites").forall(_ != "false"))
-        df.withColumn(LakeWriter.CvCol, lit(v))
-          .repartition(buckets, bucketCols.map(col): _*)
-      else df.withColumn(LakeWriter.CvCol, lit(v))
-    val base = clustered
+    val base = df.withColumn(LakeWriter.CvCol, lit(v))
+      .repartition(buckets, bucketCols.map(col): _*)
       .write.mode(if (appendMode) "append" else "overwrite")
       .partitionBy(LakeWriter.CvCol)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
@@ -870,6 +867,11 @@ object LakeWriter {
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     if (bad.nonEmpty) throw new CommitRejectedException(table, version, bad)
   }
+
+  /** `compact`'s hidden sibling of `path` for its rewrite or its
+    * set-aside copy: `_<tag>-<name>` with `=` replaced by `-`. */
+  private[sinks] def compactSibling(path: Path, tag: String): Path =
+    new Path(path.getParent, s"_$tag-" + path.getName.replace('=', '-'))
 
   /** Self-recovery from a crash in the middle of [[swapIn]]: if
     * `target` is missing but `aside` survives, the crash came between

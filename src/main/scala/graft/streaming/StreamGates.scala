@@ -63,7 +63,7 @@ object StreamGates {
     * state fold is key-deterministic (the exact-integer discipline).
     */
   private def streamShufflePartitions(spark: org.apache.spark.sql.SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt)
+    graft.core.GraftSession.positiveInt("SPARK_GRAFT_STREAM_PARTITIONS")
       .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
 
   /** Shard-source checkpoints pending release — filled by

@@ -24,8 +24,8 @@ class LlmSqlSpec extends AnyFunSuite {
     // the t243 body plants its contamination in-query — compare
     // through the gate (the GraftSqlSpec "ignore_nulls" pattern)
     case "decontaminate_13gram" =>
-      graft.SparkEntry.queries("t243_ngram_decontaminate")(spark,
-        "/root/testdata/sf0.001")
+      graft.SparkEntry.gates.find(_.name == "t243_ngram_decontaminate").get
+        .run(spark, "/root/testdata/sf0.001")
   }
 
   LlmSql.sql.keys.toSeq.sorted.foreach { name =>

@@ -226,5 +226,22 @@ class ExtractionJobSpec extends AnyFunSuite with TimeLimits {
       val e = intercept[IllegalArgumentException](GraftSession.cpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
     }
+    // the other numeric and boolean knobs go through the same checked reader
+    for (name <- Seq("SPARK_GRAFT_STREAM_PARTITIONS", "SPARK_GRAFT_BENCH_RUNS")) {
+      assert(GraftSession.positiveInt(name, _ => None).isEmpty)
+      assert(GraftSession.positiveInt(name, Map(name -> "3").get).contains(3))
+      for (bad <- Seq("0", "-1", "two", "")) {
+        val e = intercept[IllegalArgumentException](GraftSession.positiveInt(name, Map(name -> bad).get))
+        assert(e.getMessage.contains(name), bad)
+      }
+    }
+    val sum = "SPARK_GRAFT_CHECKPOINT_CHECKSUM"
+    assert(GraftSession.boolean(sum, _ => None).isEmpty)
+    assert(GraftSession.boolean(sum, Map(sum -> "true").get).contains(true))
+    assert(GraftSession.boolean(sum, Map(sum -> "false").get).contains(false))
+    for (bad <- Seq("yes", "1", "TRUE", "")) {
+      val e = intercept[IllegalArgumentException](GraftSession.boolean(sum, Map(sum -> bad).get))
+      assert(e.getMessage.contains(sum), bad)
+    }
   }
 }

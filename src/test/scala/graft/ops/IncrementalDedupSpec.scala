@@ -276,15 +276,15 @@ class IncrementalDedupSpec extends AnyFunSuite {
       w.compact(spark, "parted")
     }
     assert(err.getMessage.contains("partition"))
-    // stale __old next to a healthy entity → dropped, compact proceeds
+    // stale aside (`_old-<name>`) next to a healthy entity → dropped, compact proceeds
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.parquet(s"$root/plain")
-    Seq((9L, "stale")).toDF("id", "v").write.parquet(s"$root/plain__old")
+    Seq((9L, "stale")).toDF("id", "v").write.parquet(s"$root/_old-plain")
     w.compact(spark, "plain")
-    assert(!new java.io.File(s"$root/plain__old").exists)
+    assert(!new java.io.File(s"$root/_old-plain").exists)
     assert(spark.read.parquet(s"$root/plain").count() == 2)
-    // crash between the renames (entity missing, __old present) → recovered
-    require(new java.io.File(s"$root/plain").renameTo(new java.io.File(s"$root/plain__old")))
+    // crash between the renames (entity missing, aside present) → recovered
+    require(new java.io.File(s"$root/plain").renameTo(new java.io.File(s"$root/_old-plain")))
     w.compact(spark, "plain")
     assert(spark.read.parquet(s"$root/plain").count() == 2)
   }

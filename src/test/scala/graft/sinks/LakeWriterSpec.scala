@@ -446,4 +446,28 @@ class LakeWriterSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](new LakeWriter(root).write(df, "ent", bad))
     assert(!new java.io.File(s"$root/ent").exists)
   }
+
+  test("a crash inside compact of a date leaves its scratch directories hidden from read") {
+    val root = Files.createTempDirectory("lake6").toString
+    val lw = new LakeWriter(root)
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    lw.write(rows, "ent", "2026-08-01")
+    lw.write(Seq((3L, "c")).toDF("id", "v"), "ent", "2026-09-01")
+    assert(lw.compact(spark, "ent/load_date=2026-08-01") == 1)
+    // crash between the two renames: the date is set aside and its
+    // rewrite is not yet renamed in
+    val date = new org.apache.hadoop.fs.Path(s"$root/ent/load_date=2026-08-01")
+    rows.write.parquet(LakeWriter.compactSibling(date, "compacting").toString)
+    require(new java.io.File(date.toString)
+      .renameTo(new java.io.File(LakeWriter.compactSibling(date, "old").toString)))
+    val back = lw.read(spark, "ent")
+    assert(back.schema("load_date").dataType == org.apache.spark.sql.types.DateType)
+    assert(back.select("load_date").distinct().collect().map(_.get(0).toString).toSeq ==
+      Seq("2026-09-01"))
+    // the next compact of the date restores it and leaves no scratch name
+    assert(lw.compact(spark, "ent/load_date=2026-08-01") == 1)
+    assert(lw.read(spark, "ent").filter("load_date = DATE'2026-08-01'").count() == 2)
+    assert(new java.io.File(s"$root/ent").list().toSeq.sorted ==
+      Seq("load_date=2026-08-01", "load_date=2026-09-01"))
+  }
 }
