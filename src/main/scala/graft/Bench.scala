@@ -18,7 +18,13 @@ import org.apache.spark.sql.SparkSession
   *  - caches are released between runs ([[graft.core.GraftCaches]]),
   *    so every run measures the full cold plan and no query inherits
   *    another's persisted frames — this also closes the canonicalSets
-  *    storage leak for the duration of the pass.
+  *    storage leak for the duration of the pass;
+  *  - each run also records the generated classes it compiled and the
+  *    ms spent compiling them (`queries_compilations`,
+  *    `queries_compile_ms`, medians over the runs): two process-wide
+  *    counters read after the run, no job added. A query rerun in a
+  *    warm session compiles nothing, so a non-zero median puts codegen
+  *    among the layers that query pays for.
   *
   * ISOLATION mode (`SPARK_GRAFT_BENCH_ISOLATE`, round-7 lesson: in
   * a 90-query single-session sweep even per-query MINS inflated 2–6×
@@ -79,6 +85,18 @@ object Bench {
     prev
   }
 
+  /** Generated classes compiled so far in this JVM and the ms spent
+    * compiling them: two process-wide counters, read without a job. A
+    * query whose plans all hit the codegen cache adds 0 to both. */
+  private def codegenCounters(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
+
+  /** One query's runs, each series sorted: seconds, shuffle MB, and
+    * codegen compilations and compile ms. */
+  private final case class Measured(name: String, ok: Boolean, secs: Seq[Double],
+      shuffleMb: Seq[Double], compiles: Seq[Double], compileMs: Seq[Double])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.GraftSession.cpus().toString
@@ -128,17 +146,20 @@ object Bench {
         spark = fresh._1
         shuffleBytes = fresh._2
       }
-      val times = Seq.newBuilder[Double]
-      val shuffles = Seq.newBuilder[Double]
+      val times, shuffles, compiles, compileMs = Seq.newBuilder[Double]
       var ok = true
       var r = 0
       while (ok && r < runs) {
         graft.core.GraftCaches.release(spark)
         val s0 = settledShuffle(shuffleBytes)
+        val (c0, cms0) = codegenCounters()
         val t0 = System.nanoTime()
         try {
           g.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           times += (System.nanoTime() - t0) / 1e9
+          val (c1, cms1) = codegenCounters()
+          compiles += (c1 - c0).toDouble
+          compileMs += cms1 - cms0
           shuffles += (settledShuffle(shuffleBytes) - s0) / 1e6
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -146,7 +167,8 @@ object Bench {
         }
         r += 1
       }
-      (name, times.result().sorted, ok, shuffles.result().sorted)
+      Measured(name, ok, times.result().sorted, shuffles.result().sorted,
+        compiles.result().sorted, compileMs.result().sorted)
     }
     // Locale.ROOT: a comma-decimal default locale would emit invalid
     // JSON through the locale-sensitive f-interpolator
@@ -155,16 +177,18 @@ object Bench {
     // SUPPRESS one-off contention spikes, so with runs=2 report the
     // quieter run, never the contended one
     def median(ts: Seq[Double]): Double = ts((ts.size - 1) / 2)
-    def qmap(pick: ((String, Seq[Double], Boolean, Seq[Double])) => Seq[Double])(
-        f: Seq[Double] => Double): String = results.map { r =>
-      "\"" + r._1 + "\":" + (if (r._3) fmt(f(pick(r))) else "-1")
-    }.mkString("{", ",", "}")
-    val med = qmap(_._2)(median)
-    val mins = qmap(_._2)(_.head)
-    val maxs = qmap(_._2)(_.last)
-    val shuf = qmap(_._4)(median)
-    val failed = results.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val total = results.filter(_._3).map { case (_, ts, _, _) => median(ts) }.sum
+    def qmap(pick: Measured => Seq[Double])(f: Seq[Double] => Double): String =
+      results.map { r =>
+        "\"" + r.name + "\":" + (if (r.ok) fmt(f(pick(r))) else "-1")
+      }.mkString("{", ",", "}")
+    val med = qmap(_.secs)(median)
+    val mins = qmap(_.secs)(_.head)
+    val maxs = qmap(_.secs)(_.last)
+    val shuf = qmap(_.shuffleMb)(median)
+    val comp = qmap(_.compiles)(median)
+    val compMs = qmap(_.compileMs)(median)
+    val failed = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    val total = results.filter(_.ok).map(r => median(r.secs)).sum
     // name the statistic honestly: an even run count reports the
     // lower-middle (runs=2 → the min), which is NOT a median
     val stat = if (runs % 2 == 1) "median" else "lower-median"
@@ -185,7 +209,7 @@ object Bench {
     // bounded tail capture of this (~10 KB) line ends in seconds —
     // two judge rounds misread a tail-truncated copy whose trailing
     // map was the shuffle-MB one
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"$stat"$onlyField$isoField$envField,"queries_min":$mins,"queries_max":$maxs,"queries_shuffle_mb":$shuf,"failed":$failed,"sf":"$sfDir","queries":$med}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"$stat"$onlyField$isoField$envField,"queries_min":$mins,"queries_max":$maxs,"queries_shuffle_mb":$shuf,"queries_compilations":$comp,"queries_compile_ms":$compMs,"failed":$failed,"sf":"$sfDir","queries":$med}"""
     println(json)
     // stdout capture windows truncate (~2 KB tails have eaten a whole
     // round's headline number); the artifact must also survive on disk
@@ -204,6 +228,6 @@ object Bench {
     // full line above finds it ENDING in the per-query seconds map.
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"$stat"$onlyField$isoField$envField,"n_queries":${results.size},"failed":$failed,"sf":"$sfDir","detail":"$outPath"}""")
     spark.stop()
-    if (results.exists(!_._3)) sys.exit(1)
+    if (results.exists(!_.ok)) sys.exit(1)
   }
 }

@@ -69,11 +69,7 @@ object TpchSuite {
     * table keyed ps_partkey, written once per refresh.
     */
   def partsupp(t: Tables): DataFrame = {
-    val key = t.sessionDir
-    // drop entries of stopped sessions (bench isolation restarts the
-    // context per query) so the memo stays bounded
-    psMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val df = psMemo.computeIfAbsent(key, _ =>
+    val df = psMemo.get(t.spark, t.dir)(
       t.lineitem
         .groupBy(col("l_partkey").as("ps_partkey"),
           col("l_suppkey").as("ps_suppkey"))
@@ -85,9 +81,7 @@ object TpchSuite {
     df
   }
 
-  private val psMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val psMemo = new graft.core.SessionMemo[DataFrame]
 
   /** Run TPC-H query `i` (1..22) as DataFrame code. */
   def run(t: Tables, i: Int): DataFrame = Seq[Tables => DataFrame](

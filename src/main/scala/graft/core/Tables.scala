@@ -10,44 +10,55 @@ import org.apache.spark.sql.functions._
   * it (round-1 lesson: an events-only format issue failed all 35
   * declared queries through the old eager loader).
   *
+  * Resolving a table (listing its files, inferring its schema with one
+  * Spark job, sizing it) is done once per (session, path), not once
+  * per query: see [[Tables#t]].
+  *
   * At 100 TB these would be date-partitioned parquet/iceberg
   * directories; everything downstream takes a [[DataFrame]] so the
   * swap is purely a change of path here.
   */
-final class Tables(val spark: SparkSession, dir: String) {
-  /** Identity of this table set — the memo key for derived frames
-    * that should materialize ONCE per (session, data directory), e.g.
-    * the TPC-H suite's derived partsupp. */
-  private[graft] def sessionDir: (SparkSession, String) = (spark, dir)
-
-  /** Scan with small-file fan-out. The gate tables are written as ONE
-    * parquet row group each, and a row group is the unit Spark can't
-    * split — `maxPartitionBytes` assigns it to a single task, so
-    * without this every narrow pass (tokenize, shingle, signature)
-    * would run on one core however many sit idle. Files under
-    * [[Tables.SmallFileBytes]] are fanned out to the full default
-    * parallelism right after the scan: the shuffle moves at most that
-    * many bytes (trivial by construction), predicates and pruning
-    * still push through the exchange to the scan, and a
-    * production-scale table — many files, many row groups — never
-    * enters the branch.
+final class Tables(val spark: SparkSession, private[graft] val dir: String) {
+  /** Scan with small-file fan-out, memoized per (session, path).
+    *
+    * The memo holds the resolved scan: the listed relation with its
+    * inferred schema, and the fan-out below. It holds no rows — every
+    * query still reads the files. Each lookup revalidates the entry
+    * with one metadata call, [[Tables.stamp]] (a file's length and
+    * modification time; for a directory its files' summed length and
+    * newest modification time), and a table whose files changed is
+    * resolved again. A path the call cannot stat is never memoized: its
+    * read fails, or succeeds, as it would unmemoized. Entries of stopped
+    * sessions are swept.
+    *
+    * Fan-out: the gate tables are written as ONE parquet row group
+    * each, and a row group is the unit Spark can't split —
+    * `maxPartitionBytes` assigns it to a single task, so without this
+    * every narrow pass (tokenize, shingle, signature) would run on one
+    * core however many sit idle. Tables under [[Tables.SmallFileBytes]]
+    * are fanned out to the full default parallelism right after the
+    * scan: the shuffle moves at most that many bytes (trivial by
+    * construction), predicates and pruning still push through the
+    * exchange to the scan, and a production-scale table — many files,
+    * many row groups — never enters the branch.
     */
   private def t(n: String): DataFrame = {
     val path = s"$dir/$n.parquet"
-    val df = spark.read.parquet(path)
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch {
-        // size probe is best-effort (missing path surfaces on the real
-        // read) — but fatal VM errors and interrupts must propagate
-        case scala.util.control.NonFatal(_) => Long.MaxValue
-      }
-    if (bytes < Tables.SmallFileBytes)
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
+    def resolve(bytes: Long): DataFrame = {
+      val df = spark.read.parquet(path)
+      if (bytes < Tables.SmallFileBytes)
+        df.repartition(spark.sparkContext.defaultParallelism)
+      else df
+    }
+    Tables.stamp(spark, path) match {
+      case Some(s) =>
+        Tables.scans.get(spark, path, (_: (Tables.Stamp, DataFrame))._1 == s)(
+          (s, resolve(s.bytes)))._2
+      case None =>
+        // missing or unreadable: the read reports it (or finds the
+        // path after all); the size stays unknown, so no fan-out
+        resolve(Long.MaxValue)
+    }
   }
 
   lazy val region: DataFrame = t("region")
@@ -94,6 +105,32 @@ final class Tables(val spark: SparkSession, dir: String) {
 object Tables {
   /** Below this, a scan is fanned out to full parallelism (see [[Tables#t]]). */
   val SmallFileBytes: Long = 64L * 1024 * 1024
+
+  /** What a table's files looked like when it was resolved: their
+    * summed length and newest modification time. */
+  private final case class Stamp(bytes: Long, modified: Long)
+
+  /** The resolved scans of [[Tables#t]], each with its [[Stamp]]. */
+  private val scans = new SessionMemo[(Stamp, DataFrame)]
+
+  /** `path`'s [[Stamp]] from one recursive listing (a plain file lists
+    * as itself), or None when it cannot be listed. */
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      var bytes, modified = 0L
+      while (files.hasNext) {
+        val f = files.next()
+        bytes += f.getLen
+        modified = math.max(modified, f.getModificationTime)
+      }
+      Some(Stamp(bytes, modified))
+    } catch {
+      // best-effort (a missing path surfaces on the real read) — but
+      // fatal VM errors and interrupts must propagate
+      case scala.util.control.NonFatal(_) => None
+    }
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -185,6 +222,17 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // Spark's cache of compiled generated classes is one JVM-wide LRU
+      // of 100 entries by default, and an LRU cycled through a working
+      // set larger than itself evicts every entry before it is reused:
+      // eleven interleaved sub-second gates compile about 114 classes,
+      // so a long-lived session recompiled nearly all of them (Janino,
+      // ~10 ms each) on every query. A gate compiles the same classes
+      // at any data scale, so the bound is a constant, not a scale
+      // knob. 1,024 is a memory ceiling, not the whole surface: one
+      // pass over all 346 gates compiles ~8,300 classes at ~54 KB of
+      // heap each, so this caps the cache at ~55 MB.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       // Spark 4.1 writes a sibling .crc checksum file for every
       // streaming-checkpoint file (offset/commit logs AND every state
       // store delta/snapshot) and probes for it on every read. For
